@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The bucketed-at-rest layout as a STANDING library path (r8 verdict
-  * #1 — promoted from tools/BucketedLayoutBench so it cannot rot).
+  * #1 — promoted from the BucketedLayoutBench probe so it cannot rot).
   *
   * This is the 100-TB deployment shape for the exchange-bound Layer-A
   * quartet: materialize the fact tables bucketed+sorted on their
@@ -32,9 +32,7 @@ import org.apache.spark.sql.functions._
   * oracles verbatim, so the driver's correctness run proves the
   * bucketed path end-to-end (it builds the layout with the plain
   * in-memory catalog — persistence is a perf property, not a
-  * correctness one). Bench.scala times the quartet each round
-  * (`bucketed_total`) with the build cost reported separately
-  * (`bucketed_build_sec` — ingest-side, amortized in production).
+  * correctness one).
   */
 object BucketedTables {
   /** Apply the layout-path session settings (see scaladoc). Hive's
@@ -103,10 +101,10 @@ object BucketedTables {
     def build(base: String, src: => DataFrame, key: String,
         sortCols: Seq[String]): Double = {
       val t = tableName(sfDir, base)
-      // Derived bench tier dirs (ScaleUp output) carry only the TPC-H
-      // fact tables — skip layouts whose source parquet is absent so
-      // the tier quartet (k06/k08/k16/k19) can use the same ensure path
-      // as the full sf0.1 build (r12 verdict #4).
+      // A data dir may carry only the TPC-H fact tables — skip
+      // layouts whose source parquet is absent so the quartet
+      // (k06/k08/k16/k19) can use the same ensure path as the full
+      // build (r12 verdict #4).
       if (!new java.io.File(s"$sfDir/$base.parquet").exists() &&
           !(base == "orders_ck" &&
             new java.io.File(s"$sfDir/orders.parquet").exists())) 0.0

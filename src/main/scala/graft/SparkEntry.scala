@@ -34,22 +34,8 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     allQueryDefs.flatMap(q => q.oracle.map(q.name -> _)).toMap
 
-  /** Curated benchmark subset (QueryDef.bench) used by Bench.scala. */
+  /** Curated benchmark subset (QueryDef.bench): the Layer-A queries
+    * the `tpch_serving` workload of bench/run.py serves, each checked
+    * against its oracle. */
   def benchQueries: Seq[QueryDef] = allQueryDefs.filter(_.bench)
-
-  /** Heavy domain/LLM bench set (round-6 widening): the oracle-green
-    * curation pipelines where this engine's value actually is, plus
-    * bench-only domain throughput workloads (BenchHeavy). Timed by
-    * Bench.scala alongside the Layer-A set so regressions in the
-    * kernels/LSH/CC/aligner paths are caught round-over-round.
-    */
-  def benchHeavyQueries: Seq[QueryDef] = {
-    // NOT l03_minhash_lsh: that registration is the md5-derived
-    // ORACLE twin (interpreted column arithmetic by design, so DuckDB
-    // can re-derive every hash); the production kernel pipeline is
-    // benched as x03_minhash below.
-    val names = Set("l12_dedup_clusters",
-      "l18_repetition_signals", "l20_semantic_dedup")
-    allQueryDefs.filter(q => names(q.name)) ++ BenchHeavy.queries
-  }
 }

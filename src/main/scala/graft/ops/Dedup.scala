@@ -224,7 +224,7 @@ object Dedup {
     * shingle construction (transform over sequence) is INTERPRETED by
     * Catalyst, ~7 µs per element — at 500-char docs that was ~2 ms per
     * pair vs ~30 µs for the single-pass hash-set kernel (measured via
-    * tools/L18Probe methodology; l02 10.9 s → 0.6 s at sf0.1). Values
+    * L18Probe methodology; l02 10.9 s → 0.6 s at sf0.1). Values
     * are bit-identical (code-point windows, integer counts, one double
     * division), so the DuckDB re-derivation oracles stay green.
     */
@@ -292,7 +292,7 @@ object Dedup {
     * is small, but a near-dup-dense corpus (the realistic dedup
     * input) has pairs/doc ≫ bands — at 500k docs / 24M candidates
     * that join shuffled ~110 GB and filled the disk where this shape
-    * moves ~19 GB (tools/PairCountProbe). A pair colliding in k bands
+    * moves ~19 GB (PairCountProbe). A pair colliding in k bands
     * is verified k times (measured 2.5% overhead) and deduped by the
     * final max-aggregate. Skew note: a bucket of s members verifies
     * s(s-1)/2 pairs in one task; the shingleN-length filter removes

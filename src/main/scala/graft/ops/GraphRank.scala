@@ -52,7 +52,7 @@ object GraphRank {
     * UNEQUAL counts do not co-partition, so Catalyst silently
     * re-exchanges the edge list (the largest relation) every
     * iteration. Measured on the x11 bench graph (1.5M edges × 5
-    * iterations, tools/GraphShuffleProbe): 106 MB shuffle and 5 jobs
+    * iterations, GraphShuffleProbe): 106 MB shuffle and 5 jobs
     * PER ITERATION before, 42 MB and 3 jobs after — the edge
     * re-exchange was ~60% of every iteration's network. NOTE the
     * iteration-invariant frames must be `persist()`-ed, not

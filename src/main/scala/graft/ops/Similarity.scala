@@ -217,7 +217,7 @@ object Similarity {
           // boxed tuples PER VECTOR, which at production nLists turned
           // assignment from dot-bound into alloc/sort-bound — 2.1 ms
           // per vector at nLists=1408 vs ~0.1 ms for the dots
-          // (tools/IvfScaleProbe, 2M×1408: 13 min → see SCALE.md).
+          // (IvfScaleProbe, 2M×1408: 13 min → see SCALE.md).
           // Strict `<` on insertion keeps equal-negdot order by the
           // ascending scan index, so ties resolve exactly as the old
           // (negdot, i) sort did — output-identical.
@@ -286,7 +286,7 @@ object Similarity {
       // in the same select as a generator land in the Project ABOVE
       // Generate and are re-evaluated once per GENERATED row — dim×
       // the assignment work (measured 12.2 s vs 0.8 s per iteration on
-      // a 20k×64 corpus, tools/X04Probe)
+      // a 20k×64 corpus, X04Probe)
       val assigned = corpus.select(
         element_at(assign(col("embedding")), 1).as("list_id"),
         col("embedding"))

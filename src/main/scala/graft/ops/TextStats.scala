@@ -95,7 +95,7 @@ object TextStats {
     *
     * One single-pass kernel UDF per document rather than column
     * expressions: building word n-gram arrays with interpreted
-    * higher-order functions measured ~6 ms/doc (tools/L18Probe — the
+    * higher-order functions measured ~6 ms/doc (L18Probe — the
     * HOF lambda interpreter pays ~7 µs per element, and the naive
     * count-per-distinct topRatio was another 25× over that); the
     * hash-map kernel is ~0.1 ms/doc with identical semantics. Still

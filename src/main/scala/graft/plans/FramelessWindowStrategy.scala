@@ -1,22 +1,18 @@
 package graft.plans
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, DeclarativeAggregate}
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-import org.apache.spark.sql.execution.graft.SpillableRowBuffer
 import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.internal.SQLConf
 
-/** Hash-based evaluation of frameless window aggregates —
+/** Sort-free planning of frameless window aggregates —
   * `agg(x) OVER (PARTITION BY k)` with no ORDER BY and an
   * unbounded-to-unbounded frame, where every row of a partition gets
   * the same aggregate value.
@@ -26,147 +22,31 @@ import org.apache.spark.sql.internal.SQLConf
   * sf10 that is a 60M-row sort whose ordering is semantically
   * unnecessary. DuckDB hash-windows the same query (its window
   * operator hash-partitions without sorting when no ORDER BY is
-  * present), which is where the reference's 1.58× a16 advantage came
-  * from. This operator is the same idea as a Spark physical plan node:
+  * present). This strategy gets the same effect from stock codegen
+  * operators: the exchange-reusing join form of [[planJoinForm]] —
+  * one exchange on the partition keys, read twice, no sort and no
+  * full-partition row buffer.
   *
-  *   - requires only ClusteredDistribution(partitionSpec) — the SAME
-  *     single exchange WindowExec needs, but NO sort;
-  *   - pass 1 streams the task's rows once, appending each row to a
-  *     spill-capable buffer (Spark's own ExternalAppendOnlyUnsafeRow-
-  *     Array, task-memory-managed) while folding it into a per-key
-  *     aggregation buffer in a hash map (state per task = one buffer
-  *     per DISTINCT key, like hash aggregate — not per row);
-  *   - pass 2 finalizes each key's aggregates once, then replays the
-  *     buffered rows in arrival order joining each with its group's
-  *     result row.
-  *
-  * Alternatives measured first (tools/A16Probe, round 5): groupBy +
-  * join-back and broadcast-join-back are both SLOWER than WindowExec —
-  * they pay a second shuffle (or a driver-side broadcast collect) for
-  * the aggregate side. A logical rewrite to an exchange-reusing
-  * self-join was rejected because column pruning splits the two
-  * exchange subtrees apart (different projections ⇒ no ReusedExchange)
-  * and degenerates into exactly that measured-worse join-back. Doing
-  * it as one operator over one exchange is the form that cannot
-  * regress.
-  *
-  * Covers any Catalyst DeclarativeAggregate (count/sum/avg/min/max/
-  * first/last/stddev/...), non-distinct, unfiltered, deterministic.
-  * Everything else falls through to WindowExec unchanged.
-  *
-  * 100 TB notes: per-task memory is rows (spillable to disk) + one
-  * aggregation buffer per distinct key (same envelope as the hash
-  * aggregate Spark would run for plain GROUP BY k). Partition skew in
-  * k concentrates a hot key's rows in one task — identical to
-  * WindowExec's behavior, since any PARTITION BY evaluation must
-  * co-locate a key; AQE's skew handling cannot split window
-  * partitions either.
-  */
-case class HashFramelessWindowExec(
-    windowExpression: Seq[NamedExpression],
-    partitionSpec: Seq[Expression],
-    child: SparkPlan) extends UnaryExecNode {
-
-  override def output: Seq[Attribute] = child.output ++ windowExpression.map(_.toAttribute)
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(partitionSpec) :: Nil
-
-  override def outputPartitioning: Partitioning = child.outputPartitioning
-
-  // pass 2 replays rows in arrival order, so the child's ordering survives
-  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
-
-  override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
-    copy(child = newChild)
-
-  private def aggExpressions: Seq[AggregateExpression] = windowExpression.map {
-    case Alias(WindowExpression(ae: AggregateExpression, _), _) => ae
-    case other => throw new IllegalStateException(s"not a window aggregate: $other")
-  }
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val aggs = aggExpressions
-    val childOutput = child.output
-    val partSpec = partitionSpec
-    val outAttrs = output
-    val inMemThreshold = conf.windowExecBufferInMemoryThreshold
-    // byte cap on the plain on-heap stage of the buffer (beyond it the
-    // task-memory-managed, disk-spilling stage takes over): bounds the
-    // unaccounted heap a task of very wide rows can pin
-    val inMemSizeThreshold = 64L << 20
-    val spillThreshold = conf.windowExecBufferSpillThreshold
-    val spillSizeThreshold = conf.windowExecBufferSpillSizeThreshold
-
-    child.execute().mapPartitions({ iter =>
-      val funcs = aggs.map(_.aggregateFunction.asInstanceOf[DeclarativeAggregate])
-      val bufferAttrs = funcs.flatMap(_.aggBufferAttributes)
-      val bufferTypes = bufferAttrs.map(_.dataType)
-      val initProj = MutableProjection.create(funcs.flatMap(_.initialValues), Nil)
-      val updateProj =
-        MutableProjection.create(funcs.flatMap(_.updateExpressions), bufferAttrs ++ childOutput)
-      val evalProj = UnsafeProjection.create(funcs.map(_.evaluateExpression), bufferAttrs)
-      val keyProj = UnsafeProjection.create(partSpec, childOutput)
-      val toUnsafe = UnsafeProjection.create(childOutput, childOutput)
-      val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-
-      val buffer = new SpillableRowBuffer(
-        inMemThreshold, inMemSizeThreshold, spillThreshold, spillSizeThreshold)
-      val groups = new java.util.HashMap[UnsafeRow, SpecificInternalRow]()
-      val updateJoin = new JoinedRow
-
-      while (iter.hasNext) {
-        val row = iter.next()
-        val unsafe = row match {
-          case u: UnsafeRow => u
-          case r => toUnsafe(r)
-        }
-        buffer.add(unsafe)
-        val key = keyProj(unsafe)
-        var groupBuf = groups.get(key)
-        if (groupBuf == null) {
-          groupBuf = new SpecificInternalRow(bufferTypes)
-          initProj.target(groupBuf)(InternalRow.empty)
-          groups.put(key.copy(), groupBuf)
-        }
-        updateProj.target(groupBuf)(updateJoin(groupBuf, unsafe))
-      }
-
-      val results = new java.util.HashMap[UnsafeRow, UnsafeRow](groups.size())
-      groups.forEach((k, groupBuf) => results.put(k, evalProj(groupBuf).copy()))
-      groups.clear()
-
-      val outputJoin = new JoinedRow
-      buffer.iterator.map { r =>
-        resultProj(outputJoin(r, results.get(keyProj(r))))
-      }
-    }, preservesPartitioning = true)
-  }
-}
-
-/** Plans frameless window aggregates onto [[HashFramelessWindowExec]].
   * Injected planner strategies run before Spark's built-ins, so
-  * matching Window nodes never reach the sorting WindowExec; anything
-  * the exec cannot evaluate (ordered frames, ranking functions,
-  * distinct/filtered aggregates, imperative aggregates, empty
+  * matching Window nodes never reach the sorting WindowExec unless a
+  * gate below declines them. Covers any Catalyst DeclarativeAggregate
+  * (count/sum/avg/min/max/first/last/stddev/...), non-distinct,
+  * unfiltered, deterministic; anything else (ordered frames, ranking
+  * functions, distinct/filtered or imperative aggregates, empty
   * PARTITION BY — which Spark funnels into a single partition anyway)
-  * returns Nil and falls through untouched.
+  * returns Nil and falls through to WindowExec untouched.
+  *
+  * 100 TB notes: per-task memory is the hash aggregate's one buffer
+  * per DISTINCT key (the envelope of a plain GROUP BY k) plus the hash
+  * join's build side, one result row per distinct key; the rows
+  * themselves stream past and are never buffered. Partition skew in k
+  * concentrates a hot key's rows in one task — identical to
+  * WindowExec's behavior, since any PARTITION BY evaluation must
+  * co-locate a key.
   */
 object FramelessWindowStrategy extends SparkStrategy {
 
   val EnabledKey = "spark.graft.hashFramelessWindow.enabled"
-
-  /** "join" (default): one exchange on the partition keys consumed
-    * TWICE via ReusedExchange — a complete-mode hash aggregate builds
-    * the per-key results, a shuffled hash join streams the rows past
-    * them. All stock codegen operators, no sort, no full-partition
-    * buffer. "buffer": [[HashFramelessWindowExec]] — one exchange, one
-    * pass, but buffers each task's rows (spillable) and pays
-    * interpreted-loop overhead; measured slower than the sort at sf10
-    * (tools/A16Probe), kept for the probe record and for plans where
-    * reading the exchange twice is expensive.
-    */
-  val ModeKey = "spark.graft.hashFramelessWindow.mode"
 
   /** Minimum estimated child size (bytes) for the strategy to fire;
     * below it the node falls through to stock WindowExec. The join
@@ -174,25 +54,25 @@ object FramelessWindowStrategy extends SparkStrategy {
     * (second exchange read + hash-join build) that a small input never
     * amortizes: at sf0.1 (600k rows, ~7 MB estimated) WindowExec is
     * 0.32 s vs the join form's 0.46 s, while at derived sf10 (60M
-    * rows) the join form is 3.50 s vs the sort's 4.27 s (tools/
-    * A16Probe, SCALE.md). Catalyst's default stats visitor always has
+    * rows) the join form is 3.50 s vs the sort's 4.27 s (SCALE.md,
+    * round 6). Catalyst's default stats visitor always has
     * sizeInBytes (file sizes scaled by projection width); unknown
     * sizes estimate as Long.MaxValue, which correctly assumes BIG. */
   val MinChildBytesKey = "spark.graft.hashFramelessWindow.minChildBytes"
   val MinChildBytesDefault: Long = 64L << 20
 
-  /** Escape hatch for probes/specs: fire regardless of the size and
-    * key-type gates. */
+  /** Escape hatch for specs: fire regardless of the size and key-type
+    * gates. */
   val ForceKey = "spark.graft.hashFramelessWindow.force"
 
   /** Key-type gate: the join form only fires when some partition key
     * is variable-width (string/binary) or complex. For fixed-width
     * primitive keys, WindowExec's radix sort wins outright — measured
-    * on the regenerated derived sf10 (tools/A16Probe ×2 + A16Tune, r7,
-    * 60M rows, long key): sort 2.3–3.1 s vs join form 4.0–4.6 s —
+    * on the regenerated derived sf10 (SCALE.md round 7, 60M rows,
+    * long key): sort 2.3–3.1 s vs join form 4.0–4.6 s —
     * inverting the r6 one-off probe that motivated the join default.
-    * On a 60M-row high-cardinality STRING key (tools/A16Str: md5 of
-    * l_orderkey) the prefix-comparison sort loses: join 6.1 s min /
+    * On a 60M-row high-cardinality STRING key (SCALE.md round 7: md5
+    * of l_orderkey) the prefix-comparison sort loses: join 6.1 s min /
     * 6.7 s avg vs sort 6.7 s min / 8.5 s avg. Woltka's
     * `COUNT(*) OVER (PARTITION BY seq_id, is_fwd)` — the reference's
     * core frameless window — keys on a string and takes the join form.
@@ -227,12 +107,7 @@ object FramelessWindowStrategy extends SparkStrategy {
             (sortUnfriendlyKeys(partitionSpec) &&
               child.stats.sizeInBytes >= BigInt(SQLConf.get
                 .getConfString(MinChildBytesKey, MinChildBytesDefault.toString).toLong))) =>
-      SQLConf.get.getConfString(ModeKey, "join") match {
-        case "buffer" =>
-          HashFramelessWindowExec(windowExprs, partitionSpec, planLater(child)) :: Nil
-        case _ =>
-          planJoinForm(windowExprs, partitionSpec, child) :: Nil
-      }
+      planJoinForm(windowExprs, partitionSpec, child) :: Nil
     case _ => Nil
   }
 
@@ -251,11 +126,14 @@ object FramelessWindowStrategy extends SparkStrategy {
     * Built at the PHYSICAL level on purpose: expressed logically, the
     * optimizer's column pruning projects the aggregate side down to
     * the keys, the two exchange subtrees stop being identical, and the
-    * plan degenerates to the two-shuffle join-back that tools/A16Probe
-    * measured slower than WindowExec. Here both join inputs plan the
-    * SAME logical child with the SAME required distribution, so
-    * ReuseExchange (or AQE stage reuse) collapses them: the shuffle is
-    * written once and read twice.
+    * plan degenerates to a two-shuffle join-back. Both join-backs were
+    * measured slower than WindowExec (SCALE.md rounds 5-6: groupBy +
+    * join-back 6.03 s, broadcast join-back 13.2 s at 60M rows) — they
+    * pay a second shuffle, or a driver-side broadcast collect, for the
+    * aggregate side. Here both join inputs plan the SAME logical child
+    * with the SAME required distribution, so ReuseExchange (or AQE
+    * stage reuse) collapses them: the shuffle is written once and read
+    * twice, the one exchange WindowExec itself needs.
     */
   private def planJoinForm(
       windowExprs: Seq[NamedExpression],

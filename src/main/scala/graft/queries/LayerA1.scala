@@ -106,7 +106,7 @@ object LayerA1 {
         // to KEYS before the lineitem join: customer(BUILDING) semi-
         // filters orders (customer broadcast — it is the small side).
         // The lineitem⋈keys join is then SIZE-GATED on the orders
-        // relation's estimated size (r7, tools/A06Probe at sf10):
+        // relation's estimated size (r7, A06Probe at sf10):
         //  - small orders → broadcast the key set; lineitem streams
         //    map-side through one broadcast hash join + partial agg
         //    (wins at sf0.1 where fixed overheads dominate);
@@ -124,7 +124,7 @@ object LayerA1 {
           .select("o_orderkey")
         val ordersBytes = Tables.orders(s, d).queryExecution.optimizedPlan.stats.sizeInBytes
         // Three regimes on the ORDER-KEY-SET size (r12 re-probe,
-        // tools/A06Probe at the re-derived sf10 with a 32g heap):
+        // A06Probe at the re-derived sf10 with a 32g heap):
         //  - tiny (sf0.1): broadcast-inner on the key set — one
         //    map-side BHJ + partial agg, no exchange of lineitem.
         //  - mid (sf10, ~3M keys = 24 MB broadcast): broadcast the key

@@ -1262,8 +1262,8 @@ object LayerA2 {
         // sfDir-tagged path (r10 advice): a fixed shared path let two
         // concurrent runs (sf0.01 verify overlapping an sf0.1 sweep)
         // overwrite each other mid-read — flaky mismatches vs the
-        // run's own oracle. Same tagging pattern as BenchHeavy's
-        // cachedDir.
+        // run's own oracle. Same tagging pattern as
+        // ProductionChecks.cachedDir.
         val tag = new java.io.File(d).getAbsolutePath
           .replaceAll("[^A-Za-z0-9]", "_")
         val out = new java.io.File(

@@ -3431,7 +3431,7 @@ object LlmPipeline {
         // silently reusing a stale tmpdir .warc.gz written by an older
         // build (r12 advice).
         val tver = java.lang.Integer.toHexString(
-          (WarcHtmlParts.mkString(" ") + WarcHttpHeader).hashCode)
+          (WarcHtmlParts.mkString("\u0000") + WarcHttpHeader).hashCode)
         val path = new java.io.File(sys.props("java.io.tmpdir"),
           "graft_l84_" + tver + "_" + new java.io.File(d).getAbsolutePath
             .replaceAll("[^A-Za-z0-9]", "_") + ".warc.gz")

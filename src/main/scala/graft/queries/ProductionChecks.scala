@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *    the bucket-local verify computes EXACT shingle Jaccard — so the
   *    verified pair set is {pairs with J ≥ threshold}, identical
   *    whichever family proposed the candidates. Measured equal on
-  *    sf0.01 AND sf0.1 (tools/XTwinProbe, r14: 25/25 and 256/256
+  *    sf0.01 AND sf0.1 (XTwinProbe, r14: 25/25 and 256/256
   *    pairs, zero asymmetric rows).
   *  - x06/x13: duplicate-chunk / duplicate-window detection is
   *    hash-EQUALITY of chunk text; absent collisions (64-bit space,
@@ -46,8 +46,8 @@ object ProductionChecks {
     LlmPipeline.queries.find(_.name == name).flatMap(_.oracle)
       .getOrElse(sys.error(s"ProductionChecks: no oracle registered for $name"))
 
-  /** Deterministic per-sfDir artifact dir with build-once reuse (the
-    * BenchHeavy cachedDir pattern — r14 review: a fresh
+  /** Deterministic per-sfDir artifact dir with build-once reuse (r14
+    * review: a fresh
     * createTempDirectory per invocation accumulated an index copy in
     * tmpdir every Verify round). The parquet _SUCCESS marker gates
     * reuse; contents are deterministic in (testdata, code).

@@ -7,20 +7,23 @@ import org.scalatest.funsuite.AnyFunSuite
   * the reference below applies each step with java.util.regex exactly
   * as Spark's regexp_replace does (Matcher.replaceAll; the
   * replacement strings contain no `$`/`\` so no escaping divergence),
-  * then String.trim — the same operators Catalyst compiles the
-  * expression chain to.
+  * then strips ' ' (0x20) at both edges as Spark's StringTrim does —
+  * the same operators Catalyst compiles the expression chain to.
   */
 class HtmlKernelSpec extends AnyFunSuite {
 
   private def reference(s: String): String =
     graft.ops.Html.Steps.foldLeft(s) { case (acc, (pat, rep)) =>
       java.util.regex.Pattern.compile(pat).matcher(acc).replaceAll(rep)
-    }.trim
+    }.replaceAll("\\A +| +\\z", "")
 
   private def check(s: String): Unit =
     assert(HtmlKernel.htmlToText(s) == reference(s), s"input: ${s.take(200)}")
 
   test("adversarial fixtures match the regex chain exactly") {
+    // trim strips only ' ' (0x20), like StringTrim: edge controls stay
+    val edgeControls = "\u0001leading control survives collapse and trim\u0001"
+    assert(HtmlKernel.htmlToText(edgeControls) == edgeControls)
     val cases = Seq(
       "",
       "plain text no markup",
@@ -57,7 +60,7 @@ class HtmlKernelSpec extends AnyFunSuite {
       // whitespace: every \s member, non-\s controls at the edges,
       // unicode spaces that Java \s does NOT cover
       " \t\n\u000B\f\r mixed   runs \t ",
-      "\u0001leading control survives collapse, dies in trim\u0001",
+      edgeControls,
       "\u00a0nbsp-char is not \\s\u00a0",
       "e\u0301 combining, \u1e9e unicode sharp s",
       // full documents

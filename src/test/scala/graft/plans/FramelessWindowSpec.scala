@@ -3,14 +3,16 @@ package graft.plans
 import graft.SparkFixture
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** HashFramelessWindowExec vs Spark's sorting WindowExec: identical
-  * results on every aggregate/key shape, and the plan actually takes
-  * the hash path (no sort) exactly when the window is frameless.
+/** FramelessWindowStrategy's join form vs Spark's sorting WindowExec:
+  * identical results on every aggregate/key shape, and the plan
+  * actually takes the join form (no sort) exactly when the window is
+  * frameless.
   */
 class FramelessWindowSpec extends AnyFunSuite {
   private val spark = SparkFixture.spark
@@ -53,39 +55,29 @@ class FramelessWindowSpec extends AnyFunSuite {
     case other => other +: other.children.flatMap(allOps)
   }
 
-  /** Run `q` under both hash modes and with the strategy off; assert
-    * all three agree, and that each hash mode's plan is sort-free with
-    * the mode's expected operators. */
+  private def hashJoins(ops: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+    ops.collect { case j: ShuffledHashJoinExec => j }
+
+  /** Run `q` with the strategy on and off; assert both agree, and that
+    * the strategy's plan is the sort-free join form (or, when
+    * `expectHash` is false, the WindowExec fallback). */
   private def check(q: => DataFrame, expectHash: Boolean = true): Unit = {
     val offRows = withHashWindow(false)(sortedRows(q))
-    for (mode <- Seq("join", "buffer")) {
-      val prev = spark.conf.getOption(FramelessWindowStrategy.ModeKey)
-      spark.conf.set(FramelessWindowStrategy.ModeKey, mode)
-      try withHashWindow(true) {
-        val df = q
-        val rows = sortedRows(df)
-        assert(rows == offRows, s"mode=$mode results differ from WindowExec")
-        val onPlan = df.queryExecution.executedPlan
-        val onOps = allOps(onPlan)
-        val windowExecs = onOps.collect { case w: WindowExec => w }
-        if (expectHash) {
-          assert(windowExecs.isEmpty, s"mode=$mode still has WindowExec:\n$onPlan")
-          assert(onOps.collect { case s: SortExec => s }.isEmpty,
-            s"mode=$mode plan must not sort:\n$onPlan")
-          if (mode == "buffer")
-            assert(onOps.exists(_.isInstanceOf[HashFramelessWindowExec]),
-              s"expected buffer exec:\n$onPlan")
-          else
-            assert(onOps.exists(
-              _.isInstanceOf[org.apache.spark.sql.execution.joins.ShuffledHashJoinExec]),
-              s"expected shuffled hash join:\n$onPlan")
-        } else {
-          assert(onOps.collect { case h: HashFramelessWindowExec => h }.isEmpty)
-          assert(windowExecs.nonEmpty, s"mode=$mode expected WindowExec fallback:\n$onPlan")
-        }
-      } finally prev match {
-        case Some(v) => spark.conf.set(FramelessWindowStrategy.ModeKey, v)
-        case None => spark.conf.unset(FramelessWindowStrategy.ModeKey)
+    withHashWindow(true) {
+      val df = q
+      val rows = sortedRows(df)
+      assert(rows == offRows, "results differ from WindowExec")
+      val onPlan = df.queryExecution.executedPlan
+      val onOps = allOps(onPlan)
+      val windowExecs = onOps.collect { case w: WindowExec => w }
+      if (expectHash) {
+        assert(windowExecs.isEmpty, s"still has WindowExec:\n$onPlan")
+        assert(onOps.collect { case s: SortExec => s }.isEmpty,
+          s"plan must not sort:\n$onPlan")
+        assert(hashJoins(onOps).nonEmpty, s"expected shuffled hash join:\n$onPlan")
+      } else {
+        assert(hashJoins(onOps).isEmpty)
+        assert(windowExecs.nonEmpty, s"expected WindowExec fallback:\n$onPlan")
       }
     }
   }
@@ -101,9 +93,7 @@ class FramelessWindowSpec extends AnyFunSuite {
   }
 
   test("join mode writes ONE shuffle, read twice (ReusedExchange / stage reuse)") {
-    val prev = spark.conf.getOption(FramelessWindowStrategy.ModeKey)
-    spark.conf.set(FramelessWindowStrategy.ModeKey, "join")
-    try withHashWindow(true) {
+    withHashWindow(true) {
       val d = df.select($"k", $"i", count(lit(1)).over(Window.partitionBy($"k")).as("cnt"))
       d.collect()
       val ops = allOps(d.queryExecution.executedPlan)
@@ -118,9 +108,6 @@ class FramelessWindowSpec extends AnyFunSuite {
       assert(distinct.size == 1,
         s"expected one reused shuffle, got ${exchanges.size} occurrences / " +
           s"${distinct.size} distinct:\n${d.queryExecution.executedPlan}")
-    } finally prev match {
-      case Some(v) => spark.conf.set(FramelessWindowStrategy.ModeKey, v)
-      case None => spark.conf.unset(FramelessWindowStrategy.ModeKey)
     }
   }
 
@@ -182,18 +169,16 @@ class FramelessWindowSpec extends AnyFunSuite {
     val d = df.select($"k", count(lit(1)).over(Window.partitionBy($"k")).as("c"))
     d.collect()
     val ops = allOps(d.queryExecution.executedPlan)
-    assert(ops.collect { case h: HashFramelessWindowExec => h }.isEmpty)
-    assert(ops.collect {
-      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
-    }.isEmpty, s"size gate should have suppressed the join form:\n${d.queryExecution.executedPlan}")
+    assert(hashJoins(ops).isEmpty,
+      s"size gate should have suppressed the join form:\n${d.queryExecution.executedPlan}")
     assert(ops.collect { case w: WindowExec => w }.nonEmpty)
   }
 
   test("key-type gate: primitive keys keep WindowExec, string keys take the join") {
     // zero the SIZE gate only (not force): the key-TYPE heuristic must
     // decide — radix-sortable primitive keys keep the sort (measured
-    // faster at every probed scale, tools/A16Tune), variable-width
-    // keys take the join form (tools/A16Str)
+    // faster at every probed scale), variable-width keys take the join
+    // form (SCALE.md round 7: long vs md5-string key at 60M rows)
     val minKey = FramelessWindowStrategy.MinChildBytesKey
     val prevMin = spark.conf.getOption(minKey)
     spark.conf.set(minKey, "0")
@@ -219,21 +204,8 @@ class FramelessWindowSpec extends AnyFunSuite {
       val d = df.select($"k", count(lit(1)).over(Window.partitionBy($"k")).as("c"))
       d.collect()
       val ops = allOps(d.queryExecution.executedPlan)
-      assert(ops.collect { case h: HashFramelessWindowExec => h }.isEmpty)
+      assert(hashJoins(ops).isEmpty)
       assert(ops.collect { case w: WindowExec => w }.nonEmpty)
-    }
-  }
-
-  test("spill path: buffer thresholds of 1 row still produce correct results") {
-    val mem = "spark.sql.windowExec.buffer.in.memory.threshold"
-    val spill = "spark.sql.windowExec.buffer.spill.threshold"
-    val prevMem = spark.conf.getOption(mem)
-    val prevSpill = spark.conf.getOption(spill)
-    spark.conf.set(mem, "1"); spark.conf.set(spill, "2")
-    try check(df.select($"k", $"i", sum($"i").over(Window.partitionBy($"k")).as("s")))
-    finally {
-      prevMem.fold(spark.conf.unset(mem))(spark.conf.set(mem, _))
-      prevSpill.fold(spark.conf.unset(spill))(spark.conf.set(spill, _))
     }
   }
 }

@@ -63,4 +63,17 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(cols.subsetOf(Set("l_orderkey", "l_extendedprice", "l_discount")),
       s"lineitem scan reads beyond the join/revenue columns: $cols")
   }
+
+  test("registry: names are unique and every benchQueries entry has an oracle") {
+    // the benchmark's tpch_serving workload checks each benchQueries
+    // result against its registered oracle (`oracle.get`), and every
+    // by-name lookup (queries, oracleSql) assumes unique names
+    val names = graft.SparkEntry.allQueryDefs.map(_.name)
+    assert(names.distinct.size == names.size,
+      s"duplicate query names: ${names.diff(names.distinct).distinct}")
+    val bench = graft.SparkEntry.benchQueries
+    assert(bench.nonEmpty)
+    assert(bench.forall(_.oracle.isDefined),
+      s"bench queries without an oracle: ${bench.filter(_.oracle.isEmpty).map(_.name)}")
+  }
 }
