@@ -159,16 +159,21 @@ object LmScore {
       uniMap.put(r.getString(0), Array(r.getLong(1), nextId)); nextId += 1L
     }
     val bigRows = model.bigModel.collect()
-    // (key, c2, c1_prev) sorted by key; a bigram whose prev/w is not
-    // in the unigram table (impossible for trainStupidBackoff output,
-    // where both are reference tokens) could never be LOOKED UP via
-    // ids either, so skipping such a row is behavior-identical
+    // (key, c2, c1_prev) sorted by key. Both tokens of every bigram
+    // must be in the unigram table (always true of trainStupidBackoff
+    // output): the id layout cannot represent a bigram that is not,
+    // while the join path would still score it, so a hand-assembled
+    // model without that coverage is rejected rather than scored
+    // differently by the two paths
+    def id(token: String): Long = {
+      val u = uniMap.get(token)
+      require(u != null, s"bigram token '$token' absent from the unigram table")
+      u(1)
+    }
     val trips = new java.util.ArrayList[Array[Long]](bigRows.length)
     bigRows.foreach { r =>
-      val p = uniMap.get(r.getString(0))
-      val w = uniMap.get(r.getString(1))
-      if (p != null && w != null)
-        trips.add(Array((p(1) << 32) | w(1), r.getLong(2), r.getLong(3)))
+      trips.add(Array((id(r.getString(0)) << 32) | id(r.getString(1)),
+        r.getLong(2), r.getLong(3)))
     }
     trips.sort((x: Array[Long], y: Array[Long]) =>
       java.lang.Long.compare(x(0), y(0)))

@@ -240,15 +240,18 @@ object Retrieval {
     * treats a crash between the two writes as absent. `docBuckets` is
     * a build-time layout parameter of the standing artifact (like the
     * term-bucket modulus): size it to the serving cluster's
-    * parallelism; 32 matches the local bench session.
+    * parallelism; 32 matches the local bench session. An existing
+    * index is reused only when it has the requested layout; one built
+    * with other `docBuckets`/`termBuckets` is dropped and rebuilt.
     */
   def ensureBm25BucketedIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, postings: => DataFrame,
       docBuckets: Int = 32, termBuckets: Int = 0): Unit = {
     require(docBuckets > 0, s"docBuckets must be positive, got $docBuckets")
-    if (spark.catalog.tableExists(table) &&
-        spark.catalog.tableExists(table + "_df") &&
-        spark.catalog.tableExists(table + "_stats")) return
+    val tables = Seq(table, table + "_df", table + "_stats")
+    if (tables.forall(spark.catalog.tableExists) &&
+        bm25BucketedLayout(spark, table) == (docBuckets, termBuckets)) return
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     // a data directory left by a dead catalog (e.g. a previous
     // in-memory-catalog JVM) blocks the CTAS — clear it first (the
     // BucketedTables lesson)
@@ -289,6 +292,17 @@ object Retrieval {
       .withColumn("n_buckets", lit(termBuckets))
       .repartition(1)
       .write.mode("overwrite").saveAsTable(table + "_stats")
+  }
+
+  /** (doc_id bucket count, term-bucket modulus) of an existing
+    * [[ensureBm25BucketedIndex]] table: the first from the catalog's
+    * bucket spec, the second from the stats sidecar. */
+  private def bm25BucketedLayout(
+      spark: org.apache.spark.sql.SparkSession, table: String): (Int, Int) = {
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
+    (meta.bucketSpec.map(_.numBuckets).getOrElse(0),
+      spark.table(table + "_stats").select(col("n_buckets").cast("int")).head().getInt(0))
   }
 
   /** Serve top-k from an [[ensureBm25BucketedIndex]] table: reads the

@@ -1,111 +1,37 @@
 package graft.sources
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
 
-/** DataSource V2 reader for BIOM v2.1 HDF5
-  * (`spark.read.format("biom")`): sample_id, feature_id, value COO
-  * rows, `include_filepath` source column.
+/** BIOM v2.1 HDF5 (`spark.read.format("biom")`): sample_id, feature_id,
+  * value COO rows, `include_filepath` source column.
   *
-  * Scale: one InputPartition per file, decoded EXECUTOR-side via the
+  * Scale: one partition per file, decoded EXECUTOR-side via the
   * pure-JVM Hdf5Biom codec — many BIOM files fan out across the
   * cluster instead of serializing through the driver (the reference
   * parallelizes the same way: one reader thread per file,
   * src/read_biom.cpp).
   */
-class BiomDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "biom"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    BiomTable.schema(options.getBoolean("include_filepath", false))
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new BiomTable(new CaseInsensitiveStringMap(properties))
-}
+class BiomDataSource extends FileSource(BiomFormat)
 
-object BiomTable {
-  def schema(includeFilepath: Boolean): StructType = {
-    val base = StructType(Seq(
-      StructField("sample_id", StringType),
-      StructField("feature_id", StringType),
-      StructField("value", DoubleType)))
-    if (includeFilepath) base.add(StructField("filepath", StringType)) else base
-  }
-}
+object BiomFormat extends FileFormat[(String, String, Double)] {
+  override val name = "biom"
+  override def columns(options: CaseInsensitiveStringMap): StructType = StructType(Seq(
+    StructField("sample_id", StringType),
+    StructField("feature_id", StringType),
+    StructField("value", DoubleType)))
 
-class BiomTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
-  override def name(): String = s"biom(${options.get("path")})"
-  override def schema(): StructType =
-    BiomTable.schema(options.getBoolean("include_filepath", false))
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new BiomScanBuilder(opts)
-}
-
-class BiomScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private val fullSchema = BiomTable.schema(options.getBoolean("include_filepath", false))
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = new BiomScan(options.asScala.toMap, required)
-}
-
-case class BiomFilePartition(path: String) extends InputPartition
-
-class BiomScan(options: Map[String, String], required: StructType) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] =
-    FileSourceCommon.expandPaths(
-      FileSourceCommon.pathSpec(options, "biom"))
-      .map(BiomFilePartition).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val req = required
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new BiomPartitionReader(p.asInstanceOf[BiomFilePartition], req)
-    }
-  }
-}
-
-class BiomPartitionReader(
-    part: BiomFilePartition,
-    required: StructType) extends PartitionReader[InternalRow] {
-
-  private val rows: Iterator[(String, String, Double)] = {
+  override def open(part: FilePartition, options: Map[String, String],
+      required: StructType): Records[(String, String, Double)] = {
     val in = FileSourceCommon.openStream(part.path)
     val bytes = try in.readAllBytes() finally in.close()
-    graft.kernel.Hdf5Biom.readCoo(bytes, part.path).iterator
+    Records(graft.kernel.Hdf5Biom.readCoo(bytes, part.path).iterator, () => ())
   }
-  private var current: InternalRow = _
 
-  override def next(): Boolean =
-    if (rows.hasNext) {
-      val (s, f, v) = rows.next()
-      val values = required.fieldNames.map {
-        case "sample_id"  => UTF8String.fromString(s)
-        case "feature_id" => UTF8String.fromString(f)
-        case "value"      => v
-        case "filepath"   => UTF8String.fromString(part.path)
-        case other        => throw new IllegalStateException(s"unknown column $other")
-      }
-      current = new GenericInternalRow(values.asInstanceOf[Array[Any]])
-      true
-    } else false
-
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
+  override val column: PartialFunction[String, ColumnReader[(String, String, Double)]] = {
+    case "sample_id" => (r, _) => UTF8String.fromString(r._1)
+    case "feature_id" => (r, _) => UTF8String.fromString(r._2)
+    case "value" => (r, _) => r._3
+  }
 }

@@ -1,85 +1,44 @@
 package graft.sources
 
 import graft.kernel.FastxCodec
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import graft.kernel.FastxCodec.FastxRecord
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
 
-/** DataSource V2 reader for FASTA/FASTQ (`spark.read.format("fastx")`).
+/** FASTA/FASTQ (`spark.read.format("fastx")`).
   *
   * Schema and semantics per the reference's read_fastx
   * (reference: src/include/read_fastx.hpp:32-41, src/read_fastx
   * .cpp:1-271): the shared 7-column sequence-read schema, per-file
   * 1-based sequence_index, paired-end via the `sequence2` option
   * (R1/R2 matched by position, id-checked), `qual_offset` Phred decode,
-  * `include_filepath` source column.
-  *
-  * Scale: one InputPartition per file (pair), alphabetically sorted;
-  * column pruning pushed into the reader (unprojected qual columns are
-  * never decoded — exceeds reference parity, which has no pushdown).
+  * `include_filepath` source column. One partition per file (pair);
+  * streaming ingests arriving single-end files.
   */
-class FastxDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "fastx"
+class FastxDataSource extends FileSource(FastxFormat)
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FastxTable.schema(options.getBoolean("include_filepath", false))
+/** A record is (R1, R2), R2 null for single-end input. */
+object FastxFormat extends FileFormat[(FastxRecord, FastxRecord)] {
+  override val name = "fastx"
+  override def streaming = true
+  override def stdin = true
 
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new FastxTable(new CaseInsensitiveStringMap(properties))
-}
+  /** The sequence-read schema shared by fastx, sam_sequences and sff. */
+  val readSchema: StructType = StructType(Seq(
+    StructField("sequence_index", LongType),
+    StructField("read_id", StringType),
+    StructField("comment", StringType),
+    StructField("sequence1", StringType),
+    StructField("sequence2", StringType),
+    StructField("qual1", ArrayType(ShortType)),
+    StructField("qual2", ArrayType(ShortType))))
 
-object FastxTable {
-  def schema(includeFilepath: Boolean): StructType = {
-    val base = StructType(Seq(
-      StructField("sequence_index", LongType),
-      StructField("read_id", StringType),
-      StructField("comment", StringType),
-      StructField("sequence1", StringType),
-      StructField("sequence2", StringType),
-      StructField("qual1", ArrayType(ShortType)),
-      StructField("qual2", ArrayType(ShortType))))
-    if (includeFilepath) base.add(StructField("filepath", StringType)) else base
-  }
-}
+  override def columns(options: CaseInsensitiveStringMap): StructType = readSchema
 
-class FastxTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
-  private val includeFilepath = options.getBoolean("include_filepath", false)
-  override def name(): String = s"fastx(${options.get("path")})"
-  override def schema(): StructType = FastxTable.schema(includeFilepath)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new FastxScanBuilder(opts)
-}
-
-class FastxScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private val fullSchema = FastxTable.schema(options.getBoolean("include_filepath", false))
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = new FastxScan(options.asScala.toMap, required)
-}
-
-case class FastxFilePartition(r1: String, r2: Option[String]) extends InputPartition
-
-class FastxScan(options: Map[String, String], required: StructType) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val r1spec = FileSourceCommon.pathSpec(options, "fastx")
+  override def plan(options: Map[String, String]): Seq[FilePartition] = {
+    val r1spec = FileSourceCommon.pathSpec(options, name)
     // reference: read_fastx rejects paired-end over stdin — R1/R2 are
     // two streams and there is only one stdin (read_fastx_stdin.sh
     // tests 10-11).
@@ -94,138 +53,50 @@ class FastxScan(options: Map[String, String], required: StructType) extends Scan
         if (r1.length != r2.length)
           throw new IllegalArgumentException(
             s"fastx: ${r1.length} R1 files vs ${r2.length} R2 files")
-        r1.zip(r2).map { case (a, b) => FastxFilePartition(a, Some(b)) }.toArray
-      case None => r1.map(FastxFilePartition(_, None)).toArray
+        r1.zip(r2).map { case (a, b) => FilePartition(a, Some(b)) }
+      case None => r1.map(FilePartition(_))
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val qualOffset = options.getOrElse("qual_offset", "33").toInt
+  private def qualOffset(options: Map[String, String]): Int =
+    options.getOrElse("qual_offset", "33").toInt
+
+  override def check(options: Map[String, String], forStream: Boolean): Unit = {
+    // R1/R2 arrival can't be atomically matched
+    if (forStream && options.contains("sequence2"))
+      throw new IllegalArgumentException(
+        "fastx streaming does not support paired-end (sequence2)")
     // reference: read_fastx rejects offsets other than Phred+33/+64
-    if (qualOffset != 33 && qualOffset != 64)
+    val q = qualOffset(options)
+    if (q != 33 && q != 64)
       throw new IllegalArgumentException("qual_offset must be 33 or 64")
-    val req = required
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new FastxPartitionReader(p.asInstanceOf[FastxFilePartition], qualOffset, req)
+  }
+
+  override def open(part: FilePartition, options: Map[String, String],
+      required: StructType): Records[(FastxRecord, FastxRecord)] = {
+    def reader(p: String) = FastxCodec.open(p, FileSourceCommon.openStream(p))
+    val q = qualOffset(options)
+    val in1 = reader(part.path)
+    val in2 = part.mate.map(reader)
+    val it1 = new FastxCodec.RecordIterator(in1, q)
+    val recs = in2 match {
+      case Some(r) => FastxCodec.paired(it1, new FastxCodec.RecordIterator(r, q))
+      case None => it1.map(a => (a, null))
     }
+    Records(recs, () => { in1.close(); in2.foreach(_.close()) })
   }
 
-  override def toMicroBatchStream(checkpointLocation: String): streaming.MicroBatchStream =
-    new FastxMicroBatchStream(options, required, this)
-}
+  private def str(s: String): UTF8String = UTF8String.fromString(s)
+  private def quals(q: Option[Array[Short]]): GenericArrayData =
+    q.map(a => new GenericArrayData(a.map(_.asInstanceOf[Any]))).orNull
 
-/** Streaming ingest of sequencing output: each micro-batch picks up
-  * files that arrived since the last one. An offset is the SNAPSHOT of
-  * discovered files (a single-line JSON array in the checkpoint), so a
-  * committed (start, end] range always maps to end.files − start.files —
-  * replay after failure re-reads the identical file set even if new
-  * files appeared meanwhile (the MicroBatchStream immutability
-  * contract). Paired-end streaming is rejected (R1/R2 arrival can't be
-  * atomically matched).
-  */
-class FastxMicroBatchStream(
-    options: Map[String, String],
-    required: StructType,
-    scan: FastxScan) extends streaming.MicroBatchStream {
-
-  if (options.contains("sequence2"))
-    throw new IllegalArgumentException(
-      "fastx streaming does not support paired-end (sequence2)")
-
-  private def currentFiles: Seq[String] =
-    FileSourceCommon.expandPathsLenient(
-      FileSourceCommon.pathSpec(options, "fastx"))
-
-  override def initialOffset(): streaming.Offset = FileSnapshotOffset(Seq.empty)
-  override def latestOffset(): streaming.Offset = FileSnapshotOffset(currentFiles.sorted)
-  override def deserializeOffset(json: String): streaming.Offset =
-    FileSnapshotOffset.fromJson(json)
-
-  override def planInputPartitions(
-      start: streaming.Offset, end: streaming.Offset): Array[InputPartition] = {
-    val seen = start.asInstanceOf[FileSnapshotOffset].files.toSet
-    end.asInstanceOf[FileSnapshotOffset].files
-      .filterNot(seen).sorted.map(FastxFilePartition(_, None)).toArray
+  override val column: PartialFunction[String, ColumnReader[(FastxRecord, FastxRecord)]] = {
+    case "sequence_index" => (_, n) => n
+    case "read_id" => (r, _) => str(FastxCodec.stripPairSuffix(r._1.readId))
+    case "comment" => (r, _) => r._1.comment.map(str).orNull
+    case "sequence1" => (r, _) => str(r._1.sequence)
+    case "sequence2" => (r, _) => if (r._2 == null) null else str(r._2.sequence)
+    case "qual1" => (r, _) => quals(r._1.qual)
+    case "qual2" => (r, _) => if (r._2 == null) null else quals(r._2.qual)
   }
-
-  override def createReaderFactory(): PartitionReaderFactory = scan.createReaderFactory()
-
-  override def commit(end: streaming.Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-/** Offset = the sorted set of files discovered so far. Serialized as a
-  * SINGLE-LINE JSON array: Spark's OffsetSeqLog stores one offset per
-  * line, so raw newlines in json() would corrupt the checkpoint.
-  * Shared by the fastx and alignments streams.
-  */
-case class FileSnapshotOffset(files: Seq[String])
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = {
-    import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
-    JsonMethods.compact(JsonMethods.render(files))
-  }
-}
-
-object FileSnapshotOffset {
-  def fromJson(json: String): FileSnapshotOffset = {
-    import org.json4s.jackson.JsonMethods
-    import org.json4s.{DefaultFormats, JArray}
-    implicit val formats: DefaultFormats.type = DefaultFormats
-    if (json.isEmpty) FileSnapshotOffset(Seq.empty)
-    else FileSnapshotOffset(
-      JsonMethods.parse(json).asInstanceOf[JArray].extract[Seq[String]])
-  }
-}
-
-class FastxPartitionReader(
-    part: FastxFilePartition,
-    qualOffset: Int,
-    required: StructType) extends PartitionReader[InternalRow] {
-  import FastxCodec._
-
-  private val in1 = open(part.r1, FileSourceCommon.openStream(part.r1))
-  private val it1 = new RecordIterator(in1, qualOffset)
-  private val in2 = part.r2.map(p => open(p, FileSourceCommon.openStream(p)))
-  private val it2 = in2.map(r => new RecordIterator(r, qualOffset))
-  private val pairedIt = it2.map(i2 => paired(it1, i2))
-
-  private val needQual1 = required.fieldNames.contains("qual1")
-  private val needQual2 = required.fieldNames.contains("qual2")
-  private var index = 0L
-  private var current: InternalRow = _
-
-  private def toRow(a: FastxRecord, b: Option[FastxRecord]): InternalRow = {
-    index += 1
-    val values = required.fieldNames.map {
-      case "sequence_index" => index
-      case "read_id"        => UTF8String.fromString(stripPairSuffix(a.readId))
-      case "comment"        => a.comment.map(UTF8String.fromString).orNull
-      case "sequence1"      => UTF8String.fromString(a.sequence)
-      case "sequence2"      => b.map(r => UTF8String.fromString(r.sequence)).orNull
-      case "qual1" =>
-        if (needQual1) a.qual.map(q => new GenericArrayData(q.map(_.asInstanceOf[Any]))).orNull
-        else null
-      case "qual2" =>
-        if (needQual2) b.flatMap(_.qual).map(q => new GenericArrayData(q.map(_.asInstanceOf[Any]))).orNull
-        else null
-      case "filepath" => UTF8String.fromString(FileSourceCommon.displayPath(part.r1))
-      case other      => throw new IllegalStateException(s"unknown column $other")
-    }
-    new GenericInternalRow(values.asInstanceOf[Array[Any]])
-  }
-
-  override def next(): Boolean = pairedIt match {
-    case Some(pi) =>
-      if (pi.hasNext) { val (a, b) = pi.next(); current = toRow(a, Some(b)); true }
-      else false
-    case None =>
-      if (it1.hasNext) { current = toRow(it1.next(), None); true }
-      else false
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = { in1.close(); in2.foreach(_.close()) }
 }

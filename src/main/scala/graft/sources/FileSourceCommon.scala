@@ -101,11 +101,11 @@ object FileSourceCommon {
 
   /** Expand a comma-separated list of paths/globs, sorted per-glob.
     * `allowStdin`: sources the reference reads from stdin (fastx,
-    * alignments, newick) pass true; a stdin token is then snapshotted
-    * and the RESOLVED snapshot path returned (it travels to executors
-    * inside the InputPartition; display via [[displayPath]]). Mixing
-    * stdin with other inputs is an error either way (reference rejects
-    * it: "stdin").
+    * alignments, sam_sequences, newick) pass true; a stdin token is
+    * then snapshotted and the RESOLVED snapshot path returned (it
+    * travels to executors inside the InputPartition; display via
+    * [[displayPath]]). Mixing stdin with other inputs is an error
+    * either way (reference rejects it: "stdin").
     */
   def expandPaths(spec: String, allowStdin: Boolean = false): Seq[String] = {
     val conf = hadoopConf

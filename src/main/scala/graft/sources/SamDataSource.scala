@@ -1,44 +1,25 @@
 package graft.sources
 
 import graft.kernel.SamCodec
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import graft.kernel.SamCodec.SamRecord
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
+import java.io.BufferedInputStream
 
-/** DataSource V2 reader for SAM text (`spark.read.format("alignments")`).
+/** SAM/BAM/CRAM alignments (`spark.read.format("alignments")`).
   *
   * Schema per the reference's read_alignments 21-column layout
   * (reference: src/include/read_alignments.hpp:29-77): 10 mandatory SAM
   * fields (split position/stop_position) + 8 integer and 3 string
   * optional tags, optional `sequence`/`qual` (include_seq_qual) and
-  * `filepath` columns. BAM binary support is deferred — the reference's
-  * htslib BAM path has no pure-JVM equivalent in scope (SURVEY §7.5).
-  *
-  * Scale: one InputPartition per file (sorted glob), projection pruned.
+  * `filepath` columns. One partition per file (sorted glob), stdin
+  * accepted, [[SamFilters]] evaluated per record inside the reader,
+  * streaming ingests arriving files.
   */
-class SamDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "alignments"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    SamTable.schema(
-      options.getBoolean("include_seq_qual", false),
-      options.getBoolean("include_filepath", false))
-
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new SamTable(new CaseInsensitiveStringMap(properties))
-}
+class SamDataSource extends FileSource(SamFormat)
 
 /** `read_sam` alias of read_alignments (reference:
   * src/read_alignments.cpp:273-277) — `spark.read.format("sam")`. */
@@ -46,9 +27,13 @@ class SamAliasDataSource extends SamDataSource {
   override def shortName(): String = "sam"
 }
 
-object SamTable {
-  def schema(includeSeqQual: Boolean, includeFilepath: Boolean): StructType = {
-    var s = StructType(Seq(
+object SamFormat extends FileFormat[SamRecord] {
+  override val name = "alignments"
+  override def streaming = true
+  override def stdin = true
+
+  override def columns(options: CaseInsensitiveStringMap): StructType = {
+    val s = StructType(Seq(
       StructField("read_id", StringType),
       StructField("flags", IntegerType), // USMALLINT domain 0..65535
       StructField("reference", StringType),
@@ -65,43 +50,106 @@ object SamTable {
       StructField("tag_xg", LongType), StructField("tag_nm", LongType),
       StructField("tag_yt", StringType), StructField("tag_md", StringType),
       StructField("tag_sa", StringType)))
-    if (includeSeqQual) {
-      s = s.add(StructField("sequence", StringType))
-      s = s.add(StructField("qual", ArrayType(ShortType)))
+    if (options.getBoolean("include_seq_qual", false))
+      s.add(StructField("sequence", StringType)).add(StructField("qual", ArrayType(ShortType)))
+    else s
+  }
+
+  /** Format auto-detect: CRAM by its 4-byte magic (or extension) →
+    * pure-JVM CramCodec (raw/gzip/rANS4x8 subset; reference-based
+    * decode needs the reference_fasta option); BAM by extension or by
+    * content → binary BGZF codec; anything else → SAM text
+    * (gzip-transparent). Matches the reference's htslib autodetect
+    * (reference: src/read_alignments.cpp format handling,
+    * src/SAMReader.cpp:134).
+    */
+  override def open(part: FilePartition, options: Map[String, String],
+      required: StructType): Records[SamRecord] = {
+    val path = part.path
+    val includeSeqQual = options.get("include_seq_qual").exists(_.toBoolean)
+    val stream = new BufferedInputStream(FileSourceCommon.openStream(path))
+    stream.mark(4)
+    val magic = new Array[Byte](4)
+    val n = stream.readNBytes(magic, 0, 4)
+    stream.reset()
+    if ((n == 4 && magic.sameElements("CRAM".getBytes("US-ASCII"))) || path.endsWith(".cram")) {
+      val refFasta = options.get("reference_fasta")
+      val lines = new graft.kernel.CramCodec.Reader(
+        stream,
+        refFasta.map { f =>
+          // process-wide soft cache: one parse per executor, not per task
+          graft.kernel.CramCodec.loadFastaCached(f, FileSourceCommon.openStream)
+        },
+        path, options.get("generate_md").forall(_.toBoolean))
+      Records(lines.map(SamCodec.parseLine(_, includeSeqQual)), stream)
+    } else if (path.endsWith(".bam") || isBgzfBam(stream)) {
+      val bam = new graft.kernel.BamCodec.Reader(stream, includeSeqQual)
+      Records(bam, () => bam.close())
+    } else {
+      val reader = graft.kernel.FastxCodec.open(path, stream) // gzip-transparent line reader
+      val lines = Iterator.continually(reader.readLine()).takeWhile(_ != null)
+        .filter(l => l.nonEmpty && !SamCodec.isHeaderLine(l))
+      Records(lines.map(SamCodec.parseLine(_, includeSeqQual)), reader)
     }
-    if (includeFilepath) s = s.add(StructField("filepath", StringType))
-    s
   }
-}
 
-class SamTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
-  override def name(): String = s"alignments(${options.get("path")})"
-  override def schema(): StructType = SamTable.schema(
-    options.getBoolean("include_seq_qual", false),
-    options.getBoolean("include_filepath", false))
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new SamScanBuilder(opts)
-}
-
-class SamScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private val fullSchema = SamTable.schema(
-    options.getBoolean("include_seq_qual", false),
-    options.getBoolean("include_filepath", false))
-  private var required: StructType = fullSchema
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def pushFilters(
-      filters: Array[org.apache.spark.sql.sources.Filter]): Array[org.apache.spark.sql.sources.Filter] = {
-    val (sup, unsup) = filters.partition(SamFilters.supported)
-    pushed = sup
-    unsup // Spark re-applies only what we could not take
+  /** BAM by content, not extension: BGZF is gzip, so decompress the
+    * first block and look for the "BAM\1" magic (htslib's autodetect —
+    * this is what makes `cat x.bam | … read_alignments('-')` work,
+    * where the path carries no extension). mark limit 1 MiB covers the
+    * max 64 KiB BGZF block plus gzip read-ahead. Leaves `stream` at 0.
+    */
+  private def isBgzfBam(stream: BufferedInputStream): Boolean = {
+    stream.mark(1 << 20)
+    val head = new Array[Byte](2)
+    val n2 = stream.readNBytes(head, 0, 2)
+    val bam =
+      if (n2 == 2 && (head(0) & 0xff) == 0x1f && (head(1) & 0xff) == 0x8b) {
+        stream.reset(); stream.mark(1 << 20)
+        try {
+          val gz = new java.util.zip.GZIPInputStream(stream) // not closed: would close `stream`
+          val m4 = new Array[Byte](4)
+          gz.readNBytes(m4, 0, 4) == 4 &&
+            m4.sameElements(Array[Byte]('B', 'A', 'M', 1))
+        } catch { case _: java.io.IOException => false } // corrupt gzip → let the text path report it
+      } else false
+    stream.reset()
+    bam
   }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-  override def build(): Scan = new SamScan(options.asScala.toMap, required, pushed)
+
+  private def str(s: String): UTF8String = UTF8String.fromString(s)
+  private def long(v: Option[Long]): Any = v.map(Long.box).orNull
+  private def optStr(v: Option[String]): UTF8String = v.map(str).orNull
+
+  override val column: PartialFunction[String, ColumnReader[SamRecord]] = {
+    case "read_id" => (r, _) => str(r.readId)
+    case "flags" => (r, _) => r.flags
+    case "reference" => (r, _) => str(r.reference)
+    case "position" => (r, _) => r.position
+    case "stop_position" => (r, _) => r.stopPosition
+    case "mapq" => (r, _) => r.mapq
+    case "cigar" => (r, _) => str(r.cigar)
+    case "mate_reference" => (r, _) => str(r.mateReference)
+    case "mate_position" => (r, _) => r.matePosition
+    case "template_length" => (r, _) => r.templateLength
+    case "tag_as" => (r, _) => long(r.tagAs)
+    case "tag_xs" => (r, _) => long(r.tagXs)
+    case "tag_ys" => (r, _) => long(r.tagYs)
+    case "tag_xn" => (r, _) => long(r.tagXn)
+    case "tag_xm" => (r, _) => long(r.tagXm)
+    case "tag_xo" => (r, _) => long(r.tagXo)
+    case "tag_xg" => (r, _) => long(r.tagXg)
+    case "tag_nm" => (r, _) => long(r.tagNm)
+    case "tag_yt" => (r, _) => optStr(r.tagYt)
+    case "tag_md" => (r, _) => optStr(r.tagMd)
+    case "tag_sa" => (r, _) => optStr(r.tagSa)
+    case "sequence" => (r, _) => optStr(r.sequence)
+    case "qual" => (r, _) =>
+      r.qual.map(q => new GenericArrayData(q.map(_.asInstanceOf[Any]))).orNull
+  }
+
+  override def pushable(f: Filter): Boolean = SamFilters.supported(f)
+  override def compile(filters: Seq[Filter]): SamRecord => Boolean = SamFilters.compileAll(filters)
 }
 
 /** Record-level pushdown predicates for the alignment source. The
@@ -187,201 +235,4 @@ object SamFilters {
     val ps = fs.map(compile)
     r => ps.forall(_(r))
   }
-}
-
-case class SamFilePartition(path: String) extends InputPartition
-
-class SamScan(
-    options: Map[String, String],
-    required: StructType,
-    pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  // surfaces in explain() output for plan probes
-  override def description(): String =
-    s"alignments PushedFilters: ${pushed.mkString("[", ", ", "]")}"
-  def pushedFilters: Array[org.apache.spark.sql.sources.Filter] = pushed
-
-  override def planInputPartitions(): Array[InputPartition] =
-    FileSourceCommon.expandPaths(
-      FileSourceCommon.pathSpec(options, "alignments"), allowStdin = true)
-      .map(SamFilePartition).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val includeSeqQual = options.get("include_seq_qual").exists(_.toBoolean)
-    val req = required
-    val filters = pushed
-    val refFasta = options.get("reference_fasta")
-    val generateMd = options.get("generate_md").forall(_.toBoolean)
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new SamPartitionReader(p.asInstanceOf[SamFilePartition], includeSeqQual, req,
-          SamFilters.compileAll(filters.toSeq), refFasta, generateMd)
-    }
-  }
-
-  override def toMicroBatchStream(checkpointLocation: String): streaming.MicroBatchStream =
-    new SamMicroBatchStream(options, required, this)
-}
-
-/** Streaming ingest of SAM/BAM output — same file-snapshot offset
-  * contract as FastxMicroBatchStream: a committed range replays the
-  * identical file set (MicroBatchStream immutability).
-  */
-class SamMicroBatchStream(
-    options: Map[String, String],
-    required: StructType,
-    scan: SamScan) extends streaming.MicroBatchStream {
-
-  private def currentFiles: Seq[String] =
-    FileSourceCommon.expandPathsLenient(
-      FileSourceCommon.pathSpec(options, "alignments"))
-
-  override def initialOffset(): streaming.Offset = FileSnapshotOffset(Seq.empty)
-  override def latestOffset(): streaming.Offset = FileSnapshotOffset(currentFiles.sorted)
-  override def deserializeOffset(json: String): streaming.Offset =
-    FileSnapshotOffset.fromJson(json)
-
-  override def planInputPartitions(
-      start: streaming.Offset, end: streaming.Offset): Array[InputPartition] = {
-    val seen = start.asInstanceOf[FileSnapshotOffset].files.toSet
-    end.asInstanceOf[FileSnapshotOffset].files
-      .filterNot(seen).sorted.map(SamFilePartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = scan.createReaderFactory()
-
-  override def commit(end: streaming.Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-class SamPartitionReader(
-    part: SamFilePartition,
-    includeSeqQual: Boolean,
-    required: StructType,
-    keep: SamCodec.SamRecord => Boolean = _ => true,
-    referenceFasta: Option[String] = None,
-    generateMd: Boolean = true) extends PartitionReader[InternalRow] {
-
-  // Format auto-detect: CRAM by its 4-byte magic (or extension) →
-  // pure-JVM CramCodec (raw/gzip/rANS4x8 subset; reference-based
-  // decode needs the reference_fasta option); .bam → binary BGZF
-  // codec; anything else → SAM text (gzip-transparent). Matches the
-  // reference's htslib autodetect (reference: src/read_alignments.cpp
-  // format handling, src/SAMReader.cpp:134).
-  private var isCram = false
-  private val stream = {
-    val s = new java.io.BufferedInputStream(FileSourceCommon.openStream(part.path))
-    s.mark(4)
-    val magic = new Array[Byte](4)
-    val n = s.readNBytes(magic, 0, 4)
-    s.reset()
-    isCram = (n == 4 && magic.sameElements("CRAM".getBytes("US-ASCII"))) ||
-      part.path.endsWith(".cram")
-    s
-  }
-  private val cramReader: Iterator[String] =
-    if (isCram)
-      new graft.kernel.CramCodec.Reader(
-        stream,
-        referenceFasta.map { f =>
-          // process-wide soft cache: one parse per executor, not per task
-          graft.kernel.CramCodec.loadFastaCached(f, FileSourceCommon.openStream)
-        },
-        part.path, generateMd)
-    else null
-  // BAM by content, not extension: BGZF is gzip, so decompress the
-  // first block and look for the "BAM\1" magic (htslib's autodetect —
-  // this is what makes `cat x.bam | … read_alignments('-')` work,
-  // where the path carries no extension). mark limit 1 MiB covers the
-  // max 64 KiB BGZF block plus gzip read-ahead.
-  private val isBam = !isCram && (part.path.endsWith(".bam") || {
-    stream.mark(1 << 20)
-    val head = new Array[Byte](2)
-    val n2 = stream.readNBytes(head, 0, 2)
-    val bam =
-      if (n2 == 2 && (head(0) & 0xff) == 0x1f && (head(1) & 0xff) == 0x8b) {
-        stream.reset(); stream.mark(1 << 20)
-        try {
-          val gz = new java.util.zip.GZIPInputStream(stream) // not closed: would close `stream`
-          val m4 = new Array[Byte](4)
-          gz.readNBytes(m4, 0, 4) == 4 &&
-            m4.sameElements(Array[Byte]('B', 'A', 'M', 1))
-        } catch { case _: java.io.IOException => false } // corrupt gzip → let the text path report it
-      } else false
-    stream.reset()
-    bam
-  })
-  private val bamReader =
-    if (isBam) new graft.kernel.BamCodec.Reader(stream, includeSeqQual)
-    else null
-  private val reader =
-    if (isBam || isCram) null
-    else graft.kernel.FastxCodec.open(part.path, stream) // gzip-transparent line reader
-  private var current: InternalRow = _
-
-  private def toRow(r: SamCodec.SamRecord): InternalRow = {
-    val values = required.fieldNames.map {
-      case "read_id"         => UTF8String.fromString(r.readId)
-      case "flags"           => r.flags
-      case "reference"       => UTF8String.fromString(r.reference)
-      case "position"        => r.position
-      case "stop_position"   => r.stopPosition
-      case "mapq"            => r.mapq
-      case "cigar"           => UTF8String.fromString(r.cigar)
-      case "mate_reference"  => UTF8String.fromString(r.mateReference)
-      case "mate_position"   => r.matePosition
-      case "template_length" => r.templateLength
-      case "tag_as" => r.tagAs.map(Long.box).orNull
-      case "tag_xs" => r.tagXs.map(Long.box).orNull
-      case "tag_ys" => r.tagYs.map(Long.box).orNull
-      case "tag_xn" => r.tagXn.map(Long.box).orNull
-      case "tag_xm" => r.tagXm.map(Long.box).orNull
-      case "tag_xo" => r.tagXo.map(Long.box).orNull
-      case "tag_xg" => r.tagXg.map(Long.box).orNull
-      case "tag_nm" => r.tagNm.map(Long.box).orNull
-      case "tag_yt" => r.tagYt.map(UTF8String.fromString).orNull
-      case "tag_md" => r.tagMd.map(UTF8String.fromString).orNull
-      case "tag_sa" => r.tagSa.map(UTF8String.fromString).orNull
-      case "sequence" => r.sequence.map(UTF8String.fromString).orNull
-      case "qual" =>
-        r.qual.map(q => new GenericArrayData(q.map(_.asInstanceOf[Any]))).orNull
-      case "filepath" => UTF8String.fromString(FileSourceCommon.displayPath(part.path))
-      case other      => throw new IllegalStateException(s"unknown column $other")
-    }
-    new GenericInternalRow(values.asInstanceOf[Array[Any]])
-  }
-
-  override def next(): Boolean = {
-    if (isCram) {
-      while (cramReader.hasNext) {
-        val rec = SamCodec.parseLine(cramReader.next(), includeSeqQual)
-        if (keep(rec)) { current = toRow(rec); return true }
-      }
-      false
-    } else if (isBam) {
-      while (bamReader.hasNext) {
-        val rec = bamReader.next()
-        if (keep(rec)) { current = toRow(rec); return true }
-      }
-      false
-    } else {
-      var line = reader.readLine()
-      while (line != null) {
-        if (line.nonEmpty && !SamCodec.isHeaderLine(line)) {
-          val rec = SamCodec.parseLine(line, includeSeqQual)
-          if (keep(rec)) { current = toRow(rec); return true }
-        }
-        line = reader.readLine()
-      }
-      false
-    }
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit =
-    if (isCram) stream.close()
-    else if (isBam) bamReader.close()
-    else reader.close()
 }

@@ -1,107 +1,45 @@
 package graft.sources
 
 import graft.kernel.SamCodec
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
 
-/** read_sequences_sam: extract SEQ/QUAL from SAM into the shared 7-col
-  * sequence-read schema (reference: src/read_sequences_sam.cpp —
-  * uBAM-tolerant, comment always NULL, sequence2/qual2 always NULL,
-  * per-file 1-based sequence_index, Phred+33 qual decode).
+/** read_sequences_sam (`spark.read.format("sam_sequences")`): extract
+  * SEQ/QUAL from SAM into the shared 7-col sequence-read schema
+  * (reference: src/read_sequences_sam.cpp — uBAM-tolerant, comment
+  * always NULL, sequence2/qual2 always NULL, per-file 1-based
+  * sequence_index, Phred+33 qual decode). stdin accepted.
   */
-class SamSequencesDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "sam_sequences"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FastxTable.schema(options.getBoolean("include_filepath", false))
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new SamSequencesTable(new CaseInsensitiveStringMap(properties))
-}
+class SamSequencesDataSource extends FileSource(SamSequencesFormat)
 
-class SamSequencesTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
-  override def name(): String = s"sam_sequences(${options.get("path")})"
-  override def schema(): StructType =
-    FastxTable.schema(options.getBoolean("include_filepath", false))
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new SamSequencesScanBuilder(opts)
-}
+/** A record is a SAM line split on tabs. */
+object SamSequencesFormat extends FileFormat[Array[String]] {
+  override val name = "sam_sequences"
+  override def stdin = true
+  override def columns(options: CaseInsensitiveStringMap): StructType = FastxFormat.readSchema
 
-class SamSequencesScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType =
-    FastxTable.schema(options.getBoolean("include_filepath", false))
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = new SamSequencesScan(options.asScala.toMap, required)
-}
-
-class SamSequencesScan(options: Map[String, String], required: StructType)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    FileSourceCommon.expandPaths(
-      FileSourceCommon.pathSpec(options, "sam_sequences"), allowStdin = true)
-      .map(SamFilePartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val req = required
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new SamSequencesPartitionReader(p.asInstanceOf[SamFilePartition], req)
-    }
+  override def open(part: FilePartition, options: Map[String, String],
+      required: StructType): Records[Array[String]] = {
+    val reader = graft.kernel.FastxCodec.open(part.path, FileSourceCommon.openStream(part.path))
+    val lines = Iterator.continually(reader.readLine()).takeWhile(_ != null)
+      .filter(l => l.nonEmpty && !SamCodec.isHeaderLine(l))
+    Records(lines.map(_.split("\t", -1)), reader)
   }
-}
 
-class SamSequencesPartitionReader(part: SamFilePartition, required: StructType)
-    extends PartitionReader[InternalRow] {
+  private def field(f: Array[String], i: Int): String = if (f.length > i) f(i) else "*"
 
-  private val reader = graft.kernel.FastxCodec.open(part.path,
-    FileSourceCommon.openStream(part.path))
-  private var index = 0L
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    var line = reader.readLine()
-    while (line != null && (line.isEmpty || SamCodec.isHeaderLine(line)))
-      line = reader.readLine()
-    if (line == null) false
-    else {
-      val f = line.split("\t", -1)
-      val readId = f(0)
-      val seq = if (f.length > 9) f(9) else "*"
-      val qual = if (f.length > 10) f(10) else "*"
-      index += 1
-      val values = required.fieldNames.map {
-        case "sequence_index" => index
-        case "read_id"        => UTF8String.fromString(readId)
-        case "comment"        => null
-        case "sequence1" =>
-          if (seq == "*") null else UTF8String.fromString(seq)
-        case "sequence2" => null
-        case "qual1" =>
-          if (qual == "*") null
-          else new GenericArrayData(qual.map(c => (c - 33).toShort.asInstanceOf[Any]).toArray)
-        case "qual2"    => null
-        case "filepath" => UTF8String.fromString(part.path)
-        case other      => throw new IllegalStateException(s"unknown column $other")
-      }
-      current = new GenericInternalRow(values.asInstanceOf[Array[Any]])
-      true
-    }
+  override val column: PartialFunction[String, ColumnReader[Array[String]]] = {
+    case "sequence_index" => (_, n) => n
+    case "read_id" => (f, _) => UTF8String.fromString(f(0))
+    case "comment" | "sequence2" | "qual2" => (_, _) => null
+    case "sequence1" => (f, _) =>
+      val seq = field(f, 9)
+      if (seq == "*") null else UTF8String.fromString(seq)
+    case "qual1" => (f, _) =>
+      val qual = field(f, 10)
+      if (qual == "*") null
+      else new GenericArrayData(qual.map(c => (c - 33).toShort.asInstanceOf[Any]).toArray)
   }
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
 }

@@ -1,104 +1,36 @@
 package graft.sources
 
 import graft.kernel.SffCodec
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
 
-/** read_sequences_sff DataSource V2 (`spark.read.format("sff")`) —
-  * reference: src/read_sequences_sff.cpp: 7-col sequence schema,
-  * `trim` option (default true), per-file sequence_index, binary seeks
-  * (no stdin). One partition per file; the whole file is buffered per
-  * task (SFF files are single-machine-sized by format design).
+/** read_sequences_sff (`spark.read.format("sff")`) — reference:
+  * src/read_sequences_sff.cpp: 7-col sequence schema, `trim` option
+  * (default true), per-file sequence_index, binary seeks (no stdin).
+  * The whole file is buffered per task (SFF files are
+  * single-machine-sized by format design).
   */
-class SffDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "sff"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FastxTable.schema(options.getBoolean("include_filepath", false))
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new SffTable(new CaseInsensitiveStringMap(properties))
-}
+class SffDataSource extends FileSource(SffFormat)
 
-class SffTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
-  override def name(): String = s"sff(${options.get("path")})"
-  override def schema(): StructType =
-    FastxTable.schema(options.getBoolean("include_filepath", false))
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new SffScanBuilder(opts)
-}
+object SffFormat extends FileFormat[SffCodec.SffRead] {
+  override val name = "sff"
+  override def columns(options: CaseInsensitiveStringMap): StructType = FastxFormat.readSchema
 
-class SffScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType =
-    FastxTable.schema(options.getBoolean("include_filepath", false))
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = new SffScan(options.asScala.toMap, required)
-}
-
-class SffScan(options: Map[String, String], required: StructType) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    FileSourceCommon.expandPaths(
-      FileSourceCommon.pathSpec(options, "sff"))
-      .map(SamFilePartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val trim = options.getOrElse("trim", "true").toBoolean
-    val req = required
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new SffPartitionReader(p.asInstanceOf[SamFilePartition], trim, req)
-    }
-  }
-}
-
-class SffPartitionReader(part: SamFilePartition, trim: Boolean, required: StructType)
-    extends PartitionReader[InternalRow] {
-
-  private val reads: Iterator[(SffCodec.SffRead, Long)] = {
+  override def open(part: FilePartition, options: Map[String, String],
+      required: StructType): Records[SffCodec.SffRead] = {
     val in = FileSourceCommon.openStream(part.path)
-    val bytes =
-      try in.readAllBytes()
-      finally in.close()
-    SffCodec.parse(bytes, part.path, trim).iterator.zipWithIndex
-      .map { case (r, i) => (r, i.toLong + 1) }
+    val bytes = try in.readAllBytes() finally in.close()
+    val trim = options.getOrElse("trim", "true").toBoolean
+    Records(SffCodec.parse(bytes, part.path, trim).iterator, () => ())
   }
-  private var current: InternalRow = _
 
-  override def next(): Boolean = {
-    if (!reads.hasNext) false
-    else {
-      val (r, idx) = reads.next()
-      val values = required.fieldNames.map {
-        case "sequence_index" => idx
-        case "read_id"        => UTF8String.fromString(r.name)
-        case "comment"        => null
-        case "sequence1"      => UTF8String.fromString(r.bases)
-        case "sequence2"      => null
-        case "qual1" =>
-          new GenericArrayData(r.quals.map(_.asInstanceOf[Any]))
-        case "qual2"    => null
-        case "filepath" => UTF8String.fromString(part.path)
-        case other      => throw new IllegalStateException(s"unknown column $other")
-      }
-      current = new GenericInternalRow(values.asInstanceOf[Array[Any]])
-      true
-    }
+  override val column: PartialFunction[String, ColumnReader[SffCodec.SffRead]] = {
+    case "sequence_index" => (_, n) => n
+    case "read_id" => (r, _) => UTF8String.fromString(r.name)
+    case "comment" | "sequence2" | "qual2" => (_, _) => null
+    case "sequence1" => (r, _) => UTF8String.fromString(r.bases)
+    case "qual1" => (r, _) => new GenericArrayData(r.quals.map(_.asInstanceOf[Any]))
   }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
 }

@@ -1,178 +1,77 @@
 package graft.sources
 
 import graft.kernel.WarcCodec
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
 
-/** DataSource V2 reader for WARC web-archive files
-  * (`spark.read.format("warc")`) — the raw container a web-scale
-  * training-data ingest starts from. Not a reference-surface component
-  * (MIINT has no web formats); part of the LLM-pipeline brief's
-  * multimodal/ingest surface, same contract as the fastx/sam sources.
+/** WARC web-archive files (`spark.read.format("warc")`) — the raw
+  * container a web-scale training-data ingest starts from. Not a
+  * reference-surface component (MIINT has no web formats); part of the
+  * LLM-pipeline brief's multimodal/ingest surface, same contract as the
+  * fastx/sam sources.
   *
   * Schema: one row per WARC record. `application/http` response
   * payloads are split — `http_status`/`http_content_type` from the
   * HTTP header block, `payload` = the HTTP BODY; other records carry
   * the raw payload with NULL http columns.
   *
-  * Scale: one InputPartition per file (a .warc.gz is per-record gzip
+  * Scale: one partition per file (a .warc.gz is per-record gzip
   * members — splitting within a file needs a member index; crawls ship
   * thousands of ~1 GB files, so file-level parallelism is the real
-  * unit). Column pruning is pushed into the row builder (the HTTP
-  * split and payload copy are elided when unprojected); the payload
-  * BYTES are still consumed from the stream either way — Content-Length
-  * skipping would save only the copy, since a gzip member must be
-  * decompressed through regardless.
+  * unit). Streaming ingests shards as a crawler drops them (the
+  * continuous-corpus front door: html_to_text → quality → dedup). The
+  * HTTP split runs only when an http column or `payload` is read, and
+  * the header map only for `http_content_type`; the payload BYTES are
+  * still consumed from the stream either way — Content-Length skipping
+  * would save only the copy, since a gzip member must be decompressed
+  * through regardless.
   */
-class WarcDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "warc"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    WarcTable.schema(options.getBoolean("include_filepath", false))
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new WarcTable(new CaseInsensitiveStringMap(properties))
+class WarcDataSource extends FileSource(WarcFormat)
+
+/** One WARC record with its HTTP split computed at most once, on first use. */
+final class WarcRow(val rec: WarcCodec.WarcRecord, needHeaders: Boolean) {
+  lazy val http: Option[WarcCodec.HttpPayload] =
+    if (rec.contentType.exists(_.startsWith("application/http")))
+      WarcCodec.httpSplit(rec.payload, needHeaders)
+    else None
 }
 
-object WarcTable {
-  def schema(includeFilepath: Boolean): StructType = {
-    val base = StructType(Seq(
-      StructField("record_index", LongType),
-      StructField("warc_type", StringType),
-      StructField("target_uri", StringType),
-      StructField("warc_date", StringType),
-      StructField("record_id", StringType),
-      StructField("content_type", StringType),
-      StructField("content_length", LongType),
-      StructField("http_status", IntegerType),
-      StructField("http_content_type", StringType),
-      StructField("payload", BinaryType)))
-    if (includeFilepath) base.add(StructField("filepath", StringType)) else base
-  }
-}
+object WarcFormat extends FileFormat[WarcRow] {
+  override val name = "warc"
+  override def streaming = true
+  override def columns(options: CaseInsensitiveStringMap): StructType = StructType(Seq(
+    StructField("record_index", LongType),
+    StructField("warc_type", StringType),
+    StructField("target_uri", StringType),
+    StructField("warc_date", StringType),
+    StructField("record_id", StringType),
+    StructField("content_type", StringType),
+    StructField("content_length", LongType),
+    StructField("http_status", IntegerType),
+    StructField("http_content_type", StringType),
+    StructField("payload", BinaryType)))
 
-class WarcTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
-  private val includeFilepath = options.getBoolean("include_filepath", false)
-  override def name(): String = s"warc(${options.get("path")})"
-  override def schema(): StructType = WarcTable.schema(includeFilepath)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new WarcScanBuilder(opts)
-}
-
-class WarcScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private val fullSchema = WarcTable.schema(options.getBoolean("include_filepath", false))
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = new WarcScan(options.asScala.toMap, required)
-}
-
-case class WarcFilePartition(path: String) extends InputPartition
-
-class WarcScan(options: Map[String, String], required: StructType)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] =
-    FileSourceCommon.expandPaths(FileSourceCommon.pathSpec(options, "warc"))
-      .map(WarcFilePartition).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val req = required
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new WarcPartitionReader(p.asInstanceOf[WarcFilePartition], req)
-    }
+  override def open(part: FilePartition, options: Map[String, String],
+      required: StructType): Records[WarcRow] = {
+    val in = WarcCodec.maybeGunzip(
+      FileSourceCommon.openStream(part.path), WarcCodec.looksLikeGzip(part.path))
+    val needHeaders = required.fieldNames.contains("http_content_type")
+    Records(WarcCodec.records(in).map(new WarcRow(_, needHeaders)), in)
   }
 
-  override def toMicroBatchStream(checkpointLocation: String): streaming.MicroBatchStream =
-    new WarcMicroBatchStream(options, this)
-}
+  private def str(s: Option[String]): UTF8String = s.map(UTF8String.fromString).orNull
 
-/** Streaming crawl ingest: each micro-batch picks up WARC files that
-  * arrived since the last one — the continuous-corpus front door
-  * (a crawler drops finished .warc.gz shards into a directory; the
-  * ingest DAG streams them through html_to_text → quality → dedup).
-  * Same file-snapshot offset contract as the fastx stream: a committed
-  * (start, end] range always maps to end.files − start.files, so
-  * replay after failure re-reads the identical file set.
-  */
-class WarcMicroBatchStream(options: Map[String, String], scan: WarcScan)
-    extends streaming.MicroBatchStream {
-
-  private def currentFiles: Seq[String] =
-    FileSourceCommon.expandPathsLenient(FileSourceCommon.pathSpec(options, "warc"))
-
-  override def initialOffset(): streaming.Offset = FileSnapshotOffset(Seq.empty)
-  override def latestOffset(): streaming.Offset = FileSnapshotOffset(currentFiles.sorted)
-  override def deserializeOffset(json: String): streaming.Offset =
-    FileSnapshotOffset.fromJson(json)
-
-  override def planInputPartitions(
-      start: streaming.Offset, end: streaming.Offset): Array[InputPartition] = {
-    val seen = start.asInstanceOf[FileSnapshotOffset].files.toSet
-    end.asInstanceOf[FileSnapshotOffset].files
-      .filterNot(seen).sorted.map(WarcFilePartition).toArray
+  override val column: PartialFunction[String, ColumnReader[WarcRow]] = {
+    case "record_index" => (r, _) => r.rec.index
+    case "warc_type" => (r, _) => str(r.rec.warcType)
+    case "target_uri" => (r, _) => str(r.rec.targetUri)
+    case "warc_date" => (r, _) => str(r.rec.date)
+    case "record_id" => (r, _) => str(r.rec.recordId)
+    case "content_type" => (r, _) => str(r.rec.contentType)
+    case "content_length" => (r, _) => r.rec.payload.length.toLong
+    case "http_status" => (r, _) => r.http.map(h => Int.box(h.status)).orNull
+    case "http_content_type" => (r, _) => str(r.http.flatMap(_.headers.get("content-type")))
+    case "payload" => (r, _) => r.http.map(_.body).getOrElse(r.rec.payload)
   }
-
-  override def createReaderFactory(): PartitionReaderFactory = scan.createReaderFactory()
-  override def commit(end: streaming.Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-class WarcPartitionReader(part: WarcFilePartition, required: StructType)
-    extends PartitionReader[InternalRow] {
-
-  private val in = WarcCodec.maybeGunzip(
-    FileSourceCommon.openStream(part.path), WarcCodec.looksLikeGzip(part.path))
-  private val it = WarcCodec.records(in)
-  private val needHttp = required.fieldNames.exists(
-    n => n == "http_status" || n == "http_content_type" || n == "payload")
-  // the headers map only feeds http_content_type — prune its
-  // construction with the column (r15; status + body slice are the
-  // Some/None payload gate and always parsed)
-  private val needHttpHeaders = required.fieldNames.contains("http_content_type")
-  private var current: InternalRow = _
-
-  private def toRow(r: WarcCodec.WarcRecord): InternalRow = {
-    val http =
-      if (needHttp && r.contentType.exists(_.startsWith("application/http")))
-        WarcCodec.httpSplit(r.payload, needHttpHeaders)
-      else None
-    val values = required.fieldNames.map {
-      case "record_index" => r.index
-      case "warc_type" => r.warcType.map(UTF8String.fromString).orNull
-      case "target_uri" => r.targetUri.map(UTF8String.fromString).orNull
-      case "warc_date" => r.date.map(UTF8String.fromString).orNull
-      case "record_id" => r.recordId.map(UTF8String.fromString).orNull
-      case "content_type" => r.contentType.map(UTF8String.fromString).orNull
-      case "content_length" => r.payload.length.toLong
-      case "http_status" => http.map(h => Int.box(h.status)).orNull
-      case "http_content_type" =>
-        http.flatMap(_.headers.get("content-type"))
-          .map(UTF8String.fromString).orNull
-      case "payload" => http.map(_.body).getOrElse(r.payload)
-      case "filepath" => UTF8String.fromString(part.path)
-      case other => throw new IllegalArgumentException(s"warc: unknown column $other")
-    }
-    new GenericInternalRow(values.asInstanceOf[Array[Any]])
-  }
-
-  override def next(): Boolean =
-    if (it.hasNext) { current = toRow(it.next()); true } else false
-  override def get(): InternalRow = current
-  override def close(): Unit = in.close()
 }

@@ -64,6 +64,25 @@ class LmScoreSpec extends AnyFunSuite {
     assert(c == a.view.mapValues(_._1).toMap)
   }
 
+  test("broadcast path rejects a model whose bigram tokens miss the unigram table") {
+    import spark.implicits._
+    val trained = LmScore.trainStupidBackoff(ref, "text")
+    // hand-assembled: bigram (a, q) where q has no unigram row
+    val model = trained.copy(bigModel = trained.bigModel.union(
+      Seq(("a", "q", 1L, 2L)).toDF("prev", "w", "c2", "c1_prev")))
+    val docs = Seq((1L, "a q")).toDF("doc_id", "text")
+    // the join path still scores the row …
+    assert(LmScore.scoreWithModel(docs, model, "doc_id", "text").count() == 1L)
+    // … so the kernel path must fail rather than silently score it differently
+    val e = intercept[IllegalArgumentException] {
+      LmScore.scoreWithBroadcastModel(docs, model, "doc_id", "text")
+    }
+    assert(e.getMessage.contains("'q' absent from the unigram table"))
+    intercept[IllegalArgumentException] {
+      LmScore.scoreAuto(docs, model, "doc_id", "text")
+    }
+  }
+
   test("documents with < 2 tokens are absent; case folds; alpha honored") {
     import spark.implicits._
     val docs = Seq((1L, "solo"), (2L, ""), (3L, "A B")).toDF("doc_id", "text")

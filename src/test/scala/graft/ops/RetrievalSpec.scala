@@ -297,6 +297,31 @@ class RetrievalSpec extends AnyFunSuite {
       spark, "bm25bk_spec_part", qs, k = 5)) == flatCanon)
   }
 
+  test("bm25 doc-bucketed table: re-ensuring with another layout rebuilds it") {
+    import spark.implicits._
+    val postings = Retrieval.bm25Index(docs, "doc_id", "text")
+    val qs = Seq((0L, "alpha beta"), (1L, "delta")).toDF("query_id", "query_text")
+    def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+    val expected = canon(Retrieval.bm25TopKFromIndex(postings, qs, k = 5))
+    val t = "bm25bk_spec_relayout"
+    def layout: (Int, Int, Set[Int]) = (
+      spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(t)).bucketSpec.get.numBuckets,
+      spark.table(t + "_stats").select("n_buckets").head().getInt(0),
+      spark.table(t).select("term_bucket").distinct().collect().map(_.getInt(0)).toSet)
+    Retrieval.ensureBm25BucketedIndex(spark, t, postings, docBuckets = 4, termBuckets = 8)
+    assert(layout._1 == 4 && layout._2 == 8)
+    // a different term-bucket modulus must not serve the old layout
+    Retrieval.ensureBm25BucketedIndex(spark, t, postings, docBuckets = 4, termBuckets = 2)
+    assert(layout._1 == 4 && layout._2 == 2 && layout._3.forall(_ < 2))
+    assert(canon(Retrieval.bm25TopKFromBucketedIndex(spark, t, qs, k = 5)) == expected)
+    // nor a different doc_id bucket count
+    Retrieval.ensureBm25BucketedIndex(spark, t, postings, docBuckets = 2, termBuckets = 2)
+    assert(layout._1 == 2 && layout._2 == 2)
+    assert(canon(Retrieval.bm25TopKFromBucketedIndex(spark, t, qs, k = 5)) == expected)
+  }
+
   test("bm25 partitioned index: _stats sidecar is hidden from the postings read") {
     val postings = Retrieval.bm25Index(docs, "doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("graft_bm25_side").toString

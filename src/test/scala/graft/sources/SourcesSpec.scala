@@ -204,7 +204,7 @@ class SourcesSpec extends AnyFunSuite {
     val scans = df.queryExecution.executedPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
     }
-    val pushed = scans.collectFirst { case s: SamScan => s.pushedFilters }.getOrElse(Array.empty)
+    val pushed = scans.collectFirst { case s: FileScan[_] => s.pushedFilters }.getOrElse(Array.empty)
     assert(pushed.nonEmpty, s"no pushed filters on scan: ${df.queryExecution.executedPlan}")
     assert(pushed.flatMap(_.references).toSet == Set("reference", "position", "flags"))
     // … and record-level evaluation matches Spark-side post-filtering

@@ -94,6 +94,18 @@ class StdinSpec extends AnyFunSuite {
     assert(viaStdin == viaFile && viaFile.nonEmpty)
   }
 
+  test("sam_sequences from stdin: records, and filepath reports /dev/stdin") {
+    val sam = "@HD\tVN:1.6\n" +
+      "q1\t4\t*\t0\t0\t*\t*\t0\t0\tACGT\tIIII\n" +
+      "q2\t4\t*\t0\t0\t*\t*\t0\t0\tGG\t#+\n"
+    val rows = withStdin(sam.getBytes("UTF-8")) {
+      spark.read.format("sam_sequences").option("include_filepath", "true")
+        .load("-").select("sequence_index", "read_id", "sequence1", "filepath").collect()
+    }
+    assert(rows.map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3))).toSeq ==
+      Seq((1L, "q1", "ACGT", "/dev/stdin"), (2L, "q2", "GG", "/dev/stdin")))
+  }
+
   test("BAM bytes on stdin are detected by magic, not extension") {
     val bamFile = "/root/reference/data/sam/foo_has_header.bam"
     val viaFile = spark.read.format("alignments").load(bamFile)
