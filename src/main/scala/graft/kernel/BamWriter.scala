@@ -39,18 +39,43 @@ final class BamWriter(out: OutputStream, references: Seq[(String, Long)],
   }
 
   private val CigarOps = "MIDNSHP=X"
+  private val ConsumesReference = "MDN=X"
+
+  /** htslib hts_reg2bin(beg, end, 14, 5): the smallest UCSC bin holding
+    * the 0-based half-open interval [beg, end).
+    */
+  private def reg2bin(beg: Int, end: Int): Int = {
+    var shift = 14
+    var first = 4681 // ((1 << 15) - 1) / 7, the first 16 kbp bin
+    while (shift <= 26 && (beg >> shift) != ((end - 1) >> shift)) { shift += 3; first >>= 3 }
+    if (shift > 26) 0 else first + (beg >> shift)
+  }
 
   def writeRecord(r: SamCodec.SamRecord): Unit = {
     val nameBytes = r.readId.getBytes("UTF-8")
-    val cigarOps: Seq[(Int, Char)] =
-      if (r.cigar == "*" || r.cigar.isEmpty) Seq.empty
+    var refSpan = 0 // reference bases the CIGAR covers
+    // packed (length << 4 | op) words
+    val cigarOps: Array[Int] =
+      if (r.cigar == "*" || r.cigar.isEmpty) Array.emptyIntArray
       else {
-        val runs = Seq.newBuilder[(Int, Char)]
+        val runs = Array.newBuilder[Int]
         var n = 0
         for (c <- r.cigar)
-          if (c.isDigit) n = n * 10 + (c - '0') else { runs += ((n, c)); n = 0 }
+          if (c.isDigit) n = n * 10 + (c - '0')
+          else {
+            val op = CigarOps.indexOf(c)
+            if (op < 0) throw new IllegalArgumentException(
+              s"COPY BAM: unknown CIGAR operator '$c' in read ${r.readId} (CIGAR ${r.cigar})")
+            runs += (n << 4) | op
+            if (ConsumesReference.indexOf(c) >= 0) refSpan += n
+            n = 0
+          }
         runs.result()
       }
+    val pos = r.position.toInt - 1 // 1-based text → 0-based binary
+    // as htslib bam_set1: an unmapped read, or a CIGAR consuming no
+    // reference, spans one base (an unplaced unmapped read gets 4680)
+    val span = if ((r.flags & 4) != 0 || refSpan == 0) 1 else refSpan
     def tagBytes: Array[Byte] = {
       val b = new java.io.ByteArrayOutputStream()
       def intTag(k: String, v: Option[Long]): Unit = v.foreach { x =>
@@ -73,10 +98,10 @@ final class BamWriter(out: OutputStream, references: Seq[(String, Long)],
     val b = ByteBuffer.allocate(4 + blockSize).order(ByteOrder.LITTLE_ENDIAN)
     b.putInt(blockSize)
     b.putInt(refIndex.getOrElse(r.reference, -1))
-    b.putInt(r.position.toInt - 1) // 1-based text → 0-based binary
+    b.putInt(pos)
     b.put((nameBytes.length + 1).toByte)
     b.put((r.mapq & 0xff).toByte)
-    b.putShort(0) // bin (unused by our reader)
+    b.putShort(reg2bin(pos, pos + span).toShort)
     b.putShort(cigarOps.length.toShort)
     b.putShort((r.flags & 0xffff).toShort)
     b.putInt(0) // l_seq = 0 (SEQ always '*' per reference copy_sam)
@@ -89,8 +114,7 @@ final class BamWriter(out: OutputStream, references: Seq[(String, Long)],
     b.putInt(r.matePosition.toInt - 1)
     b.putInt(r.templateLength.toInt)
     b.put(nameBytes); b.put(0.toByte)
-    for ((len, op) <- cigarOps)
-      b.putInt((len << 4) | CigarOps.indexOf(op))
+    cigarOps.foreach(w => b.putInt(w))
     b.put(tags)
     bgzf.write(b.array())
   }

@@ -232,18 +232,23 @@ object Hdf5BiomWriter {
     b.result
   }
 
+  /** Deflate level for the COPY FORMAT BIOM `compression` option:
+    * 'gzip'/'gz' → 4, 'none' → unfiltered; any other name is rejected.
+    */
+  def deflateLevel(compression: String): Option[Int] = compression.toLowerCase match {
+    case "gzip" | "gz" => Some(4) // h5py/BIOM default level, copy_biom.cpp:363
+    case "none"        => None
+    case other => throw new IllegalArgumentException(
+      s"COPY FORMAT BIOM: compression must be 'gzip', 'gz', or 'none' (got '$other')")
+  }
+
   /** Write a BIOM v2.1 HDF5 image from COO rows. `compression` follows
     * the reference's COPY FORMAT BIOM option: 'gzip'/'gz' (default,
     * deflate level 4) or 'none'.
     */
   def write(coo: Seq[(String, String, Double)], id: String = "graft-biom",
       compression: String = "gzip"): Array[Byte] = {
-    val gzipLevel: Option[Int] = compression.toLowerCase match {
-      case "gzip" | "gz" => Some(4) // h5py/BIOM default level, copy_biom.cpp:363
-      case "none"        => None
-      case other => throw new IllegalArgumentException(
-        s"COPY FORMAT BIOM: compression must be 'gzip', 'gz', or 'none' (got '$other')")
-    }
+    val gzipLevel = deflateLevel(compression)
     val sampleIds = coo.map(_._1).distinct.sorted
     val obsIds = coo.map(_._2).distinct.sorted
     val sIdx = sampleIds.zipWithIndex.toMap

@@ -6,47 +6,26 @@ import org.apache.spark.sql.functions._
 /** BIOM sparse-feature-table operators (reference: src/read_biom.cpp,
   * src/BIOMReader.cpp, src/copy_biom.cpp).
   *
-  * The reference's BIOM v2.1 container is HDF5; a pure-JVM HDF5 codec
-  * is out of scope in this environment (no library, and a from-scratch
-  * HDF5 subset is the single riskiest writer per SURVEY §7.5#2). The
-  * COO relational semantics — the part every downstream query touches —
-  * are implemented fully over a documented Parquet container
-  * (`.biomq`): `sample_id VARCHAR, feature_id VARCHAR, value DOUBLE`,
-  * zeros never materialized. The HDF5 read/write boundary is a
-  * documented adapter point (`readBiomHdf5`).
+  * `.biom` paths are BIOM v2.1 HDF5 files, read and written by the
+  * pure-JVM subset codecs `kernel/Hdf5Biom` and `kernel/Hdf5BiomWriter`.
+  * Any other path is a documented Parquet container (`.biomq`):
+  * `sample_id VARCHAR, feature_id VARCHAR, value DOUBLE`, zeros never
+  * materialized.
   */
 object BiomOps {
 
-  /** COPY ... (FORMAT BIOM) semantics over the parquet container
-    * (reference: src/copy_biom.cpp, README.md:2588-2594): duplicate
-    * (feature, sample) pairs are SUMMED, zero values dropped, NULL in
-    * any column is an error. `compression` ('gzip'/'gz'/'none',
-    * default gzip — reference src/copy_biom.cpp:22,105-112) applies to
-    * the HDF5 (.biom) container's datasets.
+  /** COPY ... (FORMAT BIOM) (reference: src/copy_biom.cpp,
+    * README.md:2588-2594): duplicate (feature, sample) pairs are
+    * SUMMED, zero values dropped, NULL in any column is an error.
+    * `compression` ('gzip'/'gz'/'none', default gzip — reference
+    * src/copy_biom.cpp:22,105-112) applies to the HDF5 (.biom)
+    * container's datasets; it is checked for every path. The HDF5 id
+    * tables are driver-sized (the reference collects them too); COO
+    * rows stream through the driver.
     */
-  def copyBiom(df: DataFrame, path: String, compression: String = "gzip"): Unit = {
-    val cols = df.schema.fieldNames.toSet
-    for (c <- Seq("sample_id", "feature_id", "value"))
-      require(cols.contains(c), s"BIOM output requires column $c")
-    val nulls = df.filter(
-      col("sample_id").isNull || col("feature_id").isNull || col("value").isNull).count()
-    if (nulls > 0)
-      throw new IllegalArgumentException(
-        s"BIOM output forbids NULLs ($nulls offending rows)")
-    val canonical = df.groupBy("sample_id", "feature_id")
-      .agg(sum(col("value")).as("value"))
-      .filter(col("value") =!= 0.0)
-    if (path.endsWith(".biom")) {
-      // real HDF5 container (kernel/Hdf5BiomWriter): the id tables are
-      // driver-sized (the reference collects them too); COO rows stream
-      // through toLocalIterator
-      val coo = new scala.collection.mutable.ArrayBuffer[(String, String, Double)]()
-      canonical.toLocalIterator().forEachRemaining(r =>
-        coo += ((r.getString(0), r.getString(1), r.getDouble(2))))
-      java.nio.file.Files.write(java.nio.file.Paths.get(path),
-        graft.kernel.Hdf5BiomWriter.write(coo.toSeq, compression = compression))
-    } else canonical.write.mode("overwrite").parquet(path)
-  }
+  def copyBiom(df: DataFrame, path: String, compression: String = "gzip"): Unit =
+    if (path.endsWith(".biom")) Writers.biom(df, path, None, compression)
+    else Writers.biomTable(df, compression).write.mode("overwrite").parquet(path)
 
   /** read_biom: HDF5 BIOM v2.1 (.biom) via the pure-JVM subset codec,
     * or the documented parquet container → COO relation.

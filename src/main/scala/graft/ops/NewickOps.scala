@@ -4,9 +4,8 @@ import graft.kernel.Newick
 import graft.sources.FileSourceCommon
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
-import java.io.{BufferedReader, BufferedWriter, FileOutputStream, OutputStreamWriter}
+import java.io.{BufferedWriter, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
-import java.util.zip.GZIPOutputStream
 
 /** read_newick / COPY NEWICK as tree-as-table operators.
   *
@@ -84,8 +83,8 @@ object NewickOps {
       }
       tree.insertFullyResolved(ps.toSeq)
     }
-    val fos = new FileOutputStream(path)
-    val out = if (path.endsWith(".gz")) new GZIPOutputStream(fos) else fos
+    val out = Writers.create(path, df.sparkSession.sparkContext.hadoopConfiguration,
+      gzip = path.endsWith(".gz"))
     val w = new BufferedWriter(new OutputStreamWriter(out, StandardCharsets.UTF_8))
     try { w.write(tree.toNewick); w.newLine() } finally w.close()
   }

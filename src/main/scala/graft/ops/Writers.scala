@@ -1,28 +1,44 @@
 package graft.ops
 
-import graft.kernel.{FastxCodec, SamCodec}
+import graft.kernel.{BamWriter, FastxCodec, Hdf5BiomWriter, SamCodec, WarcCodec}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
-import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter}
+import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
+import java.io.{BufferedWriter, OutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPOutputStream
+import scala.jdk.CollectionConverters._
 
-/** COPY sinks (2G): FASTQ / FASTA / SAM text writers.
+/** COPY sinks (2G): FASTQ, FASTA, SAM, BAM, BIOM (HDF5) and WARC.
   *
-  * Semantics per the reference's copy functions
-  * (reference: src/copy_fastq.cpp, src/copy_fasta.cpp, src/copy_sam
-  * .cpp, src/copy_format_common.cpp:111-208): paired output either
-  * interleaved or split via a `{ORIENTATION}` path placeholder
-  * (paired + non-interleave REQUIRES the placeholder, single-end
-  * FORBIDS it), qual length must equal sequence length, SAM SEQ/QUAL
-  * always written `*`, header `@SQ` lines from a reference-lengths
-  * relation with unknown references auto-added at sentinel length
-  * 2^31−1, gzip by `.gz` extension.
+  * Semantics per the reference's copy functions (reference:
+  * src/copy_fastq.cpp, src/copy_fasta.cpp, src/copy_sam.cpp,
+  * src/copy_biom.cpp, src/copy_format_common.cpp:111-208): paired output
+  * either interleaved or split via a `{ORIENTATION}` path placeholder
+  * (paired + non-interleave REQUIRES it, single-end FORBIDS it), qual
+  * length must equal sequence length, SAM SEQ/QUAL always `*`, `@SQ`
+  * lines from a reference-lengths relation with unknown references
+  * auto-added at sentinel length 2^31−1, gzip by `.gz` extension.
   *
-  * These produce ONE file per call, so rows are streamed through the
-  * driver (toLocalIterator — bounded memory); this matches the
-  * reference's mutex-serialized single-file writers (src/copy_sam
-  * .cpp:689-694). For sharded multi-file output at scale, write
-  * per-partition paths upstream and call per shard.
+  * Every sink has the reference's lifecycle: a bind step runs once on
+  * the driver before any job (column, option and path checks, the `@SQ`
+  * set, BIOM's canonical table), then the format's [[Encoder]] writes
+  * rows to each output file, in one of two modes ([[copy]]):
+  *  - single file (`copyX`): rows stream through the driver
+  *    (toLocalIterator: row order kept, bounded memory), like the
+  *    reference's mutex-serialized writers (src/copy_sam.cpp:689-694);
+  *  - sharded (`copyXSharded`, the 100 TB path): executors write one
+  *    file per non-empty partition (no driver hop, no shuffle), the
+  *    partition id replacing `{SHARD}` in the path template. Files are
+  *    created overwrite=true, so task retries are idempotent; disable
+  *    speculative execution for these sinks, or point the template at a
+  *    job-scoped directory committed by rename. Every shard is a
+  *    standalone file: SAM and BAM shards carry the full header of the
+  *    union reference set, which an executor cannot know locally.
   */
 object Writers {
 
@@ -43,490 +59,294 @@ object Writers {
       case None => path.endsWith(".gz")
     }
 
-  /** COMPRESSION_LEVEL option (reference src/copy_sam.cpp:251-254,
-    * 280-282): BAM-only, 0–9; -1 = library default.
+  /** Opens one output file through the Hadoop FS: overwrite, no `.crc`
+    * sidecar next to user-visible files, whole-file gzip when `gzip`.
+    * Every COPY sink opens its files here.
     */
-  private def validateLevel(level: Int): Int = {
-    if (level < -1 || level > 9) throw new IllegalArgumentException(
-      s"COMPRESSION_LEVEL must be between 0 and 9, got $level")
-    level
+  private[ops] def create(path: String, conf: Configuration, gzip: Boolean): OutputStream = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    fs.setWriteChecksum(false)
+    val out = fs.create(p, true)
+    if (gzip) new GZIPOutputStream(out) else out
   }
 
-  private def openWriter(path: String, compression: Option[String] = None): BufferedWriter = {
-    val fos = new FileOutputStream(path)
-    val out = if (resolveGzip(path, compression)) new GZIPOutputStream(fos) else fos
-    new BufferedWriter(new OutputStreamWriter(out, StandardCharsets.UTF_8))
+  /** One format's writer for one output path: writes `rows` there,
+    * opening each file through `open(path, gzip)` (fastx opens R1 and
+    * R2 for `{ORIENTATION}`). Built by the bind step from driver-side
+    * values only, so sharded mode can ship it to the executors.
+    */
+  private trait Encoder extends Serializable {
+    def write(rows: Iterator[Row], path: String, open: (String, Boolean) => OutputStream): Unit
   }
 
   private val OrientationToken = "{ORIENTATION}"
+  private val ShardToken = "{SHARD}"
 
-  private def fastxRecord(r: Row, seqCol: String, qualCol: String): FastxCodec.FastxRecord = {
-    val comment =
-      if (r.schema.fieldNames.contains("comment")) Option(r.getAs[String]("comment")) else None
-    val qual =
-      if (r.schema.fieldNames.contains(qualCol))
-        Option(r.getAs[scala.collection.Seq[Short]](qualCol)).map(_.toArray)
-      else None
-    FastxCodec.FastxRecord(r.getAs[String]("read_id"), comment,
-      r.getAs[String](seqCol), qual)
+  /** The one COPY driver. Checks the `{SHARD}` template, runs `bind`
+    * (which returns the rows to write and their encoder), then writes
+    * `path` from the driver or one file per non-empty partition.
+    */
+  private def copy(path: String, sharded: Boolean)(bind: => (DataFrame, Encoder)): Unit = {
+    if (sharded) require(path.contains(ShardToken),
+      s"sharded output path must contain $ShardToken: $path")
+    val (df, encoder) = bind
+    val conf = new SerializableConfiguration(df.sparkSession.sparkContext.hadoopConfiguration)
+    if (sharded) df.foreachPartition { rows: Iterator[Row] =>
+      if (rows.hasNext) encoder.write(rows,
+        path.replace(ShardToken, f"${TaskContext.getPartitionId()}%05d"), create(_, conf.value, _))
+    }
+    else encoder.write(df.toLocalIterator().asScala, path, create(_, conf.value, _))
   }
+
+  private def textFile(open: (String, Boolean) => OutputStream, path: String,
+      compression: Option[String]): BufferedWriter = new BufferedWriter(
+    new OutputStreamWriter(open(path, resolveGzip(path, compression)), StandardCharsets.UTF_8))
 
   /** COPY ... (FORMAT FASTQ). Required cols: read_id, sequence1, qual1;
     * optional comment, sequence2, qual2.
     */
-  def copyFastq(
-      df: DataFrame,
-      path: String,
-      qualOffset: Int = 33,
-      includeComment: Boolean = false,
-      interleave: Boolean = false,
-      compression: Option[String] = None): Unit = {
-    val paired = df.schema.fieldNames.contains("sequence2")
-    validatePairedPath(path, paired, interleave)
-    if (paired && !interleave) {
-      val w1 = openWriter(path.replace(OrientationToken, "R1"), compression)
-      val w2 = openWriter(path.replace(OrientationToken, "R2"), compression)
-      try df.toLocalIterator().forEachRemaining { r =>
-        w1.write(FastxCodec.toFastq(fastxRecord(r, "sequence1", "qual1"), qualOffset, includeComment)); w1.newLine()
-        if (r.getAs[String]("sequence2") != null) {
-          w2.write(FastxCodec.toFastq(fastxRecord(r, "sequence2", "qual2"), qualOffset, includeComment)); w2.newLine()
-        }
-      } finally { w1.close(); w2.close() }
-    } else {
-      val w = openWriter(path, compression)
-      try df.toLocalIterator().forEachRemaining { r =>
-        w.write(FastxCodec.toFastq(fastxRecord(r, "sequence1", "qual1"), qualOffset, includeComment)); w.newLine()
-        if (paired && r.getAs[String]("sequence2") != null) {
-          w.write(FastxCodec.toFastq(fastxRecord(r, "sequence2", "qual2"), qualOffset, includeComment)); w.newLine()
-        }
-      } finally w.close()
-    }
-  }
+  def copyFastq(df: DataFrame, path: String, qualOffset: Int = 33,
+      includeComment: Boolean = false, interleave: Boolean = false,
+      compression: Option[String] = None): Unit =
+    fastx(df, path, sharded = false, Some(qualOffset), includeComment, interleave, compression)
+
+  /** Sharded COPY FASTQ: one `path` file per non-empty partition.
+    * Paired non-interleaved output needs BOTH tokens (e.g.
+    * `out/part-{SHARD}.{ORIENTATION}.fq.gz`).
+    */
+  def copyFastqSharded(df: DataFrame, pathTemplate: String, qualOffset: Int = 33,
+      includeComment: Boolean = false, interleave: Boolean = false,
+      compression: Option[String] = None): Unit =
+    fastx(df, pathTemplate, sharded = true, Some(qualOffset), includeComment, interleave,
+      compression)
 
   /** COPY ... (FORMAT FASTA). Required cols: read_id, sequence1. */
-  def copyFasta(
-      df: DataFrame,
-      path: String,
-      includeComment: Boolean = false,
-      interleave: Boolean = false,
-      compression: Option[String] = None): Unit = {
-    val paired = df.schema.fieldNames.contains("sequence2")
-    validatePairedPath(path, paired, interleave)
-    if (paired && !interleave) {
-      val w1 = openWriter(path.replace(OrientationToken, "R1"), compression)
-      val w2 = openWriter(path.replace(OrientationToken, "R2"), compression)
-      try df.toLocalIterator().forEachRemaining { r =>
-        w1.write(FastxCodec.toFasta(fastxRecord(r, "sequence1", "qual1"), includeComment)); w1.newLine()
-        if (r.getAs[String]("sequence2") != null) {
-          w2.write(FastxCodec.toFasta(fastxRecord(r, "sequence2", "qual2"), includeComment)); w2.newLine()
-        }
-      } finally { w1.close(); w2.close() }
-    } else {
-      val w = openWriter(path, compression)
-      try df.toLocalIterator().forEachRemaining { r =>
-        w.write(FastxCodec.toFasta(fastxRecord(r, "sequence1", "qual1"), includeComment)); w.newLine()
-        if (paired && r.getAs[String]("sequence2") != null) {
-          w.write(FastxCodec.toFasta(fastxRecord(r, "sequence2", "qual2"), includeComment)); w.newLine()
-        }
-      } finally w.close()
-    }
-  }
+  def copyFasta(df: DataFrame, path: String, includeComment: Boolean = false,
+      interleave: Boolean = false, compression: Option[String] = None): Unit =
+    fastx(df, path, sharded = false, None, includeComment, interleave, compression)
 
-  private def validatePairedPath(path: String, paired: Boolean, interleave: Boolean): Unit = {
-    val hasToken = path.contains(OrientationToken)
-    if (paired && !interleave && !hasToken)
-      throw new IllegalArgumentException(
-        s"Paired non-interleaved output requires $OrientationToken in path")
-    if ((!paired || interleave) && hasToken)
-      throw new IllegalArgumentException(
-        s"$OrientationToken is only valid for paired non-interleaved output")
-  }
+  /** Sharded COPY FASTA: one `path` file per non-empty partition. */
+  def copyFastaSharded(df: DataFrame, pathTemplate: String, includeComment: Boolean = false,
+      interleave: Boolean = false, compression: Option[String] = None): Unit =
+    fastx(df, pathTemplate, sharded = true, None, includeComment, interleave, compression)
+
+  /** FASTQ when `qualOffset` is set, FASTA otherwise. */
+  private def fastx(df: DataFrame, path: String, sharded: Boolean, qualOffset: Option[Int],
+      includeComment: Boolean, interleave: Boolean, compression: Option[String]): Unit =
+    copy(path, sharded) {
+      val s = df.schema
+      val paired = s.fieldNames.contains("sequence2")
+      val split = paired && !interleave
+      if (path.contains(OrientationToken) != split) throw new IllegalArgumentException(
+        if (split) s"Paired non-interleaved output requires $OrientationToken in path"
+        else s"$OrientationToken is only valid for paired non-interleaved output")
+      resolveGzip(path, compression)
+      val (id, comment) = (s.fieldIndex("read_id"), s.fieldNames.indexOf("comment"))
+      val seq = Array(s.fieldIndex("sequence1"), s.fieldNames.indexOf("sequence2"))
+      val qual = Array("qual1", "qual2").map(s.fieldNames.indexOf(_))
+      def record(r: Row, mate: Int): String = {
+        val rec = FastxCodec.FastxRecord(r.getString(id),
+          if (comment < 0) None else Option(r.getString(comment)), r.getString(seq(mate)),
+          if (qual(mate) < 0) None else Option(r.getSeq[Short](qual(mate))).map(_.toArray))
+        qualOffset.fold(FastxCodec.toFasta(rec, includeComment))(
+          FastxCodec.toFastq(rec, _, includeComment))
+      }
+      (df, (rows, out, open) => {
+        val files = (if (split) Seq("R1", "R2").map(out.replace(OrientationToken, _))
+          else Seq(out)).map(textFile(open, _, compression))
+        try rows.foreach { r =>
+          for (mate <- 0 to 1 if mate == 0 || (paired && !r.isNullAt(seq(1)))) {
+            val w = files(if (split) mate else 0)
+            w.write(record(r, mate)); w.newLine()
+          }
+        } finally files.foreach(_.close())
+      })
+    }
 
   /** Sentinel length for @SQ entries not present in the reference-
     * lengths relation (reference copy_sam.cpp:444-465).
     */
   val UnknownReferenceLength: Long = Int.MaxValue.toLong
 
-  private def rowToSamRecord(r: Row, names: Set[String]): SamCodec.SamRecord = {
-    def optLong(c: String): Option[Long] =
-      if (names.contains(c) && !r.isNullAt(r.fieldIndex(c))) Some(r.getAs[Long](c)) else None
-    def optStr(c: String): Option[String] =
-      if (names.contains(c)) Option(r.getAs[String](c)) else None
-    SamCodec.SamRecord(
-      r.getAs[String]("read_id"),
-      r.getAs[Number]("flags").intValue(),
-      r.getAs[String]("reference"),
-      r.getAs[Number]("position").longValue(),
-      0L,
-      r.getAs[Number]("mapq").shortValue(),
-      r.getAs[String]("cigar"),
-      r.getAs[String]("mate_reference"),
-      r.getAs[Number]("mate_position").longValue(),
-      r.getAs[Number]("template_length").longValue(),
-      optLong("tag_as"), optLong("tag_xs"), optLong("tag_ys"),
-      optLong("tag_xn"), optLong("tag_xm"), optLong("tag_xo"),
-      optLong("tag_xg"), optLong("tag_nm"),
-      optStr("tag_yt"), optStr("tag_md"), optStr("tag_sa"),
-      None, None)
-  }
-
-  /** COPY ... (FORMAT BAM): BGZF binary output. BAM forces a header
-    * (reference copy_sam.cpp:285-301); references come from the
-    * reference-lengths relation plus sentinel-length auto-added
-    * unknowns; SEQ/QUAL always absent.
+  /** The `@SQ` set shared by every file of one COPY: the
+    * reference-lengths relation in its order, then the data's other
+    * references, sorted, at [[UnknownReferenceLength]].
     */
-  def copyBam(
-      df: DataFrame,
-      path: String,
-      referenceLengths: Option[DataFrame] = None,
-      compressionLevel: Int = -1): Unit = {
-    validateLevel(compressionLevel)
-    val known = referenceLengths
-      .map(_.collect().map(r => r.getString(0) -> r.getLong(1)).toVector)
-      .getOrElse(Vector.empty)
+  private def references(
+      df: DataFrame, referenceLengths: Option[DataFrame]): Vector[(String, Long)] = {
+    val known =
+      referenceLengths.toVector.flatMap(_.collect().map(r => r.getString(0) -> r.getLong(1)))
     val knownNames = known.map(_._1).toSet
     val dataRefs = df.select("reference").distinct().collect()
       .map(_.getString(0)).filter(r => r != "*" && !knownNames.contains(r)).sorted
-    val refs = known ++ dataRefs.map(_ -> UnknownReferenceLength)
-    val w = new graft.kernel.BamWriter(new FileOutputStream(path), refs,
-      compressionLevel)
-    try {
-      val names = df.schema.fieldNames.toSet
-      df.toLocalIterator().forEachRemaining(r => w.writeRecord(rowToSamRecord(r, names)))
-    } finally w.close()
+    known ++ dataRefs.map(_ -> UnknownReferenceLength)
+  }
+
+  /** Row → SAM record, column positions resolved once; the 9 mandatory
+    * SAM columns are required, absent tag_* columns are None.
+    */
+  private def samRecords(s: StructType): Row => SamCodec.SamRecord = {
+    val Seq(id, flags, ref, pos, mapq, cigar, mateRef, matePos, tlen) = Seq("read_id", "flags",
+      "reference", "position", "mapq", "cigar", "mate_reference", "mate_position",
+      "template_length").map(s.fieldIndex)
+    val ints = Array("tag_as", "tag_xs", "tag_ys", "tag_xn", "tag_xm", "tag_xo", "tag_xg",
+      "tag_nm").map(s.fieldNames.indexOf(_))
+    val strs = Array("tag_yt", "tag_md", "tag_sa").map(s.fieldNames.indexOf(_))
+    r => {
+      def long(i: Int): Long = r.getAs[Number](i).longValue()
+      def int(j: Int) = if (ints(j) < 0 || r.isNullAt(ints(j))) None else Some(long(ints(j)))
+      def str(j: Int) = if (strs(j) < 0) None else Option(r.getString(strs(j)))
+      SamCodec.SamRecord(r.getString(id), r.getAs[Number](flags).intValue(), r.getString(ref),
+        long(pos), 0L, r.getAs[Number](mapq).shortValue(), r.getString(cigar),
+        r.getString(mateRef), long(matePos), long(tlen),
+        int(0), int(1), int(2), int(3), int(4), int(5), int(6), int(7),
+        str(0), str(1), str(2), None, None)
+    }
   }
 
   /** COPY ... (FORMAT SAM). Required cols: the 9 mandatory SAM columns;
     * tag_* columns written when present. SEQ/QUAL always `*`.
     */
-  def copySam(
-      df: DataFrame,
-      path: String,
-      includeHeader: Boolean = true,
-      referenceLengths: Option[DataFrame] = None,
-      compression: Option[String] = None): Unit = {
-    val w = openWriter(path, compression)
-    try {
-      if (includeHeader) samHeaderLines(df, referenceLengths).foreach { l =>
-        w.write(l); w.newLine()
-      }
-      val names = df.schema.fieldNames.toSet
-      df.toLocalIterator().forEachRemaining { r =>
-        w.write(SamCodec.toLine(rowToSamRecord(r, names))); w.newLine()
-      }
-    } finally w.close()
-  }
+  def copySam(df: DataFrame, path: String, includeHeader: Boolean = true,
+      referenceLengths: Option[DataFrame] = None, compression: Option[String] = None): Unit =
+    sam(df, path, sharded = false, includeHeader, referenceLengths, compression)
 
-  private def samHeaderLines(
-      df: DataFrame, referenceLengths: Option[DataFrame]): Seq[String] = {
-    val known = referenceLengths
-      .map(_.collect().map(r => r.getString(0) -> r.getLong(1)).toVector)
-      .getOrElse(Vector.empty)
-    val knownNames = known.map(_._1).toSet
-    // unknown refs appearing in the data get the sentinel length
-    val dataRefs = df.select("reference").distinct().collect()
-      .map(_.getString(0)).filter(r => r != "*" && !knownNames.contains(r)).sorted
-    "@HD\tVN:1.6\tSO:unknown" +:
-      (known ++ dataRefs.map(_ -> UnknownReferenceLength)).map {
-        case (name, len) => s"@SQ\tSN:$name\tLN:$len"
-      }
-  }
-
-  // ---------------------------------------------------------------------
-  // Sharded (multi-file, executor-written) variants — the 100 TB path.
-  //
-  // The single-file writers above stream through the driver for parity
-  // with the reference's mutex-serialized writers; at scale that is a
-  // driver bottleneck by construction. These write ONE FILE PER
-  // PARTITION directly from the executors (no driver hop, no shuffle),
-  // with the partition id substituted for `{SHARD}` in the path
-  // template — the same templating contract as `{ORIENTATION}`. Files
-  // are created overwrite=true through the Hadoop FS (task retries are
-  // idempotent; disable speculative execution for these sinks, or
-  // point the template at a job-scoped directory that is committed by
-  // rename, if running with speculation on). Empty partitions produce
-  // no file. Each SAM shard carries the full header, so every shard is
-  // a valid standalone SAM file and `cat shards | grep -v '^@'`
-  // reassembles the record stream.
-  // ---------------------------------------------------------------------
-
-  private val ShardToken = "{SHARD}"
-
-  private def serializableConf(df: DataFrame): org.apache.spark.util.SerializableConfiguration =
-    new org.apache.spark.util.SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-
-  private def openShardWriter(
-      path: String, conf: org.apache.hadoop.conf.Configuration,
-      compression: Option[String] = None): BufferedWriter = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    // no .crc sidecars next to user-visible shard files
-    fs.setWriteChecksum(false)
-    val raw = fs.create(p, true)
-    val out = if (resolveGzip(path, compression)) new GZIPOutputStream(raw) else raw
-    new BufferedWriter(new OutputStreamWriter(out, StandardCharsets.UTF_8))
-  }
-
-  private def requireShardToken(template: String): Unit =
-    require(template.contains(ShardToken),
-      s"sharded output path must contain $ShardToken: $template")
-
-  private def shardPath(template: String, shard: Int): String =
-    template.replace(ShardToken, f"$shard%05d")
-
-  /** Sharded COPY FASTQ: one `path` file per non-empty partition.
-    * Paired non-interleaved output needs BOTH tokens (e.g.
-    * `out/part-{SHARD}.{ORIENTATION}.fq.gz`).
+  /** Sharded COPY SAM: one `path` file per non-empty partition, each
+    * carrying the full header.
     */
-  def copyFastqSharded(
-      df: DataFrame,
-      pathTemplate: String,
-      qualOffset: Int = 33,
-      includeComment: Boolean = false,
-      interleave: Boolean = false,
-      compression: Option[String] = None): Unit = {
-    requireShardToken(pathTemplate)
-    val paired = df.schema.fieldNames.contains("sequence2")
-    validatePairedPath(pathTemplate, paired, interleave)
-    val conf = serializableConf(df)
-    df.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) {
-        val base = shardPath(pathTemplate, org.apache.spark.TaskContext.getPartitionId())
-        if (paired && !interleave) {
-          val w1 = openShardWriter(base.replace(OrientationToken, "R1"), conf.value, compression)
-          val w2 = openShardWriter(base.replace(OrientationToken, "R2"), conf.value, compression)
-          try rows.foreach { r =>
-            w1.write(FastxCodec.toFastq(fastxRecord(r, "sequence1", "qual1"), qualOffset, includeComment)); w1.newLine()
-            if (r.getAs[String]("sequence2") != null) {
-              w2.write(FastxCodec.toFastq(fastxRecord(r, "sequence2", "qual2"), qualOffset, includeComment)); w2.newLine()
-            }
-          } finally { w1.close(); w2.close() }
-        } else {
-          val w = openShardWriter(base, conf.value, compression)
-          try rows.foreach { r =>
-            w.write(FastxCodec.toFastq(fastxRecord(r, "sequence1", "qual1"), qualOffset, includeComment)); w.newLine()
-            if (paired && r.getAs[String]("sequence2") != null) {
-              w.write(FastxCodec.toFastq(fastxRecord(r, "sequence2", "qual2"), qualOffset, includeComment)); w.newLine()
-            }
-          } finally w.close()
-        }
-      }
-    }
-  }
+  def copySamSharded(df: DataFrame, pathTemplate: String, includeHeader: Boolean = true,
+      referenceLengths: Option[DataFrame] = None, compression: Option[String] = None): Unit =
+    sam(df, pathTemplate, sharded = true, includeHeader, referenceLengths, compression)
 
-  /** Sharded COPY FASTA: one `path` file per non-empty partition. */
-  def copyFastaSharded(
-      df: DataFrame,
-      pathTemplate: String,
-      includeComment: Boolean = false,
-      interleave: Boolean = false,
-      compression: Option[String] = None): Unit = {
-    requireShardToken(pathTemplate)
-    val paired = df.schema.fieldNames.contains("sequence2")
-    validatePairedPath(pathTemplate, paired, interleave)
-    val conf = serializableConf(df)
-    df.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) {
-        val base = shardPath(pathTemplate, org.apache.spark.TaskContext.getPartitionId())
-        if (paired && !interleave) {
-          val w1 = openShardWriter(base.replace(OrientationToken, "R1"), conf.value, compression)
-          val w2 = openShardWriter(base.replace(OrientationToken, "R2"), conf.value, compression)
-          try rows.foreach { r =>
-            w1.write(FastxCodec.toFasta(fastxRecord(r, "sequence1", "qual1"), includeComment)); w1.newLine()
-            if (r.getAs[String]("sequence2") != null) {
-              w2.write(FastxCodec.toFasta(fastxRecord(r, "sequence2", "qual2"), includeComment)); w2.newLine()
-            }
-          } finally { w1.close(); w2.close() }
-        } else {
-          val w = openShardWriter(base, conf.value, compression)
-          try rows.foreach { r =>
-            w.write(FastxCodec.toFasta(fastxRecord(r, "sequence1", "qual1"), includeComment)); w.newLine()
-            if (paired && r.getAs[String]("sequence2") != null) {
-              w.write(FastxCodec.toFasta(fastxRecord(r, "sequence2", "qual2"), includeComment)); w.newLine()
-            }
-          } finally w.close()
-        }
-      }
+  private def sam(df: DataFrame, path: String, sharded: Boolean, includeHeader: Boolean,
+      referenceLengths: Option[DataFrame], compression: Option[String]): Unit =
+    copy(path, sharded) {
+      resolveGzip(path, compression)
+      val header = if (!includeHeader) Vector.empty else "@HD\tVN:1.6\tSO:unknown" +:
+        references(df, referenceLengths).map { case (name, len) => s"@SQ\tSN:$name\tLN:$len" }
+      val record = samRecords(df.schema)
+      (df, (rows, out, open) => {
+        val w = textFile(open, out, compression)
+        try (header.iterator ++ rows.map(r => SamCodec.toLine(record(r)))).foreach { l =>
+          w.write(l); w.newLine()
+        } finally w.close()
+      })
     }
-  }
 
-  /** Sharded COPY BAM: one standalone BAM (BGZF binary) per non-empty
-    * partition, written directly by executors. The @SQ reference set is
-    * computed ONCE on the driver (union over all shards — an executor
-    * cannot know it locally) so every shard shares identical reference
-    * ids and `samtools cat`-style concatenation is well-defined. This
-    * is the 100 TB default; the single-file [[copyBam]] mirrors the
-    * reference's mutex-serialized writer (src/copy_sam.cpp:689-694)
-    * and exists for drop-in parity.
+  /** COPY ... (FORMAT BAM): BGZF binary output. BAM forces a header
+    * (reference copy_sam.cpp:285-301) with the same @SQ set as SAM;
+    * SEQ/QUAL always absent.
     */
-  def copyBamSharded(
-      df: DataFrame,
-      pathTemplate: String,
-      referenceLengths: Option[DataFrame] = None,
-      compressionLevel: Int = -1): Unit = {
-    requireShardToken(pathTemplate)
-    validateLevel(compressionLevel)
-    val known = referenceLengths
-      .map(_.collect().map(r => r.getString(0) -> r.getLong(1)).toVector)
-      .getOrElse(Vector.empty)
-    val knownNames = known.map(_._1).toSet
-    val dataRefs = df.select("reference").distinct().collect()
-      .map(_.getString(0)).filter(r => r != "*" && !knownNames.contains(r)).sorted
-    val refs = known ++ dataRefs.map(_ -> UnknownReferenceLength)
-    val names = df.schema.fieldNames.toSet
-    val conf = serializableConf(df)
-    df.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) {
-        val path = shardPath(pathTemplate, org.apache.spark.TaskContext.getPartitionId())
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(conf.value)
-        fs.setWriteChecksum(false)
-        val w = new graft.kernel.BamWriter(fs.create(p, true), refs,
-          compressionLevel)
-        try rows.foreach(r => w.writeRecord(rowToSamRecord(r, names)))
-        finally w.close()
-      }
-    }
-  }
+  def copyBam(df: DataFrame, path: String, referenceLengths: Option[DataFrame] = None,
+      compressionLevel: Int = -1): Unit =
+    bam(df, path, sharded = false, referenceLengths, compressionLevel)
 
-  /** Sharded COPY BIOM: the COO relation is hash-partitioned BY
-    * SAMPLE into `numShards` shards and each shard is written as a
-    * complete, valid BIOM 2.1 (HDF5) file holding a disjoint sample
-    * subset — the natural split for a feature table (per-sample
-    * columns are never divided across files, so any shard can be
-    * loaded or merged downstream with plain read_biom + UNION ALL).
-    * Executor memory is bounded by the largest shard, never the whole
-    * matrix; the single-file [[BiomOps.copyBiom]] remains the parity
-    * writer. Duplicate (sample, feature) values are summed and zeros
-    * dropped BEFORE sharding, identical to the single-file semantics
-    * (reference: README.md:2588-2594).
+  /** Sharded COPY BAM: one standalone BAM per non-empty partition. All
+    * shards share the reference ids of one driver-computed @SQ set, so
+    * `samtools cat`-style concatenation is well-defined.
     */
-  def copyBiomSharded(
-      df: DataFrame,
-      pathTemplate: String,
-      numShards: Int,
-      compression: String = "gzip"): Unit = {
-    requireShardToken(pathTemplate)
-    require(numShards > 0, s"numShards must be positive: $numShards")
+  def copyBamSharded(df: DataFrame, pathTemplate: String,
+      referenceLengths: Option[DataFrame] = None, compressionLevel: Int = -1): Unit =
+    bam(df, pathTemplate, sharded = true, referenceLengths, compressionLevel)
+
+  private def bam(df: DataFrame, path: String, sharded: Boolean,
+      referenceLengths: Option[DataFrame], compressionLevel: Int): Unit =
+    copy(path, sharded) {
+      // COMPRESSION_LEVEL (reference src/copy_sam.cpp:251-254, 280-282):
+      // 0–9; -1 = library default
+      if (compressionLevel < -1 || compressionLevel > 9) throw new IllegalArgumentException(
+        s"COMPRESSION_LEVEL must be between 0 and 9, got $compressionLevel")
+      val refs = references(df, referenceLengths)
+      val record = samRecords(df.schema)
+      (df, (rows, out, open) => {
+        val w = new BamWriter(open(out, false), refs, compressionLevel)
+        try rows.foreach(r => w.writeRecord(record(r))) finally w.close()
+      })
+    }
+
+  /** COPY BIOM bind (reference: src/copy_biom.cpp, README.md:2588-2594)
+    * for every BIOM path: checks `compression` and the columns, rejects
+    * NULLs, and returns the canonical table (duplicate (sample,
+    * feature) values summed, zeros dropped).
+    */
+  private[ops] def biomTable(df: DataFrame, compression: String): DataFrame = {
+    Hdf5BiomWriter.deflateLevel(compression)
     val cols = df.schema.fieldNames.toSet
     for (c <- Seq("sample_id", "feature_id", "value"))
       require(cols.contains(c), s"BIOM output requires column $c")
-    val nulls = df.filter(org.apache.spark.sql.functions.col("sample_id").isNull ||
-      org.apache.spark.sql.functions.col("feature_id").isNull ||
-      org.apache.spark.sql.functions.col("value").isNull).count()
+    val nulls = df.filter(
+      col("sample_id").isNull || col("feature_id").isNull || col("value").isNull).count()
     if (nulls > 0)
       throw new IllegalArgumentException(s"BIOM output forbids NULLs ($nulls offending rows)")
-    import org.apache.spark.sql.functions.{col, sum}
-    val canonical = df.groupBy("sample_id", "feature_id")
+    df.groupBy("sample_id", "feature_id")
       .agg(sum(col("value")).as("value"))
       .filter(col("value") =!= 0.0)
-      .repartition(numShards, col("sample_id"))
-    val conf = serializableConf(df)
-    canonical.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) {
-        val coo = new scala.collection.mutable.ArrayBuffer[(String, String, Double)]()
-        rows.foreach(r => coo += ((r.getString(0), r.getString(1), r.getDouble(2))))
-        val path = shardPath(pathTemplate, org.apache.spark.TaskContext.getPartitionId())
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(conf.value)
-        fs.setWriteChecksum(false)
-        val out = fs.create(p, true)
-        try out.write(graft.kernel.Hdf5BiomWriter.write(coo.toSeq, compression = compression))
-        finally out.close()
-      }
-    }
   }
 
-  /** Sharded COPY SAM: one `path` file per non-empty partition, each
-    * carrying the full header (computed once on the driver — the @SQ
-    * set must be the union over ALL shards, which an executor cannot
-    * know locally).
+  /** Sharded COPY BIOM: the canonical table (as [[BiomOps.copyBiom]])
+    * is hash-partitioned BY SAMPLE into `numShards` shards, each a
+    * complete BIOM 2.1 (HDF5) file holding a disjoint sample subset, so
+    * any shard loads or merges with plain read_biom + UNION ALL.
+    * Executor memory is bounded by the largest shard.
     */
-  def copySamSharded(
-      df: DataFrame,
-      pathTemplate: String,
-      includeHeader: Boolean = true,
-      referenceLengths: Option[DataFrame] = None,
-      compression: Option[String] = None): Unit = {
-    requireShardToken(pathTemplate)
-    val header = if (includeHeader) samHeaderLines(df, referenceLengths) else Seq.empty
-    val names = df.schema.fieldNames.toSet
-    val conf = serializableConf(df)
-    df.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) {
-        val w = openShardWriter(
-          shardPath(pathTemplate, org.apache.spark.TaskContext.getPartitionId()),
-          conf.value, compression)
-        try {
-          header.foreach { l => w.write(l); w.newLine() }
-          rows.foreach { r => w.write(SamCodec.toLine(rowToSamRecord(r, names))); w.newLine() }
-        } finally w.close()
-      }
+  def copyBiomSharded(df: DataFrame, pathTemplate: String, numShards: Int,
+      compression: String = "gzip"): Unit =
+    biom(df, pathTemplate, Some(numShards), compression)
+
+  /** COPY BIOM to HDF5: one file, or `shards` sample-disjoint files. */
+  private[ops] def biom(df: DataFrame, path: String, shards: Option[Int],
+      compression: String): Unit =
+    copy(path, shards.isDefined) {
+      shards.foreach(n => require(n > 0, s"numShards must be positive: $n"))
+      val table = biomTable(df, compression)
+      (shards.fold(table)(table.repartition(_, col("sample_id"))), (rows, out, open) => {
+        val coo = rows.map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toVector
+        val o = open(out, false)
+        try o.write(Hdf5BiomWriter.write(coo, compression = compression)) finally o.close()
+      })
     }
-  }
 
-  // ------------------------------------------------------------------
-  // COPY WARC (LLM-pipeline surface — pairs with the `warc` source)
-  // ------------------------------------------------------------------
-
-  /** Row → WARC record: `target_uri` + binary `payload` mandatory;
-    * `warc_type`/`content_type`/`warc_date`/`record_id` override the
-    * defaults when present as columns. Raw record writer — HTTP
-    * wrapping (if wanted) is the caller's payload to build.
+  /** COPY WARC (pairs with the `warc` source) record headers: (header,
+    * column, default when the column is absent or NULL). `target_uri`
+    * is required; the binary `payload` column (required, NULL = empty)
+    * is the record block. Raw record writer — HTTP wrapping (if
+    * wanted) is the caller's payload to build.
     */
-  private def warcRecord(r: Row, names: Set[String]): (Seq[(String, String)], Array[Byte]) = {
-    def opt(c: String, dflt: String): String =
-      if (names(c) && !r.isNullAt(r.fieldIndex(c))) r.getAs[String](c) else dflt
-    val payload = r.getAs[Array[Byte]]("payload")
-    (Seq(
-      "WARC-Type" -> opt("warc_type", "resource"),
-      "WARC-Target-URI" -> r.getAs[String]("target_uri"),
-      "WARC-Date" -> opt("warc_date", "1970-01-01T00:00:00Z"),
-      "WARC-Record-ID" -> opt("record_id", "<urn:graft:record>"),
-      "Content-Type" -> opt("content_type", "application/octet-stream")),
-      if (payload == null) Array.empty[Byte] else payload)
-  }
+  private val WarcHeaders = Seq(
+    ("WARC-Type", "warc_type", "resource"),
+    ("WARC-Target-URI", "target_uri", null),
+    ("WARC-Date", "warc_date", "1970-01-01T00:00:00Z"),
+    ("WARC-Record-ID", "record_id", "<urn:graft:record>"),
+    ("Content-Type", "content_type", "application/octet-stream"))
 
   /** Single-file COPY WARC (driver-streamed, bounded memory). A `.gz`
     * path writes one gzip member per record (Common Crawl convention).
     */
-  def copyWarc(df: DataFrame, path: String): Unit = {
-    val names = df.schema.fieldNames.toSet
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    fs.setWriteChecksum(false)
-    val out = fs.create(p, true)
-    val gz = path.endsWith(".gz")
-    try {
-      val it = df.toLocalIterator()
-      graft.kernel.WarcCodec.write(out,
-        new Iterator[(Seq[(String, String)], Array[Byte])] {
-          def hasNext = it.hasNext
-          def next() = warcRecord(it.next(), names)
-        }, gzipPerRecord = gz)
-    } finally out.close()
-  }
+  def copyWarc(df: DataFrame, path: String): Unit = warc(df, path, sharded = false)
 
   /** Sharded COPY WARC: one file per non-empty partition — the shape a
     * 100 TB export actually uses (crawl convention: many ~1 GB
     * .warc.gz files). `pathTemplate` must contain {SHARD}.
     */
-  def copyWarcSharded(df: DataFrame, pathTemplate: String): Unit = {
-    requireShardToken(pathTemplate)
-    val names = df.schema.fieldNames.toSet
-    val conf = serializableConf(df)
-    df.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) {
-        val path = shardPath(pathTemplate, org.apache.spark.TaskContext.getPartitionId())
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(conf.value)
-        fs.setWriteChecksum(false)
-        val out = fs.create(p, true)
-        try graft.kernel.WarcCodec.write(out,
-          rows.map(warcRecord(_, names)), gzipPerRecord = path.endsWith(".gz"))
-        finally out.close()
+  def copyWarcSharded(df: DataFrame, pathTemplate: String): Unit =
+    warc(df, pathTemplate, sharded = true)
+
+  private def warc(df: DataFrame, path: String, sharded: Boolean): Unit =
+    copy(path, sharded) {
+      val s = df.schema
+      val columns = WarcHeaders.map { case (_, c, default) =>
+        if (default == null) s.fieldIndex(c) else s.fieldNames.indexOf(c)
       }
+      val payload = s.fieldIndex("payload")
+      (df, (rows, out, open) => {
+        val o = open(out, false)
+        try WarcCodec.write(o, rows.map { r =>
+          (WarcHeaders.zip(columns).map { case ((header, _, default), i) =>
+            header -> (if (i < 0 || r.isNullAt(i)) default else r.getString(i))
+          }, Option(r.getAs[Array[Byte]](payload)).getOrElse(Array.emptyByteArray))
+        }, gzipPerRecord = out.endsWith(".gz"))
+        finally o.close()
+      })
     }
-  }
 }

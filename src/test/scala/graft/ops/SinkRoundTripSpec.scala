@@ -1,0 +1,415 @@
+package graft.ops
+
+import graft.SparkFixture
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+import java.io.{ByteArrayInputStream, File}
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.file.{Files, Paths}
+import java.util.zip.GZIPInputStream
+
+/** The COPY sinks' shared contract, checked from in-memory rows (no
+  * fixtures) for FASTQ, FASTA, SAM, BAM, BIOM and WARC: a single-file
+  * COPY writes the bytes of a one-partition sharded COPY; a sharded
+  * COPY writes one file per non-empty partition and the files read
+  * back through `sources/` give the input; an empty DataFrame gives an
+  * empty, header-only or EOF-only file; COMPRESSION and
+  * COMPRESSION_LEVEL are honored or rejected on the driver before any
+  * job; BAM records carry htslib's `bin`.
+  */
+class SinkRoundTripSpec extends AnyFunSuite {
+  private lazy val spark = SparkFixture.spark
+
+  /** One partition per `parts` entry; an empty entry is an empty partition. */
+  private def df(schema: StructType, parts: Seq[Row]*): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(parts, parts.length).flatMap(identity), schema)
+
+  private def tmp(): String = Files.createTempDirectory("graft_sink_rt").toString
+  private def bytes(p: String): Seq[Byte] = Files.readAllBytes(Paths.get(p)).toSeq
+  private def listed(dir: String): Seq[String] = new File(dir).list().toSeq.sorted
+  private def gunzip(b: Seq[Byte]): Seq[Byte] =
+    new GZIPInputStream(new ByteArrayInputStream(b.toArray)).readAllBytes().toSeq
+  private def isGzip(p: String): Boolean = {
+    val b = bytes(p)
+    b.length >= 2 && (b(0) & 0xff) == 0x1f && (b(1) & 0xff) == 0x8b
+  }
+  private def text(p: String): Seq[String] = {
+    val b = if (isGzip(p)) gunzip(bytes(p)) else bytes(p)
+    new String(b.toArray, "UTF-8").split("\n", -1).toSeq.dropRight(1)
+  }
+  private def read(format: String, path: String, opts: (String, String)*): DataFrame =
+    spark.read.format(format).options(opts.toMap).load(path)
+  /** Column values with byte arrays compared by content. */
+  private def values(d: DataFrame, cols: String*): Seq[Seq[Any]] =
+    d.select(cols.map(col): _*).collect().toSeq.map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    })
+  private def orient(p: String, o: String): String = p.replace("{ORIENTATION}", o)
+
+  /** One format's COPY pair: `single(df, path)` and `sharded(df, template)`
+    * write `file` (R1 and R2 when it holds {ORIENTATION}); `back(path)`
+    * reads one written file (or pair) through `sources/`, and `expect`
+    * gives the same values from the input rows.
+    */
+  private case class Sink(file: String, schema: StructType, rows: Seq[Row],
+      single: (DataFrame, String) => Unit, sharded: (DataFrame, String) => Unit,
+      back: String => Seq[Seq[Any]], expect: Seq[Row] => Seq[Seq[Any]]) {
+    def outputs(path: String): Seq[String] =
+      if (path.contains("{ORIENTATION}")) Seq("R1", "R2").map(orient(path, _)) else Seq(path)
+  }
+
+  /** Runs the contract for `s`; returns the single-file and the
+    * 3-partition sharded output directories.
+    */
+  private def checkSink(s: Sink): (String, String) = {
+    val (one, shard1, shard3) = (tmp(), tmp(), tmp())
+    s.single(df(s.schema, s.rows), s"$one/${s.file}")
+    s.sharded(df(s.schema, s.rows), s"$shard1/part-{SHARD}-${s.file}")
+    assert(s.outputs(s"$one/${s.file}").map(bytes) ==
+      s.outputs(s"$shard1/part-00000-${s.file}").map(bytes), s"${s.file}: single vs 1 shard")
+    assert(listed(shard1) == s.outputs(s"part-00000-${s.file}"))
+    assert(s.back(s"$one/${s.file}") == s.expect(s.rows), s"${s.file}: single read-back")
+    val (a, b) = s.rows.splitAt(2)
+    s.sharded(df(s.schema, a, Seq.empty, b), s"$shard3/part-{SHARD}-${s.file}")
+    val written = Seq("00000", "00002").map(n => s"part-$n-${s.file}")
+    assert(listed(shard3) == written.flatMap(s.outputs).sorted, s"${s.file}: shard files")
+    assert(written.flatMap(f => s.back(s"$shard3/$f")) == s.expect(s.rows),
+      s"${s.file}: sharded read-back")
+    (one, shard3)
+  }
+
+  private def q(s: Int*): Seq[Short] = s.map(_.toShort)
+  private def field(n: String, t: DataType) = StructField(n, t)
+  private val fqSchema = StructType(Seq(
+    field("read_id", StringType), field("comment", StringType),
+    field("sequence1", StringType), field("qual1", ArrayType(ShortType)),
+    field("sequence2", StringType), field("qual2", ArrayType(ShortType))))
+  private val fqRows = Seq(
+    Row("r1", "one", "ACGT", q(30, 31, 32, 33), "TTA", q(20, 21, 22)),
+    Row("r2", null, "GG", q(10, 40), "C", q(2)),
+    Row("r3", "three", "NACGT", q(2, 3, 4, 5, 6), "GGGG", q(7, 8, 9, 10)),
+    Row("r4", null, "A", q(41), "AC", q(11, 12)))
+  private def columns(cols: Int*)(rows: Seq[Row]): Seq[Row] =
+    rows.map(r => Row(cols.map(r(_)): _*))
+  private def schemaOf(cols: Int*): StructType = StructType(cols.map(fqSchema(_)))
+
+  test("FASTQ single-end, interleaved and {ORIENTATION} split; FASTA single and split") {
+    val seCols = Seq(0, 1, 2, 3)
+    checkSink(Sink("se.fq", schemaOf(seCols: _*), columns(seCols: _*)(fqRows),
+      Writers.copyFastq(_, _, includeComment = true),
+      Writers.copyFastqSharded(_, _, includeComment = true),
+      p => values(read("fastx", p), "read_id", "comment", "sequence1", "qual1"),
+      _.map(_.toSeq)))
+    checkSink(Sink("il.fq", fqSchema, fqRows :+ Row("r5", null, "TT", q(1, 2), null, null),
+      Writers.copyFastq(_, _, interleave = true),
+      Writers.copyFastqSharded(_, _, interleave = true),
+      p => values(read("fastx", p), "read_id", "sequence1", "qual1"),
+      _.flatMap(r => Seq(Seq(r(0), r(2), r(3))) ++
+        (if (r(4) == null) Nil else Seq(Seq(r(0), r(4), r(5)))))))
+    checkSink(Sink("pe_{ORIENTATION}.fq", fqSchema, fqRows,
+      Writers.copyFastq(_, _), Writers.copyFastqSharded(_, _),
+      p => values(read("fastx", orient(p, "R1"), "sequence2" -> orient(p, "R2")),
+        "read_id", "sequence1", "qual1", "sequence2", "qual2"),
+      _.map(r => Seq(r(0), r(2), r(3), r(4), r(5)))))
+    checkSink(Sink("s.fa", schemaOf(0, 1, 2), columns(0, 1, 2)(fqRows),
+      Writers.copyFasta(_, _, includeComment = true),
+      Writers.copyFastaSharded(_, _, includeComment = true),
+      p => values(read("fastx", p), "read_id", "comment", "sequence1"),
+      _.map(_.toSeq)))
+    checkSink(Sink("pe_{ORIENTATION}.fa", schemaOf(0, 2, 4), columns(0, 2, 4)(fqRows),
+      Writers.copyFasta(_, _), Writers.copyFastaSharded(_, _),
+      p => values(read("fastx", orient(p, "R1"), "sequence2" -> orient(p, "R2")),
+        "read_id", "sequence1", "sequence2"),
+      _.map(_.toSeq)))
+  }
+
+  private val samSchema = StructType(Seq(
+    field("read_id", StringType), field("flags", IntegerType),
+    field("reference", StringType), field("position", LongType),
+    field("mapq", ShortType), field("cigar", StringType),
+    field("mate_reference", StringType), field("mate_position", LongType),
+    field("template_length", LongType), field("tag_as", LongType),
+    field("tag_nm", LongType), field("tag_md", StringType)))
+  private val samCols = samSchema.fieldNames.toSeq
+  private def aln(id: String, flags: Int, ref: String, pos: Long, cigar: String,
+      as: java.lang.Long = null, md: String = null): Row =
+    Row(id, flags, ref, pos, 60.toShort, cigar, "*", 0L, 0L, as, 0L, md)
+  private val samRows = Seq(
+    aln("a1", 0, "chrA", 100L, "10M", as = 20L, md = "10"),
+    aln("a2", 16, "chrB", 150L, "5M2I3M"),
+    aln("a3", 4, "*", 0L, "*"),
+    Row("a4", 99, "chrA", 300L, 30.toShort, "4M1D6M", "=", 420L, 130L, 7L, null, null),
+    aln("a5", 0, "chrA", 16380L, "10M", as = 1L))
+  private def refLens: Option[DataFrame] = {
+    val s = spark
+    import s.implicits._
+    Some(Seq(("chrA", 5000L)).toDF("reference", "length"))
+  }
+  private val samHeader = Seq("@HD\tVN:1.6\tSO:unknown", "@SQ\tSN:chrA\tLN:5000",
+    s"@SQ\tSN:chrB\tLN:${Int.MaxValue}")
+  private def alignments(p: String) = values(read("alignments", p), samCols: _*)
+
+  test("SAM with and without header: @SQ from referenceLengths plus 2147483647 for unknowns") {
+    val (one, shards) = checkSink(Sink("h.sam", samSchema, samRows,
+      Writers.copySam(_, _, referenceLengths = refLens),
+      Writers.copySamSharded(_, _, referenceLengths = refLens),
+      alignments, _.map(_.toSeq)))
+    assert(text(s"$one/h.sam").takeWhile(_.startsWith("@")) == samHeader)
+    for (f <- listed(shards)) // every shard carries the full header
+      assert(text(s"$shards/$f").takeWhile(_.startsWith("@")) == samHeader, f)
+    val (bare, _) = checkSink(Sink("n.sam", samSchema, samRows,
+      Writers.copySam(_, _, includeHeader = false, referenceLengths = refLens),
+      Writers.copySamSharded(_, _, includeHeader = false, referenceLengths = refLens),
+      alignments, _.map(_.toSeq)))
+    assert(text(s"$bare/n.sam").length == samRows.length &&
+      !text(s"$bare/n.sam").exists(_.startsWith("@")))
+  }
+
+  /** Decoded BAM: header references and each record's name and bin. */
+  private def decodeBam(p: String): (Seq[(String, Int)], Seq[(String, Int)]) = {
+    val b = ByteBuffer.wrap(gunzip(bytes(p)).toArray).order(ByteOrder.LITTLE_ENDIAN)
+    def str(n: Int): String = { val a = new Array[Byte](n); b.get(a); new String(a, "UTF-8") }
+    assert(str(4) == "BAM\u0001")
+    val textLength = b.getInt()
+    b.position(b.position() + textLength)
+    val refs = Seq.fill(b.getInt())((str(b.getInt()).dropRight(1), b.getInt()))
+    val recs = Seq.newBuilder[(String, Int)]
+    while (b.hasRemaining) {
+      val end = b.getInt() + b.position()
+      b.position(b.position() + 8)
+      val nameLen = b.get() & 0xff
+      b.get()
+      val bin = b.getShort() & 0xffff
+      b.position(b.position() + 20)
+      recs += ((str(nameLen).dropRight(1), bin))
+      b.position(end)
+    }
+    (refs, recs.result())
+  }
+
+  test("BAM: shards read back, header references, and the EOF block") {
+    val (one, shards) = checkSink(Sink("x.bam", samSchema, samRows,
+      Writers.copyBam(_, _, refLens), Writers.copyBamSharded(_, _, refLens),
+      alignments, _.map(_.toSeq)))
+    for (p <- s"$one/x.bam" +: listed(shards).map(f => s"$shards/$f")) {
+      assert(decodeBam(p)._1 == Seq("chrA" -> 5000, "chrB" -> Int.MaxValue), p)
+      assert(bytes(p).takeRight(28).take(4) == Seq(0x1f, 0x8b, 8, 4).map(_.toByte), p)
+    }
+  }
+
+  test("BAM bin: htslib reg2bin over the reference span (4680 for unplaced unmapped)") {
+    val p = s"${tmp()}/bin.bam"
+    Writers.copyBam(df(samSchema, Seq(
+      aln("unmapped", 4, "*", 0L, "*"),
+      aln("at100", 0, "chrA", 100L, "10M"),
+      aln("spans16k", 0, "chrA", 16380L, "10M"),
+      aln("deletion", 0, "chrA", 16377L, "4M2D4M"),
+      aln("insertion", 0, "chrA", 16377L, "4M2I4M"),
+      aln("clipped", 0, "chrA", 16385L, "3S5M1N2M4H"),
+      aln("far", 0, "chrA", 300000L, "8M"))), p)
+    assert(decodeBam(p)._2 == Seq("unmapped" -> 4680, "at100" -> 4681, "spans16k" -> 585,
+      "deletion" -> 585, "insertion" -> 4681, "clipped" -> 4682, "far" -> (4681 + 18)))
+  }
+
+  test("BAM rejects an unknown CIGAR operator, naming the read") {
+    val e = intercept[IllegalArgumentException](Writers.copyBam(
+      df(samSchema, Seq(aln("good", 0, "chrA", 5L, "4M"), aln("badop", 0, "chrA", 9L, "3M2Q"))),
+      s"${tmp()}/bad.bam"))
+    assert(e.getMessage.contains("badop") && e.getMessage.contains("Q"), e.getMessage)
+  }
+
+  private val warcSchema = StructType(Seq(
+    field("target_uri", StringType), field("payload", BinaryType),
+    field("warc_type", StringType), field("content_type", StringType),
+    field("warc_date", StringType), field("record_id", StringType)))
+  private val warcRows = Seq(
+    Row("http://a/", "alpha".getBytes("UTF-8"), "resource", "text/plain",
+      "2024-01-02T03:04:05Z", "<urn:uuid:1>"),
+    Row("http://b/", "beta".getBytes("UTF-8"), null, null, null, null),
+    Row("http://c/", Array.emptyByteArray, "metadata", "application/json", null, "<urn:uuid:3>"),
+    Row("http://d/", null, null, "text/html", null, null))
+  private def warcExpect(rows: Seq[Row]): Seq[Seq[Any]] = rows.map { r =>
+    def or(i: Int, d: String): Any = if (r.isNullAt(i)) d else r(i)
+    Seq(or(2, "resource"), r(0), or(4, "1970-01-01T00:00:00Z"), or(5, "<urn:graft:record>"),
+      or(3, "application/octet-stream"),
+      if (r.isNullAt(1)) Seq.empty[Byte] else r.getAs[Array[Byte]](1).toSeq)
+  }
+
+  test("WARC: gzip member per record for .gz, plain otherwise") {
+    for (file <- Seq("w.warc.gz", "w.warc")) {
+      val (one, _) = checkSink(Sink(file, warcSchema, warcRows,
+        Writers.copyWarc, Writers.copyWarcSharded,
+        p => values(read("warc", p), "warc_type", "target_uri", "warc_date", "record_id",
+          "content_type", "payload"),
+        warcExpect))
+      assert(isGzip(s"$one/$file") == file.endsWith(".gz"), file)
+    }
+  }
+
+  private val biomSchema = StructType(Seq(field("sample_id", StringType),
+    field("feature_id", StringType), field("value", DoubleType)))
+  private val biomRows = Seq(Row("s1", "f1", 1.0), Row("s1", "f2", 2.5), Row("s2", "f1", 4.0),
+    Row("s1", "f1", 2.0), Row("s2", "f3", 1.5), Row("s2", "f3", -1.5), Row("s3", "f2", 0.0))
+  private val biomCanonical = Set(("s1", "f1", 3.0), ("s1", "f2", 2.5), ("s2", "f1", 4.0))
+  /** A `.biom` (HDF5) or `.biomq` (parquet) table as a set of COO triples. */
+  private def biom(p: String): Set[(String, String, Double)] =
+    BiomOps.readBiom(spark, p).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+
+  test("BIOM: single .biom, .biomq and sample-sharded files hold the canonical table") {
+    val dir = tmp()
+    BiomOps.copyBiom(df(biomSchema, biomRows), s"$dir/t.biom")
+    assert(biom(s"$dir/t.biom") == biomCanonical)
+    BiomOps.copyBiom(df(biomSchema, biomRows), s"$dir/t.biomq")
+    assert(biom(s"$dir/t.biomq") == biomCanonical)
+    Writers.copyBiomSharded(df(biomSchema, biomRows), s"$dir/one-{SHARD}.biom", numShards = 1)
+    assert(listed(dir).filter(_.startsWith("one-")) == Seq("one-00000.biom"))
+    assert(biom(s"$dir/one-00000.biom") == biomCanonical)
+    val (a, b) = biomRows.splitAt(3)
+    Writers.copyBiomSharded(df(biomSchema, a, Seq.empty, b), s"$dir/three-{SHARD}.biom",
+      numShards = 3)
+    val nonEmpty = df(biomSchema, biomRows).filter(col("sample_id") =!= "s3")
+      .repartition(3, col("sample_id")).select(spark_partition_id()).distinct()
+      .collect().map(r => f"three-${r.getInt(0)}%05d.biom").sorted.toSeq
+    val shards = listed(dir).filter(_.startsWith("three-"))
+    assert(shards == nonEmpty)
+    val perShard = shards.map(f => biom(s"$dir/$f"))
+    assert(perShard.flatten.toSet == biomCanonical && perShard.map(_.size).sum == 3)
+    for (Seq(x, y) <- perShard.combinations(2)) // no sample split across files
+      assert((x.map(_._1) & y.map(_._1)).isEmpty)
+  }
+
+  test("BIOM NULLs are rejected in both modes") {
+    for (bad <- Seq(Row(null, "f1", 1.0), Row("s1", null, 1.0), Row("s1", "f1", null))) {
+      val rows = df(biomSchema, biomRows :+ bad)
+      val dir = tmp()
+      for (write <- Seq[() => Unit](
+          () => BiomOps.copyBiom(rows, s"$dir/t.biom"),
+          () => BiomOps.copyBiom(rows, s"$dir/t.biomq"),
+          () => Writers.copyBiomSharded(rows, s"$dir/t-{SHARD}.biom", numShards = 2))) {
+        val e = intercept[IllegalArgumentException](write())
+        assert(e.getMessage.contains("forbids NULLs"), e.getMessage)
+      }
+      assert(listed(dir).isEmpty)
+    }
+  }
+
+  test("empty DataFrame: empty, header-only or EOF-only file; no shard files") {
+    val dir = tmp()
+    val fq = df(schemaOf(0, 1, 2, 3), Seq.empty)
+    Writers.copyFastq(fq, s"$dir/e.fq")
+    Writers.copyFastq(fq, s"$dir/e.fq.gz")
+    Writers.copyFasta(df(schemaOf(0, 2), Seq.empty), s"$dir/e.fa")
+    val sam = df(samSchema, Seq.empty)
+    Writers.copySam(sam, s"$dir/e.sam", referenceLengths = refLens)
+    Writers.copySam(sam, s"$dir/n.sam", includeHeader = false)
+    Writers.copyBam(sam, s"$dir/e.bam", refLens)
+    Writers.copyWarc(df(warcSchema, Seq.empty), s"$dir/e.warc.gz")
+    BiomOps.copyBiom(df(biomSchema, Seq.empty), s"$dir/e.biom")
+    for (f <- Seq("e.fq", "e.fa", "n.sam", "e.warc.gz")) assert(bytes(s"$dir/$f").isEmpty, f)
+    assert(isGzip(s"$dir/e.fq.gz") && gunzip(bytes(s"$dir/e.fq.gz")).isEmpty)
+    assert(text(s"$dir/e.sam") == samHeader.take(2))
+    assert(decodeBam(s"$dir/e.bam") == (Seq("chrA" -> 5000), Nil))
+    assert(read("alignments", s"$dir/e.bam").count() == 0)
+    assert(read("biom", s"$dir/e.biom").count() == 0)
+
+    val shards = tmp()
+    Writers.copyFastqSharded(fq, s"$shards/{SHARD}.fq")
+    Writers.copyFastaSharded(df(schemaOf(0, 2), Seq.empty), s"$shards/{SHARD}.fa")
+    Writers.copySamSharded(sam, s"$shards/{SHARD}.sam", referenceLengths = refLens)
+    Writers.copyBamSharded(sam, s"$shards/{SHARD}.bam", refLens)
+    Writers.copyWarcSharded(df(warcSchema, Seq.empty), s"$shards/{SHARD}.warc")
+    Writers.copyBiomSharded(df(biomSchema, Seq.empty), s"$shards/{SHARD}.biom", 2)
+    assert(listed(shards).isEmpty)
+  }
+
+  test("COMPRESSION gzip/gz/none and the .gz extension, in both modes") {
+    val fq = df(schemaOf(0, 1, 2, 3), columns(0, 1, 2, 3)(fqRows))
+    val fa = df(schemaOf(0, 2), columns(0, 2)(fqRows))
+    val sam = df(samSchema, samRows)
+    val cases = Seq(("plain", "", None, false), ("ext", ".gz", None, true),
+      ("gzip", "", Some("gzip"), true), ("gz", "", Some("gz"), true),
+      ("upper", "", Some("GZIP"), true), ("none", ".gz", Some("none"), false),
+      ("unc", ".gz", Some("uncompressed"), false))
+    for ((name, suffix, c, gz) <- cases) {
+      val (one, shard) = (tmp(), tmp())
+      def file(ext: String) = s"$name.$ext$suffix"
+      Writers.copyFastq(fq, s"$one/${file("fq")}", compression = c)
+      Writers.copyFastqSharded(fq, s"$shard/{SHARD}-${file("fq")}", compression = c)
+      Writers.copyFasta(fa, s"$one/${file("fa")}", compression = c)
+      Writers.copyFastaSharded(fa, s"$shard/{SHARD}-${file("fa")}", compression = c)
+      Writers.copySam(sam, s"$one/${file("sam")}", compression = c)
+      Writers.copySamSharded(sam, s"$shard/{SHARD}-${file("sam")}", compression = c)
+      for (ext <- Seq("fq", "fa", "sam")) {
+        val (p, s) = (s"$one/${file(ext)}", s"$shard/00000-${file(ext)}")
+        assert(isGzip(p) == gz && isGzip(s) == gz, s"${file(ext)} $c")
+        assert(bytes(p) == bytes(s), s"${file(ext)} $c")
+      }
+      assert(read("fastx", s"$one/${file("fq")}").count() == fqRows.length)
+      assert(alignments(s"$one/${file("sam")}") == samRows.map(_.toSeq))
+    }
+  }
+
+  test("COMPRESSION_LEVEL -2 and 10 are rejected in both modes") {
+    val sam = df(samSchema, samRows)
+    val dir = tmp()
+    for (bad <- Seq(-2, 10); write <- Seq[() => Unit](
+        () => Writers.copyBam(sam, s"$dir/x.bam", compressionLevel = bad),
+        () => Writers.copyBamSharded(sam, s"$dir/x-{SHARD}.bam", compressionLevel = bad))) {
+      val e = intercept[IllegalArgumentException](write())
+      assert(e.getMessage.contains("COMPRESSION_LEVEL must be between 0 and 9"))
+    }
+    assert(listed(dir).isEmpty)
+  }
+
+  /** Runs `write`, which must throw IllegalArgumentException without
+    * starting a Spark job.
+    */
+  private def rejectedBeforeAnyJob(what: String)(write: => Unit): IllegalArgumentException = {
+    val sc = spark.sparkContext
+    val group = s"sink-bind-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, what)
+    try {
+      val e = intercept[IllegalArgumentException](write)
+      assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty, s"$what started a job")
+      e
+    } finally sc.clearJobGroup()
+  }
+
+  test("an unknown COMPRESSION is rejected on the driver before any job, in both modes") {
+    val fq = columns(0, 1, 2, 3)(fqRows)
+    for (rows <- Seq(Seq.empty[Row], fq)) {
+      val dir = tmp()
+      val d = df(schemaOf(0, 1, 2, 3), rows)
+      val sam = df(samSchema, if (rows.isEmpty) Nil else samRows)
+      for ((what, write) <- Seq[(String, () => Unit)](
+          "fastq" -> (() => Writers.copyFastq(d, s"$dir/x.fq", compression = Some("zstd"))),
+          "fastq sharded" -> (() =>
+            Writers.copyFastqSharded(d, s"$dir/x-{SHARD}.fq", compression = Some("zstd"))),
+          "fasta sharded" -> (() =>
+            Writers.copyFastaSharded(d, s"$dir/x-{SHARD}.fa", compression = Some("zstd"))),
+          "sam" -> (() => Writers.copySam(sam, s"$dir/x.sam", compression = Some("zstd"))),
+          "sam sharded" -> (() =>
+            Writers.copySamSharded(sam, s"$dir/x-{SHARD}.sam", compression = Some("zstd"))))) {
+        val e = rejectedBeforeAnyJob(what)(write())
+        assert(e.getMessage.contains("Unknown compression type: zstd"), what)
+      }
+      assert(listed(dir).isEmpty, listed(dir))
+    }
+    val dir = tmp()
+    val coo = df(biomSchema, biomRows)
+    for ((what, write) <- Seq[(String, () => Unit)](
+        "biom" -> (() => BiomOps.copyBiom(coo, s"$dir/t.biom", compression = "zstd")),
+        "biomq" -> (() => BiomOps.copyBiom(coo, s"$dir/t.biomq", compression = "zstd")),
+        "biom sharded" -> (() =>
+          Writers.copyBiomSharded(coo, s"$dir/t-{SHARD}.biom", 2, compression = "zstd")))) {
+      val e = rejectedBeforeAnyJob(what)(write())
+      assert(e.getMessage.contains("compression must be 'gzip', 'gz', or 'none'"), what)
+    }
+    assert(listed(dir).isEmpty, listed(dir))
+  }
+}
