@@ -1,12 +1,6 @@
 package graft.functions
 
-import graft.kernel.IntervalCompressor
-import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
-
-/** Half-open genomic interval. */
-final case class Interval(start: Long, stop: Long)
+import org.apache.spark.sql.Column
 
 /** compress_intervals(start, stop) → LIST<STRUCT(start, stop)> — the
   * reference's only custom aggregate.
@@ -22,42 +16,14 @@ final case class Interval(start: Long, stop: Long)
   */
 object CompressIntervals {
 
-  private[functions] val agg =
-    new Aggregator[(Option[Long], Option[Long]), IntervalCompressor, Seq[Interval]] {
-      def zero: IntervalCompressor = new IntervalCompressor
-      def reduce(b: IntervalCompressor, in: (Option[Long], Option[Long])): IntervalCompressor = {
-        in match {
-          case (Some(s), Some(e)) => b.add(s, e)
-          case _                  => // NULL start or stop: skipped
-        }
-        b
-      }
-      def merge(a: IntervalCompressor, b: IntervalCompressor): IntervalCompressor = {
-        a.addAll(b); a
-      }
-      def finish(b: IntervalCompressor): Seq[Interval] =
-        if (b.isEmpty) null
-        else b.result().map { case (s, e) => Interval(s, e) }.toSeq
-      def bufferEncoder: Encoder[IntervalCompressor] = Encoders.kryo[IntervalCompressor]
-      def outputEncoder: Encoder[Seq[Interval]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Interval]]()
-    }
-
-  private val compressUdaf = udaf(agg)
-
   /** Catalyst-native aggregate (TypedImperativeAggregate): primitive
     * per-row updates, live object buffer, compact compressed-state
-    * serialization at shuffle boundaries. The Aggregator `agg` above is
-    * kept as the property-test twin.
+    * serialization at shuffle boundaries. `CompressIntervalsAggSpec`
+    * keeps an `Aggregator` over the same kernel as its oracle.
     */
   def compressIntervals(start: Column, stop: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge._
     column(CompressIntervalsAgg(expression(start), expression(stop))
       .toAggregateExpression())
   }
-
-
-  /** The previous udaf form, for A/B tests. */
-  def compressIntervalsUdaf(start: Column, stop: Column): Column =
-    compressUdaf(start, stop)
 }

@@ -533,35 +533,6 @@ object Dedup {
           < trainPerMille, "train").otherwise("eval"))
   }
 
-  /** Production incremental dedup of a NEW shard against an INDEXED
-    * corpus on the fast FNV kernel hash family — the throughput twin
-    * of [[minhashNewVsIndexExact]] (same pipeline shape; the exact
-    * variant's md5 column arithmetic is what the oracle re-derives).
-    * Both sides flow tagged through ONE (band, band_hash)-keyed
-    * shuffle and pairs are verified bucket-locally over the compact
-    * 32-bit shingle-hash arrays — the x03 lesson (a pair-join verify
-    * moved ~110 GB at sf10): shuffle is O((shard + index) × bands),
-    * and only CROSS-side pairs are verified, so a shard arriving into
-    * a huge already-deduped index never re-verifies index-internal
-    * pairs. In production the index side's (id, band keys, hash set)
-    * is computed once and persisted; re-deriving it here keeps the
-    * two sides' kernel provably identical.
-    * Output, per new doc with ≥1 verified match:
-    * (new_id, n_matches, best_jaccard, best_match_id).
-    */
-  def minhashNewVsIndex(
-      newDocs: DataFrame,
-      indexDocs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 5,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.7): DataFrame =
-    minhashNewVsPrebuiltIndex(newDocs,
-      minhashIndex(indexDocs, idCol, textCol, shingleN, numHashes, bands),
-      idCol, textCol, shingleN, numHashes, bands, threshold)
-
   /** The persisted-index form — ONE compact row per document:
     * (id, shs — the sorted shingle-hash set the verify step needs,
     * band_hashes — the `bands` precomputed band keys). This is what
@@ -603,9 +574,22 @@ object Dedup {
       .select(col("pos").as("band"), col("col").as("band_hash"),
         col("id"), col("shs"))
 
-  /** Shard-vs-prebuilt-index matching — see [[minhashNewVsIndex]] for
-    * the contract; `index` is [[minhashIndex]] output (possibly read
-    * back from parquet).
+  /** Production incremental dedup of a NEW shard against an INDEXED
+    * corpus on the fast FNV kernel hash family — the throughput twin
+    * of [[minhashNewVsIndexExact]] (same pipeline shape; the exact
+    * variant's md5 column arithmetic is what the oracle re-derives).
+    * `index` is [[minhashIndex]] output, computed once per corpus
+    * generation and persisted (possibly read back from parquet); the
+    * shard side runs through the same [[minhashIndex]], so both sides'
+    * kernel is identical. Both sides flow tagged through ONE
+    * (band, band_hash)-keyed shuffle and pairs are verified
+    * bucket-locally over the compact 32-bit shingle-hash arrays — the
+    * x03 lesson (a pair-join verify moved ~110 GB at sf10): shuffle is
+    * O((shard + index) × bands), and only CROSS-side pairs are
+    * verified, so a shard arriving into a huge already-deduped index
+    * never re-verifies index-internal pairs.
+    * Output, per new doc with ≥1 verified match:
+    * (new_id, n_matches, best_jaccard, best_match_id).
     */
   def minhashNewVsPrebuiltIndex(
       newDocs: DataFrame,

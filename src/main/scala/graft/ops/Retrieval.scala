@@ -28,9 +28,11 @@ import org.apache.spark.sql.functions._
   * A one-shot [[bm25TopK]] pays three corpus passes (postings, doc
   * frequency, corpus stats). A standing deployment tokenizes ONCE:
   * [[bm25Index]] materializes the postings table (the inverted index
-  * in relational form — persist it partitioned/bucketed by term), and
-  * [[bm25TopKFromIndex]] serves queries from it without touching the
-  * raw text again — the same persist-once-serve-many contract as
+  * in relational form), [[ensureBm25BucketedIndex]] persists it
+  * bucketed by doc_id (optionally partitioned by term bucket) with its
+  * stats beside it, and [[bm25TopKFromBucketedIndex]] serves queries
+  * from it through [[bm25TopKFromIndex]] without touching the raw text
+  * again — the same persist-once-serve-many contract as
   * `Dedup.minhashIndex`.
   */
 object Retrieval {
@@ -52,28 +54,6 @@ object Retrieval {
         explode(col("toks")).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-
-  /** [[bm25Index]] clustered by doc_id — the at-rest layout for a
-    * FLAT postings artifact (r14, guide §6 "partitioning and sort
-    * order on write determine how well readers can skip/combine").
-    * Serving's heaviest exchange is the per-(query, doc) score
-    * aggregation: with the raw groupBy output layout a document's
-    * postings scatter across input splits, so the map-side partial
-    * aggregate cannot collapse a doc's per-term contributions and the
-    * exchange carries ~one row per MATCHED POSTING × queries sharing
-    * the term (744 MB on y09's 500k-doc common-vocab batch, measured
-    * per-stage). Clustered by doc_id, a doc's postings are contiguous
-    * in one file, the partial aggregate emits one row per (query, doc)
-    * and the same batch shuffles ~10× less. One build-time shuffle,
-    * paid once where a standing index wants it; scores are identical
-    * regardless of layout (the per-doc sum is an exact long sum of
-    * 1e-12-quantized contributions — order-independent by design).
-    */
-  def bm25IndexDocClustered(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    bm25Index(docs, idCol, textCol)
-      .repartition(col("doc_id"))
-      .sortWithinPartitions(col("doc_id"), col("term"))
 
   /** The 1-row (n_docs, avgdl) corpus-stats table a standing BM25
     * deployment persists ALONGSIDE the postings: deriving it inline
@@ -166,52 +146,6 @@ object Retrieval {
         col("col.score").as("score"), (col("pos") + 1).cast("long").as("rank"))
   }
 
-  /** Persist a [[bm25Index]] postings table TERM-BUCKET-PARTITIONED —
-    * the at-rest layout a standing 100 TB retrieval deployment wants
-    * (the BM25 twin of [[Similarity.ivfTopKFromPartitionedIndex]]'s
-    * `partitionBy(list_id)` contract): postings land under
-    * `term_bucket=<pmod(hash(term), nBuckets)>/` directories, so a
-    * serving batch whose query vocabulary touches v buckets reads
-    * ONLY those v directories — Catalyst prunes the other
-    * `nBuckets − v` at file-listing time and they never produce a
-    * task. A flat postings index makes every batch scan the whole
-    * index no matter how few terms it asks about (the join with the
-    * broadcast vocabulary filters rows AFTER the read); partition
-    * pruning is the input-bound saving no runtime exchange
-    * optimization can reach.
-    *
-    * The mandatory serving sidecars ride inside the same root:
-    * `_stats/` holds the 1-row [[bm25IndexStats]] table extended with
-    * `n_buckets` (underscore-prefixed, so Spark's file listing hides
-    * it from the postings read), making the artifact self-describing —
-    * the reader recovers the writer's bucket modulus from the data it
-    * must load anyway instead of trusting a caller-supplied constant
-    * to match the layout.
-    */
-  def bm25WritePartitionedIndex(
-      postings: DataFrame, path: String, nBuckets: Int = 256): Unit = {
-    require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    postings
-      .withColumn("term_bucket", pmod(hash(col("term")), lit(nBuckets)))
-      // Cluster rows to their bucket BEFORE the partitioned write:
-      // without this every upstream task writes one file into every
-      // bucket directory (tasks × nBuckets files — measured 8,192 for
-      // a 32-task 256-bucket build, and the per-file open/footer tax
-      // ate most of the pruned read's win). After the repartition each
-      // bucket lives in exactly one task → one file per bucket; the
-      // one extra shuffle is build-time (ingest-side, paid once),
-      // which is exactly where a standing index wants its cost. Rows
-      // sort by (term, doc_id) within the file for determinism and
-      // run-length-friendly term compression.
-      .repartition(col("term_bucket"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.mode("overwrite").partitionBy("term_bucket").parquet(path)
-    bm25IndexStats(postings)
-      .withColumn("n_buckets", lit(nBuckets))
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/_stats")
-  }
-
   /** Persist a [[bm25Index]] as a DOC_ID-BUCKETED catalog table — the
     * r15 at-rest layout that removes the serving plan's LAST heavy
     * exchange (guide §2.4 "bucketed tables persist a partitioning
@@ -221,19 +155,24 @@ object Retrieval {
     * doc_id ⇒ equal partition ⇒ equal (query, doc) pairs colocated),
     * so the aggregate runs inside the scan stage and the exchange that
     * carried one row per (query, doc) — 271 MB on y09's 500k-doc
-    * common-vocab batch after the r14 doc-clustered fix — disappears;
+    * common-vocab batch even with doc-clustered postings — disappears;
     * the only remaining exchanges are the query-vocab-sized docFreq
     * aggregate and the O(k · queries · partitions) top-k rows. Scores
-    * are identical regardless of layout (exact long sum of quantized
-    * contributions, the r14 argument; RetrievalSpec pins row identity).
+    * are identical regardless of layout (the per-doc sum is an exact
+    * long sum of 1e-12-quantized contributions, order-independent by
+    * design; RetrievalSpec pins row identity).
     *
     * `termBuckets > 0` additionally partitions the table by
     * `term_bucket = pmod(hash(term), termBuckets)` — the y10
-    * listing-time pruning layout composed WITH the bucket partitioning
-    * (each of the `docBuckets` scan tasks reads its bucket's file from
-    * each probed term_bucket directory), so the pruned read no longer
-    * needs [[bm25TopKFromPartitionedIndex]]'s doc-keyed re-spread
-    * exchange (216 MB at the y10 bench point) either.
+    * listing-time pruning layout: a serving batch whose query
+    * vocabulary touches v term buckets reads ONLY those v directories,
+    * and Catalyst prunes the other `termBuckets − v` before any task
+    * runs (a flat index makes every batch scan the whole index, since
+    * the vocabulary join filters rows AFTER the read). Composed WITH
+    * the bucket partitioning, each of the `docBuckets` scan tasks reads
+    * its bucket's file from each probed term_bucket directory, so the
+    * pruned read keeps HashPartitioning(doc_id) and needs no re-spread
+    * exchange.
     *
     * The 1-row stats sidecar lands in `<table>_stats` (n_docs, avgdl,
     * n_buckets = termBuckets) — written LAST, so the ensure gate below
@@ -309,14 +248,22 @@ object Retrieval {
     * `<table>_stats` sidecar (required — deriving N/avgdl from a
     * pruned read would be wrong, and even unpruned it is an O(index)
     * pass per batch), prunes `term_bucket` partitions at listing time
-    * when the table was written term-partitioned (the
-    * [[bm25TopKFromPartitionedIndex]] resolution, verbatim), and hands
-    * the bucket-partitioned scan straight to [[bm25TopKFromIndex]] —
-    * no re-spread exchange: the scan's HashPartitioning(doc_id)
-    * carries the score aggregate (scaladoc above). Output is
-    * row-identical to flat-index serving (the bucket filter is a
-    * superset of the exact vocabulary join inside; scores are
-    * layout-independent exact sums).
+    * when the table was written term-partitioned, and hands the
+    * bucket-partitioned scan straight to [[bm25TopKFromIndex]] — no
+    * re-spread exchange: the scan's HashPartitioning(doc_id) carries
+    * the score aggregate (scaladoc above). Output is row-identical to
+    * flat-index serving (the bucket filter is a superset of the exact
+    * vocabulary join inside; scores are layout-independent exact sums).
+    *
+    * The query vocabulary's bucket set is resolved with the SAME
+    * `pmod(hash(term), n_buckets)` expression the writer used (one tiny
+    * Spark job — no driver-side reimplementation of the hash to drift)
+    * and folded into a `term_bucket IN (…)` literal. The collected set
+    * is bucket IDS, bounded by `n_buckets` whatever the query set's
+    * size, so no batch guard is needed: a corpus-sized query set
+    * resolves to all buckets and degrades to the full-index read. A
+    * query with no indexed terms resolves to the empty set and returns
+    * no rows.
     */
   def bm25TopKFromBucketedIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -342,67 +289,6 @@ object Retrieval {
     bm25TopKFromIndex(postings, queries, k, k1, b,
       precomputedStats = Some(stats),
       precomputedDf = Some(spark.table(table + "_df")))
-  }
-
-  /** BM25 top-k served from a [[bm25WritePartitionedIndex]] root: the
-    * query vocabulary's bucket set is resolved with the SAME
-    * `pmod(hash(term), n_buckets)` expression the writer used (one
-    * tiny Spark job — no driver-side reimplementation of the hash to
-    * drift) and folded into a `term_bucket IN (…)` literal, so the
-    * postings scan partition-prunes to the probed buckets at listing
-    * time. Scoring then reuses [[bm25TopKFromIndex]] verbatim over the
-    * pruned postings with the persisted `_stats` sidecar as the corpus
-    * stats (required here: deriving N/avgdl from a PRUNED read would
-    * be wrong, which is why the writer persists them alongside) —
-    * output is row-identical to flat-index serving, since the bucket
-    * filter is a superset of the exact vocabulary join inside.
-    *
-    * Unlike the IVF probe resolution (which collects per-QUERY probe
-    * lists and so must gate the batch size), the collected set here is
-    * bucket IDS — bounded by `n_buckets` whatever the query set's
-    * size, so no batch guard is needed: a corpus-sized query set
-    * simply resolves to all buckets and degrades gracefully to the
-    * full-index read that [[bm25TopKFromIndex]] would do anyway (at
-    * that vocabulary breadth pruning buys nothing by construction).
-    * The bucket distinct() itself is a distributed aggregate over the
-    * query terms, never a driver materialization of the vocabulary.
-    */
-  def bm25TopKFromPartitionedIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String,
-      queries: DataFrame,
-      k: Int,
-      k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    val stats = spark.read.parquet(s"$indexPath/_stats")
-    val nBuckets = stats.select(col("n_buckets").cast("int")).head().getInt(0)
-    val vocabBuckets = queries
-      .select(explode(toks(col("query_text"))).as("term"))
-      .select(pmod(hash(col("term")), lit(nBuckets)).as("term_bucket"))
-      .distinct()
-      .collect().map(_.getInt(0))
-    val pruned = spark.read.parquet(indexPath)
-      .filter(col("term_bucket").isin(vocabBuckets.toIndexedSeq: _*))
-      .drop("term_bucket")
-      // Re-spread the pruned postings across the session's cores: a
-      // well-pruned read is a handful of one-file-per-bucket
-      // directories that pack into one or two input splits, and
-      // common-vocabulary batches then run the tf/df map side nearly
-      // single-task. The exchange moves only the PRUNED postings
-      // (vocabulary-sized by construction — the whole point of the
-      // layout), so it is bounded by the data the query actually
-      // touches, never by the index. KEYED by doc_id (r14): a
-      // round-robin spread scatters each document's postings across
-      // tasks, so the scoring stage's per-(query, doc) partial
-      // aggregate cannot collapse them and the score exchange carries
-      // one row per matched posting × queries sharing the term; the
-      // doc-keyed spread costs the same bytes here and collapses the
-      // downstream exchange to one row per (query, doc) — the
-      // bm25IndexDocClustered rationale applied to the pruned-serving
-      // path (y10 common-vocab batch: 941 → 216 MB total, measured).
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-    bm25TopKFromIndex(pruned, queries, k, k1, b,
-      precomputedStats = Some(stats.select(col("n_docs"), col("avgdl"))))
   }
 
   /** One-shot BM25 top-k: tokenize, index, score in a single plan. */

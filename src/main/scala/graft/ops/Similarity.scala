@@ -84,10 +84,6 @@ object Similarity {
     topKPerQuery(joined, "cos", k)
   }
 
-  /** Deterministic random-hyperplane LSH bucket id (nBits sign bits).
-    * Hyperplane component h(b, d) = mix of (b, d) — no stored model, so
-    * executors recompute it identically with zero coordination.
-    */
   /** splitmix64-derived pseudo-random hyperplane component in [-1, 1),
     * stable across JVMs. Public so oracle generation can inline the
     * identical constants into external SQL.
@@ -101,24 +97,17 @@ object Similarity {
     (x.toDouble / Long.MaxValue.toDouble)
   }
 
-  def lshBucket(embedding: Column, nBits: Int, dim: Int, seed: Long = 0L): Column = {
-    (0 until nBits).map { b =>
-      val proj = (0 until dim).map { d =>
-        element_at(embedding, d + 1).cast("double") * lit(lshPlaneComponent(b, d, seed))
-      }.reduce(_ + _)
-      when(proj >= 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
-  /** Kernel twin of [[lshBucket]]: the nBits×dim plane matrix lives in
-    * the closure and projection is a tight double loop, replacing an
-    * O(nBits·dim) Catalyst expression tree (640 nodes at 10×64) whose
-    * generated code blew past JIT-friendly sizes and ran interpreted —
-    * the l10 sweep straggler. Accumulation is the same strict
-    * left-to-right float→double order and the same >= 0 bit rule, so
-    * buckets are bit-identical to the expression form (spec-pinned);
-    * null/short embeddings yield bucket 0 exactly as the expression's
-    * null-propagating sum does.
+  /** Deterministic random-hyperplane LSH bucket id (nBits sign bits):
+    * bit b is set when the projection onto hyperplane b is >= 0, with
+    * hyperplane component [[lshPlaneComponent]](b, d, seed) — no stored
+    * model, so executors recompute it identically with zero
+    * coordination. The nBits×dim plane matrix lives in the closure and
+    * projection is a tight double loop; an O(nBits·dim) Catalyst
+    * expression tree (640 nodes at 10×64) blew past JIT-friendly
+    * generated-code sizes and ran interpreted — the l10 sweep
+    * straggler. Accumulation is strict left-to-right in double, so
+    * buckets are bit-identical to that expression form (LlmOpsSpec
+    * keeps it as the oracle); null/short embeddings yield bucket 0.
     */
   def lshBucketKernel(nBits: Int, dim: Int, seed: Long)
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
@@ -197,9 +186,11 @@ object Similarity {
       nProbe: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((emb: Seq[Float]) => nearestLists(bc.value, emb, nProbe))
 
-  /** The probe/assignment selection kernel, callable driver-side too
-    * (ivfTopKFromPartitionedIndex resolves a query batch's probe union
-    * on the driver to fold it into a partition-pruning literal).
+  /** The probe/assignment selection kernel: assignment (nProbe = 1)
+    * in [[ivfCentroids]] and [[ivfAssignWithModel]], probing in
+    * serving, and driver-side in [[ivfTopKFromPartitionedIndex]], which
+    * resolves a query batch's probe union to fold it into a
+    * partition-pruning literal.
     */
   private[graft] def nearestLists(
       cents: Array[Array[Double]], emb: Seq[Float],
@@ -310,9 +301,10 @@ object Similarity {
     * them, and takes per-query top-k. nProbe = nLists degrades to
     * exact brute force (used as the oracle-checkable configuration);
     * nProbe < nLists is the 100 TB path — per query only
-    * nProbe/nLists of the corpus is touched, and the corpus can be
-    * pre-bucketed by list_id on write so the probe join is
-    * shuffle-free.
+    * nProbe/nLists of the corpus is touched. A standing deployment
+    * builds the index once with [[ivfCentroids]] +
+    * [[ivfAssignWithModel]] and serves it with
+    * [[ivfTopKFromPartitionedIndex]].
     */
   def ivfTopK(
       corpus: DataFrame,
@@ -330,25 +322,20 @@ object Similarity {
     serveAssigned(assignWithBc(corpus, bc), bc, queries, k, nProbe)
   }
 
-  /** One-time IVF index build: train the coarse quantizer and assign
-    * every corpus vector to its nearest list. The returned DataFrame
+  /** Index build: assign every corpus vector to its nearest list under
+    * a centroid model from [[ivfCentroids]]. The returned DataFrame
     * (vec_id, embedding, nrm, list_id) is the artifact a standing
-    * deployment PERSISTS — bucketed/partitioned by `list_id` at rest —
-    * together with the (tiny) centroid model; serving then never pays
-    * the corpus-wide assignment pass again, and a probe touching
-    * nProbe/nLists of the lists reads only those buckets' files. Same
-    * persist-once contract as `Dedup.minhashIndex` / `Retrieval
-    * .bm25Index`.
+    * deployment PERSISTS `partitionBy("list_id")`, together with the
+    * (tiny) centroid model; [[ivfTopKFromPartitionedIndex]] then serves
+    * from it without paying the corpus-wide assignment pass again, and
+    * a probe touching nProbe/nLists of the lists reads only those
+    * lists' files. Same persist-once contract as `Dedup.minhashIndex` /
+    * `Retrieval.bm25Index`.
     */
-  def ivfAssign(
-      corpus: DataFrame,
-      dim: Int,
-      nLists: Int = 16,
-      iters: Int = 3): (DataFrame, Array[Array[Double]]) = {
-    val cents = ivfCentroids(corpus, dim, nLists, iters)
-    val bc = corpus.sparkSession.sparkContext.broadcast(cents)
-    (assignWithBc(corpus, bc), cents)
-  }
+  def ivfAssignWithModel(
+      corpus: DataFrame, cents: Array[Array[Double]]): DataFrame =
+    assignWithBc(corpus,
+      corpus.sparkSession.sparkContext.broadcast(cents))
 
   private def assignWithBc(
       corpus: DataFrame,
@@ -359,49 +346,8 @@ object Similarity {
       element_at(assign(col("embedding")), 1).as("list_id"))
   }
 
-  /** Serve IVF top-k from a prebuilt assignment (schema of
-    * [[ivfAssign]]): queries probe their nProbe nearest lists, exact
-    * cosine within them, O(k)-state per-query top-k. The corpus side
-    * is never shuffled — the probe set is broadcast and the only
-    * exchange is the k-rows-per-partition top-k aggregate.
-    */
-  def ivfTopKFromAssigned(
-      indexed: DataFrame,
-      cents: Array[Array[Double]],
-      queries: DataFrame,
-      k: Int,
-      nProbe: Int): DataFrame =
-    serveAssigned(indexed,
-      indexed.sparkSession.sparkContext.broadcast(cents), queries, k, nProbe)
-
-  /** Assign a corpus against an EXISTING centroid model (the serving
-    * half of the [[ivfAssign]] split, for when the model artifact is
-    * loaded rather than trained in-session).
-    */
-  def ivfAssignWithModel(
-      corpus: DataFrame, cents: Array[Array[Double]]): DataFrame =
-    assignWithBc(corpus,
-      corpus.sparkSession.sparkContext.broadcast(cents))
-
-  /** Persist / reload the (tiny) IVF centroid model as parquet —
-    * the artifact half that rides with a partitioned assignment.
-    */
-  def saveIvfModel(spark: org.apache.spark.sql.SparkSession,
-      cents: Array[Array[Double]], path: String): Unit = {
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("list_id", "c").repartition(1)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  def loadIvfModel(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[Array[Double]] =
-    spark.read.parquet(path)
-      .select(col("list_id").cast("int"), col("c").cast("array<double>"))
-      .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
-
   /** IVF serving from a LIST-PARTITIONED at-rest index directory —
-    * the 100 TB artifact layout the [[ivfAssign]] scaladoc prescribes,
+    * the 100 TB artifact layout [[ivfAssignWithModel]] prescribes,
     * made executable: the assignment parquet is written
     * `partitionBy("list_id")`, and a query batch's probe set is
     * resolved DRIVER-SIDE against the centroid model (model-sized —
@@ -417,9 +363,9 @@ object Similarity {
     * batch-sized — enforced loudly (the mmr pool-guard pattern) via
     * `spark.graft.ivf.batch.max` (default 10,000 queries).
     *
-    * Output is row-identical to [[ivfTopKFromAssigned]] over the same
-    * assignment: the per-query probe join below applies each query's
-    * OWN probe list; the literal filter is a superset prune.
+    * Output is row-identical to [[ivfTopK]] with the same model: the
+    * per-query probe join below applies each query's OWN probe list;
+    * the literal filter is a superset prune.
     */
   def ivfTopKFromPartitionedIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -436,7 +382,7 @@ object Similarity {
     require(qRows.length <= maxBatch,
       s"ivfTopKFromPartitionedIndex: query batch exceeds $maxBatch rows — " +
         "partition-pruned serving resolves probes driver-side; for " +
-        "corpus-sized query sets use ivfTopKFromAssigned, or raise " +
+        "corpus-sized query sets use ivfTopK, or raise " +
         "spark.graft.ivf.batch.max")
     val probedLists = qRows.iterator
       .flatMap(r => Option(nearestLists(cents, r.getSeq[Float](1), nProbe))

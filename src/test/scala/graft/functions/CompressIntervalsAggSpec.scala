@@ -1,8 +1,47 @@
 package graft.functions
 
 import graft.SparkFixture
+import graft.kernel.IntervalCompressor
+import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Half-open genomic interval — the Aggregator twin's output element. */
+final case class Interval(start: Long, stop: Long)
+
+/** The Aggregator twin of [[CompressIntervals.compressIntervals]]: the
+  * same kernel behind Spark's typed-aggregate API, with Kryo buffer
+  * serialization. It is the oracle the native aggregate is checked
+  * against.
+  */
+object CompressIntervalsTwin {
+  private val agg =
+    new Aggregator[(Option[Long], Option[Long]), IntervalCompressor, Seq[Interval]] {
+      def zero: IntervalCompressor = new IntervalCompressor
+      def reduce(b: IntervalCompressor, in: (Option[Long], Option[Long])): IntervalCompressor = {
+        in match {
+          case (Some(s), Some(e)) => b.add(s, e)
+          case _                  => // NULL start or stop: skipped
+        }
+        b
+      }
+      def merge(a: IntervalCompressor, b: IntervalCompressor): IntervalCompressor = {
+        a.addAll(b); a
+      }
+      def finish(b: IntervalCompressor): Seq[Interval] =
+        if (b.isEmpty) null
+        else b.result().map { case (s, e) => Interval(s, e) }.toSeq
+      def bufferEncoder: Encoder[IntervalCompressor] = Encoders.kryo[IntervalCompressor]
+      def outputEncoder: Encoder[Seq[Interval]] =
+        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Interval]]()
+    }
+
+  private val compressUdaf = udaf(agg)
+
+  def compressIntervals(start: Column, stop: Column): Column =
+    compressUdaf(start, stop)
+}
 
 /** The native TypedImperativeAggregate must agree with the Aggregator
   * twin (and the kernel) through real distributed plans, including
@@ -31,7 +70,7 @@ class CompressIntervalsAggSpec extends AnyFunSuite {
       .groupBy("grp").agg(to_json(c).as("iv"))
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
     val native = collect(CompressIntervals.compressIntervals(col("s"), col("e")))
-    val viaUdaf = collect(CompressIntervals.compressIntervalsUdaf(col("s"), col("e")))
+    val viaUdaf = collect(CompressIntervalsTwin.compressIntervals(col("s"), col("e")))
     assert(native == viaUdaf)
     assert(native.size == 7 && native.values.forall(_ != null))
   }

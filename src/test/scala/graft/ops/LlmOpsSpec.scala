@@ -92,9 +92,35 @@ class LlmOpsSpec extends AnyFunSuite {
     (bases ++ dups).toDF("vec_id", "embedding")
   }
 
+  /** The O(nBits·dim) Catalyst expression form of the LSH bucket — the
+    * oracle for [[Similarity.lshBucketKernel]]: bit b is set when the
+    * left-to-right double projection onto plane b is >= 0.
+    */
+  private def lshBucket(embedding: org.apache.spark.sql.Column, nBits: Int,
+      dim: Int, seed: Long): org.apache.spark.sql.Column =
+    (0 until nBits).map { b =>
+      val proj = (0 until dim).map { d =>
+        element_at(embedding, d + 1).cast("double") *
+          lit(Similarity.lshPlaneComponent(b, d, seed))
+      }.reduce(_ + _)
+      when(proj >= 0, lit(1L << b)).otherwise(lit(0L))
+    }.reduce(_ + _)
+
+  /** Build an IVF index the way a standing deployment does — train the
+    * model, assign, persist `partitionBy("list_id")` — and return its
+    * directory and centroid model. */
+  private def partitionedIvfIndex(emb: org.apache.spark.sql.DataFrame,
+      nLists: Int, iters: Int): (String, Array[Array[Double]]) = {
+    val cents = Similarity.ivfCentroids(emb, dim = 16, nLists = nLists, iters = iters)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_part").toString
+    Similarity.ivfAssignWithModel(emb, cents)
+      .write.mode("overwrite").partitionBy("list_id").parquet(dir)
+    (dir, cents)
+  }
+
   test("lshBucketKernel buckets are bit-identical to the expression form") {
     val exprBuckets = plantedVectors.select(col("vec_id"),
-      Similarity.lshBucket(col("embedding"), nBits = 8, dim = 16, seed = 3L).as("b"))
+      lshBucket(col("embedding"), nBits = 8, dim = 16, seed = 3L).as("b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val kernBuckets = plantedVectors.select(col("vec_id"),
       Similarity.lshBucketKernel(8, 16, 3L)(
@@ -223,12 +249,10 @@ class LlmOpsSpec extends AnyFunSuite {
   test("ivf index split: serving from a persisted assignment agrees with one-shot; corpus never shuffles") {
     val emb = plantedVectors
     val qs = emb.filter(col("vec_id") < 8)
-    val (indexed, cents) = Similarity.ivfAssign(emb, dim = 16, nLists = 6, iters = 2)
     // round-trip through parquet: what a deployment actually serves from
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
-    indexed.write.mode("overwrite").parquet(dir)
-    val persisted = spark.read.parquet(dir)
-    val served = Similarity.ivfTopKFromAssigned(persisted, cents, qs, k = 5, nProbe = 6)
+    val (dir, cents) = partitionedIvfIndex(emb, nLists = 6, iters = 2)
+    val served = Similarity.ivfTopKFromPartitionedIndex(
+      spark, dir, cents, qs, k = 5, nProbe = 6)
     val oneShot = Similarity.ivfTopK(emb, qs, dim = 16, k = 5, nLists = 6,
       nProbe = 6, iters = 2)
     def canon(df: org.apache.spark.sql.DataFrame) = df
@@ -251,13 +275,11 @@ class LlmOpsSpec extends AnyFunSuite {
   test("ivf partitioned-at-rest serving: partition-prunes to the probe union, output identical") {
     val emb = plantedVectors
     val qs = emb.filter(col("vec_id") < 4)
-    val (indexed, cents) = Similarity.ivfAssign(emb, dim = 16, nLists = 6, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_part").toString
-    indexed.write.mode("overwrite").partitionBy("list_id").parquet(dir)
+    val (dir, cents) = partitionedIvfIndex(emb, nLists = 6, iters = 2)
     val served = Similarity.ivfTopKFromPartitionedIndex(
       spark, dir, cents, qs, k = 5, nProbe = 2)
-    val reference = Similarity.ivfTopKFromAssigned(
-      spark.read.parquet(dir), cents, qs, k = 5, nProbe = 2)
+    val reference = Similarity.ivfTopK(emb, qs, dim = 16, k = 5, nLists = 6,
+      nProbe = 2, iters = 2)
     def canon(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
     assert(canon(served) == canon(reference) && canon(served).nonEmpty)
@@ -274,9 +296,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("ivf partitioned-at-rest serving rejects a corpus-sized query batch loudly") {
     val emb = plantedVectors
-    val (indexed, cents) = Similarity.ivfAssign(emb, dim = 16, nLists = 4, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_guard").toString
-    indexed.write.mode("overwrite").partitionBy("list_id").parquet(dir)
+    val (dir, cents) = partitionedIvfIndex(emb, nLists = 4, iters = 1)
     spark.conf.set("spark.graft.ivf.batch.max", "3")
     try {
       val e = intercept[IllegalArgumentException] {
@@ -388,18 +408,19 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(out.map(_._3).toSet == Set("train", "eval"))
   }
 
-  test("minhashNewVsIndex (fast kernel) agrees with the exact twin on planted dups") {
+  test("minhashNewVsPrebuiltIndex (fast kernel) agrees with the exact twin") {
     import spark.implicits._
     val all = plantedDocs.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val index = all.filter(_._1 < 100L).toDF("doc_id", "text")
     val fresh = all.filter(_._1 >= 100L).toDF("doc_id", "text")
-    val fast = Dedup.minhashNewVsIndex(fresh, index, "doc_id", "text",
-        threshold = 0.6)
+    val fast = Dedup.minhashNewVsPrebuiltIndex(fresh,
+        Dedup.minhashIndex(index, "doc_id", "text"), "doc_id", "text", threshold = 0.6)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(3))).toMap
     for (i <- 0 until 5)
       assert(fast(100L + i) == ((1L, i.toLong)), s"planted dup $i")
     // verified jaccard, not just band collision: thresholds hold
-    val loose = Dedup.minhashNewVsIndex(fresh, index, "doc_id", "text",
+    val loose = Dedup.minhashNewVsPrebuiltIndex(fresh,
+      Dedup.minhashIndex(index, "doc_id", "text"), "doc_id", "text",
       threshold = 0.999).collect()
     assert(loose.isEmpty) // one-word mutations are below 0.999
   }
@@ -415,8 +436,8 @@ class LlmOpsSpec extends AnyFunSuite {
     val content = "identical duplicated content shared across both sides here"
     val index = (0 until 30).map(i => (i.toLong, content)).toDF("doc_id", "text")
     val fresh = (1000 until 1010).map(i => (i.toLong, content)).toDF("doc_id", "text")
-    def run() = Dedup.minhashNewVsIndex(fresh, index, "doc_id", "text",
-        threshold = 0.9)
+    def run() = Dedup.minhashNewVsPrebuiltIndex(fresh,
+        Dedup.minhashIndex(index, "doc_id", "text"), "doc_id", "text", threshold = 0.9)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getDouble(2), r.getLong(3))).toMap
     val baseline = run() // below the gate: single task per bucket

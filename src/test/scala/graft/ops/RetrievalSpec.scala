@@ -59,7 +59,9 @@ class RetrievalSpec extends AnyFunSuite {
 
   test("r14 bm25: doc-clustered index layout serves row-identically to the raw index") {
     val idx = Retrieval.bm25Index(docs, "doc_id", "text")
-    val cl = Retrieval.bm25IndexDocClustered(docs, "doc_id", "text")
+    // the doc_id-bucketed table is the doc-clustered at-rest layout
+    Retrieval.ensureBm25BucketedIndex(spark, "bm25bk_spec_clustered", idx, docBuckets = 4)
+    val cl = spark.table("bm25bk_spec_clustered")
     // same rows, different at-rest order
     assert(cl.collect().map(_.toSeq).toSet == idx.collect().map(_.toSeq).toSet)
     val a = Retrieval.bm25TopKFromIndex(idx, q("alpha beta"), k = 5)
@@ -230,10 +232,10 @@ class RetrievalSpec extends AnyFunSuite {
   test("bm25 partitioned-at-rest serving: prunes to the vocab buckets, output identical") {
     import spark.implicits._
     val postings = Retrieval.bm25Index(docs, "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_part").toString
-    Retrieval.bm25WritePartitionedIndex(postings, dir, nBuckets = 8)
+    val t = "bm25bk_spec_prune"
+    Retrieval.ensureBm25BucketedIndex(spark, t, postings, docBuckets = 4, termBuckets = 8)
     val qs = Seq((0L, "alpha beta"), (1L, "delta")).toDF("query_id", "query_text")
-    val served = Retrieval.bm25TopKFromPartitionedIndex(spark, dir, qs, k = 5)
+    val served = Retrieval.bm25TopKFromBucketedIndex(spark, t, qs, k = 5)
     val flat = Retrieval.bm25TopKFromIndex(postings, qs, k = 5,
       precomputedStats = Some(Retrieval.bm25IndexStats(postings)))
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -324,34 +326,43 @@ class RetrievalSpec extends AnyFunSuite {
 
   test("bm25 partitioned index: _stats sidecar is hidden from the postings read") {
     val postings = Retrieval.bm25Index(docs, "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_side").toString
-    Retrieval.bm25WritePartitionedIndex(postings, dir, nBuckets = 4)
-    val back = spark.read.parquet(dir)
+    val t = "bm25bk_spec_side"
+    // postings spread over several tasks, as a real build's are
+    Retrieval.ensureBm25BucketedIndex(spark, t, postings.repartition(3),
+      docBuckets = 4, termBuckets = 4)
+    val back = spark.table(t)
     // the 1-row stats table must not leak into the postings relation
     assert(back.count() == postings.count())
     assert(!back.columns.contains("n_buckets"))
     assert(back.columns.contains("term_bucket"))
     // and the sidecar itself round-trips the writer's modulus
-    val st = spark.read.parquet(s"$dir/_stats").head()
+    val st = spark.table(t + "_stats").head()
     assert(st.getAs[Int]("n_buckets") == 4)
-    // one data file per bucket (the repartition-before-write contract:
-    // without it every upstream task writes into every bucket dir and
-    // the layout is a small-files disaster at scale)
-    for (b <- new java.io.File(dir).listFiles()
-         if b.getName.startsWith("term_bucket=")) {
-      val files = b.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(files.length == 1,
-        s"${b.getName}: expected 1 file, got ${files.length}")
+    // one data file per doc_id bucket in each term_bucket directory
+    // (the repartition-before-write contract: without it every
+    // upstream task writes into every directory and the layout is a
+    // small-files disaster at scale)
+    val root = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(t)).location)
+    val dirs = root.listFiles().filter(_.getName.startsWith("term_bucket="))
+    assert(dirs.nonEmpty)
+    for (b <- dirs) {
+      val ids = b.listFiles().map(_.getName).filter(_.endsWith(".parquet")).map(f =>
+        org.apache.spark.sql.execution.datasources.BucketingUtils.getBucketId(f)
+          .getOrElse(fail(s"not a bucket file: $f")))
+      assert(ids.nonEmpty && ids.distinct.length == ids.length,
+        s"${b.getName}: expected one file per doc_id bucket, got ${ids.toSeq}")
     }
   }
 
   test("bm25 partitioned serving: query with no indexed terms returns empty, no error") {
     import spark.implicits._
     val postings = Retrieval.bm25Index(docs, "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_empty").toString
-    Retrieval.bm25WritePartitionedIndex(postings, dir, nBuckets = 4)
+    val t = "bm25bk_spec_empty"
+    Retrieval.ensureBm25BucketedIndex(spark, t, postings, docBuckets = 2, termBuckets = 4)
+    // no tokens at all → an empty `term_bucket IN ()` partition filter
     val qs = Seq((0L, "")).toDF("query_id", "query_text")
-    assert(Retrieval.bm25TopKFromPartitionedIndex(spark, dir, qs, k = 3).count() == 0)
+    assert(Retrieval.bm25TopKFromBucketedIndex(spark, t, qs, k = 3).count() == 0)
   }
 
   test("mmrDiversify rejects a corpus-sized candidate pool loudly") {
