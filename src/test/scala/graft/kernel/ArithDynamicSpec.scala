@@ -1,5 +1,6 @@
 package graft.kernel
 
+import graft.ReferenceFixtures
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Arith-dynamic decode vs the reference's committed golden vectors
@@ -10,10 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * RLE+PACK (192,193), STRIPE (8,9) and EXT/bz2 (4).
   */
 class ArithDynamicSpec extends AnyFunSuite {
-  private val dir = "/root/reference/ext/htslib-1.22.1/htscodecs/tests"
+  private def ref(rel: String) = ReferenceFixtures.path(s"ext/htslib-1.22.1/htscodecs/tests/$rel")
 
   private def expectedFor(stem: String): Array[Byte] = {
-    val raw = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/dat/$stem"))
+    val raw = java.nio.file.Files.readAllBytes(ref(s"dat/$stem"))
     if (!stem.startsWith("q")) return raw // u32: raw binary, no field cut
     val s = new String(raw, java.nio.charset.StandardCharsets.ISO_8859_1)
     s.split("\n").map(_.takeWhile(_ != '\t')).mkString
@@ -21,7 +22,7 @@ class ArithDynamicSpec extends AnyFunSuite {
   }
 
   private def vectors: Seq[java.io.File] =
-    new java.io.File(s"$dir/dat/arith").listFiles().toSeq.sortBy(_.getName)
+    ref("dat/arith").toFile.listFiles().toSeq.sortBy(_.getName)
 
   test("golden vectors decode bit-for-bit (every committed flag combination)") {
     assert(vectors.nonEmpty)

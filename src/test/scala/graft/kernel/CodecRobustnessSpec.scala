@@ -1,5 +1,6 @@
 package graft.kernel
 
+import graft.ReferenceFixtures
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Corrupt-input robustness for the CRAM 3.1 codec kernels: a stream
@@ -10,10 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * an OOM-killed executor fleet.
   */
 class CodecRobustnessSpec extends AnyFunSuite {
-  private val dir = "/root/reference/ext/htslib-1.22.1/htscodecs/tests"
 
-  private def bytes(p: String): Array[Byte] =
-    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
+  private def bytes(rel: String): Array[Byte] =
+    java.nio.file.Files.readAllBytes(ReferenceFixtures.path(s"ext/htslib-1.22.1/htscodecs/tests/$rel"))
 
   /** Run decode on a mutated input; any prompt exception is fine. */
   private def survives(body: => Unit): Unit =
@@ -21,7 +21,7 @@ class CodecRobustnessSpec extends AnyFunSuite {
     catch { case _: Exception => () } // typed or bounds error, both prompt
 
   test("tok3: every truncation prefix of a golden vector fails promptly or decodes") {
-    val full = bytes(s"$dir/names/tok3/01.names.1")
+    val full = bytes("names/tok3/01.names.1")
     val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
     for (k <- 0 until full.length) {
       survives(NameTok3.decode(java.util.Arrays.copyOf(full, k)))
@@ -30,7 +30,7 @@ class CodecRobustnessSpec extends AnyFunSuite {
   }
 
   test("arith: every truncation prefix fails promptly or decodes") {
-    val full = bytes(s"$dir/dat/arith/q4.193")
+    val full = bytes("dat/arith/q4.193")
     val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
     for (k <- 0 until math.min(full.length, 2000)) {
       survives(ArithDynamic.decode(java.util.Arrays.copyOf(full, k)))
@@ -39,7 +39,7 @@ class CodecRobustnessSpec extends AnyFunSuite {
   }
 
   test("fqzcomp: every truncation prefix fails promptly or decodes") {
-    val full = bytes(s"$dir/dat/fqzcomp/q4.0")
+    val full = bytes("dat/fqzcomp/q4.0")
     val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
     for (k <- 0 until math.min(full.length, 2000)) {
       survives(FqzComp.decode(java.util.Arrays.copyOf(full, k)))
@@ -51,9 +51,9 @@ class CodecRobustnessSpec extends AnyFunSuite {
     // full header coverage plus samples across the body — a corrupt
     // mid-stream varint once walked the tok3 descriptor cursor
     // backwards (infinite loop); this sweep pins the guard
-    val tok = bytes(s"$dir/names/tok3/01.names.1")
-    val arith = bytes(s"$dir/dat/arith/q4.0")
-    val fqz = bytes(s"$dir/dat/fqzcomp/q4.0")
+    val tok = bytes("names/tok3/01.names.1")
+    val arith = bytes("dat/arith/q4.0")
+    val fqz = bytes("dat/fqzcomp/q4.0")
     def positions(n: Int): Seq[Int] =
       ((0 until 16) ++ (16 until n by math.max(1, n / 64))).filter(_ < n)
     val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000

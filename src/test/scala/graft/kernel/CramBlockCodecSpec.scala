@@ -1,5 +1,6 @@
 package graft.kernel
 
+import graft.ReferenceFixtures
 import org.scalatest.funsuite.AnyFunSuite
 
 /** CRAM block decompression methods beyond the r6 subset: bzip2 and
@@ -8,6 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Unsupported methods must keep their typed rejection.
   */
 class CramBlockCodecSpec extends AnyFunSuite {
+  private def ref(rel: String) = ReferenceFixtures.path(s"ext/htslib-1.22.1/htscodecs/tests/$rel")
+
   private val payload =
     ("The quick brown fox jumps over the lazy dog. " * 40).getBytes("US-ASCII")
 
@@ -28,10 +31,8 @@ class CramBlockCodecSpec extends AnyFunSuite {
   }
 
   test("method 5 (rANSNx16) decodes the reference's committed golden vector") {
-    val dir = "/root/reference/ext/htslib-1.22.1/htscodecs/tests"
-    val comp = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/dat/r4x16/q4.193")) // PACK+RLE+order-1
-    val raw = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/dat/q4"))
+    val comp = java.nio.file.Files.readAllBytes(ref("dat/r4x16/q4.193")) // PACK+RLE+order-1
+    val raw = java.nio.file.Files.readAllBytes(ref("dat/q4"))
     val expected = new String(raw, java.nio.charset.StandardCharsets.ISO_8859_1)
       .split("\n").map(_.takeWhile(_ != '\t')).mkString
       .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
@@ -40,26 +41,21 @@ class CramBlockCodecSpec extends AnyFunSuite {
   }
 
   test("methods 6/7/8 dispatch to the CRAM 3.1 codec kernels") {
-    val dir = "/root/reference/ext/htslib-1.22.1/htscodecs/tests"
     // method 6: arith golden vector (order-1)
-    val arith = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/dat/arith/q4.1"))
-    val raw = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/dat/q4"))
+    val arith = java.nio.file.Files.readAllBytes(ref("dat/arith/q4.1"))
+    val raw = java.nio.file.Files.readAllBytes(ref("dat/q4"))
     val expected = new String(raw, java.nio.charset.StandardCharsets.ISO_8859_1)
       .split("\n").map(_.takeWhile(_ != '\t')).mkString
       .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
     assert(java.util.Arrays.equals(
       CramCodec.decompressBlock(6, arith, expected.length), expected))
     // method 8: tok3 golden vector -> NUL-separated names block
-    val tok = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/names/tok3/01.names.1"))
-    val names = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/names/01.names"))
+    val tok = java.nio.file.Files.readAllBytes(ref("names/tok3/01.names.1"))
+    val names = java.nio.file.Files.readAllBytes(ref("names/01.names"))
       .map(b => if (b == '\n') 0.toByte else b)
     assert(java.util.Arrays.equals(CramCodec.decompressBlock(8, tok, names.length), names))
     // method 7: fqz golden vector (binary phred = ASCII-33)
-    val fqz = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/dat/fqzcomp/q4.0"))
+    val fqz = java.nio.file.Files.readAllBytes(ref("dat/fqzcomp/q4.0"))
     val phred = expected.map(b => (b - 33).toByte)
     assert(java.util.Arrays.equals(
       CramCodec.decompressBlock(7, fqz, phred.length), phred))

@@ -1,5 +1,6 @@
 package graft.kernel
 
+import graft.ReferenceFixtures
 import org.scalatest.funsuite.AnyFunSuite
 
 /** fqzcomp quality-codec decode vs the reference's committed golden
@@ -13,10 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * (qvar) reads across four encoder strategies.
   */
 class FqzCompSpec extends AnyFunSuite {
-  private val dir = "/root/reference/ext/htslib-1.22.1/htscodecs/tests/dat"
+  private def ref(rel: String) = ReferenceFixtures.path(s"ext/htslib-1.22.1/htscodecs/tests/dat/$rel")
 
   private def expectedFor(stem: String): (Array[Byte], Array[Int]) = {
-    val raw = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/$stem"))
+    val raw = java.nio.file.Files.readAllBytes(ref(stem))
     val s = new String(raw, java.nio.charset.StandardCharsets.ISO_8859_1)
     val lines = s.split("\n").map(_.takeWhile(_ != '\t'))
     val quals = lines.flatMap(_.map(c => (c - 33).toByte))
@@ -24,7 +25,7 @@ class FqzCompSpec extends AnyFunSuite {
   }
 
   private def vectors: Seq[java.io.File] =
-    new java.io.File(s"$dir/fqzcomp").listFiles().toSeq.sortBy(_.getName)
+    ref("fqzcomp").toFile.listFiles().toSeq.sortBy(_.getName)
 
   test("golden vectors decode bit-for-bit with matching read lengths") {
     assert(vectors.nonEmpty)
@@ -49,8 +50,7 @@ class FqzCompSpec extends AnyFunSuite {
   }
 
   test("block-size disagreement is rejected with a typed error") {
-    val comp = java.nio.file.Files.readAllBytes(
-      new java.io.File(s"$dir/fqzcomp/q4.0").toPath)
+    val comp = java.nio.file.Files.readAllBytes(ref("fqzcomp/q4.0"))
     intercept[ArithDynamic.ArithException](FqzComp.decode(comp, 12345))
   }
 }

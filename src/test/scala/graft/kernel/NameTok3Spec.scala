@@ -1,5 +1,6 @@
 package graft.kernel
 
+import graft.ReferenceFixtures
 import org.scalatest.funsuite.AnyFunSuite
 
 /** tok3 name-codec decode vs the reference's committed golden vectors
@@ -12,10 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * inside tok3 as well.
   */
 class NameTok3Spec extends AnyFunSuite {
-  private val dir = "/root/reference/ext/htslib-1.22.1/htscodecs/tests/names"
+  private def ref(rel: String) = ReferenceFixtures.path(s"ext/htslib-1.22.1/htscodecs/tests/names/$rel")
 
   private def vectors: Seq[java.io.File] =
-    new java.io.File(s"$dir/tok3").listFiles().toSeq.sortBy(_.getName)
+    ref("tok3").toFile.listFiles().toSeq.sortBy(_.getName)
 
   test("golden vectors decode bit-for-bit (every source × level, rANS and arith)") {
     assert(vectors.nonEmpty)
@@ -24,7 +25,7 @@ class NameTok3Spec extends AnyFunSuite {
       val stem = f.getName.substring(0, f.getName.lastIndexOf('.'))
       val exp = expected.getOrElseUpdate(stem, {
         // newline-separated source names; decoded block is NUL-separated
-        val raw = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/$stem"))
+        val raw = java.nio.file.Files.readAllBytes(ref(stem))
         raw.map(b => if (b == '\n') 0.toByte else b)
       })
       val comp = java.nio.file.Files.readAllBytes(f.toPath)

@@ -1,5 +1,6 @@
 package graft.kernel
 
+import graft.ReferenceFixtures
 import org.scalatest.funsuite.AnyFunSuite
 
 /** rANSNx16 decode vs the reference's committed golden vectors
@@ -10,19 +11,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * RLE+PACK (192,193).
   */
 class RansNx16Spec extends AnyFunSuite {
-  private val dir = "/root/reference/ext/htslib-1.22.1/htscodecs/tests"
+  private def ref(rel: String) = ReferenceFixtures.path(s"ext/htslib-1.22.1/htscodecs/tests/$rel")
 
   /** `cut -f1 < dat/<stem> | tr -d '\n'` — the uncompressed golden per
     * tests/rans4x16.test:11. */
   private def expectedFor(stem: String): Array[Byte] = {
-    val raw = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/dat/$stem"))
+    val raw = java.nio.file.Files.readAllBytes(ref(s"dat/$stem"))
     val s = new String(raw, java.nio.charset.StandardCharsets.ISO_8859_1)
     s.split("\n").map(_.takeWhile(_ != '\t')).mkString
       .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
   }
 
   private def vectors: Seq[java.io.File] =
-    new java.io.File(s"$dir/dat/r4x16").listFiles().toSeq.sortBy(_.getName)
+    ref("dat/r4x16").toFile.listFiles().toSeq.sortBy(_.getName)
 
   test("golden vectors decode bit-for-bit (every committed source × flag combination)") {
     assert(vectors.nonEmpty)

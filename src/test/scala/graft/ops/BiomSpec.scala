@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkFixture
+import graft.{ReferenceFixtures, SparkFixture}
 import graft.kernel.Hdf5Biom
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
@@ -11,8 +11,8 @@ import java.nio.file.{Files, Paths}
   */
 class BiomSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
-  private val dir = "/root/reference/data/biom"
-  private def bytes(f: String) = Files.readAllBytes(Paths.get(s"$dir/$f"))
+  private def ref(f: String) = ReferenceFixtures.path(s"data/biom/$f").toString
+  private def bytes(f: String) = Files.readAllBytes(Paths.get(ref(f)))
 
   test("test.biom COO matches the reference's pinned 15 rows") {
     val coo = Hdf5Biom.readCoo(bytes("test.biom"), "test.biom").sorted
@@ -30,7 +30,7 @@ class BiomSpec extends AnyFunSuite {
 
   test("multi-file concatenation matches reference expectations") {
     // reference test/sql/read_biom.test:49-60 pins the first 7 rows
-    val df = BiomOps.readBiomHdf5(spark, s"$dir/file1.biom,$dir/file2.biom")
+    val df = BiomOps.readBiomHdf5(spark, s"${ref("file1.biom")},${ref("file2.biom")}")
     val rows = df.collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).sorted.toVector
     assert(rows.take(7) == Vector(
@@ -44,8 +44,9 @@ class BiomSpec extends AnyFunSuite {
   }
 
   test("notbiom.h5 rejected as not a BIOM file") {
+    val notBiom = bytes("notbiom.h5")
     val e = intercept[Hdf5Biom.Hdf5Exception](
-      Hdf5Biom.readCoo(bytes("notbiom.h5"), "notbiom.h5"))
+      Hdf5Biom.readCoo(notBiom, "notbiom.h5"))
     assert(e.getMessage.contains("not a BIOM file"))
   }
 
@@ -69,12 +70,13 @@ class BiomSpec extends AnyFunSuite {
   }
 
   test("biom DataSource V2: executor-side decode, filepath col, pruning") {
+    val testBiom = ref("test.biom")
     val df = spark.read.format("biom")
       .option("include_filepath", "true")
-      .load("/root/reference/data/biom/test.biom")
+      .load(testBiom)
     assert(df.count() == 15)
     assert(df.select("filepath").distinct().collect()
-      .map(_.getString(0)).toSeq == Seq("file:/root/reference/data/biom/test.biom"))
+      .map(_.getString(0)).toSeq == Seq(s"file:$testBiom"))
     // projection pushdown reaches the reader
     val pruned = df.select("sample_id")
     assert(pruned.queryExecution.executedPlan.toString.contains("sample_id"))

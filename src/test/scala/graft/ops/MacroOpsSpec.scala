@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkFixture
+import graft.{ReferenceFixtures, SparkFixture}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,9 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class MacroOpsSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
+  private def ref(rel: String) = ReferenceFixtures.path(s"data/$rel").toString
 
   test("read_gff parses the reference fixture") {
-    val df = Gff.readGff(spark, "/root/reference/data/gff/test.gff")
+    val df = Gff.readGff(spark, ref("gff/test.gff"))
     val rows = df.orderBy("position", "type").collect()
     assert(rows.length == 7) // incl. the chr2 Ensembl gene
     val gene = rows.find(_.getAs[String]("type") == "gene").get
@@ -30,11 +31,11 @@ class MacroOpsSpec extends AnyFunSuite {
   }
 
   test("read_gff on header-only fixture yields zero rows") {
-    assert(Gff.readGff(spark, "/root/reference/data/gff/empty.gff").count() == 0)
+    assert(Gff.readGff(spark, ref("gff/empty.gff")).count() == 0)
   }
 
   test("read_jplace: best placement only, nm-name extraction") {
-    val df = Jplace.readJplace(spark, "/root/reference/data/jplace/test.jplace")
+    val df = Jplace.readJplace(spark, ref("jplace/test.jplace"))
     val rows = df.orderBy("fragment").collect()
     assert(rows.length == 3)
     val f1 = rows(0)
@@ -49,15 +50,15 @@ class MacroOpsSpec extends AnyFunSuite {
   }
 
   test("read_jplace: empty placements yields zero rows; n-name fallback") {
-    assert(Jplace.readJplace(spark, "/root/reference/data/jplace/empty.jplace").count() == 0)
-    val withN = Jplace.readJplace(spark, "/root/reference/data/jplace/with_n.jplace")
+    assert(Jplace.readJplace(spark, ref("jplace/empty.jplace")).count() == 0)
+    val withN = Jplace.readJplace(spark, ref("jplace/with_n.jplace"))
     assert(withN.collect().forall(r => r.getAs[String]("fragment") != null))
   }
 
   test("jplace placements graft onto the jplace tree via copyNewick") {
     // end-to-end: read placements + tree from the same jplace file,
     // graft, and confirm fragments became tips preserving distances
-    val placements = Jplace.readJplace(spark, "/root/reference/data/jplace/test.jplace")
+    val placements = Jplace.readJplace(spark, ref("jplace/test.jplace"))
     val tree = graft.kernel.Newick.parse(
       "((A:0.1,B:0.2):0.3{0},(C:0.4,D:0.5):0.6{1}):0.0{2};")
     val ps = placements.collect().map { r =>

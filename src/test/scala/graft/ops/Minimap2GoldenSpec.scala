@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkFixture
+import graft.{ReferenceFixtures, SparkFixture}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -100,7 +100,7 @@ class Minimap2GoldenSpec extends AnyFunSuite {
     // at k=5 under the 'sr' preset.
     import spark.implicits._
     val fastxQueries = spark.read.format("fastx")
-      .load("/root/reference/data/fastq/test.fa")
+      .load(ReferenceFixtures.path("data/fastq/test.fa").toString)
       .select(col("read_id"), col("sequence1"), col("sequence2"))
     val subj = Seq(
       ("ref1", "ACGTACGTACGTACGTACGTACGTACGTACGTACGTACGTACGTACGTACGTGGCCTTAAGGCCTTAAGGCCTTAAGGCCTTAAGGCCTTAAGGCCTTAAGGCC"),

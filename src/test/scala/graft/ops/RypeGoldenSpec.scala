@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkFixture
+import graft.{ReferenceFixtures, SparkFixture}
 import graft.kernel.Rype
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RypeGoldenSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
-  private val ryxdi = "/root/reference/data/rype/test.ryxdi"
+  private def ryxdi(rel: String) = ReferenceFixtures.path(s"data/rype/test.ryxdi/$rel").toString
   private val K = 16
   private val W = 8
   // manifest.toml: salt = "0x5555555555555555" == Rype.DefaultSalt
@@ -27,10 +27,10 @@ class RypeGoldenSpec extends AnyFunSuite {
     * cast to long is exact.
     */
   private lazy val referenceIndex = {
-    val inv = spark.read.parquet(s"$ryxdi/inverted")
+    val inv = spark.read.parquet(ryxdi("inverted"))
       .select(col("minimizer").cast("long").as("minimizer"),
         col("bucket_id").cast("long").as("bucket_id"))
-    val buckets = spark.read.parquet(s"$ryxdi/buckets.parquet")
+    val buckets = spark.read.parquet(ryxdi("buckets.parquet"))
       .select(col("bucket_id").cast("long").as("bucket_id"), col("bucket_name"))
     inv.join(buckets, "bucket_id").select("bucket_id", "bucket_name", "minimizer")
   }

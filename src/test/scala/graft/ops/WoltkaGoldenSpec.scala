@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkFixture
+import graft.{ReferenceFixtures, SparkFixture}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class WoltkaGoldenSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
-  private val input = "/root/reference/data/sam/miint-woltka-test.parquet"
+  private def input = ReferenceFixtures.path("data/sam/miint-woltka-test.parquet").toString
 
   private val goldenOgu = Map(
     "H000003450" -> 477.800, "H000000556" -> 849.086, "G002234575" -> 1302.833,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkFixture
+import graft.{ReferenceFixtures, SparkFixture}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,11 +9,22 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class WritersSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
-  private val fq = "/root/reference/data/fastq"
-  private val sam = "/root/reference/data/sam"
+  private def fq(f: String) = ReferenceFixtures.path(s"data/fastq/$f").toString
+  private def sam(f: String) = ReferenceFixtures.path(s"data/sam/$f").toString
+
+  /** The 9 mandatory SAM columns, for checks that need no reference fixture. */
+  private def alignmentRows = {
+    val s = spark
+    import s.implicits._
+    Seq(("r1", 0, "chrA", 100L, 60.toShort, "10M", "*", 0L, 0L),
+      ("r2", 16, "chrA", 150L, 30.toShort, "5M2I3M", "*", 0L, 0L),
+      ("r3", 4, "*", 0L, 0.toShort, "*", "*", 0L, 0L))
+      .toDF("read_id", "flags", "reference", "position", "mapq", "cigar",
+        "mate_reference", "mate_position", "template_length")
+  }
 
   test("FASTQ round-trip: read → copyFastq → read equals") {
-    val src = spark.read.format("fastx").load(s"$fq/foo.r1.fastq.gz")
+    val src = spark.read.format("fastx").load(fq("foo.r1.fastq.gz"))
       .select("read_id", "comment", "sequence1", "qual1")
     val out = "/tmp/graft_rt.fastq"
     Writers.copyFastq(src, out, includeComment = true)
@@ -24,7 +35,7 @@ class WritersSpec extends AnyFunSuite {
 
   test("FASTQ gzip output by .gz extension round-trips " +
       "(reference test/sql/copy_fastq_compression.test)") {
-    val src = spark.read.format("fastx").load(s"$fq/foo.r1.fastq.gz")
+    val src = spark.read.format("fastx").load(fq("foo.r1.fastq.gz"))
       .select("read_id", "comment", "sequence1", "qual1")
     Writers.copyFastq(src, "/tmp/graft_wt_gz.fastq.gz")
     // must be real gzip bytes
@@ -39,7 +50,7 @@ class WritersSpec extends AnyFunSuite {
 
   test("SAM gzip output round-trips through the gzip-transparent reader " +
       "(reference test/sql/copy_sam_compression.test)") {
-    val src = spark.read.format("alignments").load(s"$sam/foo_has_header.sam")
+    val src = spark.read.format("alignments").load(sam("foo_has_header.sam"))
     Writers.copySam(src, "/tmp/graft_wt_sam.sam.gz", includeHeader = true)
     val head = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/tmp/graft_wt_sam.sam.gz")).take(2)
@@ -52,8 +63,8 @@ class WritersSpec extends AnyFunSuite {
 
   test("FASTQ paired split via {ORIENTATION} placeholder") {
     val src = spark.read.format("fastx")
-      .option("sequence2", s"$fq/foo.r2.fastq.gz")
-      .load(s"$fq/foo.r1.fastq.gz")
+      .option("sequence2", fq("foo.r2.fastq.gz"))
+      .load(fq("foo.r1.fastq.gz"))
     Writers.copyFastq(src, "/tmp/graft_rt_{ORIENTATION}.fastq")
     val r1 = spark.read.format("fastx").load("/tmp/graft_rt_R1.fastq")
     val r2 = spark.read.format("fastx").load("/tmp/graft_rt_R2.fastq")
@@ -66,7 +77,7 @@ class WritersSpec extends AnyFunSuite {
   }
 
   test("FASTA write from FASTQ source") {
-    val src = spark.read.format("fastx").load(s"$fq/foo.r1.fastq.gz")
+    val src = spark.read.format("fastx").load(fq("foo.r1.fastq.gz"))
       .select("read_id", "comment", "sequence1")
     Writers.copyFasta(src, "/tmp/graft_rt.fasta")
     val back = spark.read.format("fastx").load("/tmp/graft_rt.fasta")
@@ -75,7 +86,7 @@ class WritersSpec extends AnyFunSuite {
   }
 
   test("SAM round-trip: read → copySam(header) → read equals on all 21 cols") {
-    val src = spark.read.format("alignments").load(s"$sam/foo_has_header.sam")
+    val src = spark.read.format("alignments").load(sam("foo_has_header.sam"))
     val out = "/tmp/graft_rt.sam"
     import spark.implicits._
     val refLens = Seq(("G1234", 20L), ("G000144735", 90L)).toDF("reference", "length")
@@ -89,7 +100,7 @@ class WritersSpec extends AnyFunSuite {
   }
 
   test("BAM round-trip: read SAM fixture -> copyBam -> read BAM equals") {
-    val src = spark.read.format("alignments").load(s"$sam/foo_has_header.sam")
+    val src = spark.read.format("alignments").load(sam("foo_has_header.sam"))
     import spark.implicits._
     val refLens = Seq(("G1234", 20L), ("G000144735", 90L)).toDF("reference", "length")
     Writers.copyBam(src, "/tmp/graft_rt.bam", referenceLengths = Some(refLens))
@@ -99,15 +110,19 @@ class WritersSpec extends AnyFunSuite {
   }
 
   test("BAM writer output starts with BGZF magic and ends with EOF block") {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("/tmp/graft_rt.bam"))
+    val out = java.nio.file.Files.createTempDirectory("graft_bgzf").resolve("out.bam")
+    Writers.copyBam(alignmentRows, out.toString)
+    val bytes = java.nio.file.Files.readAllBytes(out)
     assert(bytes(0) == 0x1f.toByte && bytes(1) == 0x8b.toByte && bytes(3) == 4)
-    // trailing 28-byte BGZF EOF marker
-    assert(bytes.takeRight(28)(0) == 0x1f.toByte)
-    assert(bytes.takeRight(12).forall(_ == 0) == false || true)
+    // trailing 28-byte BGZF EOF marker, fixed by the SAM spec (SAMv1 §4.1.2)
+    val eof = Seq(0x1f, 0x8b, 0x08, 0x04, 0x00, 0x00, 0x00, 0x00, 0x00, 0xff,
+      0x06, 0x00, 0x42, 0x43, 0x02, 0x00, 0x1b, 0x00, 0x03, 0x00,
+      0x00, 0x00, 0x00, 0x00, 0x00, 0x00, 0x00, 0x00).map(_.toByte)
+    assert(bytes.takeRight(28).toSeq == eof)
   }
 
   test("sharded FASTQ: one file per non-empty partition, glob read-back equals input") {
-    val src = spark.read.format("fastx").load(s"$fq/foo.r1.fastq.gz")
+    val src = spark.read.format("fastx").load(fq("foo.r1.fastq.gz"))
       .select("read_id", "sequence1", "qual1")
       .repartition(3)
     val dir = java.nio.file.Files.createTempDirectory("graft_shardfq").toString
@@ -123,7 +138,7 @@ class WritersSpec extends AnyFunSuite {
   }
 
   test("sharded SAM: every shard is a standalone valid SAM with the full header") {
-    val src = spark.read.format("alignments").load(s"$sam/foo_has_header.sam").repartition(2)
+    val src = spark.read.format("alignments").load(sam("foo_has_header.sam")).repartition(2)
     val dir = java.nio.file.Files.createTempDirectory("graft_shardsam").toString
     Writers.copySamSharded(src, s"$dir/out-{SHARD}.sam")
     val files = new java.io.File(dir).listFiles().map(_.getPath).sorted
@@ -143,7 +158,7 @@ class WritersSpec extends AnyFunSuite {
 
   test("sharded paired FASTQ: {SHARD} x {ORIENTATION} matrix") {
     val src = spark.read.format("fastx")
-      .option("sequence2", s"$fq/foo.r2.fastq.gz").load(s"$fq/foo.r1.fastq.gz")
+      .option("sequence2", fq("foo.r2.fastq.gz")).load(fq("foo.r1.fastq.gz"))
       .repartition(2)
     val dir = java.nio.file.Files.createTempDirectory("graft_shardpe").toString
     Writers.copyFastqSharded(src, s"$dir/p-{SHARD}.{ORIENTATION}.fq")
@@ -155,7 +170,7 @@ class WritersSpec extends AnyFunSuite {
   }
 
   test("sharded BAM: every shard a standalone BGZF BAM; union read-back equals input") {
-    val src = spark.read.format("alignments").load(s"$sam/foo_has_header.sam").repartition(2)
+    val src = spark.read.format("alignments").load(sam("foo_has_header.sam")).repartition(2)
     import spark.implicits._
     val refLens = Seq(("G1234", 20L), ("G000144735", 90L)).toDF("reference", "length")
     val dir = java.nio.file.Files.createTempDirectory("graft_shardbam").toString
@@ -198,14 +213,14 @@ class WritersSpec extends AnyFunSuite {
   }
 
   test("sharded template without {SHARD} is rejected") {
-    val src = spark.read.format("alignments").load(s"$sam/foo_has_header.sam")
+    val src = alignmentRows
     val e = intercept[IllegalArgumentException](
       Writers.copySamSharded(src, "/tmp/nope.sam"))
     assert(e.getMessage.contains("{SHARD}"))
   }
 
   test("SAM writer: unknown references get sentinel length 2^31-1") {
-    val src = spark.read.format("alignments").load(s"$sam/foo_has_header.sam")
+    val src = spark.read.format("alignments").load(sam("foo_has_header.sam"))
     import spark.implicits._
     val partial = Seq(("G1234", 20L)).toDF("reference", "length")
     Writers.copySam(src, "/tmp/graft_rt2.sam", includeHeader = true,
@@ -230,7 +245,7 @@ class WritersSpec extends AnyFunSuite {
 
   test("FASTQ COMPRESSION 'gzip' on a plain path compresses; 'gz' and " +
       "'GZIP' accepted (reference copy_fastq_compression tests 1/2/4)") {
-    val src = spark.read.format("fastx").load(s"$fq/foo.r1.fastq.gz")
+    val src = spark.read.format("fastx").load(fq("foo.r1.fastq.gz"))
       .select("read_id", "comment", "sequence1", "qual1")
     for (c <- Seq("gzip", "gz", "GZIP")) {
       val out = s"/tmp/graft_cmp_$c.fastq"
@@ -244,7 +259,7 @@ class WritersSpec extends AnyFunSuite {
 
   test("FASTQ COMPRESSION 'none' overrides a .gz extension " +
       "(reference copy_fastq_compression test 3)") {
-    val src = spark.read.format("fastx").load(s"$fq/foo.r1.fastq.gz")
+    val src = spark.read.format("fastx").load(fq("foo.r1.fastq.gz"))
       .select("read_id", "comment", "sequence1", "qual1")
     val out = "/tmp/graft_cmp_none.fastq.gz"
     Writers.copyFastq(src, out, compression = Some("none"))
@@ -256,11 +271,11 @@ class WritersSpec extends AnyFunSuite {
 
   test("FASTA + SAM honor COMPRESSION; invalid name rejected " +
       "(reference copy_fasta_compression / copy_sam_compression)") {
-    val fsrc = spark.read.format("fastx").load(s"$fq/foo.r1.fastq.gz")
+    val fsrc = spark.read.format("fastx").load(fq("foo.r1.fastq.gz"))
       .select("read_id", "comment", "sequence1", "qual1")
     Writers.copyFasta(fsrc, "/tmp/graft_cmp.fasta", compression = Some("gzip"))
     assert(isGzip("/tmp/graft_cmp.fasta"))
-    val ssrc = spark.read.format("alignments").load(s"$sam/foo_has_header.sam")
+    val ssrc = spark.read.format("alignments").load(sam("foo_has_header.sam"))
     Writers.copySam(ssrc, "/tmp/graft_cmp.sam", compression = Some("gzip"))
     assert(isGzip("/tmp/graft_cmp.sam"))
     val back = spark.read.format("alignments").load("/tmp/graft_cmp.sam")
@@ -275,7 +290,7 @@ class WritersSpec extends AnyFunSuite {
   test("BAM COMPRESSION_LEVEL 0-9: both ends round-trip, level 0 is " +
       "larger than level 9, out-of-range rejected (reference copy_bam " +
       "tests 5-6 and 15-16)") {
-    val src = spark.read.format("alignments").load(s"$sam/foo_has_header.sam")
+    val src = spark.read.format("alignments").load(sam("foo_has_header.sam"))
     import spark.implicits._
     val refLens = Seq(("G1234", 20L), ("G000144735", 90L)).toDF("reference", "length")
     Writers.copyBam(src, "/tmp/graft_lvl0.bam", Some(refLens), compressionLevel = 0)
@@ -296,7 +311,7 @@ class WritersSpec extends AnyFunSuite {
   }
 
   test("sharded FASTQ + sharded BAM honor compression options") {
-    val src = spark.read.format("fastx").load(s"$fq/foo.r1.fastq.gz")
+    val src = spark.read.format("fastx").load(fq("foo.r1.fastq.gz"))
       .select("read_id", "comment", "sequence1", "qual1").repartition(2)
     val dir = new java.io.File("/tmp/graft_cmp_shard"); dir.mkdirs()
     dir.listFiles().foreach(_.delete())
@@ -304,7 +319,7 @@ class WritersSpec extends AnyFunSuite {
       compression = Some("gzip"))
     val shards = dir.listFiles().filter(_.getName.endsWith(".fq"))
     assert(shards.nonEmpty && shards.forall(f => isGzip(f.getAbsolutePath)))
-    val ssrc = spark.read.format("alignments").load(s"$sam/foo_has_header.sam")
+    val ssrc = spark.read.format("alignments").load(sam("foo_has_header.sam"))
     import spark.implicits._
     val refLens = Seq(("G1234", 20L), ("G000144735", 90L)).toDF("reference", "length")
     Writers.copyBamSharded(ssrc.repartition(2),

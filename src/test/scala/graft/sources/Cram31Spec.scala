@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkFixture
+import graft.{ReferenceFixtures, SparkFixture}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** CRAM 3.1 and 2.x end-to-end: htslib-written (test_view
@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Cram31Spec extends AnyFunSuite {
   private val spark = SparkFixture.spark
-  private val refDir = "/root/reference/ext/htslib-1.22.1/test"
+  private def ref(f: String) = ReferenceFixtures.path(s"ext/htslib-1.22.1/test/$f").toString
   private val fixDir = {
     val url = getClass.getResource("/graft/cram31")
     assert(url != null, "cram31 fixture directory missing")
@@ -31,7 +31,7 @@ class Cram31Spec extends AnyFunSuite {
   test("CRAM 3.1 normal/small/archive profiles equal the SAM twin (1000 reads)") {
     val sam = rows(spark.read.format("alignments")
       .option("include_seq_qual", "true")
-      .load(s"$refDir/ce#1000.sam"))
+      .load(ref("ce#1000.sam")))
     assert(sam.nonEmpty)
     for (p <- Seq("ce1000_v31.cram", "ce1000_v31_small.cram", "ce1000_v31_archive.cram",
         "ce1000_v21.cram", "ce1000_v40.cram", "ce1000_v40_small.cram",
@@ -40,7 +40,7 @@ class Cram31Spec extends AnyFunSuite {
       // recomputable, so let the reader regenerate from the reference.
       val c = rows(spark.read.format("alignments")
         .option("include_seq_qual", "true")
-        .option("reference_fasta", s"$refDir/ce.fa")
+        .option("reference_fasta", ref("ce.fa"))
         .load(s"$fixDir/$p"))
       assert(c.length == sam.length, s"$p: ${c.length} rows vs SAM ${sam.length}")
       assert(c == sam, s"$p != ce#1000.sam")
@@ -50,13 +50,13 @@ class Cram31Spec extends AnyFunSuite {
   test("CRAM 3.1 profiles equal the SAM twin (ce#5b: clips, multi-segment)") {
     val sam = rows(spark.read.format("alignments")
       .option("include_seq_qual", "true")
-      .load(s"$refDir/ce#5b.sam"))
+      .load(ref("ce#5b.sam")))
     assert(sam.nonEmpty)
     for (p <- Seq("ce5b_v31.cram", "ce5b_v31_small.cram", "ce5b_v31_archive.cram",
         "ce5b_v40.cram")) {
       val c = rows(spark.read.format("alignments")
         .option("include_seq_qual", "true")
-        .option("reference_fasta", s"$refDir/ce.fa")
+        .option("reference_fasta", ref("ce.fa"))
         .option("generate_md", "false")
         .load(s"$fixDir/$p"))
       assert(c == sam, s"$p != ce#5b.sam")
@@ -66,7 +66,7 @@ class Cram31Spec extends AnyFunSuite {
   test("reference FASTA parses once per process across many CRAM tasks") {
     val loads0 = graft.kernel.CramCodec.fastaLoads.get()
     val df = spark.read.format("alignments")
-      .option("reference_fasta", s"$refDir/ce.fa")
+      .option("reference_fasta", ref("ce.fa"))
       .load(s"$fixDir/ce1000_v31.cram", s"$fixDir/ce1000_v31_small.cram",
         s"$fixDir/ce1000_v31_archive.cram", s"$fixDir/ce1000_v40.cram")
     assert(df.count() == 4000)
@@ -77,14 +77,14 @@ class Cram31Spec extends AnyFunSuite {
   test("cold FASTA cache is single-flight under genuinely concurrent first loads") {
     // r11 verdict #2: the old get→miss→load→put path let N latch-started
     // cold tasks EACH parse the genome (N × ~3 GB transient heap at
-    // mammalian scale). Copy the fixture to a fresh path (cold key),
+    // mammalian scale). Write a small FASTA to a fresh path (cold key),
     // release 8 threads simultaneously, and slow the open() so every
     // loser arrives while the winner is still parsing — with the old
     // code this pinned loads == 8.
     val fresh = java.io.File.createTempFile("graft_sf_race", ".fa")
     fresh.deleteOnExit()
-    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$refDir/ce.fa"),
-      fresh.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    java.nio.file.Files.write(fresh.toPath,
+      ">chrA\nACGTACGTAC\nGGCCTTAA\n>chrB\nTTTTGGGG\n".getBytes("US-ASCII"))
     val loads0 = graft.kernel.CramCodec.fastaLoads.get()
     val start = new java.util.concurrent.CountDownLatch(1)
     val open: String => java.io.InputStream = { p =>
@@ -116,12 +116,12 @@ class Cram31Spec extends AnyFunSuite {
     def noSeq(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.drop("filepath", "sequence").collect().map(_.toString).sorted.toSeq
     val samDf = spark.read.format("alignments")
-      .option("include_seq_qual", "true").load(s"$refDir/ce#5b.sam")
+      .option("include_seq_qual", "true").load(ref("ce#5b.sam"))
     val sam = noSeq(samDf)
     for (p <- Seq("ce5b_v21.cram", "ce5b_v20.cram")) {
       val df = spark.read.format("alignments")
         .option("include_seq_qual", "true")
-        .option("reference_fasta", s"$refDir/ce.fa")
+        .option("reference_fasta", ref("ce.fa"))
         .option("generate_md", "false")
         .load(s"$fixDir/$p")
       assert(noSeq(df) == sam, s"$p != ce#5b.sam (non-seq columns)")

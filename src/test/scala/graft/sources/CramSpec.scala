@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkFixture
+import graft.{ReferenceFixtures, SparkFixture}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CramSpec extends AnyFunSuite {
   private val spark = SparkFixture.spark
-  private val dir = "/root/reference/ext/htslib-1.22.1/test"
+  private def ref(f: String) = ReferenceFixtures.path(s"ext/htslib-1.22.1/test/$f").toString
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.drop("filepath").collect().map(_.toString).sorted.toSeq
@@ -21,11 +21,11 @@ class CramSpec extends AnyFunSuite {
   test("range.cram equals its BAM twin on all 21 columns + seq/qual") {
     val cram = spark.read.format("alignments")
       .option("include_seq_qual", "true")
-      .option("reference_fasta", s"$dir/ce.fa")
-      .load(s"$dir/range.cram")
+      .option("reference_fasta", ref("ce.fa"))
+      .load(ref("range.cram"))
     val bam = spark.read.format("alignments")
       .option("include_seq_qual", "true")
-      .load(s"$dir/range.bam")
+      .load(ref("range.bam"))
     val c = rows(cram); val b = rows(bam)
     assert(c.length == 112 && c == b)
   }
@@ -37,19 +37,20 @@ class CramSpec extends AnyFunSuite {
         ("xx#large_aux_java.cram", "xx#large_aux.sam", "xx.fa"))) {
       val c = rows(spark.read.format("alignments")
         .option("include_seq_qual", "true")
-        .option("reference_fasta", s"$dir/$fa")
+        .option("reference_fasta", ref(fa))
         .option("generate_md", "false")
-        .load(s"$dir/$cram"))
+        .load(ref(cram)))
       val s = rows(spark.read.format("alignments")
         .option("include_seq_qual", "true")
-        .load(s"$dir/$sam"))
+        .load(ref(sam)))
       assert(c.nonEmpty && c == s, s"$cram != $sam")
     }
   }
 
   test("missing reference_fasta on a reference-requiring CRAM fails with a clear error") {
+    val cram = getClass.getResource("/graft/cram31/ce1000_v31.cram").getPath
     val e = intercept[org.apache.spark.SparkException] {
-      spark.read.format("alignments").load(s"$dir/range.cram").collect()
+      spark.read.format("alignments").load(cram).collect()
     }
     assert(e.getMessage.contains("reference_fasta") ||
       Option(e.getCause).exists(_.getMessage.contains("reference_fasta")))
@@ -57,12 +58,12 @@ class CramSpec extends AnyFunSuite {
 
   test("filter pushdown applies to CRAM records too") {
     val df = spark.read.format("alignments")
-      .option("reference_fasta", s"$dir/ce.fa")
-      .load(s"$dir/range.cram")
+      .option("reference_fasta", ref("ce.fa"))
+      .load(ref("range.cram"))
       .filter(col("reference") === "CHROMOSOME_I" && col("mapq") >= 30)
     val all = spark.read.format("alignments")
-      .option("reference_fasta", s"$dir/ce.fa")
-      .load(s"$dir/range.cram").collect()
+      .option("reference_fasta", ref("ce.fa"))
+      .load(ref("range.cram")).collect()
     val expected = all.count(r => r.getString(2) == "CHROMOSOME_I" && r.getShort(5) >= 30)
     assert(df.count() == expected && expected > 0)
   }

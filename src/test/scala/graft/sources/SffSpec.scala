@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkFixture
+import graft.{ReferenceFixtures, SparkFixture}
 import graft.kernel.SffCodec
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
@@ -11,8 +11,8 @@ import java.nio.file.{Files, Paths}
   */
 class SffSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
-  private val dir = "/root/reference/data/sff"
-  private def bytes(f: String) = Files.readAllBytes(Paths.get(s"$dir/$f"))
+  private def ref(f: String) = ReferenceFixtures.path(s"data/sff/$f").toString
+  private def bytes(f: String) = Files.readAllBytes(Paths.get(ref(f)))
 
   test("basic_2reads: sequences and raw Phred quals") {
     val reads = SffCodec.parse(bytes("basic_2reads.sff"), "basic_2reads.sff")
@@ -46,8 +46,10 @@ class SffSpec extends AnyFunSuite {
   }
 
   test("adversarial files rejected with specific errors") {
-    def err(f: String): String =
-      intercept[SffCodec.SffException](SffCodec.parse(bytes(f), f)).getMessage
+    def err(f: String): String = {
+      val b = bytes(f)
+      intercept[SffCodec.SffException](SffCodec.parse(b, f)).getMessage
+    }
     assert(err("bad_magic.sff").contains("magic"))
     assert(err("bad_version.sff").contains("version"))
     assert(err("bad_seq_len.sff").contains("seq_len"))
@@ -75,7 +77,7 @@ class SffSpec extends AnyFunSuite {
   }
 
   test("sff DataSource: 7-col schema over fixtures") {
-    val df = spark.read.format("sff").load(s"$dir/basic_2reads.sff")
+    val df = spark.read.format("sff").load(ref("basic_2reads.sff"))
     val rows = df.orderBy("sequence_index").collect()
     assert(df.schema.fieldNames.toSeq == Seq("sequence_index", "read_id", "comment",
       "sequence1", "sequence2", "qual1", "qual2"))
@@ -85,7 +87,7 @@ class SffSpec extends AnyFunSuite {
     assert(rows(0).getSeq[Short](5).take(4) == Seq[Short](30, 30, 25, 35))
     // trim=false option
     val raw = spark.read.format("sff").option("trim", "false")
-      .load(s"$dir/trimmed.sff").orderBy("sequence_index").collect()
+      .load(ref("trimmed.sff")).orderBy("sequence_index").collect()
     assert(raw(0).getString(3) == "AATCAGATTGCAGGCC")
   }
 }

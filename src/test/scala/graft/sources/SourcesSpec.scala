@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkFixture
+import graft.{ReferenceFixtures, SparkFixture}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +10,13 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SourcesSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
-  private val fq = "/root/reference/data/fastq"
-  private val sam = "/root/reference/data/sam"
+  private def fq(f: String) = ReferenceFixtures.path(s"data/fastq/$f").toString
+  private def sam(f: String) = ReferenceFixtures.path(s"data/sam/$f").toString
 
   test("fastx paired read matches reference expectations") {
     val rows = spark.read.format("fastx")
-      .option("sequence2", s"$fq/foo.r2.fastq.gz")
-      .load(s"$fq/foo.r1.fastq.gz")
+      .option("sequence2", fq("foo.r2.fastq.gz"))
+      .load(fq("foo.r1.fastq.gz"))
       .orderBy("sequence_index").collect()
     assert(rows.length == 2)
     val r1 = rows(0)
@@ -30,7 +30,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("fastx single-end: sequence2/qual2 NULL, ids stripped") {
-    val rows = spark.read.format("fastx").load(s"$fq/foo.r1.fastq.gz")
+    val rows = spark.read.format("fastx").load(fq("foo.r1.fastq.gz"))
       .orderBy("sequence_index").collect()
     assert(rows.length == 2)
     assert(rows(0).getString(1) == "foo1")
@@ -38,23 +38,24 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("format 'sam' is an alias of 'alignments' (reference read_sam)") {
-    val a = spark.read.format("alignments").load(s"$sam/foo_has_header.sam").collect().toSeq
-    val b = spark.read.format("sam").load(s"$sam/foo_has_header.sam").collect().toSeq
+    val a = spark.read.format("alignments").load(sam("foo_has_header.sam")).collect().toSeq
+    val b = spark.read.format("sam").load(sam("foo_has_header.sam")).collect().toSeq
     assert(a == b && a.nonEmpty)
   }
 
   test("fastx FASTA: qual NULL") {
-    val rows = spark.read.format("fastx").load(s"$fq/test.fa").collect()
+    val rows = spark.read.format("fastx").load(fq("test.fa")).collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.isNullAt(5)))
   }
 
   test("fastx qual_offset: 33 default, 64 shifts, others rejected " +
       "(reference test/sql/read_fastx_qual_offset.test)") {
+    val smallA = fq("small_a.fq")
     def quals(opts: Map[String, String]): Map[String, Seq[Short]] = {
       var r = spark.read.format("fastx")
       opts.foreach { case (k, v) => r = r.option(k, v) }
-      r.load(s"$fq/small_a.fq").collect()
+      r.load(smallA).collect()
         .map(row => row.getString(1) -> row.getSeq[Short](5)).toMap
     }
     assert(quals(Map.empty) == Map(
@@ -68,34 +69,34 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("fastx paired-id mismatch errors") {
+    val (r1, r2) = (fq("foo.r1.fastq.gz"), fq("foo.r2.fastq.mismatched-ids.fastq.gz"))
     val ex = intercept[Exception] {
       spark.read.format("fastx")
-        .option("sequence2", s"$fq/foo.r2.fastq.mismatched-ids.fastq.gz")
-        .load(s"$fq/foo.r1.fastq.gz").collect()
+        .option("sequence2", r2)
+        .load(r1).collect()
     }
     assert(ex.getMessage.contains("foo1/1") || ex.getCause != null)
   }
 
   test("fastx glob expands sorted and concatenates") {
     val n = spark.read.format("fastx")
-      .load(s"$fq/foo.r1.fastq.gz,$fq/bar.r1.fastq.gz").count()
+      .load(s"${fq("foo.r1.fastq.gz")},${fq("bar.r1.fastq.gz")}").count()
     assert(n == 5) // reference test/sql/read_fastx.test:124-126
   }
 
   test("multi-path load(a, b) resolves Spark's JSON 'paths' option") {
     val n = spark.read.format("fastx")
-      .load(s"$fq/foo.r1.fastq.gz", s"$fq/bar.r1.fastq.gz").count()
+      .load(fq("foo.r1.fastq.gz"), fq("bar.r1.fastq.gz")).count()
     assert(n == 5) // same as the comma-list spec
-    val b = spark.read.format("biom")
-      .load("/root/reference/data/biom/test.biom",
-        "/root/reference/data/biom/test.biom").count()
+    val biom = ReferenceFixtures.path("data/biom/test.biom").toString
+    val b = spark.read.format("biom").load(biom, biom).count()
     assert(b == 30) // same file twice concatenates
   }
 
   test("fastx sequence_index restarts per file " +
       "(reference test/sql/read_fastx_sequence_index.test)") {
     val idx = spark.read.format("fastx")
-      .load(s"$fq/small_a.fq,$fq/small_b.fq")
+      .load(s"${fq("small_a.fq")},${fq("small_b.fq")}")
       .select("sequence_index").collect().map(_.getLong(0))
     assert(idx.length == 4 && idx.min == 1 && idx.max == 2)
     assert(idx.count(_ == 1L) == 2) // both files start at 1
@@ -103,7 +104,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("alignments reader matches reference expectations") {
     val rows = spark.read.format("alignments")
-      .load(s"$sam/foo_has_header.sam")
+      .load(sam("foo_has_header.sam"))
       .select("read_id", "flags", "reference", "position", "mapq", "cigar", "mate_reference")
       .orderBy("read_id", "flags").collect()
     val expected = Seq(
@@ -119,15 +120,15 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("alignments: stop_position = endpos + 1, multi-file count, filepath") {
-    val one = spark.read.format("alignments").load(s"$sam/foo_has_header.sam")
+    val one = spark.read.format("alignments").load(sam("foo_has_header.sam"))
       .filter(col("read_id") === "foo-1").select("stop_position").head()
     assert(one.getLong(0) == 2L + 10L) // pos 2 + 10M ref len
     val n = spark.read.format("alignments")
-      .load(s"$sam/foo_has_header.sam,$sam/foo_has_header_2.sam").count()
+      .load(s"${sam("foo_has_header.sam")},${sam("foo_has_header_2.sam")}").count()
     assert(n == 8) // reference test/sql/read_alignments.test:36-39
     val fp = spark.read.format("alignments")
       .option("include_filepath", "true")
-      .load(s"$sam/foo_has_header.sam,$sam/foo_has_header_2.sam")
+      .load(s"${sam("foo_has_header.sam")},${sam("foo_has_header_2.sam")}")
       .groupBy("read_id").agg(countDistinct("filepath").as("nf"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(fp.values.forall(_ == 1L))
@@ -135,21 +136,21 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("alignments: tags NULL when absent, parsed when present") {
-    val noTags = spark.read.format("alignments").load(s"$sam/foo_no_tags.sam")
+    val noTags = spark.read.format("alignments").load(sam("foo_no_tags.sam"))
       .select("tag_as", "tag_nm", "tag_md").collect()
     assert(noTags.forall(r => r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2)))
   }
 
   test("alignments: unmapped read has stop_position 0") {
-    val r = spark.read.format("alignments").load(s"$sam/foo_unmapped_no_seq.sam")
+    val r = spark.read.format("alignments").load(sam("foo_unmapped_no_seq.sam"))
       .filter((col("flags").bitwiseAND(4)) =!= 0).select("stop_position").collect()
     assert(r.nonEmpty && r.forall(_.getLong(0) == 0L))
   }
 
   test("BAM binary: .bam file reads identically to its .sam twin") {
-    val samDf = spark.read.format("alignments").load(s"$sam/foo_has_header.sam")
+    val samDf = spark.read.format("alignments").load(sam("foo_has_header.sam"))
       .orderBy("read_id", "flags")
-    val bamDf = spark.read.format("alignments").load(s"$sam/foo_has_header.bam")
+    val bamDf = spark.read.format("alignments").load(sam("foo_has_header.bam"))
       .orderBy("read_id", "flags")
     assert(samDf.collect().toSeq == bamDf.collect().toSeq)
   }
@@ -157,7 +158,7 @@ class SourcesSpec extends AnyFunSuite {
   test("BAM binary: large positions (reference test/sql/read_alignments.test:92-98)") {
     // note: the .bam and .sam large-position fixtures intentionally
     // hold different positions; the sqllogictest pins the BAM values
-    val bam = spark.read.format("alignments").load(s"$sam/foo_large_positions.bam")
+    val bam = spark.read.format("alignments").load(sam("foo_large_positions.bam"))
       .select("position", "stop_position").orderBy("position").collect()
     assert(bam.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((2147483648L, 2147483748L)))
@@ -187,7 +188,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("alignments: projection pushdown reaches the reader") {
-    val df = spark.read.format("alignments").load(s"$sam/foo_has_header.sam")
+    val df = spark.read.format("alignments").load(sam("foo_has_header.sam"))
       .select("read_id")
     val plan = df.queryExecution.executedPlan.toString
     assert(df.collect().length == 4)
@@ -195,7 +196,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("alignments: filter pushdown reaches the reader and results match post-filtering") {
-    val path = s"$sam/foo_has_header.sam"
+    val path = sam("foo_has_header.sam")
     val unfiltered = spark.read.format("alignments").load(path).collect()
 
     val df = spark.read.format("alignments").load(path)
@@ -214,7 +215,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("alignments: pushdown on BAM and IN/startsWith forms") {
-    val bam = s"$sam/foo_has_header.bam"
+    val bam = sam("foo_has_header.bam")
     val all = spark.read.format("alignments").load(bam).collect()
     val inDf = spark.read.format("alignments").load(bam)
       .filter(col("read_id").isin("foo-1", "foo-3") && col("mapq") >= 0)

@@ -18,7 +18,21 @@ import java.nio.file.{Files, Paths}
   */
 class StdinSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
-  private val fq = "/root/reference/data/fastq"
+  private lazy val dir = Files.createTempDirectory("graft_stdin")
+
+  /** The two records the reference pins for data/fastq/small_a.fq:
+    * 4 bases each, Phred 40 and 39. */
+  private val fastq = "@read_a1\nACGT\n+\nIIII\n@read_a2\nTGCA\n+\nHHHH\n".getBytes("US-ASCII")
+  private val sam = ("@HD\tVN:1.6\tSO:unsorted\n@SQ\tSN:chrA\tLN:1000\n@SQ\tSN:chrB\tLN:500\n" +
+    "q1\t0\tchrA\t2\t60\t10M\t*\t0\t0\tACGTACGTAC\tIIIIIIIIII\n" +
+    "q2\t16\tchrA\t50\t30\t4M1I5M\t*\t0\t0\tACGTACGTAC\tIIIIIIIIII\n" +
+    "q3\t99\tchrB\t20\t1\t8M\t=\t120\t108\tACGTACGT\tIIIIIIII\n" +
+    "q3\t147\tchrB\t120\t1\t8M\t=\t20\t-108\tACGTACGT\tIIIIIIII\n" +
+    "q4\t4\t*\t0\t0\t*\t*\t0\t0\tACGT\tIIII\n").getBytes("US-ASCII")
+
+  /** Writes `bytes` to `name` in the spec's temp directory. */
+  private def written(name: String, bytes: Array[Byte]): String =
+    Files.write(dir.resolve(name), bytes).toString
 
   private val savedIn = System.in
   private def withStdin[A](bytes: Array[Byte])(f: => A): A = {
@@ -34,7 +48,7 @@ class StdinSpec extends AnyFunSuite {
 
   test("fastx from '-' and '/dev/stdin': records, 1-based index") {
     for (token <- Seq("-", "/dev/stdin")) {
-      val rows = withStdin(fileBytes(s"$fq/small_a.fq")) {
+      val rows = withStdin(fastq) {
         spark.read.format("fastx").load(token)
           .orderBy("sequence_index").collect()
       }
@@ -46,7 +60,7 @@ class StdinSpec extends AnyFunSuite {
 
   test("filepath column reports /dev/stdin for both spellings") {
     for (token <- Seq("-", "/dev/stdin")) {
-      val fp = withStdin(fileBytes(s"$fq/small_a.fq")) {
+      val fp = withStdin(fastq) {
         spark.read.format("fastx").option("include_filepath", "true")
           .load(token).select("filepath").head().getString(0)
       }
@@ -55,11 +69,15 @@ class StdinSpec extends AnyFunSuite {
   }
 
   test("gzipped bytes on stdin are decoded (magic sniff)") {
-    val viaStdin = withStdin(fileBytes(s"$fq/foo.r1.fastq.gz")) {
+    val gz = new java.io.ByteArrayOutputStream()
+    val z = new java.util.zip.GZIPOutputStream(gz)
+    z.write(fastq); z.close()
+    val fqGz = written("small_a.fq.gz", gz.toByteArray)
+    val viaStdin = withStdin(fileBytes(fqGz)) {
       spark.read.format("fastx").load("-")
         .orderBy("sequence_index").collect().map(_.getString(1)).toSeq
     }
-    val viaFile = spark.read.format("fastx").load(s"$fq/foo.r1.fastq.gz")
+    val viaFile = spark.read.format("fastx").load(fqGz)
       .orderBy("sequence_index").collect().map(_.getString(1)).toSeq
     assert(viaStdin == viaFile && viaStdin.nonEmpty)
   }
@@ -67,8 +85,9 @@ class StdinSpec extends AnyFunSuite {
   test("stdin in a multi-file list is rejected") {
     def rootMsg(t: Throwable): String =
       (Option(t.getMessage) ++ Option(t.getCause).map(rootMsg)).mkString(" | ")
+    val file = written("small_a.fq", fastq)
     val e = intercept[Exception] {
-      spark.read.format("fastx").load("/dev/stdin", s"$fq/small_a.fq").collect()
+      spark.read.format("fastx").load("/dev/stdin", file).collect()
     }
     assert(rootMsg(e).contains("stdin"))
   }
@@ -76,15 +95,16 @@ class StdinSpec extends AnyFunSuite {
   test("stdin with sequence2 is rejected") {
     def rootMsg(t: Throwable): String =
       (Option(t.getMessage) ++ Option(t.getCause).map(rootMsg)).mkString(" | ")
+    val mate = written("small_a_r2.fq", fastq)
     val e = intercept[Exception] {
       spark.read.format("fastx")
-        .option("sequence2", s"$fq/small_a_r2.fq").load("-").collect()
+        .option("sequence2", mate).load("-").collect()
     }
     assert(rootMsg(e).contains("stdin cannot be used with sequence2"))
   }
 
   test("alignments from stdin match the file read") {
-    val samFile = "/root/reference/data/sam/foo_has_header.sam"
+    val samFile = written("aln.sam", sam)
     val viaFile = spark.read.format("alignments").load(samFile)
       .select("read_id", "flags", "reference", "cigar").collect().toSeq
     val viaStdin = withStdin(fileBytes(samFile)) {
@@ -107,7 +127,9 @@ class StdinSpec extends AnyFunSuite {
   }
 
   test("BAM bytes on stdin are detected by magic, not extension") {
-    val bamFile = "/root/reference/data/sam/foo_has_header.bam"
+    val bamFile = dir.resolve("aln.bam").toString
+    graft.ops.Writers.copyBam(
+      spark.read.format("alignments").load(written("aln.sam", sam)), bamFile)
     val viaFile = spark.read.format("alignments").load(bamFile)
       .select("read_id", "flags", "reference", "position").collect().toSeq
     val viaStdin = withStdin(fileBytes(bamFile)) {
@@ -118,7 +140,7 @@ class StdinSpec extends AnyFunSuite {
   }
 
   test("read_newick from stdin matches the file read") {
-    val nwk = "/root/reference/data/newick/simple.nwk"
+    val nwk = written("simple.nwk", "((A:0.1,B:0.2)AB:0.3,C:0.4)root;\n".getBytes("US-ASCII"))
     val viaFile = graft.ops.NewickOps.readNewick(spark, nwk)
       .select("name", "is_tip").collect().toSeq
     val viaStdin = withStdin(fileBytes(nwk)) {
