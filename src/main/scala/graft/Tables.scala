@@ -73,10 +73,23 @@ object Tables {
   * semantics are ANSI-SQL-expressible) an equivalent DuckDB oracle
   * query over the same parquet tables. Column names/types must match
   * between the two — the driver sorts columns by name and hash-compares
-  * values.
+  * values. `inputs` lists files the query reads that no generator
+  * writes; where one is absent, Verify names it instead of running the
+  * query.
   */
 final case class QueryDef(
     name: String,
     impl: (SparkSession, String) => DataFrame,
     oracle: Option[String] = None,
-    bench: Boolean = false)
+    bench: Boolean = false,
+    inputs: Seq[String] = Nil)
+
+/** The MIINT reference checkout, whose committed fixtures pin golden
+  * behaviour (FIXTURES.md §11): the one root for every path into it.
+  */
+object Reference {
+  val Root = "/root/reference"
+
+  /** `Root/rel`. */
+  def apply(rel: String): String = s"$Root/$rel"
+}

@@ -24,9 +24,12 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     graft.plans.FramelessWindowStrategy.install(spark)
     new java.io.File(outDir).mkdirs()
+    val inputs = SparkEntry.allQueryDefs.map(q => q.name -> q.inputs).toMap
     SparkEntry.queries
       .filter { case (name, _) => nameFilter.forall(name.startsWith) }
       .foreach { case (name, fn) =>
+      val absent = inputs(name).find(p => !Files.exists(Paths.get(p)))
+      absent.foreach(p => System.err.println(s"[verify] $name input absent: $p"))
       // repartition(1), NOT coalesce(1): coalesce collapses every
       // narrow-dependency ancestor into the single output task, so a
       // map-only query (e.g. per-doc shingling) runs its WHOLE corpus
@@ -36,7 +39,7 @@ object Verify {
       // Bench/production run it) and only shuffles the compare-sized
       // result into one file.
       val t0 = System.nanoTime()
-      try {
+      if (absent.isEmpty) try {
         fn(spark, sfDir).repartition(1).write.mode("overwrite")
           .parquet(s"$outDir/$name.parquet")
         val secs = (System.nanoTime() - t0) / 1e9

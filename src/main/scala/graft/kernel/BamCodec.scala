@@ -1,6 +1,6 @@
 package graft.kernel
 
-import java.io.{DataInputStream, EOFException, InputStream}
+import java.io.{DataInputStream, InputStream}
 import java.util.zip.GZIPInputStream
 
 /** BAM binary codec — no Spark dependencies.
@@ -52,13 +52,42 @@ object BamCodec {
     private def refName(id: Int): String =
       if (id < 0 || id >= refNames.length) "*" else refNames(id)
 
+    private var records = 0L
+    private var block = new Array[Byte](512)
+
+    /** Reads the next record's `block_size` field and body into `block`;
+      * returns the size, or -1 at a clean end of input. The size must be
+      * at least 32, the fixed fields (htslib `bam_read1`), and `block`
+      * grows only as bytes arrive, so a corrupt size hits the end of
+      * input before it exhausts memory. Both faults name the record.
+      */
+    private def readBlock(): Int = {
+      val first = in.read()
+      if (first < 0) return -1
+      def corrupt(what: String) = new BamException(s"BAM record ${records + 1}: $what")
+      var blockSize = first
+      for (shift <- 8 to 24 by 8) {
+        val byte = in.read()
+        if (byte < 0) throw corrupt("input ends inside block_size")
+        blockSize |= byte << shift
+      }
+      if (blockSize < 32) throw corrupt(s"block_size $blockSize is below the 32-byte minimum")
+      var got = 0
+      while (got < blockSize) {
+        if (got == block.length)
+          block = java.util.Arrays.copyOf(block, math.min(blockSize.toLong, 2L * got).toInt)
+        val n = in.read(block, got, math.min(block.length, blockSize) - got)
+        if (n < 0) throw corrupt(s"block_size $blockSize but input ends after $got bytes")
+        got += n
+      }
+      records += 1
+      blockSize
+    }
+
     private def parseOne(): SamCodec.SamRecord = {
-      val blockSize =
-        try readLeInt()
-        catch { case _: EOFException => return null }
-      val block = new Array[Byte](blockSize)
-      in.readFully(block)
-      val b = java.nio.ByteBuffer.wrap(block).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      val blockSize = readBlock()
+      if (blockSize < 0) return null
+      val b = java.nio.ByteBuffer.wrap(block, 0, blockSize).order(java.nio.ByteOrder.LITTLE_ENDIAN)
       val refId = b.getInt
       val pos0 = b.getInt
       val lReadName = b.get() & 0xff

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** BIOM sparse-feature-table operators (reference: src/read_biom.cpp,
   * src/BIOMReader.cpp, src/copy_biom.cpp).
@@ -25,7 +26,14 @@ object BiomOps {
     */
   def copyBiom(df: DataFrame, path: String, compression: String = "gzip"): Unit =
     if (path.endsWith(".biom")) Writers.biom(df, path, None, compression)
-    else Writers.biomTable(df, compression).write.mode("overwrite").parquet(path)
+    else {
+      val table = Writers.biomTable(df, compression)
+      Writers.withPlannedRows(table) { rows =>
+        Writers.checkBiomNulls(rows)
+        df.sparkSession.createDataFrame(rows.map(r => Row(r(0), r(1), r(2))),
+          StructType(table.schema.take(3))).write.mode("overwrite").parquet(path)
+      }
+    }
 
   /** read_biom: HDF5 BIOM v2.1 (.biom) via the pure-JVM subset codec,
     * or the documented parquet container → COO relation.

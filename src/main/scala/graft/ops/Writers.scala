@@ -4,14 +4,16 @@ import graft.kernel.{BamWriter, FastxCodec, Hdf5BiomWriter, SamCodec, WarcCodec}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.{col, sum, when}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 import java.io.{BufferedWriter, OutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPOutputStream
-import scala.jdk.CollectionConverters._
 
 /** COPY sinks (2G): FASTQ, FASTA, SAM, BAM, BIOM (HDF5) and WARC.
   *
@@ -24,10 +26,13 @@ import scala.jdk.CollectionConverters._
   * lines from a reference-lengths relation with unknown references
   * auto-added at sentinel length 2^31−1, gzip by `.gz` extension.
   *
-  * Every sink has the reference's lifecycle: a bind step runs once on
-  * the driver before any job (column, option and path checks, the `@SQ`
-  * set, BIOM's canonical table), then the format's [[Encoder]] writes
-  * rows to each output file, in one of two modes ([[copy]]):
+  * Every sink has the reference's lifecycle: a bind step checks
+  * columns, options and paths on the driver before any job, then one
+  * SQL execution of the input's plan ([[withPlannedRows]]) runs the
+  * bind-time jobs (the `@SQ` set, BIOM's NULL check) and the write on
+  * one planned RDD, so they share its shuffles: an input ending in an
+  * exchange is computed once. The format's [[Encoder]] writes rows to
+  * each output file, in one of two modes ([[copy]]):
   *  - single file (`copyX`): rows stream through the driver
   *    (toLocalIterator: row order kept, bounded memory), like the
   *    reference's mutex-serialized writers (src/copy_sam.cpp:689-694);
@@ -73,8 +78,9 @@ object Writers {
 
   /** One format's writer for one output path: writes `rows` there,
     * opening each file through `open(path, gzip)` (fastx opens R1 and
-    * R2 for `{ORIENTATION}`). Built by the bind step from driver-side
-    * values only, so sharded mode can ship it to the executors.
+    * R2 for `{ORIENTATION}`). Built on the driver after the bind-time
+    * jobs, from driver-side values only, so sharded mode can ship it to
+    * the executors.
     */
   private trait Encoder extends Serializable {
     def write(rows: Iterator[Row], path: String, open: (String, Boolean) => OutputStream): Unit
@@ -83,20 +89,40 @@ object Writers {
   private val OrientationToken = "{ORIENTATION}"
   private val ShardToken = "{SHARD}"
 
-  /** The one COPY driver. Checks the `{SHARD}` template, runs `bind`
-    * (which returns the rows to write and their encoder), then writes
-    * `path` from the driver or one file per non-empty partition.
+  /** Runs `body` on the planned rows of `df` inside one SQL execution
+    * of `df`'s plan, as `Dataset.foreachPartition` does: the plan is
+    * built once, every job `body` starts shares its shuffle map stages
+    * (Spark skips the ones already run), and the listener bus shows the
+    * COPY as one query with its plan.
     */
-  private def copy(path: String, sharded: Boolean)(bind: => (DataFrame, Encoder)): Unit = {
+  private[ops] def withPlannedRows[T](df: DataFrame)(body: RDD[Row] => T): T = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("COPY")) {
+      val rowEncoder = ExpressionEncoder(df.schema).resolveAndBind()
+      body(qe.toRdd.mapPartitions(_.map(rowEncoder.createDeserializer())))
+    }
+  }
+
+  /** The one COPY path. Checks the `{SHARD}` template and runs `bind`
+    * (driver-side checks, no job), which returns the rows to write and
+    * a step that runs the bind-time jobs on their planned RDD and gives
+    * the encoder. Then writes `path` from the driver or one file per
+    * non-empty partition.
+    */
+  private def copy(path: String, sharded: Boolean)(
+      bind: => (DataFrame, RDD[Row] => Encoder)): Unit = {
     if (sharded) require(path.contains(ShardToken),
       s"sharded output path must contain $ShardToken: $path")
-    val (df, encoder) = bind
+    val (df, prepare) = bind
     val conf = new SerializableConfiguration(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (sharded) df.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) encoder.write(rows,
-        path.replace(ShardToken, f"${TaskContext.getPartitionId()}%05d"), create(_, conf.value, _))
+    withPlannedRows(df) { rows =>
+      val encoder = prepare(rows)
+      if (sharded) rows.foreachPartition { part =>
+        if (part.hasNext) encoder.write(part,
+          path.replace(ShardToken, f"${TaskContext.getPartitionId()}%05d"), create(_, conf.value, _))
+      }
+      else encoder.write(rows.toLocalIterator, path, create(_, conf.value, _))
     }
-    else encoder.write(df.toLocalIterator().asScala, path, create(_, conf.value, _))
   }
 
   private def textFile(open: (String, Boolean) => OutputStream, path: String,
@@ -152,7 +178,7 @@ object Writers {
         qualOffset.fold(FastxCodec.toFasta(rec, includeComment))(
           FastxCodec.toFastq(rec, _, includeComment))
       }
-      (df, (rows, out, open) => {
+      (df, _ => (rows, out, open) => {
         val files = (if (split) Seq("R1", "R2").map(out.replace(OrientationToken, _))
           else Seq(out)).map(textFile(open, _, compression))
         try rows.foreach { r =>
@@ -170,16 +196,18 @@ object Writers {
   val UnknownReferenceLength: Long = Int.MaxValue.toLong
 
   /** The `@SQ` set shared by every file of one COPY: the
-    * reference-lengths relation in its order, then the data's other
-    * references, sorted, at [[UnknownReferenceLength]].
+    * reference-lengths relation in its order, then the other references
+    * of `rows`, sorted, at [[UnknownReferenceLength]]. One narrow job
+    * over `rows` collects each partition's distinct references.
     */
-  private def references(
-      df: DataFrame, referenceLengths: Option[DataFrame]): Vector[(String, Long)] = {
+  private def references(rows: RDD[Row], schema: StructType,
+      referenceLengths: Option[DataFrame]): Vector[(String, Long)] = {
     val known =
       referenceLengths.toVector.flatMap(_.collect().map(r => r.getString(0) -> r.getLong(1)))
     val knownNames = known.map(_._1).toSet
-    val dataRefs = df.select("reference").distinct().collect()
-      .map(_.getString(0)).filter(r => r != "*" && !knownNames.contains(r)).sorted
+    val ref = schema.fieldIndex("reference")
+    val dataRefs = rows.mapPartitions(part => Iterator(part.map(_.getString(ref)).toSet))
+      .collect().flatten.distinct.filter(r => r != "*" && !knownNames.contains(r)).sorted
     known ++ dataRefs.map(_ -> UnknownReferenceLength)
   }
 
@@ -223,14 +251,18 @@ object Writers {
       referenceLengths: Option[DataFrame], compression: Option[String]): Unit =
     copy(path, sharded) {
       resolveGzip(path, compression)
-      val header = if (!includeHeader) Vector.empty else "@HD\tVN:1.6\tSO:unknown" +:
-        references(df, referenceLengths).map { case (name, len) => s"@SQ\tSN:$name\tLN:$len" }
       val record = samRecords(df.schema)
-      (df, (rows, out, open) => {
-        val w = textFile(open, out, compression)
-        try (header.iterator ++ rows.map(r => SamCodec.toLine(record(r)))).foreach { l =>
-          w.write(l); w.newLine()
-        } finally w.close()
+      (df, planned => {
+        val header = if (!includeHeader) Vector.empty else "@HD\tVN:1.6\tSO:unknown" +:
+          references(planned, df.schema, referenceLengths).map { case (name, len) =>
+            s"@SQ\tSN:$name\tLN:$len"
+          }
+        (rows, out, open) => {
+          val w = textFile(open, out, compression)
+          try (header.iterator ++ rows.map(r => SamCodec.toLine(record(r)))).foreach { l =>
+            w.write(l); w.newLine()
+          } finally w.close()
+        }
       })
     }
 
@@ -257,31 +289,42 @@ object Writers {
       // 0–9; -1 = library default
       if (compressionLevel < -1 || compressionLevel > 9) throw new IllegalArgumentException(
         s"COMPRESSION_LEVEL must be between 0 and 9, got $compressionLevel")
-      val refs = references(df, referenceLengths)
       val record = samRecords(df.schema)
-      (df, (rows, out, open) => {
-        val w = new BamWriter(open(out, false), refs, compressionLevel)
-        try rows.foreach(r => w.writeRecord(record(r))) finally w.close()
+      (df, planned => {
+        val refs = references(planned, df.schema, referenceLengths)
+        (rows, out, open) => {
+          val w = new BamWriter(open(out, false), refs, compressionLevel)
+          try rows.foreach(r => w.writeRecord(record(r))) finally w.close()
+        }
       })
     }
 
   /** COPY BIOM bind (reference: src/copy_biom.cpp, README.md:2588-2594)
-    * for every BIOM path: checks `compression` and the columns, rejects
-    * NULLs, and returns the canonical table (duplicate (sample,
-    * feature) values summed, zeros dropped).
+    * for every BIOM path: checks `compression` and the columns, and
+    * returns the canonical table (duplicate (sample, feature) values
+    * summed, zeros dropped) with a fourth column, `nulls`, counting each
+    * group's input rows with a NULL. A group with such rows is kept
+    * whatever its sum, so [[checkBiomNulls]] sees all of them.
     */
   private[ops] def biomTable(df: DataFrame, compression: String): DataFrame = {
     Hdf5BiomWriter.deflateLevel(compression)
     val cols = df.schema.fieldNames.toSet
     for (c <- Seq("sample_id", "feature_id", "value"))
       require(cols.contains(c), s"BIOM output requires column $c")
-    val nulls = df.filter(
-      col("sample_id").isNull || col("feature_id").isNull || col("value").isNull).count()
+    val hasNull = col("sample_id").isNull || col("feature_id").isNull || col("value").isNull
+    df.groupBy("sample_id", "feature_id")
+      .agg(sum(col("value")).as("value"), sum(when(hasNull, 1).otherwise(0)).as("nulls"))
+      .filter(col("value") =!= 0.0 || col("nulls") > 0)
+  }
+
+  /** Rejects NULLs before any file opens: one job totals the `nulls`
+    * column of [[biomTable]]'s planned rows, which is the raw count of
+    * offending input rows. The rows then written have `nulls` 0.
+    */
+  private[ops] def checkBiomNulls(table: RDD[Row]): Unit = {
+    val nulls = table.map(_.getLong(3)).fold(0L)(_ + _)
     if (nulls > 0)
       throw new IllegalArgumentException(s"BIOM output forbids NULLs ($nulls offending rows)")
-    df.groupBy("sample_id", "feature_id")
-      .agg(sum(col("value")).as("value"))
-      .filter(col("value") =!= 0.0)
   }
 
   /** Sharded COPY BIOM: the canonical table (as [[BiomOps.copyBiom]])
@@ -300,10 +343,13 @@ object Writers {
     copy(path, shards.isDefined) {
       shards.foreach(n => require(n > 0, s"numShards must be positive: $n"))
       val table = biomTable(df, compression)
-      (shards.fold(table)(table.repartition(_, col("sample_id"))), (rows, out, open) => {
-        val coo = rows.map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toVector
-        val o = open(out, false)
-        try o.write(Hdf5BiomWriter.write(coo, compression = compression)) finally o.close()
+      (shards.fold(table)(table.repartition(_, col("sample_id"))), planned => {
+        checkBiomNulls(planned)
+        (rows, out, open) => {
+          val coo = rows.map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toVector
+          val o = open(out, false)
+          try o.write(Hdf5BiomWriter.write(coo, compression = compression)) finally o.close()
+        }
       })
     }
 
@@ -339,7 +385,7 @@ object Writers {
         if (default == null) s.fieldIndex(c) else s.fieldNames.indexOf(c)
       }
       val payload = s.fieldIndex("payload")
-      (df, (rows, out, open) => {
+      (df, _ => (rows, out, open) => {
         val o = open(out, false)
         try WarcCodec.write(o, rows.map { r =>
           (WarcHeaders.zip(columns).map { case ((header, _, default), i) =>

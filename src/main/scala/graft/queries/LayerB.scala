@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Reference, Tables}
 import graft.functions._
 import graft.ops.{GenomeCoverage, Gff, Jplace, Woltka}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -20,6 +20,14 @@ object LayerB {
   /** Synthetic SAM flag word: 12 meaningful bits from o_orderkey. */
   private def withFlags(df: DataFrame): DataFrame =
     df.withColumn("flags", (col("o_orderkey") % 4096).cast("int"))
+
+  // committed fixtures of the reference checkout read by b25/b27/b28/b33/b34/b35
+  private val WoltkaParquet = Reference("data/sam/miint-woltka-test.parquet")
+  private val BiomFixture = Reference("data/biom/test.biom")
+  private val SffFixture = Reference("data/sff/basic_2reads.sff")
+  private val BamFixture = Reference("data/sam/foo_has_header.bam")
+  private val CeFasta = Reference("ext/htslib-1.22.1/test/ce.fa")
+  private val RangeCram = Reference("ext/htslib-1.22.1/test/range.cram")
 
   val queries: Seq[QueryDef] = Seq(
     // 2D: 13 SAM-flag predicates (native bit-test column expressions) —
@@ -713,7 +721,7 @@ object LayerB {
     QueryDef(
       "b28_read_biom_hdf5",
       (s, d) =>
-        graft.ops.BiomOps.readBiomHdf5(s, "/root/reference/data/biom/test.biom"),
+        graft.ops.BiomOps.readBiomHdf5(s, BiomFixture),
       Some("""SELECT * FROM (VALUES
              |  ('Sample1','GG_OTU_2',5.0),('Sample1','GG_OTU_4',2.0),
              |  ('Sample2','GG_OTU_2',1.0),('Sample2','GG_OTU_4',1.0),
@@ -723,7 +731,8 @@ object LayerB {
              |  ('Sample4','GG_OTU_3',4.0),('Sample5','GG_OTU_2',3.0),
              |  ('Sample6','GG_OTU_2',1.0),('Sample6','GG_OTU_3',2.0),
              |  ('Sample6','GG_OTU_4',1.0)
-             |) AS t(sample_id, feature_id, value)""".stripMargin)),
+             |) AS t(sample_id, feature_id, value)""".stripMargin),
+      inputs = Seq(BiomFixture)),
 
     // 2B/2G: BIOM COO round-trip over the documented parquet container
     // — duplicate (sample, feature) pairs summed, zeros dropped.
@@ -753,14 +762,14 @@ object LayerB {
       "b27_flagship_pipeline",
       (s, d) => {
         val aln = s.read
-          .parquet("/root/reference/data/sam/miint-woltka-test.parquet")
+          .parquet(WoltkaParquet)
           .filter(AlignmentFlags.alignmentIsPrimary(col("flags").cast("int"))
             && col("mapq").cast("int") >= 1)
         Woltka.woltkaOguPerSample(aln, "common_sample_name", "read_id")
           .select(col("sample_id"), col("feature_id"), round(col("value"), 4).as("value"))
       },
-      Some("""WITH aln AS (
-             |  SELECT * FROM read_parquet('/root/reference/data/sam/miint-woltka-test.parquet')
+      Some(s"""WITH aln AS (
+             |  SELECT * FROM read_parquet('$WoltkaParquet')
              |   WHERE (CAST(flags AS INTEGER) & 256) = 0
              |     AND (CAST(flags AS INTEGER) & 2048) = 0
              |     AND CAST(mapq AS INTEGER) >= 1),
@@ -774,7 +783,8 @@ object LayerB {
              |         1.0 / COUNT(*) OVER (PARTITION BY qid, is_fwd) AS lv
              |    FROM base)
              |SELECT sample_id, feature_id, ROUND(SUM(lv), 4) AS value
-             |  FROM wc GROUP BY sample_id, feature_id""".stripMargin)),
+             |  FROM wc GROUP BY sample_id, feature_id""".stripMargin),
+      inputs = Seq(WoltkaParquet)),
 
     // 2B: read_sequences_sff over the reference's committed binary
     // fixture — expected rows pinned from test/sql/read_sequences_sff
@@ -782,7 +792,7 @@ object LayerB {
     QueryDef(
       "b25_read_sff",
       (s, d) =>
-        s.read.format("sff").load("/root/reference/data/sff/basic_2reads.sff")
+        s.read.format("sff").load(SffFixture)
           // to_json: list cells crash the driver's pandas sort (ADVICE r2)
           .withColumn("qual1", to_json(col("qual1")))
           .withColumn("qual2", to_json(col("qual2"))),
@@ -795,7 +805,8 @@ object LayerB {
              |   CAST(NULL AS VARCHAR),
              |   CAST(to_json(CAST([35,35,30,40,38,33,30,28,35,30,25,20] AS SMALLINT[])) AS VARCHAR),
              |   CAST(NULL AS VARCHAR))
-             |) AS t(sequence_index, read_id, comment, sequence1, sequence2, qual1, qual2)""".stripMargin)),
+             |) AS t(sequence_index, read_id, comment, sequence1, sequence2, qual1, qual2)""".stripMargin),
+      inputs = Seq(SffFixture)),
 
     // 2G: COPY BAM round-trip — binary BGZF writer ∘ reader = identity
     // on the same lineitem-derived alignments as b15.
@@ -925,7 +936,7 @@ object LayerB {
       "b33_read_bam",
       (s, d) =>
         s.read.format("alignments")
-          .load("/root/reference/data/sam/foo_has_header.bam"),
+          .load(BamFixture),
       Some("""SELECT * FROM (VALUES
              |  ('foo-1', 0, 'G1234', CAST(2 AS BIGINT), CAST(12 AS BIGINT), CAST(60 AS SMALLINT),
              |   '10M', '*', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
@@ -953,7 +964,8 @@ object LayerB {
              |   CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR))
              |) AS t(read_id, flags, reference, position, stop_position, mapq, cigar,
              |       mate_reference, mate_position, template_length, tag_as, tag_xs, tag_ys,
-             |       tag_xn, tag_xm, tag_xo, tag_xg, tag_nm, tag_yt, tag_md, tag_sa)""".stripMargin)),
+             |       tag_xn, tag_xm, tag_xo, tag_xg, tag_nm, tag_yt, tag_md, tag_sa)""".stripMargin),
+      inputs = Seq(BamFixture)),
 
     // 2B: read_alignments over CRAM 3.0 — the pure-JVM CramCodec
     // (gzip+rANS4x8 blocks, multi-ref slices, reference-based decode
@@ -966,8 +978,8 @@ object LayerB {
       "b34_read_cram",
       (s, d) =>
         s.read.format("alignments")
-          .option("reference_fasta", "/root/reference/ext/htslib-1.22.1/test/ce.fa")
-          .load("/root/reference/ext/htslib-1.22.1/test/range.cram")
+          .option("reference_fasta", CeFasta)
+          .load(RangeCram)
           .groupBy("reference").agg(
             count(lit(1)).as("n"),
             sum("position").as("sum_pos"),
@@ -985,7 +997,8 @@ object LayerB {
              |   CAST(2398 AS BIGINT), CAST(14 AS BIGINT), CAST(165 AS BIGINT), CAST(150 AS BIGINT)),
              |  ('CHROMOSOME_IV',  CAST(19 AS BIGINT), CAST(31196 AS BIGINT), CAST(2361 AS BIGINT),
              |   CAST(68 AS BIGINT), CAST(1 AS BIGINT), CAST(76 AS BIGINT), CAST(58 AS BIGINT))
-             |) AS t(reference, n, sum_pos, sum_flags, sum_mapq, sum_nm, sum_cigar_len, sum_md_len)""".stripMargin)),
+             |) AS t(reference, n, sum_pos, sum_flags, sum_mapq, sum_nm, sum_cigar_len, sum_md_len)""".stripMargin),
+      inputs = Seq(CeFasta, RangeCram)),
 
     // 2B: every CRAM container version htslib can write (2.1, 3.1 in
     // all three encoder profiles, draft 4.0 ditto) decodes the same
@@ -998,7 +1011,7 @@ object LayerB {
       "b35_read_cram_versions",
       (s, d) =>
         s.read.format("alignments")
-          .option("reference_fasta", "/root/reference/ext/htslib-1.22.1/test/ce.fa")
+          .option("reference_fasta", CeFasta)
           .option("include_filepath", "true")
           .load("/root/repo/src/test/resources/graft/cram31/ce1000_*.cram")
           .withColumn("version",
@@ -1016,7 +1029,8 @@ object LayerB {
              |  CAST(1531 AS BIGINT) AS sum_nm, CAST(4051 AS BIGINT) AS sum_cigar_len,
              |  CAST(5798 AS BIGINT) AS sum_md_len
              |FROM (VALUES ('v21'), ('v31'), ('v31_archive'), ('v31_small'),
-             |             ('v40'), ('v40_archive'), ('v40_small')) AS t(version)""".stripMargin))
+             |             ('v40'), ('v40_archive'), ('v40_small')) AS t(version)""".stripMargin),
+      inputs = Seq(CeFasta))
   )
 
   /** Deterministic pseudo-random genomes (LCG — stable across JVMs). */

@@ -10,7 +10,7 @@ import org.scalatest.Assertions.assume
   * and where it exists the test runs unchanged.
   */
 object ReferenceFixtures {
-  private val root: Path = Paths.get("/root/reference")
+  private val root: Path = Paths.get(Reference.Root)
 
   /** `root/rel`; cancels the calling test when it does not exist. */
   def path(rel: String): Path = {

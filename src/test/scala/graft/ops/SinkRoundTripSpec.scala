@@ -1,14 +1,22 @@
 package graft.ops
 
 import graft.SparkFixture
+import graft.kernel.BamCodec
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import java.io.{ByteArrayInputStream, File}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, File}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
-import java.util.zip.GZIPInputStream
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+import scala.jdk.CollectionConverters._
 
 /** The COPY sinks' shared contract, checked from in-memory rows (no
   * fixtures) for FASTQ, FASTA, SAM, BAM, BIOM and WARC: a single-file
@@ -17,7 +25,8 @@ import java.util.zip.GZIPInputStream
   * back through `sources/` give the input; an empty DataFrame gives an
   * empty, header-only or EOF-only file; COMPRESSION and
   * COMPRESSION_LEVEL are honored or rejected on the driver before any
-  * job; BAM records carry htslib's `bin`.
+  * job; BAM records carry htslib's `bin`; a COPY reads its input once,
+  * in one SQL execution of its plan.
   */
 class SinkRoundTripSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
@@ -222,6 +231,40 @@ class SinkRoundTripSpec extends AnyFunSuite {
     assert(e.getMessage.contains("badop") && e.getMessage.contains("Q"), e.getMessage)
   }
 
+  test("BAM reader: a corrupt block_size is a BamException naming the record") {
+    val p = s"${tmp()}/ok.bam"
+    Writers.copyBam(df(samSchema, samRows), p, refLens)
+    val raw = gunzip(bytes(p)).toArray
+    val le = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
+    le.position(8 + le.getInt(4))
+    for (_ <- 0 until le.getInt()) le.position(le.position() + 4 + le.getInt() + 4)
+    val second = le.position() + 4 + le.getInt(le.position()) // record 2's block_size
+    def reader(b: Array[Byte]) = {
+      val gz = new ByteArrayOutputStream()
+      val out = new GZIPOutputStream(gz)
+      out.write(b); out.close()
+      new BamCodec.Reader(new ByteArrayInputStream(gz.toByteArray), false)
+    }
+    def withSize(blockSize: Int) = {
+      val b = raw.clone()
+      ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).putInt(second, blockSize)
+      b
+    }
+    assert(reader(raw).map(_.readId).toSeq == samRows.map(_.getString(0)))
+    for ((size, message) <- Seq(
+        7 -> "BAM record 2: block_size 7 is below the 32-byte minimum",
+        -5 -> "BAM record 2: block_size -5 is below the 32-byte minimum",
+        Int.MaxValue -> s"BAM record 2: block_size ${Int.MaxValue} but input ends after")) {
+      val r = reader(withSize(size))
+      assert(r.next().readId == "a1")
+      val e = intercept[BamCodec.BamException](r.toList)
+      assert(e.getMessage.startsWith(message), e.getMessage)
+    }
+    // input ends inside record 2's block_size
+    val e = intercept[BamCodec.BamException](reader(raw.take(second + 2)).toList)
+    assert(e.getMessage == "BAM record 2: input ends inside block_size", e.getMessage)
+  }
+
   private val warcSchema = StructType(Seq(
     field("target_uri", StringType), field("payload", BinaryType),
     field("warc_type", StringType), field("content_type", StringType),
@@ -284,17 +327,120 @@ class SinkRoundTripSpec extends AnyFunSuite {
   }
 
   test("BIOM NULLs are rejected in both modes") {
-    for (bad <- Seq(Row(null, "f1", 1.0), Row("s1", null, 1.0), Row("s1", "f1", null))) {
-      val rows = df(biomSchema, biomRows :+ bad)
-      val dir = tmp()
-      for (write <- Seq[() => Unit](
-          () => BiomOps.copyBiom(rows, s"$dir/t.biom"),
-          () => BiomOps.copyBiom(rows, s"$dir/t.biomq"),
-          () => Writers.copyBiomSharded(rows, s"$dir/t-{SHARD}.biom", numShards = 2))) {
-        val e = intercept[IllegalArgumentException](write())
-        assert(e.getMessage.contains("forbids NULLs"), e.getMessage)
+    val bad = Seq(
+      Row("s1", "f1", null), // joins a group of non-NULL values
+      Row("s4", "f9", null), Row("s4", "f9", null), // a group of NULLs only
+      Row(null, "f1", 1.0), Row("s1", null, 2.0), Row(null, null, null))
+    val rows = df(biomSchema, biomRows.take(4), bad, biomRows.drop(4))
+    val dir = tmp()
+    for (write <- Seq[() => Unit](
+        () => BiomOps.copyBiom(rows, s"$dir/t.biom"),
+        () => BiomOps.copyBiom(rows, s"$dir/t.biomq"),
+        () => Writers.copyBiomSharded(rows, s"$dir/t-{SHARD}.biom", numShards = 2))) {
+      val e = intercept[IllegalArgumentException](write())
+      assert(e.getMessage == "BIOM output forbids NULLs (6 offending rows)", e.getMessage)
+    }
+    assert(listed(dir).isEmpty)
+  }
+
+  /** What one COPY did, from the listener bus: the input records its
+    * tasks read, each job's SQL execution id and root execution id, and
+    * how many SQL executions it started that have no parent.
+    */
+  private case class Observed(recordsRead: Long, jobExecutions: Seq[Option[String]],
+      jobRoots: Set[Option[String]], rootExecutions: Int) {
+    def jobs: Int = jobExecutions.length
+  }
+
+  private def observe(write: => Unit): Observed = {
+    val sc = spark.sparkContext
+    val group = s"sink-observe-${java.util.UUID.randomUUID()}"
+    def prop(e: SparkListenerJobStart, key: String) = Option(e.properties.getProperty(key))
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val tasks = new ConcurrentLinkedQueue[(Int, Long)]()
+    val executions = new ConcurrentLinkedQueue[SparkListenerSQLExecutionStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (prop(e, "spark.jobGroup.id").contains(group)) jobs.add(e)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) tasks.add(e.stageId -> e.taskMetrics.inputMetrics.recordsRead)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart if x.jobGroupId.contains(group) => executions.add(x)
+        case _ =>
       }
-      assert(listed(dir).isEmpty)
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "observe")
+    try write
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val js = jobs.asScala.toSeq
+    val stages = js.flatMap(_.stageIds).toSet
+    Observed(tasks.asScala.collect { case (stage, n) if stages(stage) => n }.sum,
+      js.map(prop(_, SQLExecution.EXECUTION_ID_KEY)),
+      js.map(prop(_, SQLExecution.EXECUTION_ROOT_ID_KEY)).toSet,
+      executions.asScala.count(x => x.rootExecutionId.forall(_ == x.executionId)))
+  }
+
+  test("a COPY reads its input once: bind-time jobs and the write share one planned input") {
+    val dir = tmp()
+    val n = 240
+    val rows = (0 until n).map(i => aln(f"r$i%03d", 0, s"chr${"ABC"(i % 3)}", 100L + i, "10M"))
+    Writers.copyBam(df(samSchema, rows), s"$dir/in.bam")
+    Writers.copySam(df(samSchema, rows), s"$dir/in.sam")
+    def check(what: String, maxJobs: Int)(write: => Unit): Unit = {
+      val o = observe(write)
+      info(s"$what: ${o.jobs} jobs, ${o.recordsRead} records read")
+      assert(o.recordsRead == n, s"$what read ${o.recordsRead} input records, not $n")
+      assert(o.jobs <= maxJobs, s"$what ran ${o.jobs} jobs")
+    }
+    for (in <- Seq("in.bam", "in.sam")) {
+      def input = read("alignments", s"$dir/$in").repartition(3)
+      // the input's exchange, the @SQ set, then the write (one job per partition)
+      check(s"copyBamSharded($in)", 3)(
+        Writers.copyBamSharded(input, s"$dir/$in-out/part-{SHARD}.bam"))
+      check(s"copySam($in)", 2 + 3)(Writers.copySam(input, s"$dir/$in-out.sam"))
+      assert(alignments(s"$dir/$in-out.sam").sortBy(_.head.toString) == rows.map(_.toSeq))
+    }
+    def coo = read("alignments", s"$dir/in.bam")
+      .groupBy(col("reference").as("sample_id"), (col("position") % 5).cast("string").as("feature_id"))
+      .agg(count(lit(1)).cast("double").as("value"))
+    val expected = coo.collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+    // the aggregation's exchange, the NULL check, then the write; sharding adds an exchange
+    check("copyBiom(.biom)", 2 + 4)(BiomOps.copyBiom(coo, s"$dir/t.biom"))
+    check("copyBiom(.biomq)", 3)(BiomOps.copyBiom(coo, s"$dir/t.biomq"))
+    check("copyBiomSharded", 4)(Writers.copyBiomSharded(coo, s"$dir/t-{SHARD}.biom", 2))
+    assert(biom(s"$dir/t.biom") == expected && biom(s"$dir/t.biomq") == expected)
+    assert(listed(dir).filter(_.startsWith("t-")).flatMap(f => biom(s"$dir/$f")).toSet == expected)
+  }
+
+  test("every COPY runs its jobs in one SQL execution of its input's plan") {
+    val dir = tmp()
+    def fq = df(schemaOf(0, 1, 2, 3), columns(0, 1, 2, 3)(fqRows))
+    def sam = df(samSchema, samRows)
+    def warc = df(warcSchema, warcRows)
+    def coo = df(biomSchema, biomRows).groupBy("sample_id", "feature_id").agg(sum("value").as("value"))
+    for ((what, write) <- Seq[(String, () => Unit)](
+        "fastq" -> (() => Writers.copyFastq(fq, s"$dir/x.fq")),
+        "fasta sharded" -> (() => Writers.copyFastaSharded(fq, s"$dir/{SHARD}.fa")),
+        "sam" -> (() => Writers.copySam(sam, s"$dir/x.sam", referenceLengths = refLens)),
+        "sam sharded" -> (() => Writers.copySamSharded(sam, s"$dir/{SHARD}.sam")),
+        "bam" -> (() => Writers.copyBam(sam, s"$dir/x.bam", refLens)),
+        "bam sharded" -> (() => Writers.copyBamSharded(sam, s"$dir/{SHARD}.bam")),
+        "warc" -> (() => Writers.copyWarc(warc, s"$dir/x.warc")),
+        "warc sharded" -> (() => Writers.copyWarcSharded(warc, s"$dir/{SHARD}.warc")),
+        "biom" -> (() => BiomOps.copyBiom(coo, s"$dir/x.biom")),
+        "biomq" -> (() => BiomOps.copyBiom(coo, s"$dir/x.biomq")),
+        "biom sharded" -> (() => Writers.copyBiomSharded(coo, s"$dir/{SHARD}.biom", 2)))) {
+      val o = observe(write())
+      assert(o.jobs > 0 && o.jobExecutions.forall(_.isDefined),
+        s"$what ran a job outside any SQL execution: ${o.jobExecutions}")
+      assert(o.jobRoots.size == 1 && o.rootExecutions == 1,
+        s"$what: ${o.rootExecutions} SQL executions, job roots ${o.jobRoots}")
     }
   }
 
