@@ -12,7 +12,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *   spark.sql.extensions=graft.GraftExtensions
   * (cluster-wide, no per-session registration call needed). The exact
   * same builders back MiintRegistry.registerAll — one definition in
-  * GraftFunctionBuilders, so the two paths cannot drift.
+  * GraftFunctionBuilders, so the two paths cannot drift. It injects
+  * functions only: no planner strategy or rule, so every query plans
+  * with Spark's own physical operators (a frameless window such as
+  * woltka_ogu's COUNT(*) OVER (PARTITION BY ...) runs on WindowExec).
   *
   * Reference SQL surface: src/miint_extension.cpp:65-117.
   */
@@ -22,7 +25,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(fn.name),
         new ExpressionInfo("graft", null, fn.name, fn.usage, ""),
         fn.builder))
-    // hash (sort-free) evaluation of frameless window aggregates
-    ext.injectPlannerStrategy(_ => graft.plans.FramelessWindowStrategy)
   }
 }

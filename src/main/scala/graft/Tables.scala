@@ -93,3 +93,14 @@ object Reference {
   /** `Root/rel`. */
   def apply(rel: String): String = s"$Root/$rel"
 }
+
+/** The checkout this program runs from: the working directory, which
+  * `sbt run` and `sbt test` set to the project root. The one root for
+  * the in-repo test fixtures that registered queries read.
+  */
+object Checkout {
+  val Root: String = java.nio.file.Paths.get("").toAbsolutePath.toString
+
+  /** `Root/rel`. */
+  def apply(rel: String): String = s"$Root/$rel"
+}

@@ -22,7 +22,6 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.FramelessWindowStrategy.install(spark)
     new java.io.File(outDir).mkdirs()
     val inputs = SparkEntry.allQueryDefs.map(q => q.name -> q.inputs).toMap
     SparkEntry.queries

@@ -26,34 +26,50 @@ object BamCodec {
     private var refNames: Array[String] = _
     private var nextRec: SamCodec.SamRecord = _
     private var finished = false
+    private var records = 0L
+    private var block = new Array[Byte](512)
 
     readHeader()
 
     private def readLeInt(): Int = Integer.reverseBytes(in.readInt())
     private def readLeShort(): Int = java.lang.Short.reverseBytes(in.readShort()) & 0xffff
 
+    /** Reads the header: magic, `l_text` and text, `n_ref` and each
+      * reference's `l_name`, name and `l_ref`. Negative sizes and an
+      * `l_name` below 1 (the name's NUL) are rejected, and the names
+      * grow only as they arrive, so a corrupt size hits the end of input
+      * before it exhausts memory. Every fault is a [[BamException]]
+      * naming the field (and the reference, counted from 1).
+      */
     private def readHeader(): Unit = {
-      val magic = new Array[Byte](4)
-      in.readFully(magic)
-      if (!(magic(0) == 'B' && magic(1) == 'A' && magic(2) == 'M' && magic(3) == 1))
-        throw new BamException("Invalid BAM magic")
-      val lText = readLeInt()
-      in.skipNBytes(lText.toLong)
-      val nRef = readLeInt()
-      refNames = Array.fill(nRef) {
-        val lName = readLeInt()
-        val name = new Array[Byte](lName)
-        in.readFully(name)
-        readLeInt() // l_ref unused for text reconstruction
-        new String(name, 0, lName - 1, "UTF-8") // strip trailing NUL
+      def corrupt(what: String) = new BamException(s"BAM header: $what")
+      try {
+        val magic = new Array[Byte](4)
+        in.readFully(magic)
+        if (!(magic(0) == 'B' && magic(1) == 'A' && magic(2) == 'M' && magic(3) == 1))
+          throw new BamException("Invalid BAM magic")
+        val lText = readLeInt()
+        if (lText < 0) throw corrupt(s"l_text $lText is negative")
+        in.skipNBytes(lText.toLong)
+        val nRef = readLeInt()
+        if (nRef < 0) throw corrupt(s"n_ref $nRef is negative")
+        val names = Array.newBuilder[String]
+        for (i <- 1 to nRef) {
+          def ref(what: String) = corrupt(s"reference $i: $what")
+          val lName = readLeInt()
+          if (lName < 1) throw ref(s"l_name $lName is below 1")
+          fill(lName, s"l_name $lName", ref)
+          readLeInt() // l_ref unused for text reconstruction
+          names += new String(block, 0, lName - 1, "UTF-8") // strip trailing NUL
+        }
+        refNames = names.result()
+      } catch {
+        case _: java.io.EOFException => throw corrupt("input ends inside the header")
       }
     }
 
     private def refName(id: Int): String =
       if (id < 0 || id >= refNames.length) "*" else refNames(id)
-
-    private var records = 0L
-    private var block = new Array[Byte](512)
 
     /** Reads the next record's `block_size` field and body into `block`;
       * returns the size, or -1 at a clean end of input. The size must be
@@ -72,16 +88,24 @@ object BamCodec {
         blockSize |= byte << shift
       }
       if (blockSize < 32) throw corrupt(s"block_size $blockSize is below the 32-byte minimum")
-      var got = 0
-      while (got < blockSize) {
-        if (got == block.length)
-          block = java.util.Arrays.copyOf(block, math.min(blockSize.toLong, 2L * got).toInt)
-        val n = in.read(block, got, math.min(block.length, blockSize) - got)
-        if (n < 0) throw corrupt(s"block_size $blockSize but input ends after $got bytes")
-        got += n
-      }
+      fill(blockSize, s"block_size $blockSize", corrupt)
       records += 1
       blockSize
+    }
+
+    /** Reads `size` bytes into `block`, growing it only as bytes arrive;
+      * an early end of input is `corrupt("<field> but input ends after
+      * <n> bytes")`.
+      */
+    private def fill(size: Int, field: String, corrupt: String => BamException): Unit = {
+      var got = 0
+      while (got < size) {
+        if (got == block.length)
+          block = java.util.Arrays.copyOf(block, math.min(size.toLong, 2L * got).toInt)
+        val n = in.read(block, got, math.min(block.length, size) - got)
+        if (n < 0) throw corrupt(s"$field but input ends after $got bytes")
+        got += n
+      }
     }
 
     private def parseOne(): SamCodec.SamRecord = {

@@ -195,24 +195,44 @@ object Writers {
     */
   val UnknownReferenceLength: Long = Int.MaxValue.toLong
 
+  /** A SAM/BAM COPY input row whose `reference` is NULL, named by its
+    * `read_id`. SAM spells an unplaced read's reference `*`; a NULL has
+    * no SAM or BAM spelling.
+    */
+  final class NullReferenceException(val readId: String) extends IllegalArgumentException(
+    s"SAM/BAM output forbids a NULL reference column (read_id $readId); " +
+      "write '*' for an unplaced read")
+
   /** The `@SQ` set shared by every file of one COPY: the
     * reference-lengths relation in its order, then the other references
     * of `rows`, sorted, at [[UnknownReferenceLength]]. One narrow job
-    * over `rows` collects each partition's distinct references.
+    * over `rows` collects each partition's distinct references and the
+    * read_id of its first row with a NULL reference, which fails the
+    * COPY on the driver before any file opens.
     */
   private def references(rows: RDD[Row], schema: StructType,
       referenceLengths: Option[DataFrame]): Vector[(String, Long)] = {
     val known =
       referenceLengths.toVector.flatMap(_.collect().map(r => r.getString(0) -> r.getLong(1)))
     val knownNames = known.map(_._1).toSet
-    val ref = schema.fieldIndex("reference")
-    val dataRefs = rows.mapPartitions(part => Iterator(part.map(_.getString(ref)).toSet))
-      .collect().flatten.distinct.filter(r => r != "*" && !knownNames.contains(r)).sorted
+    val (ref, id) = (schema.fieldIndex("reference"), schema.fieldIndex("read_id"))
+    val seen = rows.mapPartitions { part =>
+      val names = Set.newBuilder[String]
+      var nullRead: Option[String] = None
+      while (nullRead.isEmpty && part.hasNext) {
+        val r = part.next()
+        if (r.isNullAt(ref)) nullRead = Some(r.getString(id)) else names += r.getString(ref)
+      }
+      Iterator((names.result(), nullRead))
+    }.collect()
+    seen.flatMap(_._2).headOption.foreach(read => throw new NullReferenceException(read))
+    val dataRefs = seen.flatMap(_._1).distinct.filter(r => r != "*" && !knownNames.contains(r)).sorted
     known ++ dataRefs.map(_ -> UnknownReferenceLength)
   }
 
   /** Row → SAM record, column positions resolved once; the 9 mandatory
-    * SAM columns are required, absent tag_* columns are None.
+    * SAM columns are required, absent tag_* columns are None. A NULL
+    * `reference` is a [[NullReferenceException]].
     */
   private def samRecords(s: StructType): Row => SamCodec.SamRecord = {
     val Seq(id, flags, ref, pos, mapq, cigar, mateRef, matePos, tlen) = Seq("read_id", "flags",
@@ -222,6 +242,7 @@ object Writers {
       "tag_nm").map(s.fieldNames.indexOf(_))
     val strs = Array("tag_yt", "tag_md", "tag_sa").map(s.fieldNames.indexOf(_))
     r => {
+      if (r.isNullAt(ref)) throw new NullReferenceException(r.getString(id))
       def long(i: Int): Long = r.getAs[Number](i).longValue()
       def int(j: Int) = if (ints(j) < 0 || r.isNullAt(ints(j))) None else Some(long(ints(j)))
       def str(j: Int) = if (strs(j) < 0) None else Option(r.getString(strs(j)))

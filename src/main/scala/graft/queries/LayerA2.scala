@@ -1305,8 +1305,7 @@ object LayerA2 {
     // Spark does not. The idiomatic composition is
     // size(collect_set(x)) over the same partition: collect_set
     // dedups and ignores NULLs exactly as COUNT(DISTINCT) does, and
-    // the frameless partition aggregate stays a single hash-window
-    // pass (no sort) under the installed FramelessWindow strategy.
+    // the frameless partition aggregate stays one WindowExec pass.
     QueryDef(
       "a76_window_count_distinct",
       (s, d) => {

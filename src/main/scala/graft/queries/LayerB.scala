@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Reference, Tables}
+import graft.{Checkout, QueryDef, Reference, Tables}
 import graft.functions._
 import graft.ops.{GenomeCoverage, Gff, Jplace, Woltka}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -28,6 +28,8 @@ object LayerB {
   private val BamFixture = Reference("data/sam/foo_has_header.bam")
   private val CeFasta = Reference("ext/htslib-1.22.1/test/ce.fa")
   private val RangeCram = Reference("ext/htslib-1.22.1/test/range.cram")
+  // in-repo CRAMs of every container version, read by b35
+  private val Cram31Dir = Checkout("src/test/resources/graft/cram31")
 
   val queries: Seq[QueryDef] = Seq(
     // 2D: 13 SAM-flag predicates (native bit-test column expressions) —
@@ -1013,7 +1015,7 @@ object LayerB {
         s.read.format("alignments")
           .option("reference_fasta", CeFasta)
           .option("include_filepath", "true")
-          .load("/root/repo/src/test/resources/graft/cram31/ce1000_*.cram")
+          .load(s"$Cram31Dir/ce1000_*.cram")
           .withColumn("version",
             regexp_extract(col("filepath"), "ce1000_(v[0-9]+(_[a-z]+)?)\\.cram$", 1))
           .groupBy("version").agg(
@@ -1030,7 +1032,7 @@ object LayerB {
              |  CAST(5798 AS BIGINT) AS sum_md_len
              |FROM (VALUES ('v21'), ('v31'), ('v31_archive'), ('v31_small'),
              |             ('v40'), ('v40_archive'), ('v40_small')) AS t(version)""".stripMargin),
-      inputs = Seq(CeFasta))
+      inputs = Seq(CeFasta, s"$Cram31Dir/ce1000_v31.cram"))
   )
 
   /** Deterministic pseudo-random genomes (LCG — stable across JVMs). */

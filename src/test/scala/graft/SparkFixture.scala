@@ -12,6 +12,4 @@ object SparkFixture {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
-
-  graft.plans.FramelessWindowStrategy.install(spark)
 }

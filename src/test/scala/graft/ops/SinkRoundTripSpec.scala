@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkFixture
-import graft.kernel.BamCodec
+import graft.kernel.{BamCodec, BgzfWriter}
 import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
   SparkListenerTaskEnd}
@@ -263,6 +263,62 @@ class SinkRoundTripSpec extends AnyFunSuite {
     // input ends inside record 2's block_size
     val e = intercept[BamCodec.BamException](reader(raw.take(second + 2)).toList)
     assert(e.getMessage == "BAM record 2: input ends inside block_size", e.getMessage)
+  }
+
+  test("BAM reader: corrupt header sizes are BamExceptions naming the field") {
+    // magic, l_text + "@CO", n_ref, then chrA (l_name 5) and chrB (l_name `lName2`)
+    def header(lText: Int = 3, nRef: Int = 2, lName2: Int = 5): BamCodec.Reader = {
+      val b = ByteBuffer.allocate(41).order(ByteOrder.LITTLE_ENDIAN)
+      b.put("BAM\u0001".getBytes("UTF-8")).putInt(lText).put("@CO".getBytes("UTF-8"))
+      b.putInt(nRef).putInt(5).put("chrA\u0000".getBytes("UTF-8")).putInt(5000)
+      b.putInt(lName2).put("chrB\u0000".getBytes("UTF-8")).putInt(7)
+      val out = new ByteArrayOutputStream()
+      val bgzf = new BgzfWriter(out)
+      bgzf.write(b.array())
+      bgzf.close()
+      new BamCodec.Reader(new ByteArrayInputStream(out.toByteArray), false)
+    }
+    assert(header().isEmpty)
+    val ends = "BAM header: input ends inside the header"
+    for ((bad, message) <- Seq[(() => BamCodec.Reader, String)](
+        (() => header(lText = -1), "BAM header: l_text -1 is negative"),
+        (() => header(lText = Int.MaxValue), ends),
+        (() => header(nRef = -1), "BAM header: n_ref -1 is negative"),
+        (() => header(nRef = Int.MaxValue), ends),
+        (() => header(lName2 = -1), "BAM header: reference 2: l_name -1 is below 1"),
+        (() => header(lName2 = 0), "BAM header: reference 2: l_name 0 is below 1"),
+        (() => header(lName2 = Int.MaxValue),
+          s"BAM header: reference 2: l_name ${Int.MaxValue} but input ends after 9 bytes"))) {
+      val e = intercept[BamCodec.BamException](bad())
+      assert(e.getMessage == message, e.getMessage)
+    }
+  }
+
+  test("SAM/BAM: a NULL reference is an error naming the read, in every mode") {
+    val rows = Seq(aln("ok", 0, "chrA", 5L, "4M"), aln("lost", 0, null, 9L, "4M"))
+    val dir = tmp()
+    def named(e: Throwable): Boolean = e match {
+      case n: Writers.NullReferenceException => n.readId == "lost" && n.getMessage ==
+        "SAM/BAM output forbids a NULL reference column (read_id lost); write '*' for an unplaced read"
+      case null => false
+      case other => named(other.getCause)
+    }
+    // with a header the @SQ job fails on the driver before any file opens
+    for (write <- Seq[() => Unit](
+        () => Writers.copySam(df(samSchema, rows), s"$dir/h.sam"),
+        () => Writers.copySamSharded(df(samSchema, rows.take(1), rows.drop(1)),
+          s"$dir/h-{SHARD}.sam"),
+        () => Writers.copyBam(df(samSchema, rows), s"$dir/b.bam"),
+        () => Writers.copyBamSharded(df(samSchema, rows), s"$dir/b-{SHARD}.bam")))
+      assert(named(intercept[Writers.NullReferenceException](write())))
+    assert(listed(dir).isEmpty)
+    // without one the record encoder raises it, on the driver or in a task
+    val e = intercept[Writers.NullReferenceException](
+      Writers.copySam(df(samSchema, rows), s"$dir/n.sam", includeHeader = false))
+    assert(named(e), e.getMessage)
+    val t = intercept[Exception](Writers.copySamSharded(df(samSchema, rows.take(1), rows.drop(1)),
+      s"$dir/n-{SHARD}.sam", includeHeader = false))
+    assert(named(t), t)
   }
 
   private val warcSchema = StructType(Seq(
