@@ -10,16 +10,12 @@ import graft.queries._
   * value-hash compare). Unregistered work scores zero (round-1 lesson).
   */
 object SparkEntry {
-  /** All registered operator queries, in registration order. The
-    * bucketed-at-rest quartet (k06/k08/k16/k19) rides the same gate:
-    * layout twins of a06/a08/a16/a19 sharing their oracles, so the
-    * standing 100-TB layout path is correctness-proven every round.
-    */
+  /** All registered operator queries, in registration order. */
   def allQueryDefs: Seq[QueryDef] =
     LayerA1.queries ++ LayerA2.queries ++ LayerB.queries ++
       LlmPipeline.queries ++ LlmPipeline.semanticQueries ++
       LlmPipeline.bpeRoundTripQueries ++ LlmPipeline.copyQueries ++
-      ProductionChecks.queries ++ BucketedTables.queries
+      ProductionChecks.queries
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

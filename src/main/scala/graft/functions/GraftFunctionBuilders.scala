@@ -117,6 +117,21 @@ object GraftFunctionBuilders {
       LambdaFunction(entry, Seq(x))))
   }
 
+  private val pairwiseFns: Seq[Fn] = Seq(
+    "score" -> "INT penalty",
+    "cigar" -> "STRUCT(score, cigar)",
+    "full" -> "STRUCT(score, cigar, query_aligned, subject_aligned)")
+    .map { case (output, result) =>
+      val name = s"align_pairwise_$output"
+      Fn(name,
+        s"$name(query, subject) - gap-affine global alignment, $result",
+        {
+          case Seq(q, s) => PairwiseFunctions.AlignPairwise(q, s, output)
+          case other => throw new IllegalArgumentException(
+            s"$name expects 2 arguments, got ${other.length}")
+        })
+    }
+
   private val otherFns: Seq[Fn] = Seq(
     Fn("parse_gff_attributes",
       "parse_gff_attributes(kvp) - split 'k=v;...' into MAP<STRING,STRING>",
@@ -162,7 +177,7 @@ object GraftFunctionBuilders {
         })
       }))
 
-  val all: Seq[Fn] = cigarFns ++ sequenceFns ++ flagFns ++ otherFns
+  val all: Seq[Fn] = cigarFns ++ sequenceFns ++ flagFns ++ pairwiseFns ++ otherFns
 
   def registerAll(registry: FunctionRegistry): Unit =
     all.foreach(f =>

@@ -30,26 +30,9 @@ object SamCodec {
       sequence: Option[String],
       qual: Option[Array[Short]])
 
-  final case class SamHeader(referenceLengths: Vector[(String, Long)])
-
   final class SamParseException(msg: String) extends IllegalArgumentException(msg)
 
   def isHeaderLine(line: String): Boolean = line.nonEmpty && line.charAt(0) == '@'
-
-  /** Parse @SQ header lines into (name, length) pairs, in file order. */
-  def parseHeader(lines: Iterator[String]): SamHeader = {
-    val refs = Vector.newBuilder[(String, Long)]
-    for (line <- lines if line.startsWith("@SQ")) {
-      var name: String = null
-      var len = -1L
-      for (f <- line.split("\t").iterator.drop(1)) {
-        if (f.startsWith("SN:")) name = f.substring(3)
-        else if (f.startsWith("LN:")) len = f.substring(3).toLong
-      }
-      if (name != null && len >= 0) refs += (name -> len)
-    }
-    SamHeader(refs.result())
-  }
 
   /** Reference-consumed length of a CIGAR (M/D/N/=/X ops) — htslib
     * bam_cigar2rlen equivalent.

@@ -419,16 +419,6 @@ object Sketches {
       vs(vs.length - 1)
     }
 
-    /** Estimated rank of x: fraction of the stream strictly below x. */
-    def rank(x: Double): Double = {
-      if (count == 0L) return 0.0
-      val (vs, ws) = weighted()
-      var cum = 0L
-      var i = 0
-      while (i < vs.length && vs(i) < x) { cum += ws(i); i += 1 }
-      cum.toDouble / count
-    }
-
     /** Canonical bytes: k, n, compactions, numLevels, then each level's
       * SORTED buffer (count + doubles). Sorting makes the image
       * insertion-order-canonical per level.

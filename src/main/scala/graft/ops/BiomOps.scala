@@ -50,15 +50,4 @@ object BiomOps {
     */
   def readBiomHdf5(spark: SparkSession, path: String): DataFrame =
     spark.read.format("biom").load(path)
-
-  /** Dense-ish pivot helper (samples × features) for small matrices. */
-  def pivotSamples(coo: DataFrame, maxFeatures: Int = 10000): DataFrame = {
-    val features = coo.select("feature_id").distinct()
-      .limit(maxFeatures + 1).collect().map(_.getString(0)).sorted
-    require(features.length <= maxFeatures,
-      s"pivot exceeds $maxFeatures features; stay in COO form at this scale")
-    coo.groupBy("sample_id")
-      .pivot("feature_id", features.toSeq)
-      .agg(first(col("value")))
-  }
 }

@@ -297,19 +297,6 @@ object GraphRank {
     (ranks.select(col("id"), col("rank")), itersRun)
   }
 
-  /** Per-domain authority over a (doc domain → outlink domain) edge
-    * list, then joined back as a document weight — the composed form a
-    * crawl-curation pipeline uses (rank domains, weight docs).
-    */
-  def domainAuthority(docs: DataFrame, domainCol: String,
-      outDomainCol: String, iters: Int,
-      damping: Double = 0.85): DataFrame =
-    pageRank(
-      docs.select(col(domainCol).as("src"), col(outDomainCol).as("dst")),
-      iters, damping)
-      .withColumnRenamed("id", "domain")
-      .withColumnRenamed("rank", "authority")
-
   /** HITS hubs & authorities (Kleinberg 1999) — the link-analysis
     * complement to PageRank for crawl curation: authorities are the
     * content pages worth ingesting, hubs the link pages worth
@@ -320,9 +307,8 @@ object GraphRank {
     * the oracle re-derivation).
     *
     * Scale shape: same as [[pageRank]] — the deduplicated edge list
-    * is cached once PER JOIN ORIENTATION (by src for the hub sum, by
-    * dst for the auth sum — 2× edge storage for zero per-iteration
-    * edge exchange); each iteration is two edge-keyed
+    * is cached once, partitioned by src (the auth-sum join on dst
+    * re-exchanges it each iteration); each iteration is two edge-keyed
     * hash-aggregates (by dst, then by src) with the two 1-row
     * normalization totals crossJoin-broadcast in the same job;
     * lineage localCheckpoint-truncated per iteration, superseded
@@ -343,33 +329,12 @@ object GraphRank {
       tol: Double = 0.0): (DataFrame, Int) = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     val nParts = shufflePartitions(edges)
-    // HITS consumes the edge list in BOTH orientations each iteration
-    // (hub-sum joins on src, auth-sum joins on dst) — one at-rest copy
-    // per orientation, each pre-partitioned on its key, buys
-    // exchange-free edge joins at the cost of 2× edge storage: the
-    // standard network-for-storage trade, and the right one at 100 TB
-    // where the edge re-shuffle would otherwise be paid twice per
-    // iteration while storage is amortized across the whole run.
-    // SIZE-GATED (r14: the l73 sweep row regressed 16.6 → ~21 s cold
-    // when the copy was unconditional): on a toy graph the second
-    // materialization is several fixed-latency jobs of pure overhead
-    // while the avoided per-iteration exchange is milliseconds, so
-    // below the threshold the dst joins reuse the src-partitioned
-    // copy and pay the (tiny) re-exchange — the same adaptive
-    // philosophy as Dedup.LocalCcMaxEdges.
     // single-exchange dedup+partition (the pageRank preamble shape):
     // hash(src) already clusters equal (src, dst) rows, so the dedup
     // aggregate runs exchange-free on top of the one repartition
     val eBySrc = edges.select(col("src"), col("dst"))
       .repartition(nParts, col("src"))
       .dropDuplicates("src", "dst").persist()
-    val dualMinEdges =
-      try edges.sparkSession.conf.get("spark.graft.graph.dualEdgeMinRows").toLong
-      catch { case _: Throwable => 2000000L }
-    val eByDst =
-      if (eBySrc.count() >= dualMinEdges)
-        eBySrc.repartition(nParts, col("dst")).persist()
-      else eBySrc
     val nodes = eBySrc.select(col("src").as("id"))
       .union(eBySrc.select(col("dst").as("id")))
       // distinct first: map-side combine beats saving the id-sized
@@ -377,7 +342,7 @@ object GraphRank {
       .distinct().repartition(nParts, col("id")).persist()
     val n = nodes.count()
     if (n == 0) {
-      eBySrc.unpersist(); eByDst.unpersist()
+      eBySrc.unpersist()
       return (nodes.select(col("id"), lit(0.0d).as("hub"),
         lit(0.0d).as("auth")), 0)
     }
@@ -399,7 +364,7 @@ object GraphRank {
         .select(col("id"), (col("ra") / col("ta")).as("auth"))
       // h_raw(u) = Σ_{u→v} auth(v) over the NEW authorities
       val hRaw = nodes.join(
-          eByDst.join(auth, eByDst("dst") === auth("id"))
+          eBySrc.join(auth, eBySrc("dst") === auth("id"))
             .groupBy(col("src").as("id")).agg(sum(col("auth")).as("rh")),
           Seq("id"), "left")
         .select(col("id"), coalesce(col("rh"), lit(0.0d)).as("rh"))
@@ -418,7 +383,7 @@ object GraphRank {
       scores = next
     }
     nodes.unpersist()
-    eBySrc.unpersist(); eByDst.unpersist()
+    eBySrc.unpersist()
     (scores.select(col("id"), col("hub"), col("auth")), it)
   }
 }

@@ -39,17 +39,4 @@ object KeywordTag {
     docs.select(col(idCol).as("doc_id"), explode(hitsUdf(col(textCol))).as("h"))
       .select(col("doc_id"), col("h.term").as("term"), col("h.n").as("n"))
   }
-
-  /** Per-document blocklist verdict: total hits and the drop decision
-    * at `maxHits` — the gate form curation pipelines compose.
-    */
-  def blocklistGate(docs: DataFrame, idCol: String, textCol: String,
-      terms: Seq[String], maxHits: Int = 0): DataFrame = {
-    val hits = tagKeywords(docs, idCol, textCol, terms)
-      .groupBy(col("doc_id")).agg(sum(col("n")).as("n_hits"))
-    docs.select(col(idCol).as("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        (coalesce(col("n_hits"), lit(0L)) <= maxHits).as("keep"))
-  }
 }

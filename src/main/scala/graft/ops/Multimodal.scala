@@ -234,18 +234,6 @@ object Multimodal {
     media.withColumn("payload_resampled", dz(col("payload")))
   }
 
-  /** Deterministic frame sampling: slice the payload into fixed-size
-    * "frames" and keep every `everyN`-th — the distributed shape of
-    * video frame extraction (explode → per-frame rows).
-    */
-  def sampleFrames(media: DataFrame, frameBytes: Int, everyN: Int): DataFrame =
-    media
-      .select(col("media_id"), col("kind"),
-        posexplode(split(base64(col("payload")), s"(?<=\\G.{${4 * frameBytes}})")))
-      .withColumnRenamed("pos", "frame_no")
-      .withColumnRenamed("col", "frame_b64")
-      .filter(col("frame_no") % everyN === 0 && length(col("frame_b64")) > 0)
-
   /** Perceptual hash per image row via the REAL decode path
     * (`ImageCodec.dHash56`): (media_id, dhash). Non-decodable
     * payloads are dropped (they have no perceptual content to hash;

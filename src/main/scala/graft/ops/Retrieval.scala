@@ -192,8 +192,7 @@ object Retrieval {
         bm25BucketedLayout(spark, table) == (docBuckets, termBuckets)) return
     tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     // a data directory left by a dead catalog (e.g. a previous
-    // in-memory-catalog JVM) blocks the CTAS — clear it first (the
-    // BucketedTables lesson)
+    // in-memory-catalog JVM) blocks the CTAS — clear it first
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()

@@ -87,10 +87,6 @@ object Sketches {
     if (sk == null) null.asInstanceOf[java.lang.Long]
     else java.lang.Long.valueOf(K.QuantileSketch.deserialize(sk).n))
 
-  private val kllRankUdf = udf((sk: Array[Byte], x: Double) =>
-    if (sk == null) null.asInstanceOf[java.lang.Double]
-    else java.lang.Double.valueOf(K.QuantileSketch.deserialize(sk).rank(x)))
-
   /** Discrete-quantile estimate from a serialized KLL sketch (exact
     * below k; DuckDB quantile_disc convention: sorted[ceil(q*n)-1]).
     */
@@ -98,7 +94,4 @@ object Sketches {
 
   /** Stream length recorded in a serialized KLL sketch. */
   def kllN(sketch: Column): Column = kllNUdf(sketch)
-
-  /** Estimated rank (fraction of stream strictly below x). */
-  def kllRank(sketch: Column, x: Column): Column = kllRankUdf(sketch, x)
 }

@@ -195,13 +195,18 @@ object Writers {
     */
   val UnknownReferenceLength: Long = Int.MaxValue.toLong
 
-  /** A SAM/BAM COPY input row whose `reference` is NULL, named by its
-    * `read_id`. SAM spells an unplaced read's reference `*`; a NULL has
-    * no SAM or BAM spelling.
+  /** A SAM/BAM COPY input row with a NULL in a mandatory column that
+    * has no `*` spelling, named by the column and the row's `read_id`.
     */
-  final class NullReferenceException(val readId: String) extends IllegalArgumentException(
-    s"SAM/BAM output forbids a NULL reference column (read_id $readId); " +
-      "write '*' for an unplaced read")
+  class NullColumnException(val column: String, val readId: String, hint: String = "")
+      extends IllegalArgumentException(
+        s"SAM/BAM output forbids a NULL $column column (read_id $readId)$hint")
+
+  /** A NULL `reference`. SAM spells an unplaced read's reference `*`,
+    * but a NULL is not read as one.
+    */
+  final class NullReferenceException(readId: String)
+      extends NullColumnException("reference", readId, "; write '*' for an unplaced read")
 
   /** The `@SQ` set shared by every file of one COPY: the
     * reference-lengths relation in its order, then the other references
@@ -232,7 +237,9 @@ object Writers {
 
   /** Row → SAM record, column positions resolved once; the 9 mandatory
     * SAM columns are required, absent tag_* columns are None. A NULL
-    * `reference` is a [[NullReferenceException]].
+    * `cigar` or `mate_reference` is written `*` (SAM's "unavailable");
+    * a NULL `reference` is a [[NullReferenceException]], and a NULL in
+    * a numeric mandatory column a [[NullColumnException]].
     */
   private def samRecords(s: StructType): Row => SamCodec.SamRecord = {
     val Seq(id, flags, ref, pos, mapq, cigar, mateRef, matePos, tlen) = Seq("read_id", "flags",
@@ -243,12 +250,16 @@ object Writers {
     val strs = Array("tag_yt", "tag_md", "tag_sa").map(s.fieldNames.indexOf(_))
     r => {
       if (r.isNullAt(ref)) throw new NullReferenceException(r.getString(id))
-      def long(i: Int): Long = r.getAs[Number](i).longValue()
-      def int(j: Int) = if (ints(j) < 0 || r.isNullAt(ints(j))) None else Some(long(ints(j)))
+      def num(i: Int): Number =
+        if (r.isNullAt(i)) throw new NullColumnException(s.fieldNames(i), r.getString(id))
+        else r.getAs[Number](i)
+      def orStar(i: Int): String = if (r.isNullAt(i)) "*" else r.getString(i)
+      def int(j: Int) =
+        if (ints(j) < 0 || r.isNullAt(ints(j))) None else Some(num(ints(j)).longValue())
       def str(j: Int) = if (strs(j) < 0) None else Option(r.getString(strs(j)))
-      SamCodec.SamRecord(r.getString(id), r.getAs[Number](flags).intValue(), r.getString(ref),
-        long(pos), 0L, r.getAs[Number](mapq).shortValue(), r.getString(cigar),
-        r.getString(mateRef), long(matePos), long(tlen),
+      SamCodec.SamRecord(r.getString(id), num(flags).intValue(), r.getString(ref),
+        num(pos).longValue(), 0L, num(mapq).shortValue(), orStar(cigar),
+        orStar(mateRef), num(matePos).longValue(), num(tlen).longValue(),
         int(0), int(1), int(2), int(3), int(4), int(5), int(6), int(7),
         str(0), str(1), str(2), None, None)
     }

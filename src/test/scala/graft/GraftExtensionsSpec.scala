@@ -1,12 +1,36 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.functions.MiintRegistry
+import org.apache.spark.sql.{Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The extensions entry point must make the native SQL surface
   * available in a fresh session with zero registration calls.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
+
+  /** align_pairwise_* through SQL, checked against the scores and
+    * CIGARs b19_align_pairwise's oracle derives: one substitution
+    * costs the mismatch penalty 4 (`1=1X<n-2>=`), identity costs 0.
+    */
+  private def checkPairwise(spark: SparkSession): Unit = {
+    val r = spark.sql(
+      """SELECT align_pairwise_score('ACGT', 'AGGT') AS s1,
+        |       align_pairwise_score('ACGTACGT', 'AZGTACGT') AS s2,
+        |       align_pairwise_score('ACGTACGTA', 'ACGTACGTA') AS s3,
+        |       align_pairwise_cigar('ACGTACGT', 'AZGTACGT') AS c1,
+        |       align_pairwise_cigar('ACGTACGTA', 'ACGTACGTA') AS c2,
+        |       align_pairwise_full('ACGTACGT', 'AZGTACGT') AS f1,
+        |       align_pairwise_score(CAST(NULL AS STRING), 'ACGT') AS n1,
+        |       align_pairwise_cigar('ACGT', CAST(NULL AS STRING)) AS n2,
+        |       align_pairwise_full(CAST(NULL AS STRING), CAST(NULL AS STRING)) AS n3
+        |""".stripMargin).collect()(0)
+    assert(r.getInt(0) == 4 && r.getInt(1) == 4 && r.getInt(2) == 0)
+    assert(r.getStruct(3) == Row(4, "1=1X6="))
+    assert(r.getStruct(4) == Row(0, "9="))
+    assert(r.getStruct(5) == Row(4, "1=1X6=", "ACGTACGT", "AZGTACGT"))
+    assert(r.isNullAt(6) && r.isNullAt(7) && r.isNullAt(8))
+  }
 
   test("spark.sql.extensions=graft.GraftExtensions exposes the SQL surface") {
     // spark.sql.extensions is a STATIC conf — it only takes effect when
@@ -51,11 +75,18 @@ class GraftExtensionsSpec extends AnyFunSuite {
         |  FROM VALUES (1L, 5L), (4L, 9L) AS t(s, e)""".stripMargin).collect()
     val iv = agg(0).getSeq[org.apache.spark.sql.Row](0)
     assert(iv.map(x => (x.getLong(0), x.getLong(1))) == Seq((1L, 9L)))
+    checkPairwise(spark)
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
       prior.foreach(SparkSession.setDefaultSession)
       prior.foreach(SparkSession.setActiveSession)
     }
+  }
+
+  test("MiintRegistry.registerAll exposes align_pairwise_* in SQL") {
+    val spark = SparkFixture.spark
+    MiintRegistry.registerAll(spark)
+    checkPairwise(spark)
   }
 }

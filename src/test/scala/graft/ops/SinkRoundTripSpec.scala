@@ -321,6 +321,45 @@ class SinkRoundTripSpec extends AnyFunSuite {
     assert(named(t), t)
   }
 
+  test("SAM/BAM: a NULL cigar or mate_reference is written '*' by both formats") {
+    // a mapped read with no CIGAR and an unpaired read with no RNEXT
+    val rows = Seq(Row("c", 0, "chrA", 5L, 60.toShort, null, "*", 0L, 0L, null, 0L, null),
+      Row("m", 0, "chrA", 9L, 60.toShort, "4M", null, 0L, 0L, null, 0L, null))
+    val dir = tmp()
+    Writers.copySam(df(samSchema, rows), s"$dir/x.sam", includeHeader = false)
+    assert(text(s"$dir/x.sam") == Seq("c\t0\tchrA\t5\t60\t*\t*\t0\t0\t*\t*\tNM:i:0",
+      "m\t0\tchrA\t9\t60\t4M\t*\t0\t0\t*\t*\tNM:i:0"))
+    Writers.copyBam(df(samSchema, rows), s"$dir/x.bam")
+    val expected = Seq(Seq("c", "*", "*"), Seq("m", "4M", "*"))
+    for (p <- Seq(s"$dir/x.sam", s"$dir/x.bam"))
+      assert(values(read("alignments", p), "read_id", "cigar", "mate_reference") == expected, p)
+  }
+
+  test("SAM/BAM: a NULL numeric mandatory column is an error naming the column and the read") {
+    val ok = aln("ok", 0, "chrA", 5L, "4M")
+    val dir = tmp()
+    for ((column, i) <- Seq("flags" -> 1, "position" -> 3, "mapq" -> 4, "mate_position" -> 7,
+        "template_length" -> 8)) {
+      val rows = Seq(ok, Row.fromSeq(aln("r1", 0, "chrA", 9L, "4M").toSeq.updated(i, null)))
+      def named(e: Throwable): Boolean = e match {
+        case n: Writers.NullColumnException => n.column == column && n.readId == "r1" &&
+          n.getMessage == s"SAM/BAM output forbids a NULL $column column (read_id r1)"
+        case null => false
+        case other => named(other.getCause)
+      }
+      for (write <- Seq[() => Unit](
+          () => Writers.copySam(df(samSchema, rows), s"$dir/$column.sam"),
+          () => Writers.copySamSharded(df(samSchema, rows.take(1), rows.drop(1)),
+            s"$dir/$column-{SHARD}.sam"),
+          () => Writers.copyBam(df(samSchema, rows), s"$dir/$column.bam"),
+          () => Writers.copyBamSharded(df(samSchema, rows.take(1), rows.drop(1)),
+            s"$dir/$column-{SHARD}.bam"))) {
+        val e = intercept[Exception](write())
+        assert(named(e), s"$column: $e")
+      }
+    }
+  }
+
   private val warcSchema = StructType(Seq(
     field("target_uri", StringType), field("payload", BinaryType),
     field("warc_type", StringType), field("content_type", StringType),

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Frameless window aggregates — `agg(x) OVER (PARTITION BY k)`, the
-  * shape of a16/k16 and of woltka_ogu's `1/COUNT(*) OVER (PARTITION BY
+  * shape of a16 and of woltka_ogu's `1/COUNT(*) OVER (PARTITION BY
   * read, orientation)` — run on Spark's own WindowExec, in one window
   * node, and equal the GROUP BY k form joined back null-safely: NULL
   * keys form a group, and NaN and -0.0 keys group as GROUP BY groups
