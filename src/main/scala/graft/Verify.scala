@@ -10,6 +10,9 @@ object Verify {
     val (sfDir, outDir, nameFilter) = args match {
       case Array(a, b)    => (a, b, None)
       case Array(a, b, f) => (a, b, Some(f))
+      case _ =>
+        System.err.println("usage: graft.Verify <sfDir> <outDir> [namePrefix]")
+        sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

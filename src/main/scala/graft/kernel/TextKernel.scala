@@ -155,26 +155,6 @@ object TextKernel {
     sig
   }
 
-  /** 64-bit SimHash over token hashes (bit-majority vote). */
-  def simhash64(tokens: Iterable[String]): Long = {
-    val votes = new Array[Int](64)
-    for (t <- tokens) {
-      val h = hash64(t)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) != 0) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (votes(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
-  }
-
   def hammingDistance(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
   /** Winnowing document fingerprints (Schleimer et al. MOSS scheme):
@@ -293,21 +273,6 @@ object TextKernel {
     sb.toString
   }
 
-  /** Distinct code-point n-gram substrings — kernel twin of the
-    * `array_distinct(transform(sequence(...), i → substr(text, i, n)))`
-    * column idiom (graft.ops.Dedup.shingles): Spark's substr indexes
-    * CODE POINTS, so windows step one code point at a time.
-    */
-  def charShingles(text: String, n: Int): Array[String] = {
-    if (text == null) return Array.empty
-    val cps = text.codePoints().toArray
-    if (cps.length < n) return Array.empty
-    val out = new java.util.LinkedHashSet[String]()
-    var i = 0
-    while (i + n <= cps.length) { out.add(new String(cps, i, n)); i += 1 }
-    out.toArray(new Array[String](out.size))
-  }
-
   /** Kernel twin of the `conv(substring(md5(s), 1, 15), 16, 10)`
     * column idiom (graft.ops.Dedup.md5Hash60): the first 15 hex chars
     * of md5 as a 60-bit long — i.e. the first 8 digest bytes read
@@ -323,61 +288,6 @@ object TextKernel {
     var i = 0
     while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
     v >>> 4
-  }
-
-  /** Modulus of the Carter–Wegman minhash family: the Mersenne prime
-    * 2³¹ − 1, chosen so `m1 + j·m2` never leaves a signed 64-bit range
-    * (j ≤ numHashes, operands < 2³¹) — the overflow-free contract an
-    * external SQL engine needs, since DuckDB BIGINT multiplication
-    * ERRORS on wrap rather than wrapping.
-    */
-  val CwPrime: Long = 2147483647L
-
-  /** Carter–Wegman minhash signature: sig_j = min over distinct
-    * shingles s of h_j(s), where h_j(s) = (m1(s) + j·m2(s)) mod P and
-    * (m1, m2) are the two md5-derived 60-bit halves of s reduced mod
-    * P = [[CwPrime]]. ONE md5 per distinct shingle instead of
-    * numHashes md5s (the r9 family, md5("j:" + s) per j, priced the
-    * DuckDB oracle at numHashes × |shingles| md5+conv evaluations per
-    * document — the measured reason l03/l40 sat on the sf0.1 sweep's
-    * exclusion list; the CW re-derivation is 64 integer ops per
-    * shingle after one md5, ~25× cheaper on the oracle side and
-    * ~40× fewer digests here). The halves mirror the oracle's
-    * `('0x' || substr(md5(s), 1, 15))` / `substr(md5(s), 16, 15)`
-    * conv idiom exactly: hex chars 1–15 = first 8 digest bytes >>> 4;
-    * hex chars 16–30 = digest bytes 7–14 masked to the low 60 bits.
-    * Empty shingle set → all-MaxValue signature (same convention the
-    * md5-per-j family had: min over an empty set stays MaxValue,
-    * callers filter length < n docs out anyway).
-    */
-  def minhashCwSig(text: String, shingleN: Int, numHashes: Int): Array[Long] = {
-    val shs = charShingles(text, shingleN)
-    val m1s = new Array[Long](shs.length)
-    val m2s = new Array[Long](shs.length)
-    var i = 0
-    while (i < shs.length) {
-      val d = java.security.MessageDigest.getInstance("MD5")
-        .digest(shs(i).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      var a = 0L
-      var b = 0L
-      var k = 0
-      while (k < 8) { a = (a << 8) | (d(k) & 0xffL); k += 1 }
-      k = 7
-      while (k < 15) { b = (b << 8) | (d(k) & 0xffL); k += 1 }
-      m1s(i) = (a >>> 4) % CwPrime
-      m2s(i) = (b & 0x0FFFFFFFFFFFFFFFL) % CwPrime
-      i += 1
-    }
-    Array.tabulate(numHashes) { j =>
-      var m = Long.MaxValue
-      var s = 0
-      while (s < shs.length) {
-        val h = (m1s(s) + j * m2s(s)) % CwPrime
-        if (h < m) m = h
-        s += 1
-      }
-      m
-    }
   }
 
   /** Winnowing fingerprint COUNT on the md5 hash family — kernel twin
@@ -441,13 +351,11 @@ object TextKernel {
     * L-window covering it occurs ≥ 2 times in the corpus, so the union
     * of repeated windows recovers the duplicated spans EXACTLY (at
     * fingerprint-collision probability, shared with the oracle since
-    * both derive the same md5 prefix). `exact` picks md5Hash60 (the
-    * engine-neutral oracle family, = first 15 md5 hex chars as BIGINT)
-    * vs FNV hash64 (the cheaper production default, x13's path).
-    * null / shorter-than-L texts → empty.
+    * both derive the same md5 prefix): each window hashes to
+    * md5Hash60, the engine-neutral family (= first 15 md5 hex chars as
+    * BIGINT). null / shorter-than-L texts → empty.
     */
-  def slidingWindowHashes(text: String, l: Int,
-      exact: Boolean): Array[Long] = {
+  def slidingWindowHashes(text: String, l: Int): Array[Long] = {
     if (text == null) return Array.empty
     val ts = tokens(text)
     val n = ts.length - (l - 1)
@@ -457,52 +365,32 @@ object TextKernel {
     // of materializing the space-joined window string — one String
     // alloc+copy per window removed from every window of every doc
     // (this kernel runs inside x06/x13/x15/decontamination's hottest
-    // map stages). Bit-identical by construction: FNV-1a folds the
-    // same UTF-16 char sequence (space = one char), md5 digests the
+    // map stages). Bit-identical by construction: md5 digests the
     // same UTF-8 byte sequence (UTF-8 of a concatenation is the
     // concatenation of UTF-8s; space = 0x20) — and spec-pinned against
-    // the joined-string forms on randomized token sets.
-    if (!exact) {
-      var i = 0
-      while (i < n) {
-        var h = 0xcbf29ce484222325L
-        var j = i
-        while (j < i + l) {
-          if (j > i) { h ^= 0x20L; h *= 0x100000001b3L }
-          val t = ts(j)
-          var c = 0
-          while (c < t.length) {
-            h ^= t.charAt(c).toLong; h *= 0x100000001b3L; c += 1
-          }
-          j += 1
-        }
-        out(i) = h
-        i += 1
+    // the joined-string form on randomized token sets.
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val bs = new Array[Array[Byte]](ts.length)
+    var k = 0
+    while (k < ts.length) {
+      bs(k) = ts(k).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      k += 1
+    }
+    val sp = Array(' '.toByte)
+    var i = 0
+    while (i < n) {
+      md.reset()
+      var j = i
+      while (j < i + l) {
+        if (j > i) md.update(sp)
+        md.update(bs(j)); j += 1
       }
-    } else {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val bs = new Array[Array[Byte]](ts.length)
-      var k = 0
-      while (k < ts.length) {
-        bs(k) = ts(k).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        k += 1
-      }
-      val sp = Array(' '.toByte)
-      var i = 0
-      while (i < n) {
-        md.reset()
-        var j = i
-        while (j < i + l) {
-          if (j > i) md.update(sp)
-          md.update(bs(j)); j += 1
-        }
-        val d = md.digest()
-        var v = 0L
-        var q = 0
-        while (q < 8) { v = (v << 8) | (d(q) & 0xffL); q += 1 }
-        out(i) = v >>> 4
-        i += 1
-      }
+      val d = md.digest()
+      var v = 0L
+      var q = 0
+      while (q < 8) { v = (v << 8) | (d(q) & 0xffL); q += 1 }
+      out(i) = v >>> 4
+      i += 1
     }
     out
   }
@@ -527,10 +415,10 @@ object TextKernel {
     * null — the exact contract of the join formulation (spec-pinned
     * against it on randomized corpora in DecontaminateSpec).
     */
-  def exciseByFpSet(text: String, l: Int, exact: Boolean,
+  def exciseByFpSet(text: String, l: Int,
       fps: Array[Long]): (Long, Long, String) = {
     if (text == null) return (0L, 0L, null)
-    val hs = slidingWindowHashes(text, l, exact)
+    val hs = slidingWindowHashes(text, l)
     var curS = 0
     var curE = -1 // -1 = no open island
     val ss = new mutable.ArrayBuilder.ofInt
@@ -559,7 +447,7 @@ object TextKernel {
   }
 
   /** 60-bit md5-family SimHash as one Long — the kernel twin of the
-    * interpreted column formulation in Dedup.simhashPairsExact's
+    * interpreted column formulation in Dedup.simhashPairs's
     * original shape (and bit-for-bit equal to it, so the DuckDB
     * re-derivation oracle is unchanged): bit j is the majority vote
     * over all tokens (with multiplicity) of bit (j%4) of hex digit

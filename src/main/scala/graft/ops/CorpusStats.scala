@@ -222,9 +222,9 @@ object CorpusStats {
     * non-overlapping c-token chunks — map-side aggregated, so the
     * explode emits per-doc-DISTINCT fingerprints only.
     */
-  private val chunkFpCountsUdf = udf((text: String, c: Int, exact: Boolean) => {
+  private val chunkFpCountsUdf = udf((text: String, c: Int) => {
     val toks = TextKernel.tokens(text)
-    val md = if (exact) java.security.MessageDigest.getInstance("MD5") else null
+    val md = java.security.MessageDigest.getInstance("MD5")
     val m = new java.util.HashMap[java.lang.Long, Int]()
     var i = 0
     while (i + c <= toks.length) {
@@ -235,11 +235,7 @@ object CorpusStats {
         sb.append(toks(j))
         j += 1
       }
-      val chunk = sb.toString
-      val fp: Long =
-        if (exact) md5Fp60(md, chunk)
-        else graft.kernel.Sketches.hashString(chunk)
-      m.merge(fp, 1, (a, b) => a + b)
+      m.merge(md5Fp60(md, sb.toString), 1, (a, b) => a + b)
       i += c
     }
     val out = new Array[(Long, Int)](m.size)
@@ -273,19 +269,16 @@ object CorpusStats {
     * stride-1 shingles it converges on it, at c× the fingerprints.
     */
   def dupChunkFraction(docs: DataFrame, idCol: String, textCol: String,
-      chunkTokens: Int, minDocs: Int, exactHash: Boolean = true): DataFrame = {
+      chunkTokens: Int, minDocs: Int): DataFrame = {
     // ONE tokenize+hash pass per doc (map-side-aggregated fp counts,
     // so only per-doc-DISTINCT fingerprints ever shuffle), then the
     // doc frequency as count-over-fp-partition on the SAME exchange —
     // a separate df-aggregate branch re-evaluated the whole kernel
     // pass (column pruning gave the two branches different exchanges,
-    // so nothing reused; measured 2x at 500k docs). exactHash=false
-    // swaps md5 for the FNV kernel hash: the production default
-    // (x06), ~1.4x cheaper; md5 is the oracle-exact family l36 pins
-    // cross-engine.
+    // so nothing reused; measured 2x at 500k docs). Chunks hash with
+    // md5, the family l36's oracle re-derives.
     val pairs = docs.select(col(idCol).as("doc_id"),
-        explode(chunkFpCountsUdf(col(textCol), lit(chunkTokens),
-          lit(exactHash))).as("fc"))
+        explode(chunkFpCountsUdf(col(textCol), lit(chunkTokens))).as("fc"))
       .select(col("doc_id"), col("fc._1").as("fp"), col("fc._2").as("cnt"))
     // rows are per-doc distinct, so a frameless count IS the doc freq
     val df = count(lit(1)).over(Window.partitionBy(col("fp")))
@@ -343,10 +336,9 @@ object CorpusStats {
   }
 
   def exactSubstrSpans(docs: DataFrame, idCol: String, textCol: String,
-      minTokens: Int, minCount: Int = 2,
-      exactHash: Boolean = true): DataFrame = {
+      minTokens: Int, minCount: Int = 2): DataFrame = {
     val winUdf = udf((t: String) =>
-      graft.kernel.TextKernel.slidingWindowHashes(t, minTokens, exactHash))
+      graft.kernel.TextKernel.slidingWindowHashes(t, minTokens))
     val wins = docs
       .select(col(idCol).as("doc_id"), posexplode(winUdf(col(textCol))))
       .select(col("doc_id"), (col("pos") + 1).as("s"), col("col").as("fp"))

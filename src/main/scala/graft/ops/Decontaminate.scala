@@ -154,11 +154,10 @@ object Decontaminate {
     */
   def decontaminateExcise(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, n: Int,
-      exactHash: Boolean = true,
       maxBroadcastFps: Long = 8L << 20,
       carryCols: Seq[String] = Nil): DataFrame = {
     val winUdf = udf((t: String) =>
-      TextKernel.slidingWindowHashes(t, n, exactHash))
+      TextKernel.slidingWindowHashes(t, n))
     val benchFps0 = benchmark
       .select(explode(winUdf(col(textCol))).as("fp")).distinct()
     // One benchmark-side job decides the regime AND (below the gate)
@@ -179,7 +178,7 @@ object Decontaminate {
       // collapsed projection would otherwise inline (and re-run) the
       // kernel once per extracted field (guide §4.4)
       val fusedUdf = udf((text: String) =>
-        TextKernel.exciseByFpSet(text, n, exactHash, bc.value))
+        TextKernel.exciseByFpSet(text, n, bc.value))
         .asNondeterministic()
       corpus
         .select((col(idCol).as("doc_id") +: fusedUdf(col(textCol)).as("__x")

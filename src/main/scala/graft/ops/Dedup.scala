@@ -231,16 +231,16 @@ object Dedup {
   def ngramJaccard(a: Column, b: Column, n: Int): Column =
     ngramJaccardUdf(a, b, lit(n))
 
-  /** Band-bucket candidate pairs — the shared core of every LSH
-    * variant, and payload-free by construction: the self-join on
-    * (band, key) moves only (band, key, id) triples, so the shuffle
-    * never carries document text (at 100 TB the old
-    * payload-on-both-sides shape wrote every document ~2×bands times).
-    * Distinct (id_a, id_b) pairs (id_a < id_b, each pair verified once
-    * however many bands it collides in) are then joined back to
-    * `payloads` (id, payloadCol) per side — two narrow hash joins on
-    * id — for the exact verification step. One definition so the fast
-    * and oracle-exact twins can never diverge in pipeline shape.
+  /** Band-bucket candidate pairs for [[simhashPairs]], payload-free
+    * by construction: the self-join on (band, key) moves only
+    * (band, key, id) triples, so the shuffle never carries the
+    * payload (a payload-on-both-sides shape writes every document
+    * ~2×bands times). Distinct (id_a, id_b) pairs (id_a < id_b, each
+    * pair verified once however many bands it collides in) are then
+    * joined back to `payloads` (id, payloadCol) per side — two narrow
+    * hash joins on id — for the exact verification step. The pair
+    * join suits simhash's 8-byte payload; MinHash's shingle arrays
+    * are verified bucket-locally instead (see [[minhashPairs]]).
     */
   private def bandedCandidatePairs(
       banded: DataFrame, keyCol: String,
@@ -258,9 +258,6 @@ object Dedup {
         col(payloadCol).as(s"${payloadCol}_b")), "id_b")
   }
 
-  private val minhashUdf = udf((text: String, shingleN: Int, numHashes: Int) =>
-    TextKernel.minhashSignature(TextKernel.shingleHashes(text, shingleN), numHashes))
-
   /** One shingling pass per document: (minhash signature, sorted
     * distinct 32-bit-compacted shingle hashes) — the signature feeds
     * banding, the compact array feeds the merge-intersect Jaccard
@@ -276,9 +273,10 @@ object Dedup {
     * shingle → minhash signature (numHashes) → band buckets (bands ×
     * rowsPerBand) → within-bucket exact Jaccard verify ≥ threshold.
     * Output: (id_a, id_b, jaccard) with id_a < id_b, distinct. Docs
-    * shorter than shingleN are excluded (no shingles — the exact twin
-    * makes the same choice), which also prevents the degenerate
-    * all-empty-signature mega-bucket.
+    * shorter than shingleN are excluded (no shingles), which also
+    * prevents the degenerate all-empty-signature mega-bucket. Both
+    * passes band through [[minhashIndex]] + [[explodeBanded]], the
+    * same transform the persisted-index path runs.
     *
     * Scale shape — BUCKET-LOCAL verification, no pair join: each
     * document's sorted shingle-hash array (32-bit compacted, ~4
@@ -310,26 +308,10 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 16,
       threshold: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rowsPerBand = numHashes / bands
     val spark = docs.sparkSession
     import spark.implicits._
-    // sig+set in one shingling pass, projected BELOW the band explode
-    // (expressions beside a generator are re-evaluated per generated
-    // row; ss is referenced twice so CollapseProject keeps the UDF in
-    // its own projection, evaluated once per document)
-    val prepared = docs
-      .filter(length(col(textCol)) >= shingleN)
-      .select(col(idCol).as("id"),
-        sigAndSetUdf(col(textCol), lit(shingleN), lit(numHashes)).as("ss"))
-      .select(col("id"), col("ss._1").as("sig"), col("ss._2").as("shs"))
-    val banded = prepared.select(
-      col("id"), col("shs"),
-      posexplode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => hash(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b))))
-      .select(col("pos").as("band"), col("col").as("band_hash"),
-        col("id"), col("shs"))
+    val banded = explodeBanded(
+      minhashIndex(docs, idCol, textCol, shingleN, numHashes, bands))
     // Two-pass bucket pruning for large corpora: only buckets with ≥2
     // members can emit pairs, and on a lightly-duplicated corpus that
     // is a small fraction of all (band, band_hash) keys. Pass 1
@@ -395,21 +377,11 @@ object Dedup {
         val survivorIds = idRows.join(surviving, Seq("band", "band_hash"))
           .select(col("id")).distinct()
         val survivorDocs = docs
-          .filter(length(col(textCol)) >= shingleN)
           .select(col(idCol).as("id"), col(textCol).as("text"))
           .join(survivorIds, Seq("id"), "leftsemi")
-        val prepared2 = survivorDocs
-          .select(col("id"),
-            sigAndSetUdf(col("text"), lit(shingleN), lit(numHashes)).as("ss"))
-          .select(col("id"), col("ss._1").as("sig"), col("ss._2").as("shs"))
-        val banded2 = prepared2.select(
-          col("id"), col("shs"),
-          posexplode(
-            transform(sequence(lit(0), lit(bands - 1)),
-              b => hash(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b))))
-          .select(col("pos").as("band"), col("col").as("band_hash"),
-            col("id"), col("shs"))
-        banded2.join(surviving, Seq("band", "band_hash"))
+        explodeBanded(
+            minhashIndex(survivorDocs, "id", "text", shingleN, numHashes, bands))
+          .join(surviving, Seq("band", "band_hash"))
           .join(broadcast(bigBuckets), Seq("band", "band_hash"), "left")
           .withColumn("g", coalesce(col("g"), lit(1)))
           .withColumn("sub", pmod(hash(col("id")), col("g")))
@@ -545,6 +517,10 @@ object Dedup {
     * past 50 GB). The compact form is corpus-sized; the explode is
     * re-derived at read time, map-only, and only materializes in the
     * post-prune shuffle.
+    *
+    * `carryCols` ride along unchanged after `band_hashes`, for callers
+    * that cannot join a payload back by id (a streaming side would
+    * need a stream-stream join); batch callers leave it empty.
     */
   def minhashIndex(
       indexDocs: DataFrame,
@@ -552,32 +528,38 @@ object Dedup {
       textCol: String,
       shingleN: Int = 5,
       numHashes: Int = 64,
-      bands: Int = 16): DataFrame = {
+      bands: Int = 16,
+      carryCols: Seq[String] = Nil): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rowsPerBand = numHashes / bands
+    // sig+set in one shingling pass, projected BELOW the band explode
+    // (expressions beside a generator are re-evaluated per generated
+    // row; ss is referenced twice so CollapseProject keeps the UDF in
+    // its own projection, evaluated once per document)
     indexDocs
       .filter(length(col(textCol)) >= shingleN)
-      .select(col(idCol).as("id"),
-        sigAndSetUdf(col(textCol), lit(shingleN), lit(numHashes)).as("ss"))
-      .select(col("id"), col("ss._2").as("shs"),
+      .select((col(idCol).as("id") +:
+        sigAndSetUdf(col(textCol), lit(shingleN), lit(numHashes)).as("ss") +:
+        carryCols.map(col)): _*)
+      .select((col("id") +: col("ss._2").as("shs") +:
         transform(sequence(lit(0), lit(bands - 1)),
           b => hash(slice(col("ss._1"), b * rowsPerBand + 1, lit(rowsPerBand)), b))
-          .as("band_hashes"))
+          .as("band_hashes") +:
+        carryCols.map(col)): _*)
   }
 
-  /** Compact index rows → the exploded (band, band_hash, id, shs)
-    * stream the bucket verify consumes.
+  /** Compact index rows → the exploded (band, band_hash, id, shs,
+    * carried columns…) stream the bucket verify consumes.
     */
-  private[graft] def explodeBanded(compact: DataFrame): DataFrame =
-    compact
-      .select(col("id"), col("shs"), posexplode(col("band_hashes")))
-      .select(col("pos").as("band"), col("col").as("band_hash"),
-        col("id"), col("shs"))
+  private[graft] def explodeBanded(compact: DataFrame): DataFrame = {
+    val rest = compact.columns.filter(_ != "band_hashes").map(col)
+    compact.select(rest :+ posexplode(col("band_hashes")): _*)
+      .select((col("pos").as("band") +: col("col").as("band_hash") +: rest): _*)
+  }
 
-  /** Production incremental dedup of a NEW shard against an INDEXED
-    * corpus on the fast FNV kernel hash family — the throughput twin
-    * of [[minhashNewVsIndexExact]] (same pipeline shape; the exact
-    * variant's md5 column arithmetic is what the oracle re-derives).
+  /** Incremental dedup of a NEW shard against an INDEXED corpus — the
+    * ingest-time operation at 100 TB, where re-running all-pairs LSH
+    * over the full corpus per arriving shard is not an option.
     * `index` is [[minhashIndex]] output, computed once per corpus
     * generation and persisted (possibly read back from parquet); the
     * shard side runs through the same [[minhashIndex]], so both sides'
@@ -589,7 +571,9 @@ object Dedup {
     * verified, so a shard arriving into a huge already-deduped index
     * never re-verifies index-internal pairs.
     * Output, per new doc with ≥1 verified match:
-    * (new_id, n_matches, best_jaccard, best_match_id).
+    * (new_id, n_matches, best_jaccard, best_match_id) — ties on
+    * jaccard resolve to the smallest matched id, so the decision is
+    * deterministic.
     */
   def minhashNewVsPrebuiltIndex(
       newDocs: DataFrame,
@@ -725,9 +709,8 @@ object Dedup {
       .toDF("new_id", "matched_id", "jaccard")
       .groupBy(col("new_id"), col("matched_id"))
       .agg(max(col("jaccard")).as("jaccard"))
-    // single-aggregate argmax (the exact twin keeps the join form its
-    // oracle mirrors): (jaccard, -matched_id) struct ordering = max
-    // jaccard, ties to the smallest matched id
+    // single-aggregate argmax: (jaccard, -matched_id) struct ordering
+    // = max jaccard, ties to the smallest matched id
     pairs.groupBy(col("new_id"))
       .agg(count(lit(1)).as("n_matches"),
         max(col("jaccard")).as("best_jaccard"),
@@ -736,178 +719,17 @@ object Dedup {
           .as("best_match_id"))
   }
 
-  /** (base, banded) md5-family minhash band keys — the shared front of
-    * the all-pairs ([[minhashPairsExact]]) and against-index
-    * ([[minhashNewVsIndexExact]]) variants: per doc, 5-gram shingles →
-    * `numHashes` md5 minhashes → `bands` band-key hashes. The hash
-    * family is pure md5 arithmetic, so an external engine re-derives
-    * every key bit-for-bit; the loops run in a kernel UDF
-    * (TextKernel.md5Hash60, spec-pinned to the column idiom) because
-    * the equivalent HOF expressions are interpreted by Catalyst.
-    */
-  private[graft] def exactBandKeys(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int, bands: Int,
-      carryCols: Seq[String] = Nil): (DataFrame, DataFrame) = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rowsPerBand = numHashes / bands
-    val base = docs
-      .filter(length(col(textCol)) >= shingleN)
-      .select((col(idCol).as("id") +: col(textCol).as("text") +:
-        carryCols.map(col)): _*)
-    // minhash_j = Carter–Wegman mix of the two md5 halves of each
-    // distinct shingle: h_j(s) = (m1 + j·m2) mod (2³¹−1), min over
-    // shingles (TextKernel.minhashCwSig). ONE md5 per shingle — the
-    // r9 md5("j:" + s)-per-j family cost numHashes × |shingles|
-    // digests per document on BOTH engines, which is what kept the
-    // l03/l40 DuckDB oracles on the sf0.1 sweep's exclusion list
-    // (>90 s re-probed); the CW family re-derives all numHashes
-    // values from one digest with overflow-free BIGINT arithmetic,
-    // so the oracle runs the identical signature in seconds. Kernel
-    // pass, not the shingles/transform/array_min HOF formulation:
-    // Catalyst interprets lambda bodies (the r8 lesson).
-    val sigUdf = udf((text: String) =>
-      graft.kernel.TextKernel.minhashCwSig(text, shingleN, numHashes))
-    val sigs = base.withColumn("sig", sigUdf(col("text")))
-    // band key = md5-hash("b|" + comma-joined slice of the signature).
-    // `carryCols` ride along for callers that cannot join the payload
-    // back by id (a streaming side would need a stream-stream join);
-    // batch callers leave it empty and stay payload-free.
-    val bandUdf = udf((sig: Seq[Long]) =>
-      Array.tabulate(bands) { b =>
-        graft.kernel.TextKernel.md5Hash60(b.toString + "|" +
-          sig.slice(b * rowsPerBand, (b + 1) * rowsPerBand).mkString(","))
-      })
-    val banded = sigs.select(
-      (col("id") +: carryCols.map(col)) :+
-      posexplode(bandUdf(col("sig"))): _*)
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_hash")
-    (base, banded)
-  }
-
-  /** MinHash+LSH near-duplicate pairs on the md5 hash family — the
-    * oracle-exact twin of [[minhashPairs]]: identical pipeline shape
-    * (shingle → signature → band buckets → bucket-join → exact-Jaccard
-    * verify), but every hash derives from md5 of the shingle text, so
-    * an external engine can re-derive the full candidate set
-    * bit-for-bit. Signatures and band keys are computed in spec-pinned
-    * kernel UDFs (TextKernel.md5Hash60 via exactBandKeys) — the r8
-    * interpreted-HOF rewrite; the previous all-column formulation cost
-    * ~7 µs per interpreted lambda eval on the hot path. The md5 hash
-    * family, and therefore the bit-for-bit oracle claim, is unchanged
-    * (pinned kernel-vs-column in LlmOpsSpec).
-    */
-  def minhashPairsExact(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 5,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.7): DataFrame = {
-    val (base, banded) =
-      exactBandKeys(docs, idCol, textCol, shingleN, numHashes, bands)
-    bandedCandidatePairs(banded, "band_hash", base.select("id", "text"), "text")
-      .select(col("id_a"), col("id_b"),
-        ngramJaccard(col("text_a"), col("text_b"), shingleN).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col("jaccard")).as("jaccard"))
-  }
-
-  /** Incremental dedup of a NEW shard against an already-INDEXED
-    * corpus — the ingest-time operation at 100 TB, where re-running
-    * all-pairs LSH over the full corpus per arriving shard is not an
-    * option: the index side's (id, band, band_hash) triples and
-    * shingle payloads are computed once and persisted (here re-derived
-    * from `indexDocs` for the oracle), and each new shard pays only
-    * its own signature pass plus a band-key join INTO the index.
-    * Output, per new document with at least one verified match:
-    * (new_id, n_matches, best_jaccard, best_match_id) — ties on
-    * jaccard resolve to the smallest matched id, so the decision is
-    * deterministic in both engines.
-    *
-    * Scale shape: the band join moves only key triples (never text);
-    * new-shard rows probe the index's hash-partitioned band buckets —
-    * shuffle is O(shard × bands + matched pairs), independent of
-    * corpus size. Verification joins text back per side by id, and
-    * the final argmax is two hash aggregates on new_id (no window).
-    */
-  def minhashNewVsIndexExact(
-      newDocs: DataFrame,
-      indexDocs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 5,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.7): DataFrame = {
-    val (nBase, nBanded) =
-      exactBandKeys(newDocs, idCol, textCol, shingleN, numHashes, bands)
-    val (iBase, iBanded) =
-      exactBandKeys(indexDocs, idCol, textCol, shingleN, numHashes, bands)
-    val cand = nBanded
-      .select(col("band"), col("band_hash"), col("id").as("new_id"))
-      .join(iBanded.select(col("band"), col("band_hash"),
-        col("id").as("matched_id")), Seq("band", "band_hash"))
-      .select("new_id", "matched_id").distinct()
-    val ver = cand
-      .join(nBase.select(col("id").as("new_id"), col("text").as("text_a")),
-        "new_id")
-      .join(iBase.select(col("id").as("matched_id"), col("text").as("text_b")),
-        "matched_id")
-      .select(col("new_id"), col("matched_id"),
-        ngramJaccard(col("text_a"), col("text_b"), shingleN).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    val best = ver.groupBy(col("new_id"))
-      .agg(count(lit(1)).as("n_matches"), max(col("jaccard")).as("best_jaccard"))
-    // argmax by re-join on the (engine-consistent) max value; ties →
-    // smallest matched id
-    best.join(ver, best("new_id") === ver("new_id") &&
-        ver("jaccard") === best("best_jaccard"))
-      .groupBy(best("new_id"), col("n_matches"), col("best_jaccard"))
-      .agg(min(col("matched_id")).as("best_match_id"))
-  }
-
-  private val simhashUdf = udf((text: String) =>
-    TextKernel.simhash64(TextKernel.tokens(text)))
-
-  /** SimHash near-duplicate pairs: 64-bit simhash, bucketed by 16-bit
-    * bands (a pair within Hamming distance ≤ maxHamming such that one
-    * of 4 bands is identical is found; 4 bands ⇒ guaranteed recall for
-    * distance ≤ 3), verified by exact Hamming distance.
-    */
-  def simhashPairs(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    val hammingUdf = udf((a: Long, b: Long) => TextKernel.hammingDistance(a, b))
-    val sigs = docs.select(col(idCol).as("id"), simhashUdf(col(textCol)).as("sim"))
-    val banded = sigs.select(col("id"), col("sim"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("sim"), b * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_bits")
-    bandedCandidatePairs(banded, "band_bits", sigs.select("id", "sim"), "sim")
-      .select(col("id_a"), col("id_b"),
-        hammingUdf(col("sim_a"), col("sim_b")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(min(col("hamming")).as("hamming"))
-  }
-
-  /** SimHash near-duplicate pairs on the md5 hash family — the
-    * oracle-exact twin of [[simhashPairs]]: a 60-bit simhash whose bit
-    * j is the majority vote of bit j of md5(token) over all tokens
-    * (with multiplicity), banded as 5×12-bit buckets (pigeonhole: any
-    * pair within Hamming distance ≤ 4 shares a band), verified by the
-    * exact Hamming distance. Bit j is read from a single hex digit of
-    * the md5, so no arithmetic ever exceeds small-integer range and an
-    * external engine reproduces every candidate bit-for-bit.
+  /** SimHash near-duplicate pairs on the md5 hash family: a 60-bit
+    * simhash whose bit j is the majority vote of bit j of md5(token)
+    * over all tokens (with multiplicity), banded as 5×12-bit buckets
+    * (pigeonhole: any pair within Hamming distance ≤ 4 shares a band),
+    * verified by the exact Hamming distance. Bit j is read from a
+    * single hex digit of the md5, so no arithmetic ever exceeds
+    * small-integer range and an external engine reproduces every
+    * candidate bit-for-bit.
     * Output: (id_a, id_b, hamming).
     */
-  def simhashPairsExact(
+  def simhashPairs(
       docs: DataFrame,
       idCol: String,
       textCol: String,
@@ -1006,15 +828,9 @@ object Dedup {
     * hand AQE as initialPartitionNum; computing it here makes the
     * default safe instead of tunable.
     *
-    * `exactHash = true` (default) is the md5Hash60 family — the
-    * engine-neutral oracle hash the l81 registration's DuckDB SQL
-    * re-derives. `false` is the FNV/mix64 production family
-    * (TextKernel.winnowFingerprints): same winnowing guarantee,
-    * ~3× cheaper per gram than md5 — the md5-oracle/FNV-production
-    * split every other dedup family has (x13, x06). The two families
-    * select DIFFERENT window minima, so their pair sets are each
-    * internally consistent but not identical — production output is
-    * not oracle-comparable (by design, like x13's).
+    * Grams hash with md5Hash60, the engine-neutral family the l81
+    * registration's DuckDB SQL re-derives: the selected window minima
+    * depend on the hash family, so the oracle needs this one.
     *
     * The fingerprint set is localCheckpointed: it feeds the df
     * aggregate and BOTH sides of the pair self-join, and the per-gram
@@ -1032,15 +848,11 @@ object Dedup {
       k: Int = 8,
       w: Int = 4,
       minShared: Int = 2,
-      maxDf: Int = 8,
-      exactHash: Boolean = true): DataFrame = {
+      maxDf: Int = 8): DataFrame = {
     require(minShared >= 1 && maxDf >= 2,
       "minShared >= 1 and maxDf >= 2 (a pair needs two sharers)")
-    val fpUdf =
-      if (exactHash) udf((t: String) =>
-        graft.kernel.TextKernel.winnowMd5Fingerprints(t, k, w))
-      else udf((t: String) =>
-        graft.kernel.TextKernel.winnowFingerprints(t, k, w))
+    val fpUdf = udf((t: String) =>
+      graft.kernel.TextKernel.winnowMd5Fingerprints(t, k, w))
     val spark = docs.sparkSession
     val sessionParts =
       spark.conf.getOption("spark.sql.shuffle.partitions")

@@ -257,7 +257,7 @@ object Writers {
       def int(j: Int) =
         if (ints(j) < 0 || r.isNullAt(ints(j))) None else Some(num(ints(j)).longValue())
       def str(j: Int) = if (strs(j) < 0) None else Option(r.getString(strs(j)))
-      SamCodec.SamRecord(r.getString(id), num(flags).intValue(), r.getString(ref),
+      SamCodec.SamRecord(orStar(id), num(flags).intValue(), r.getString(ref),
         num(pos).longValue(), 0L, num(mapq).shortValue(), orStar(cigar),
         orStar(mateRef), num(matePos).longValue(), num(tlen).longValue(),
         int(0), int(1), int(2), int(3), int(4), int(5), int(6), int(7),

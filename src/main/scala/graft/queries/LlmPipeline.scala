@@ -75,13 +75,21 @@ object LlmPipeline {
        |  SELECT unnest(generate_series(c0, c1)) AS id, c0 AS component
        |    FROM runs)""".stripMargin
 
-  /** Carter–Wegman minhash signature + band-key CTEs over `rel` —
-    * the DuckDB re-derivation of TextKernel.minhashCwSig +
-    * Dedup.exactBandKeys, shared by l03/l40. ONE md5 per distinct
-    * shingle (hex halves 1–15 / 16–30 reduced mod 2³¹−1), then all
-    * numHashes values are integer mixes — the md5-per-(j, shingle)
-    * family this replaces priced the oracle at numHashes × |shingles|
-    * digests per document (>90 s at sf0.1; CW measured 3.9 s).
+  /** Carter–Wegman minhash signature + band-key CTEs over `rel`,
+    * shared by the l03/l40/l79 oracles. ONE md5 per distinct shingle
+    * (hex halves 1–15 / 16–30 reduced mod 2³¹−1), then all numHashes
+    * values are integer mixes, so the oracle stays linear (the
+    * md5-per-(j, shingle) family priced it at numHashes × |shingles|
+    * digests per document: >90 s at sf0.1; CW measured 3.9 s).
+    *
+    * The Spark side bands with a different family (Dedup.minhashIndex:
+    * FNV shingle hashes, splitmix64 minhash). Both verify EXACT
+    * shingle Jaccard, so each result is {pairs with J ≥ threshold}
+    * whichever family proposed the candidates, as long as banding
+    * recall is 1 at the corpus's Jaccard levels (J⁴ per band, 16
+    * bands). Measured equal at sf0.01 and sf0.1 (25/25 and 256/256
+    * pairs). A testdata refresh that plants boundary-Jaccard pairs
+    * where the two families' recall splits turns these rows red.
     * Emits CTEs `base` (id, shs [+ extraCols]), `sig`, `banded`.
     */
   private def duckCwBandCtes(extraCols: String = ""): String =
@@ -196,20 +204,14 @@ object LlmPipeline {
       Some(s"""WITH $duckConsecPairCtes
               |SELECT id_a, id_b, ROUND(jaccard, 6) AS jaccard FROM pj""".stripMargin)),
 
-    // MinHash + banded LSH near-dup pairs on the md5-seeded
-    // Carter–Wegman hash family: identical pipeline shape to the
-    // fast-kernel minhashPairs (shingle → signature → band buckets →
-    // bucket join → exact-Jaccard verify) but every hash derives from
-    // ONE md5 per shingle plus integer arithmetic, so the oracle
-    // re-derives the ENTIRE candidate set — signatures, band keys,
-    // pairs, verification — bit-for-bit in DuckDB, in linear time
-    // (the md5-per-(j, shingle) family this replaces cost the oracle
-    // numHashes × |shingles| digests per doc — the r9 sweep
-    // exclusion). The fast variant stays recall-tested in LlmOpsSpec.
+    // MinHash + banded LSH near-dup pairs (shingle → signature → band
+    // buckets → bucket-local exact-Jaccard verify). The oracle bands
+    // with its own linear-time family and verifies the same exact
+    // Jaccard — see duckCwBandCtes for why the results agree.
     QueryDef(
       "l03_minhash_lsh",
       (s, d) =>
-        Dedup.minhashPairsExact(Tables.documents(s, d), "doc_id", "text",
+        Dedup.minhashPairs(Tables.documents(s, d), "doc_id", "text",
           shingleN = 5, numHashes = 64, bands = 16, threshold = 0.4)
           .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard")),
       Some(s"""WITH ${duckCwBandCtes()},
@@ -230,7 +232,7 @@ object LlmPipeline {
     // buckets, exact Hamming verify — fully re-derived by the oracle.
     QueryDef(
       "l04_simhash",
-      (s, d) => Dedup.simhashPairsExact(Tables.documents(s, d), "doc_id", "text", maxHamming = 10),
+      (s, d) => Dedup.simhashPairs(Tables.documents(s, d), "doc_id", "text", maxHamming = 10),
       Some("""WITH t AS (
              |  SELECT doc_id AS id,
              |         list_transform(list_filter(string_split_regex(lower(text), '[ \t\n\x0B\f\r]+'),
@@ -1396,19 +1398,17 @@ object LlmPipeline {
 
     // Incremental dedup against an indexed corpus: md5-odd docs are
     // the arriving shard, md5-even docs the persisted index (the l13
-    // hash family split). Same md5-seeded Carter–Wegman minhash/band
-    // family as l03, so the oracle re-derives both sides' band keys,
-    // the asymmetric band join, verification, and the deterministic
-    // argmax bit-for-bit — in linear time.
+    // hash family split). The oracle re-derives the asymmetric band
+    // join, verification and the deterministic argmax on l03's oracle
+    // banding (duckCwBandCtes).
     QueryDef(
       "l40_dedup_against_index",
       (s, d) => {
         val docs = Tables.documents(s, d)
         val bkt = Sampling.hashBucket(col("text"))
-        Dedup.minhashNewVsIndexExact(
-            docs.filter(bkt >= 5000), docs.filter(bkt < 5000),
-            "doc_id", "text", shingleN = 5, numHashes = 64, bands = 16,
-            threshold = 0.4)
+        Dedup.minhashNewVsPrebuiltIndex(docs.filter(bkt >= 5000),
+            Dedup.minhashIndex(docs.filter(bkt < 5000), "doc_id", "text"),
+            "doc_id", "text", threshold = 0.4)
           .select(col("new_id"), col("n_matches"),
             round(col("best_jaccard"), 6).as("best_jaccard"),
             col("best_match_id"))
@@ -3133,7 +3133,7 @@ object LlmPipeline {
         modelSource = "(SELECT * FROM embeddings WHERE vec_id % 2 = 0)"))),
 
     // The COMPLETE production LSH dedup pipeline in one registration
-    // (new r10): CW-minhash band pairs (the l03 machinery) → connected
+    // (new r10): minhash band pairs (the l03 machinery) → connected
     // components over the VERIFIED pair graph → keep-best canonical
     // per component (RefinedWeb keep-the-longest, the l47 rule).
     // Unlike l12/l47 — whose pair set is the deterministic
@@ -3148,7 +3148,7 @@ object LlmPipeline {
       "l79_lsh_dedup_pipeline",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val pairs = Dedup.minhashPairsExact(docs, "doc_id", "text",
+        val pairs = Dedup.minhashPairs(docs, "doc_id", "text",
             shingleN = 5, numHashes = 64, bands = 16, threshold = 0.4)
           .select(col("id_a"), col("id_b"))
         Dedup.keepBest(docs, Dedup.connectedComponents(pairs),

@@ -4,41 +4,34 @@ import graft.{QueryDef, Tables}
 import graft.ops._
 import org.apache.spark.sql.functions._
 
-/** Driver-gate rows for the PRODUCTION kernels behind the bench-only
-  * x-rows (r13 verdict #3): until r14 the fast-hash/persisted-index/
-  * size-gated paths benched as x03/x06/x07/x08/x09/x13/x16 were
-  * correctness-covered by ScalaTest agreement specs only — the driver
-  * verified their md5-oracle twins (l03/l36/l38/l40/l54/l68), not the
-  * kernels production runs. Each row here runs the PRODUCTION path at
-  * gate scale and shares its twin's DuckDB oracle verbatim, which is
-  * sound because the production output is hash-family-independent:
+/** Driver-gate rows for the SERVING strategies behind the bench-only
+  * x/y-rows: each runs a path that production picks over the plain
+  * l-row operator (a size-gated kernel, a persisted index, a pruned
+  * read) at gate scale and shares the l-row's DuckDB oracle
+  * verbatim. The strategy cannot change the result, only how it is
+  * computed, so the shared oracle holds; what each row proves is that
+  * the serving chain production runs still returns it. Each stays
+  * because its chain runs in no l-row:
   *
-  *  - x03/x08: LSH banding recall at the corpus's Jaccard levels is
-  *    ~1 for BOTH families (J^4-per-band collision, 16 bands), and
-  *    the bucket-local verify computes EXACT shingle Jaccard — so the
-  *    verified pair set is {pairs with J ≥ threshold}, identical
-  *    whichever family proposed the candidates. Measured equal on
-  *    sf0.01 AND sf0.1 (XTwinProbe, r14: 25/25 and 256/256
-  *    pairs, zero asymmetric rows).
-  *  - x06/x13: duplicate-chunk / duplicate-window detection is
-  *    hash-EQUALITY of chunk text; absent collisions (64-bit space,
-  *    ≤ ~1M chunks at gate scale) FNV equality ⇔ md5 equality ⇔ text
-  *    equality, and no hash value reaches the output schema.
-  *  - x07: scoreAuto's broadcast-kernel path vs the join path is an
-  *    execution-strategy split over the same integer counts and the
-  *    same double arithmetic per transition (kernel sums in token
-  *    order exactly like the join-then-AVG plan's partial aggregate).
-  *  - x09: bm25TopKFromIndex executes the same floor-quantized score
-  *    expression shapes as bm25TopK (l54's scaladoc pins this).
-  *  - x16: full-probe serving from the partitioned at-rest index is
-  *    exact brute force by construction (every list probed), so the
-  *    l11 brute-force oracle applies; what the row proves is the
-  *    persist → driver-resolved probe literal → pruned read → serve
-  *    CHAIN, the standing-deployment path x16 benches.
+  *  - x07: scoreAuto's broadcast-kernel branch (the l38 row runs the
+  *    join path) — same integer counts and the same double arithmetic
+  *    per transition (the kernel sums in token order exactly like the
+  *    join-then-AVG plan's partial aggregate).
+  *  - x09: BM25 served from the doc_id-bucketed catalog index
+  *    (build → bucketed scan → score aggregate riding the bucket
+  *    partitioning → top-k), the same floor-quantized score
+  *    expressions as l54's bm25TopK.
+  *  - y10: the same bucketed serving with term-bucket partitions: the
+  *    bucket filter is a superset of the exact vocabulary join inside,
+  *    so the layout cannot change the result; the row proves the
+  *    resolve-buckets → pruned read → serve chain.
+  *  - x16: full-probe serving from the partitioned at-rest IVF index
+  *    is exact brute force by construction (every list probed), so
+  *    l11's brute-force oracle applies; the row proves the persist →
+  *    driver-resolved probe literal → pruned read → serve chain.
   *
-  * If a future testdata refresh plants boundary-Jaccard pairs where
-  * the families' banding recall could split, the x03/x08 rows go red
-  * at the driver gate — that is the point of registering them.
+  * The dedup kernels have one implementation each, run by their
+  * l-rows directly (l03/l36/l40/l68/l79).
   */
 object ProductionChecks {
 
@@ -73,21 +66,6 @@ object ProductionChecks {
 
   val queries: Seq[QueryDef] = Seq(
 
-    // Production CW/FNV minhash LSH pairs (the x03 kernel) — l03's oracle.
-    QueryDef(
-      "x03_minhash_check",
-      (s, d) => Dedup.minhashPairs(Tables.documents(s, d), "doc_id", "text",
-          shingleN = 5, numHashes = 64, bands = 16, threshold = 0.4)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard")),
-      Some(oracleOf("l03_minhash_lsh"))),
-
-    // Production FNV chunk fingerprints (the x06 kernel) — l36's oracle.
-    QueryDef(
-      "x06_dup_spans_check",
-      (s, d) => CorpusStats.dupChunkFraction(Tables.documents(s, d),
-        "doc_id", "text", chunkTokens = 5, minDocs = 2, exactHash = false),
-      Some(oracleOf("l36_dup_spans"))),
-
     // Size-gated scoreAuto serving (the x07/y07 path; broadcast-kernel
     // branch at gate scale) — l38's oracle.
     QueryDef(
@@ -99,22 +77,6 @@ object ProductionChecks {
             "text"), "doc_id", "text")
       },
       Some(oracleOf("l38_lm_score"))),
-
-    // Production persisted-index incremental dedup (the x08 kernel:
-    // minhashIndex + cross-side bucket-local verify) — l40's oracle.
-    QueryDef(
-      "x08_incremental_check",
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        val bkt = Sampling.hashBucket(col("text"))
-        Dedup.minhashNewVsPrebuiltIndex(docs.filter(bkt >= 5000),
-            Dedup.minhashIndex(docs.filter(bkt < 5000), "doc_id", "text"),
-            "doc_id", "text", threshold = 0.4)
-          .select(col("new_id"), col("n_matches"),
-            round(col("best_jaccard"), 6).as("best_jaccard"),
-            col("best_match_id"))
-      },
-      Some(oracleOf("l40_dedup_against_index"))),
 
     // Persisted-postings BM25 serving (the x09/y09 path) — l54's oracle.
     QueryDef(
@@ -167,13 +129,6 @@ object ProductionChecks {
         Retrieval.bm25TopKFromBucketedIndex(s, t, q, 10)
       },
       Some(oracleOf("l54_bm25_topk"))),
-
-    // Production FNV window fingerprints (the x13 kernel) — l68's oracle.
-    QueryDef(
-      "x13_substr_check",
-      (s, d) => CorpusStats.exactSubstrSpans(Tables.documents(s, d),
-        "doc_id", "text", minTokens = 8, minCount = 2, exactHash = false),
-      Some(oracleOf("l68_exact_substr_spans"))),
 
     // Partitioned at-rest IVF serving at full probe (the x16 chain:
     // persist partitioned by list_id → driver-resolved probe literal →

@@ -13,10 +13,12 @@ object IngestStreams {
 
   /** Streaming near-dup detection of arriving documents against a
     * PERSISTED MinHash index — the streaming twin of
-    * [[Dedup.minhashNewVsIndexExact]]. Each micro-batch computes its
-    * documents' band keys map-side (the same md5 family, pure column
-    * arithmetic) and stream-static joins the index's band buckets;
-    * collisions are verified with exact n-gram Jaccard and emitted as
+    * [[Dedup.minhashNewVsPrebuiltIndex]]. Both sides band through
+    * [[Dedup.minhashIndex]] + `explodeBanded` (the batch path's hash
+    * family, so a key collides here iff it collides there); each
+    * micro-batch computes its documents' band keys map-side and
+    * stream-static joins the index's band buckets. Collisions are
+    * verified with exact n-gram Jaccard on the text and emitted as
     * (new_id, matched_id, jaccard, ts) append-mode rows.
     *
     * State design: the stream-static join itself is STATELESS (the
@@ -45,23 +47,23 @@ object IngestStreams {
       bands: Int = 16,
       threshold: Double = 0.7,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    // static side: (band, band_hash, matched_id, text_b) — batch-only
-    // joins, resolved once per micro-batch
-    val (iBase, iBanded) =
-      Dedup.exactBandKeys(index, idCol, textCol, shingleN, numHashes, bands)
-    val indexSide = iBanded
-      .join(iBase.select(col("id"), col("text").as("text_b")), "id")
+    def banded(docs: DataFrame, carry: Seq[String]): DataFrame =
+      Dedup.explodeBanded(Dedup.minhashIndex(docs, idCol, textCol,
+        shingleN, numHashes, bands, carryCols = carry))
+    // static side: (band, band_hash, matched_id, text_b), resolved
+    // once per micro-batch
+    val indexSide = banded(
+        index.select(col(idCol), col(textCol), col(textCol).as("text_b")),
+        Seq("text_b"))
       .select(col("id").as("matched_id"), col("text_b"),
         col("band"), col("band_hash"))
     // stream side: band keys computed map-side with text and ts
     // CARRIED through the explode (a payload-free join-back by id
     // would be a stream-stream join and need its own watermark state)
-    val (_, nBanded) = Dedup.exactBandKeys(
-      newDocs.select(col(idCol), col(textCol).as("text_a"),
-        col(textCol), col(tsCol).as("ts")),
-      idCol, textCol, shingleN, numHashes, bands,
-      carryCols = Seq("text_a", "ts"))
-    nBanded
+    banded(
+        newDocs.select(col(idCol), col(textCol), col(textCol).as("text_a"),
+          col(tsCol).as("ts")),
+        Seq("text_a", "ts"))
       .join(indexSide, Seq("band", "band_hash"))
       .select(col("id").as("new_id"), col("matched_id"),
         Dedup.ngramJaccard(col("text_a"), col("text_b"), shingleN)

@@ -124,7 +124,7 @@ object QualityMonitor {
     val spark = docs.sparkSession
     val fpSetBc = spark.sparkContext.broadcast(benchmarkFps.toSet)
     val leakUdf = udf((text: String) => {
-      val hs = graft.kernel.TextKernel.slidingWindowHashes(text, n, true)
+      val hs = graft.kernel.TextKernel.slidingWindowHashes(text, n)
       val set = fpSetBc.value
       var leaked = 0L
       var i = 0

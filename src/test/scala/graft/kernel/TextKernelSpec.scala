@@ -59,23 +59,6 @@ class TextKernelSpec extends AnyFunSuite {
     assert(est(sa, sa) == 1.0)
   }
 
-  test("charShingles matches an offsetByCodePoints re-derivation") {
-    def ref(text: String, n: Int): Seq[String] = {
-      val total = text.codePointCount(0, text.length)
-      (0 to total - n).map { i =>
-        val st = text.offsetByCodePoints(0, i)
-        text.substring(st, text.offsetByCodePoints(st, n))
-      }.distinct
-    }
-    for (s <- Seq("abcdef", "aaaaa", "ab", "", "😀x😀x😀y",
-        "mixed ☃ unicode text here");
-        n <- Seq(2, 5)) {
-      assert(graft.kernel.TextKernel.charShingles(s, n).toSeq == ref(s, n),
-        s"for '$s' n=$n")
-    }
-    assert(graft.kernel.TextKernel.charShingles(null, 3).isEmpty)
-  }
-
   test("md5Hash60 equals the first-15-hex-chars-of-md5 column idiom") {
     val md = java.security.MessageDigest.getInstance("MD5")
     for (s <- Seq("", "a", "0:abcde", "7|123,456", "unicode ☃ snow",
@@ -118,9 +101,9 @@ class TextKernelSpec extends AnyFunSuite {
   }
 
   test("simhash: similar token multisets land within small Hamming distance") {
-    val a = simhash64("the quick brown fox jumps over the lazy dog tonight".split(" "))
-    val b = simhash64("the quick brown fox jumps over the lazy cat tonight".split(" "))
-    val c = simhash64("entirely unrelated words describing other various topics instead".split(" "))
+    val a = md5Simhash60("the quick brown fox jumps over the lazy dog tonight")
+    val b = md5Simhash60("the quick brown fox jumps over the lazy cat tonight")
+    val c = md5Simhash60("entirely unrelated words describing other various topics instead")
     assert(hammingDistance(a, a) == 0)
     assert(hammingDistance(a, b) < hammingDistance(a, c))
     assert(hammingDistance(a, b) <= 16)
@@ -211,16 +194,13 @@ class TextKernelSpec extends AnyFunSuite {
 
   test("r15 slidingWindowHashes: incremental form equals the joined-string form") {
     // reference: the pre-r15 formulation — hash the space-joined
-    // lowercased window string with md5Hash60 / hash64
-    def ref(text: String, l: Int, exact: Boolean): Array[Long] = {
+    // lowercased window string with md5Hash60
+    def ref(text: String, l: Int): Array[Long] = {
       if (text == null) return Array.empty
       val ts = TextKernel.tokens(text)
       val n = ts.length - (l - 1)
       if (n <= 0) return Array.empty
-      Array.tabulate(n) { i =>
-        val s = ts.slice(i, i + l).mkString(" ")
-        if (exact) TextKernel.md5Hash60(s) else TextKernel.hash64(s)
-      }
+      Array.tabulate(n)(i => TextKernel.md5Hash60(ts.slice(i, i + l).mkString(" ")))
     }
     val rnd = new scala.util.Random(7)
     // multi-byte UTF-8, supplementary chars (surrogate pairs), mixed
@@ -231,8 +211,8 @@ class TextKernelSpec extends AnyFunSuite {
       (0 until rnd.nextInt(30)).map(_ => vocab(rnd.nextInt(vocab.size)))
         .mkString(" ")
     }
-    for (d <- docs; l <- Seq(1, 2, 3, 8); exact <- Seq(true, false))
-      assert(TextKernel.slidingWindowHashes(d, l, exact).toSeq ==
-        ref(d, l, exact).toSeq, s"l=$l exact=$exact doc=$d")
+    for (d <- docs; l <- Seq(1, 2, 3, 8))
+      assert(TextKernel.slidingWindowHashes(d, l).toSeq ==
+        ref(d, l).toSeq, s"l=$l doc=$d")
   }
 }

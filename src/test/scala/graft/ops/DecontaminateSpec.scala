@@ -140,16 +140,13 @@ class DecontaminateSpec extends AnyFunSuite {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         Option(r.getString(3)), r.getString(4))).sortBy(_._1).toSeq
-    for (exact <- Seq(true, false)) {
-      val fused = canon(Decontaminate.decontaminateExcise(
-        corpus, benchmark, "doc_id", "text", n = 3, exactHash = exact,
-        carryCols = Seq("lang")))
-      // maxBroadcastFps = 0 forces the above-gate membership-join plan
-      val legacy = canon(Decontaminate.decontaminateExcise(
-        corpus, benchmark, "doc_id", "text", n = 3, exactHash = exact,
-        maxBroadcastFps = 0L, carryCols = Seq("lang")))
-      assert(fused.exists(_._2 > 0), "fixture must actually excise")
-      assert(fused == legacy, s"exactHash=$exact diverged")
-    }
+    val fused = canon(Decontaminate.decontaminateExcise(
+      corpus, benchmark, "doc_id", "text", n = 3, carryCols = Seq("lang")))
+    // maxBroadcastFps = 0 forces the above-gate membership-join plan
+    val legacy = canon(Decontaminate.decontaminateExcise(
+      corpus, benchmark, "doc_id", "text", n = 3,
+      maxBroadcastFps = 0L, carryCols = Seq("lang")))
+    assert(fused.exists(_._2 > 0), "fixture must actually excise")
+    assert(fused == legacy)
   }
 }

@@ -453,7 +453,7 @@ class LlmOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("minhashNewVsIndexExact matches a new shard only against the index") {
+  test("minhashNewVsPrebuiltIndex matches a new shard only against the index") {
     import spark.implicits._
     val all = plantedDocs.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     // index = the 20 base docs; new shard = the 5 planted near-dups plus
@@ -462,8 +462,8 @@ class LlmOpsSpec extends AnyFunSuite {
     val fresh = all.filter(_._1 >= 100L) ++ Seq(
       (200L, all.find(_._1 == 7L).get._2),
       (300L, "completely unrelated text about nothing in particular at all"))
-    val out = Dedup.minhashNewVsIndexExact(
-        fresh.toDF("doc_id", "text"), index.toDF("doc_id", "text"),
+    val out = Dedup.minhashNewVsPrebuiltIndex(fresh.toDF("doc_id", "text"),
+        Dedup.minhashIndex(index.toDF("doc_id", "text"), "doc_id", "text"),
         "doc_id", "text", threshold = 0.6)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getDouble(2), r.getLong(3))).toMap
@@ -551,21 +551,6 @@ class LlmOpsSpec extends AnyFunSuite {
     // nothing else, so no pair among them
     assert(!pairs.exists(p => p._1 >= 3L && p._2 >= 3L),
       s"boilerplate-only pairs leaked: $pairs")
-  }
-
-  test("winnowSimilarityPairs: FNV production family finds the same structure") {
-    import spark.implicits._
-    val para = "the quick brown fox jumps over the lazy dog again and again"
-    val docs = Seq(
-      (0L, s"alpha bravo charlie delta echo $para"),
-      (1L, s"zulu yankee xray whiskey victor $para"),
-      (2L, "completely different content with nothing shared at all ok")
-    ).toDF("doc_id", "text")
-    val pairs = Dedup.winnowSimilarityPairs(docs, "doc_id", "text",
-        k = 8, w = 4, minShared = 2, maxDf = 8, exactHash = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((0L, 1L)), "lifted paragraph must pair 0-1 on FNV too")
-    assert(!pairs.exists(p => p._1 == 2L || p._2 == 2L), "unrelated doc paired")
   }
 
   test("winnowSimilarityPairs: fingerprint UDF evaluates exactly once per doc") {

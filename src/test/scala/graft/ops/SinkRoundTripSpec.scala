@@ -322,15 +322,18 @@ class SinkRoundTripSpec extends AnyFunSuite {
   }
 
   test("SAM/BAM: a NULL cigar or mate_reference is written '*' by both formats") {
-    // a mapped read with no CIGAR and an unpaired read with no RNEXT
+    // a mapped read with no CIGAR, an unpaired read with no RNEXT and
+    // a read with no name (QNAME '*', which SAMv1 allows)
     val rows = Seq(Row("c", 0, "chrA", 5L, 60.toShort, null, "*", 0L, 0L, null, 0L, null),
-      Row("m", 0, "chrA", 9L, 60.toShort, "4M", null, 0L, 0L, null, 0L, null))
+      Row("m", 0, "chrA", 9L, 60.toShort, "4M", null, 0L, 0L, null, 0L, null),
+      Row(null, 0, "chrA", 13L, 60.toShort, "4M", "*", 0L, 0L, null, 0L, null))
     val dir = tmp()
     Writers.copySam(df(samSchema, rows), s"$dir/x.sam", includeHeader = false)
     assert(text(s"$dir/x.sam") == Seq("c\t0\tchrA\t5\t60\t*\t*\t0\t0\t*\t*\tNM:i:0",
-      "m\t0\tchrA\t9\t60\t4M\t*\t0\t0\t*\t*\tNM:i:0"))
+      "m\t0\tchrA\t9\t60\t4M\t*\t0\t0\t*\t*\tNM:i:0",
+      "*\t0\tchrA\t13\t60\t4M\t*\t0\t0\t*\t*\tNM:i:0"))
     Writers.copyBam(df(samSchema, rows), s"$dir/x.bam")
-    val expected = Seq(Seq("c", "*", "*"), Seq("m", "4M", "*"))
+    val expected = Seq(Seq("c", "*", "*"), Seq("m", "4M", "*"), Seq("*", "4M", "*"))
     for (p <- Seq(s"$dir/x.sam", s"$dir/x.bam"))
       assert(values(read("alignments", p), "read_id", "cigar", "mate_reference") == expected, p)
   }

@@ -184,7 +184,7 @@ class QualityMonitorSpec extends AnyFunSuite {
   // is the benchmark verbatim (1 window, 1 leaked); doc D is too short
   // for any window (0 grams, counted as a doc).
   private val leakFps: Array[Long] = Array(
-    graft.kernel.TextKernel.slidingWindowHashes("eval question alpha", 3, true).head)
+    graft.kernel.TextKernel.slidingWindowHashes("eval question alpha", 3).head)
   private val leakRows = Seq(
     (t("2026-01-01 10:00:05"), "the eval question alpha beta x"),
     (t("2026-01-01 10:00:40"), "totally clean text here now"),
