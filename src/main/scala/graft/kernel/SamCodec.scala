@@ -35,26 +35,39 @@ object SamCodec {
   def isHeaderLine(line: String): Boolean = line.nonEmpty && line.charAt(0) == '@'
 
   /** Reference-consumed length of a CIGAR (M/D/N/=/X ops) — htslib
-    * bam_cigar2rlen equivalent.
+    * bam_cigar2rlen equivalent. Like htslib's SAM parser it rejects a
+    * malformed CIGAR — an op with no length (`M10M`), trailing digits
+    * (`10M5`), a length past Long range — with a [[SamParseException]]
+    * naming it; a zero length (`0M`) is legal.
     */
   def cigarRefLen(cigar: String): Long = {
     if (cigar.isEmpty || cigar == "*") return 0L
+    def bad(why: String) = new SamParseException(s"Invalid CIGAR '$cigar': $why")
     var len = 0L
     var opLen = 0L
+    var digits = false
     var i = 0
     while (i < cigar.length) {
       val c = cigar.charAt(i)
-      if (c >= '0' && c <= '9') opLen = opLen * 10 + (c - '0')
-      else {
+      if (c >= '0' && c <= '9') {
+        if (opLen > (Long.MaxValue - 9) / 10) throw bad("operation length overflows")
+        opLen = opLen * 10 + (c - '0')
+        digits = true
+      } else {
+        if (!digits) throw bad(s"operation $c without length")
         c match {
-          case 'M' | 'D' | 'N' | '=' | 'X' => len += opLen
+          case 'M' | 'D' | 'N' | '=' | 'X' =>
+            if (len > Long.MaxValue - opLen) throw bad("reference length overflows")
+            len += opLen
           case 'I' | 'S' | 'H' | 'P'       => // query-only / clip ops
-          case other => throw new SamParseException(s"Invalid CIGAR op: $other")
+          case other => throw bad(s"unknown operation $other")
         }
         opLen = 0
+        digits = false
       }
       i += 1
     }
+    if (digits) throw bad("trailing digits without an operation")
     len
   }
 

@@ -44,18 +44,6 @@ object TextKernel {
     h
   }
 
-  /** Distinct character n-gram (shingle) hash set of a string. */
-  def shingleHashes(text: String, n: Int): Array[Long] = {
-    if (text.length < n) return Array.empty
-    val set = new mutable.HashSet[Long]
-    var i = 0
-    while (i + n <= text.length) {
-      set += hash64Range(text, i, i + n)
-      i += 1
-    }
-    set.toArray
-  }
-
   /** Sorted distinct FNV-64 hashes of the CODE-POINT n-gram windows —
     * the hashed twin of [[ngramJaccard]]'s shingle sets (same window
     * boundaries), precomputed once per document so LSH verify joins

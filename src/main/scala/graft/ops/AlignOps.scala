@@ -167,21 +167,25 @@ object AlignOps {
     }
   }
 
+  /** Every read against each of `indexes` in turn (one combined index,
+    * or one per subject), the indexes broadcast once.
+    */
   private def runAlignment(
-      queries: DataFrame, index: SeedAligner.Index,
+      queries: DataFrame, indexes: Seq[SeedAligner.Index],
       params: Minimap2Params): DataFrame = {
     val spark = queries.sparkSession
     val hasSeq2 = queries.columns.contains("sequence2")
     val cols = if (hasSeq2) Seq("read_id", "sequence1", "sequence2")
     else Seq("read_id", "sequence1")
-    val bcast = spark.sparkContext.broadcast(index)
+    val bcast = spark.sparkContext.broadcast(indexes.toVector)
     val maxSecondary = params.maxSecondary
     val eqx = params.eqx
     val rdd = queries.select(cols.head, cols.tail: _*).rdd.mapPartitions { rows =>
-      val idx = bcast.value
+      val idxs = bcast.value
       rows.flatMap { r =>
-        alignOne(idx, r.getString(0), r.getString(1),
-          if (hasSeq2) r.getString(2) else null, maxSecondary, eqx)
+        idxs.iterator.flatMap(idx =>
+          alignOne(idx, r.getString(0), r.getString(1),
+            if (hasSeq2) r.getString(2) else null, maxSecondary, eqx))
       }
     }
     spark.createDataFrame(rdd, outputSchema)
@@ -209,30 +213,11 @@ object AlignOps {
       params: Minimap2Params = Minimap2Params(),
       perSubjectDatabase: Boolean = false): DataFrame = {
     val subj = collectSubjects(subjects)
-    if (!perSubjectDatabase) {
-      runAlignment(queries, SeedAligner.buildIndex(subj, params.resolvedK, params.resolvedW), params)
-    } else {
-      // one single-subject index per subject, every query vs each —
-      // inherently O(Q×S) like the reference's per-subject Execute loop
-      val spark = queries.sparkSession
-      val indexes = subj.map(s =>
-        SeedAligner.buildIndex(Seq(s), params.resolvedK, params.resolvedW)).toVector
-      val bcast = spark.sparkContext.broadcast(indexes)
-      val hasSeq2 = queries.columns.contains("sequence2")
-      val cols = if (hasSeq2) Seq("read_id", "sequence1", "sequence2")
-      else Seq("read_id", "sequence1")
-      val maxSecondary = params.maxSecondary
-      val eqx = params.eqx
-      val rdd = queries.select(cols.head, cols.tail: _*).rdd.mapPartitions { rows =>
-        val idxs = bcast.value
-        rows.flatMap { r =>
-          idxs.iterator.flatMap(idx =>
-            alignOne(idx, r.getString(0), r.getString(1),
-              if (hasSeq2) r.getString(2) else null, maxSecondary, eqx))
-        }
-      }
-      spark.createDataFrame(rdd, outputSchema)
-    }
+    // per subject: one single-subject index each, every query vs each —
+    // inherently O(Q×S) like the reference's per-subject Execute loop
+    val groups = if (perSubjectDatabase) subj.map(Seq(_)) else Seq(subj)
+    runAlignment(queries,
+      groups.map(SeedAligner.buildIndex(_, params.resolvedK, params.resolvedW)), params)
   }
 
   /** Positional-params overload kept for the k/w call sites. */
@@ -323,7 +308,7 @@ object AlignOps {
           s"Corrupt index metadata (no $name): $indexPath"))
     val subj = collectSubjects(spark.read.parquet(s"$indexPath/subjects"))
     runAlignment(queries,
-      SeedAligner.buildIndex(subj, intField("k"), intField("w")), params)
+      Seq(SeedAligner.buildIndex(subj, intField("k"), intField("w"))), params)
   }
 
   /** Sharded alignment: one sub-job per shard — the shard's queries

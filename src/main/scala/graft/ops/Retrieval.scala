@@ -28,12 +28,11 @@ import org.apache.spark.sql.functions._
   * A one-shot [[bm25TopK]] pays three corpus passes (postings, doc
   * frequency, corpus stats). A standing deployment tokenizes ONCE:
   * [[bm25Index]] materializes the postings table (the inverted index
-  * in relational form), [[ensureBm25BucketedIndex]] persists it
-  * bucketed by doc_id (optionally partitioned by term bucket) with its
-  * stats beside it, and [[bm25TopKFromBucketedIndex]] serves queries
-  * from it through [[bm25TopKFromIndex]] without touching the raw text
-  * again — the same persist-once-serve-many contract as
-  * `Dedup.minhashIndex`.
+  * in relational form) and [[bm25IndexStats]] its 1-row corpus stats;
+  * both are written as plain parquet, and [[bm25TopKFromIndex]] serves
+  * queries from the two read back (`precomputedStats`) without
+  * touching the raw text again — the same persist-once-serve-many
+  * contract as `Dedup.minhashIndex`.
   */
 object Retrieval {
 
@@ -83,8 +82,7 @@ object Retrieval {
       k: Int,
       k1: Double = 1.2,
       b: Double = 0.75,
-      precomputedStats: Option[DataFrame] = None,
-      precomputedDf: Option[DataFrame] = None): DataFrame = {
+      precomputedStats: Option[DataFrame] = None): DataFrame = {
     val qterms = queries
       .select(col("query_id").cast("long").as("query_id"),
         explode(toks(col("query_text"))).as("term"))
@@ -103,17 +101,9 @@ object Retrieval {
     // map-side posting filter: only query-vocabulary postings survive
     // into any shuffle below
     val tf = postings.join(qSide(vocab), "term")
-    // df(term) is a pure INDEX property (the count of docs containing
-    // the term) — when the standing artifact persists it
-    // (`precomputedDf`, r15), serving reads the vocabulary-sized
-    // sidecar instead of re-aggregating the postings: the inline
-    // derivation was a SECOND full postings pass per batch (~half the
-    // y09 serving task time, measured per-stage). Either way the
-    // relation entering the join is ≤ |query vocab| rows.
-    val docFreq = precomputedDf
-      .map(_.join(qSide(vocab), "term")
-        .select(col("term"), col("df").cast("long").as("df")))
-      .getOrElse(tf.groupBy(col("term")).agg(count(lit(1)).as("df")))
+    // df(term): aggregated from the vocab-filtered postings, so the
+    // relation entering the join is ≤ |query vocab| rows
+    val docFreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val stats = precomputedStats
       .map(_.select(col("n_docs").cast("long").as("n_docs"),
         col("avgdl").cast("double").as("avgdl")))
@@ -144,150 +134,6 @@ object Retrieval {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), col("col.id").as("doc_id"),
         col("col.score").as("score"), (col("pos") + 1).cast("long").as("rank"))
-  }
-
-  /** Persist a [[bm25Index]] as a DOC_ID-BUCKETED catalog table — the
-    * r15 at-rest layout that removes the serving plan's LAST heavy
-    * exchange (guide §2.4 "bucketed tables persist a partitioning
-    * across jobs"). [[bm25TopKFromIndex]]'s per-(query, doc) score
-    * aggregate requires clustering by (query_id, doc_id); a bucketed
-    * scan reports HashPartitioning(doc_id), which satisfies it (equal
-    * doc_id ⇒ equal partition ⇒ equal (query, doc) pairs colocated),
-    * so the aggregate runs inside the scan stage and the exchange that
-    * carried one row per (query, doc) — 271 MB on y09's 500k-doc
-    * common-vocab batch even with doc-clustered postings — disappears;
-    * the only remaining exchanges are the query-vocab-sized docFreq
-    * aggregate and the O(k · queries · partitions) top-k rows. Scores
-    * are identical regardless of layout (the per-doc sum is an exact
-    * long sum of 1e-12-quantized contributions, order-independent by
-    * design; RetrievalSpec pins row identity).
-    *
-    * `termBuckets > 0` additionally partitions the table by
-    * `term_bucket = pmod(hash(term), termBuckets)` — the y10
-    * listing-time pruning layout: a serving batch whose query
-    * vocabulary touches v term buckets reads ONLY those v directories,
-    * and Catalyst prunes the other `termBuckets − v` before any task
-    * runs (a flat index makes every batch scan the whole index, since
-    * the vocabulary join filters rows AFTER the read). Composed WITH
-    * the bucket partitioning, each of the `docBuckets` scan tasks reads
-    * its bucket's file from each probed term_bucket directory, so the
-    * pruned read keeps HashPartitioning(doc_id) and needs no re-spread
-    * exchange.
-    *
-    * The 1-row stats sidecar lands in `<table>_stats` (n_docs, avgdl,
-    * n_buckets = termBuckets) — written LAST, so the ensure gate below
-    * treats a crash between the two writes as absent. `docBuckets` is
-    * a build-time layout parameter of the standing artifact (like the
-    * term-bucket modulus): size it to the serving cluster's
-    * parallelism; 32 matches the local bench session. An existing
-    * index is reused only when it has the requested layout; one built
-    * with other `docBuckets`/`termBuckets` is dropped and rebuilt.
-    */
-  def ensureBm25BucketedIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, postings: => DataFrame,
-      docBuckets: Int = 32, termBuckets: Int = 0): Unit = {
-    require(docBuckets > 0, s"docBuckets must be positive, got $docBuckets")
-    val tables = Seq(table, table + "_df", table + "_stats")
-    if (tables.forall(spark.catalog.tableExists) &&
-        bm25BucketedLayout(spark, table) == (docBuckets, termBuckets)) return
-    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    // a data directory left by a dead catalog (e.g. a previous
-    // in-memory-catalog JVM) blocks the CTAS — clear it first
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-    }
-    rm(new java.io.File(wh, table.toLowerCase))
-    rm(new java.io.File(wh, table.toLowerCase + "_df"))
-    rm(new java.io.File(wh, table.toLowerCase + "_stats"))
-    val p = postings
-    val writer =
-      if (termBuckets > 0)
-        p.withColumn("term_bucket", pmod(hash(col("term")), lit(termBuckets)))
-          // repartition on the BUCKET key first (same murmur3 pmod the
-          // bucketed write uses) so each bucket is exactly one task →
-          // one file per (bucket, term_bucket present)
-          .repartition(docBuckets, col("doc_id"))
-          .write.mode("overwrite")
-          .partitionBy("term_bucket")
-      else
-        p.repartition(docBuckets, col("doc_id"))
-          .write.mode("overwrite")
-    writer
-      .bucketBy(docBuckets, "doc_id").sortBy("doc_id", "term")
-      .saveAsTable(table)
-    // per-term document frequency — a pure index property, persisted
-    // so serving stops re-deriving it with a second postings pass per
-    // batch (r15; the same build-once rationale as n_docs/avgdl).
-    // Vocabulary-sized; derived from the WRITTEN table so the extra
-    // pass reads the compact postings, not the raw corpus.
-    spark.table(table)
-      .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").saveAsTable(table + "_df")
-    // stats LAST: the ensure gate above treats a crash between these
-    // writes as absent and rebuilds all three
-    bm25IndexStats(p)
-      .withColumn("n_buckets", lit(termBuckets))
-      .repartition(1)
-      .write.mode("overwrite").saveAsTable(table + "_stats")
-  }
-
-  /** (doc_id bucket count, term-bucket modulus) of an existing
-    * [[ensureBm25BucketedIndex]] table: the first from the catalog's
-    * bucket spec, the second from the stats sidecar. */
-  private def bm25BucketedLayout(
-      spark: org.apache.spark.sql.SparkSession, table: String): (Int, Int) = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    (meta.bucketSpec.map(_.numBuckets).getOrElse(0),
-      spark.table(table + "_stats").select(col("n_buckets").cast("int")).head().getInt(0))
-  }
-
-  /** Serve top-k from an [[ensureBm25BucketedIndex]] table: reads the
-    * `<table>_stats` sidecar (required — deriving N/avgdl from a
-    * pruned read would be wrong, and even unpruned it is an O(index)
-    * pass per batch), prunes `term_bucket` partitions at listing time
-    * when the table was written term-partitioned, and hands the
-    * bucket-partitioned scan straight to [[bm25TopKFromIndex]] — no
-    * re-spread exchange: the scan's HashPartitioning(doc_id) carries
-    * the score aggregate (scaladoc above). Output is row-identical to
-    * flat-index serving (the bucket filter is a superset of the exact
-    * vocabulary join inside; scores are layout-independent exact sums).
-    *
-    * The query vocabulary's bucket set is resolved with the SAME
-    * `pmod(hash(term), n_buckets)` expression the writer used (one tiny
-    * Spark job — no driver-side reimplementation of the hash to drift)
-    * and folded into a `term_bucket IN (…)` literal. The collected set
-    * is bucket IDS, bounded by `n_buckets` whatever the query set's
-    * size, so no batch guard is needed: a corpus-sized query set
-    * resolves to all buckets and degrades to the full-index read. A
-    * query with no indexed terms resolves to the empty set and returns
-    * no rows.
-    */
-  def bm25TopKFromBucketedIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String,
-      queries: DataFrame,
-      k: Int,
-      k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    val statsT = spark.table(table + "_stats")
-    val termBuckets = statsT.select(col("n_buckets").cast("int")).head().getInt(0)
-    val stats = statsT.select(col("n_docs"), col("avgdl"))
-    val postings =
-      if (termBuckets > 0) {
-        val vocabBuckets = queries
-          .select(explode(toks(col("query_text"))).as("term"))
-          .select(pmod(hash(col("term")), lit(termBuckets)).as("term_bucket"))
-          .distinct()
-          .collect().map(_.getInt(0))
-        spark.table(table)
-          .filter(col("term_bucket").isin(vocabBuckets.toIndexedSeq: _*))
-          .drop("term_bucket")
-      } else spark.table(table)
-    bm25TopKFromIndex(postings, queries, k, k1, b,
-      precomputedStats = Some(stats),
-      precomputedDf = Some(spark.table(table + "_df")))
   }
 
   /** One-shot BM25 top-k: tokenize, index, score in a single plan. */

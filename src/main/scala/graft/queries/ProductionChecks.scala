@@ -17,14 +17,10 @@ import org.apache.spark.sql.functions._
   *    join path) — same integer counts and the same double arithmetic
   *    per transition (the kernel sums in token order exactly like the
   *    join-then-AVG plan's partial aggregate).
-  *  - x09: BM25 served from the doc_id-bucketed catalog index
-  *    (build → bucketed scan → score aggregate riding the bucket
-  *    partitioning → top-k), the same floor-quantized score
-  *    expressions as l54's bm25TopK.
-  *  - y10: the same bucketed serving with term-bucket partitions: the
-  *    bucket filter is a superset of the exact vocabulary join inside,
-  *    so the layout cannot change the result; the row proves the
-  *    resolve-buckets → pruned read → serve chain.
+  *  - x09: BM25 served from the persisted flat index (postings and
+  *    corpus stats written as parquet, read back, served with the
+  *    stats supplied — the `bm25_topk` bench op's call), the same
+  *    floor-quantized score expressions as l54's bm25TopK.
   *  - x16: full-probe serving from the partitioned at-rest IVF index
   *    is exact brute force by construction (every list probed), so
   *    l11's brute-force oracle applies; the row proves the persist →
@@ -57,13 +53,6 @@ object ProductionChecks {
     out.getAbsolutePath
   }
 
-  /** Catalog-safe per-data-dir tag for the bucketed-index check tables
-    * (hive lowercases table names).
-    */
-  private def checkTag(d: String): String =
-    new java.io.File(d).getAbsolutePath
-      .replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-
   val queries: Seq[QueryDef] = Seq(
 
     // Size-gated scoreAuto serving (the x07/y07 path; broadcast-kernel
@@ -78,7 +67,8 @@ object ProductionChecks {
       },
       Some(oracleOf("l38_lm_score"))),
 
-    // Persisted-postings BM25 serving (the x09/y09 path) — l54's oracle.
+    // Persisted-postings BM25 serving (the bm25_topk path: parquet
+    // postings + stats sidecar, stats supplied) — l54's oracle.
     QueryDef(
       "x09_bm25_check",
       (s, d) => {
@@ -88,45 +78,16 @@ object ProductionChecks {
           (1L, "vector stream join"),
           (2L, "customer query filter table"))
           .toDF("query_id", "query_text")
-        // persist the index like the deployment the path serves — the
-        // r15 doc_id-bucketed catalog layout the x09/y09 bench rows
-        // use, so the zero-exchange serving chain (bucketed scan →
-        // score agg riding the bucket partitioning → top-k) runs under
-        // the driver's DuckDB gate every round
-        val t = s"bm25bk_check_${checkTag(d)}"
-        this.synchronized {
-          Retrieval.ensureBm25BucketedIndex(s, t,
-            Retrieval.bm25Index(Tables.documents(s, d), "doc_id", "text"))
+        val idx = cachedDir(d, "bm25idx") { out =>
+          Retrieval.bm25Index(Tables.documents(s, d), "doc_id", "text")
+            .write.mode("overwrite").parquet(out)
         }
-        Retrieval.bm25TopKFromBucketedIndex(s, t, q, 10)
-      },
-      Some(oracleOf("l54_bm25_topk"))),
-
-    // Term-bucket-partitioned BM25 serving (the y10 path) — l54's
-    // oracle again: the bucket filter is a superset of the exact
-    // vocabulary join inside, so the layout cannot change the result;
-    // what this row proves every round is the write-partitioned →
-    // sidecar-stats → resolve-buckets → pruned-read → serve CHAIN.
-    QueryDef(
-      "y10_bm25_partitioned_check",
-      (s, d) => {
-        import s.implicits._
-        val q = Seq(
-          (0L, "spark window agg"),
-          (1L, "vector stream join"),
-          (2L, "customer query filter table"))
-          .toDF("query_id", "query_text")
-        // the y10 bench layout at gate scale: term_bucket partition
-        // pruning composed with doc_id bucketing (r15) — proves the
-        // resolve-buckets → pruned-bucketed-read → zero-exchange-serve
-        // chain under the oracle
-        val t = s"bm25pbk_check_${checkTag(d)}"
-        this.synchronized {
-          Retrieval.ensureBm25BucketedIndex(s, t,
-            Retrieval.bm25Index(Tables.documents(s, d), "doc_id", "text"),
-            termBuckets = 64)
+        val stats = cachedDir(d, "bm25stats") { out =>
+          Retrieval.bm25IndexStats(s.read.parquet(idx))
+            .write.mode("overwrite").parquet(out)
         }
-        Retrieval.bm25TopKFromBucketedIndex(s, t, q, 10)
+        Retrieval.bm25TopKFromIndex(s.read.parquet(idx), q, 10,
+          precomputedStats = Some(s.read.parquet(stats)))
       },
       Some(oracleOf("l54_bm25_topk"))),
 

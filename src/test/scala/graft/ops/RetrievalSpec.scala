@@ -57,20 +57,6 @@ class RetrievalSpec extends AnyFunSuite {
     assert(a == b && a.nonEmpty)
   }
 
-  test("r14 bm25: doc-clustered index layout serves row-identically to the raw index") {
-    val idx = Retrieval.bm25Index(docs, "doc_id", "text")
-    // the doc_id-bucketed table is the doc-clustered at-rest layout
-    Retrieval.ensureBm25BucketedIndex(spark, "bm25bk_spec_clustered", idx, docBuckets = 4)
-    val cl = spark.table("bm25bk_spec_clustered")
-    // same rows, different at-rest order
-    assert(cl.collect().map(_.toSeq).toSet == idx.collect().map(_.toSeq).toSet)
-    val a = Retrieval.bm25TopKFromIndex(idx, q("alpha beta"), k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    val b = Retrieval.bm25TopKFromIndex(cl, q("alpha beta"), k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    assert(a == b && a.nonEmpty)
-  }
-
   test("bm25: persisted corpus stats give identical output and skip the postings-wide distinct") {
     import spark.implicits._
     val idx = Retrieval.bm25Index(docs, "doc_id", "text")
@@ -229,140 +215,17 @@ class RetrievalSpec extends AnyFunSuite {
     assert(got == Seq(1L, 4L))
   }
 
-  test("bm25 partitioned-at-rest serving: prunes to the vocab buckets, output identical") {
-    import spark.implicits._
-    val postings = Retrieval.bm25Index(docs, "doc_id", "text")
-    val t = "bm25bk_spec_prune"
-    Retrieval.ensureBm25BucketedIndex(spark, t, postings, docBuckets = 4, termBuckets = 8)
-    val qs = Seq((0L, "alpha beta"), (1L, "delta")).toDF("query_id", "query_text")
-    val served = Retrieval.bm25TopKFromBucketedIndex(spark, t, qs, k = 5)
-    val flat = Retrieval.bm25TopKFromIndex(postings, qs, k = 5,
-      precomputedStats = Some(Retrieval.bm25IndexStats(postings)))
-    def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    assert(canon(served) == canon(flat) && canon(served).nonEmpty)
-    // the scan must carry the resolved term_bucket IN literal as a
-    // PARTITION filter — pruning at file listing, before any task runs
-    val planStr = served.queryExecution.executedPlan.toString
-    val pf = planStr.linesIterator
-      .find(_.contains("PartitionFilters:"))
-      .getOrElse(fail(s"no PartitionFilters in plan:\n$planStr"))
-    assert(pf.contains("term_bucket"),
-      s"expected a term_bucket partition filter, got: $pf")
-  }
-
-  test("r15 bm25 doc-bucketed table: row-identical serving, score agg rides the scan") {
-    import spark.implicits._
-    val postings = Retrieval.bm25Index(docs, "doc_id", "text")
-    val qs = Seq((0L, "alpha beta"), (1L, "delta")).toDF("query_id", "query_text")
-    def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    val flatServed = Retrieval.bm25TopKFromIndex(postings, qs, k = 5,
-      precomputedStats = Some(Retrieval.bm25IndexStats(postings)))
-    val flatCanon = canon(flatServed)
-    // the plain-index plan pays the per-(query, doc) score exchange …
-    assert(flatServed.queryExecution.executedPlan.toString
-      .contains("hashpartitioning(query_id"), "fixture lost its contrast")
-
-    Retrieval.ensureBm25BucketedIndex(spark, "bm25bk_spec_flat", postings,
-      docBuckets = 4)
-    val bucketed = Retrieval.bm25TopKFromBucketedIndex(
-      spark, "bm25bk_spec_flat", qs, k = 5)
-    assert(canon(bucketed) == flatCanon && flatCanon.nonEmpty)
-    // … the bucketed-table plan must NOT: the only exchange keyed on
-    // query_id is the O(k)-row top-k (single-key hashpartitioning);
-    // the (query_id, doc_id) aggregate rides HashPartitioning(doc_id)
-    val planStr = bucketed.queryExecution.executedPlan.toString
-    assert(!planStr.split("hashpartitioning\\(query_id")
-      .drop(1).exists(_.takeWhile(_ != ')').contains("doc_id")),
-      s"score agg still exchanges (query_id, doc_id):\n$planStr")
-
-    // partitioned+bucketed twin: same rows, term_bucket partition
-    // filter present (listing-time pruning kept), still no score
-    // exchange
-    Retrieval.ensureBm25BucketedIndex(spark, "bm25bk_spec_part", postings,
-      docBuckets = 4, termBuckets = 8)
-    val pruned = Retrieval.bm25TopKFromBucketedIndex(
-      spark, "bm25bk_spec_part", qs, k = 5)
-    assert(canon(pruned) == flatCanon)
-    val prunedStr = pruned.queryExecution.executedPlan.toString
-    assert(prunedStr.contains("term_bucket"),
-      s"expected term_bucket pruning in:\n$prunedStr")
-    assert(!prunedStr.split("hashpartitioning\\(query_id")
-      .drop(1).exists(_.takeWhile(_ != ')').contains("doc_id")),
-      s"pruned score agg still exchanges (query_id, doc_id):\n$prunedStr")
-    // ensure() is idempotent: second call must not rebuild (the
-    // standing-index contract)
-    Retrieval.ensureBm25BucketedIndex(spark, "bm25bk_spec_part", postings,
-      docBuckets = 4, termBuckets = 8)
-    assert(canon(Retrieval.bm25TopKFromBucketedIndex(
-      spark, "bm25bk_spec_part", qs, k = 5)) == flatCanon)
-  }
-
-  test("bm25 doc-bucketed table: re-ensuring with another layout rebuilds it") {
-    import spark.implicits._
-    val postings = Retrieval.bm25Index(docs, "doc_id", "text")
-    val qs = Seq((0L, "alpha beta"), (1L, "delta")).toDF("query_id", "query_text")
-    def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    val expected = canon(Retrieval.bm25TopKFromIndex(postings, qs, k = 5))
-    val t = "bm25bk_spec_relayout"
-    def layout: (Int, Int, Set[Int]) = (
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(t)).bucketSpec.get.numBuckets,
-      spark.table(t + "_stats").select("n_buckets").head().getInt(0),
-      spark.table(t).select("term_bucket").distinct().collect().map(_.getInt(0)).toSet)
-    Retrieval.ensureBm25BucketedIndex(spark, t, postings, docBuckets = 4, termBuckets = 8)
-    assert(layout._1 == 4 && layout._2 == 8)
-    // a different term-bucket modulus must not serve the old layout
-    Retrieval.ensureBm25BucketedIndex(spark, t, postings, docBuckets = 4, termBuckets = 2)
-    assert(layout._1 == 4 && layout._2 == 2 && layout._3.forall(_ < 2))
-    assert(canon(Retrieval.bm25TopKFromBucketedIndex(spark, t, qs, k = 5)) == expected)
-    // nor a different doc_id bucket count
-    Retrieval.ensureBm25BucketedIndex(spark, t, postings, docBuckets = 2, termBuckets = 2)
-    assert(layout._1 == 2 && layout._2 == 2)
-    assert(canon(Retrieval.bm25TopKFromBucketedIndex(spark, t, qs, k = 5)) == expected)
-  }
-
-  test("bm25 partitioned index: _stats sidecar is hidden from the postings read") {
-    val postings = Retrieval.bm25Index(docs, "doc_id", "text")
-    val t = "bm25bk_spec_side"
-    // postings spread over several tasks, as a real build's are
-    Retrieval.ensureBm25BucketedIndex(spark, t, postings.repartition(3),
-      docBuckets = 4, termBuckets = 4)
-    val back = spark.table(t)
-    // the 1-row stats table must not leak into the postings relation
-    assert(back.count() == postings.count())
-    assert(!back.columns.contains("n_buckets"))
-    assert(back.columns.contains("term_bucket"))
-    // and the sidecar itself round-trips the writer's modulus
-    val st = spark.table(t + "_stats").head()
-    assert(st.getAs[Int]("n_buckets") == 4)
-    // one data file per doc_id bucket in each term_bucket directory
-    // (the repartition-before-write contract: without it every
-    // upstream task writes into every directory and the layout is a
-    // small-files disaster at scale)
-    val root = new java.io.File(spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(t)).location)
-    val dirs = root.listFiles().filter(_.getName.startsWith("term_bucket="))
-    assert(dirs.nonEmpty)
-    for (b <- dirs) {
-      val ids = b.listFiles().map(_.getName).filter(_.endsWith(".parquet")).map(f =>
-        org.apache.spark.sql.execution.datasources.BucketingUtils.getBucketId(f)
-          .getOrElse(fail(s"not a bucket file: $f")))
-      assert(ids.nonEmpty && ids.distinct.length == ids.length,
-        s"${b.getName}: expected one file per doc_id bucket, got ${ids.toSeq}")
-    }
-  }
-
   test("bm25 partitioned serving: query with no indexed terms returns empty, no error") {
     import spark.implicits._
-    val postings = Retrieval.bm25Index(docs, "doc_id", "text")
-    val t = "bm25bk_spec_empty"
-    Retrieval.ensureBm25BucketedIndex(spark, t, postings, docBuckets = 2, termBuckets = 4)
-    // no tokens at all → an empty `term_bucket IN ()` partition filter
+    // served from the persisted flat index: postings and stats as
+    // parquet, read back, stats supplied
+    val dir = java.nio.file.Files.createTempDirectory("bm25_spec_empty").toString
+    Retrieval.bm25Index(docs, "doc_id", "text").write.parquet(s"$dir/idx")
+    Retrieval.bm25IndexStats(spark.read.parquet(s"$dir/idx")).write.parquet(s"$dir/stats")
+    // no tokens at all → an empty query vocabulary
     val qs = Seq((0L, "")).toDF("query_id", "query_text")
-    assert(Retrieval.bm25TopKFromBucketedIndex(spark, t, qs, k = 3).count() == 0)
+    assert(Retrieval.bm25TopKFromIndex(spark.read.parquet(s"$dir/idx"), qs, k = 3,
+      precomputedStats = Some(spark.read.parquet(s"$dir/stats"))).count() == 0)
   }
 
   test("mmrDiversify rejects a corpus-sized candidate pool loudly") {

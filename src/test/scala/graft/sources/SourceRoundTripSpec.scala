@@ -243,6 +243,26 @@ class SourceRoundTripSpec extends AnyFunSuite {
     }
   }
 
+  test("alignments: a malformed CIGAR fails the read with an error naming it") {
+    def samWith(name: String, cigar: String): String = {
+      val p = s"$dir/cigar_$name.sam"
+      Files.write(Paths.get(p), ("@HD\tVN:1.6\n" +
+        s"c1\t0\tchrA\t5\t60\t$cigar\t*\t0\t0\t*\t*\n").getBytes("UTF-8"))
+      p
+    }
+    for ((name, cigar) <- Seq("nolen" -> "M10M", "trailing" -> "10M5",
+        "overflow" -> "99999999999999999999M", "sum" -> "922337203685477580M" * 11)) {
+      val e = intercept[Exception](read("alignments", samWith(name, cigar)).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toList
+      assert(msgs.exists(_.contains(s"Invalid CIGAR '$cigar'")), s"$cigar: $msgs")
+    }
+    // a zero-length operation is legal and consumes no reference
+    def stop(name: String, cigar: String) =
+      read("alignments", samWith(name, cigar)).select("stop_position").head().getLong(0)
+    assert(stop("zero", "0M4M") == stop("plain", "4M"))
+  }
+
   test("sam_sequences, biom and warc read back what was written") {
     val seqs = read("sam_sequences", sam, "include_filepath" -> "true")
     val s = seqs.collect()
