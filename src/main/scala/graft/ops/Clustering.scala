@@ -289,9 +289,8 @@ object Clustering {
     * Contract: zero-norm / NaN embeddings are unscorable and never
     * witness or receive a dup flag (they return is_dup = false) — the
     * oracle carries the matching WHERE. Clusters larger than
-    * `spark.graft.semdedup.cluster.cap` (default 2048, the measured
-    * sweet spot — KmSkewProbe) are triangle-split so one degenerate
-    * cluster can't become a single quadratic straggler task.
+    * [[SemDedupClusterCap]] members are triangle-split so one
+    * degenerate cluster can't become a single quadratic straggler task.
     *
     * Returns (vec_id, cluster, is_dup).
     */
@@ -302,7 +301,23 @@ object Clustering {
       k: Int,
       iters: Int,
       tau: Double,
-      scale: Int = 1000): DataFrame = {
+      scale: Int = 1000): DataFrame =
+    semDedupCapped(emb, idCol, vecCol, k, iters, tau, scale, SemDedupClusterCap)
+
+  /** Cluster size above which [[semDedup]] splits a cluster's join —
+    * the LSH bucket cap, and the measured sweet spot: the KmSkewProbe
+    * drive (200k vectors, one 50k-member hot cluster) measured wall
+    * 30.5 s / max task 28.1 s unsplit vs 7.0 s / 4.8 s at cap 2048
+    * (4096: 12.4 s, 8192: 23.1 s) — per-task work drops with cap²,
+    * replication only grows linearly, so the smaller cap wins until
+    * tasks are scheduler-noise-sized.
+    */
+  private val SemDedupClusterCap: Int = 2048
+
+  /** [[semDedup]] with its cluster cap as an argument. */
+  private[ops] def semDedupCapped(emb: DataFrame, idCol: String,
+      vecCol: String, k: Int, iters: Int, tau: Double, scale: Int,
+      cap: Int): DataFrame = {
     // vecs feeds BOTH sides of the candidate join and the final left
     // join — localCheckpoint materializes the (assignment ⋈ input)
     // working set ONCE instead of three times. This matters doubly
@@ -345,14 +360,6 @@ object Clustering {
     // exactly once and per-task work is bounded by ~cap². The size
     // table is ≤ k rows (k is a model hyper-parameter) — always
     // broadcast, no stats gate needed.
-    // Default matches the LSH bucket cap: the KmSkewProbe drive (200k
-    // vectors, one 50k-member hot cluster) measured wall 30.5 s / max
-    // task 28.1 s unsplit vs 7.0 s / 4.8 s at cap 2048 (4096: 12.4 s,
-    // 8192: 23.1 s) — per-task work drops with cap², replication only
-    // grows linearly, so the smaller cap wins until tasks are
-    // scheduler-noise-sized.
-    val cap = spark.conf.getOption("spark.graft.semdedup.cluster.cap")
-      .map(_.toInt).getOrElse(2048)
     // Cluster sizes are ≤ k rows (k is a model hyper-parameter) — the
     // split decision is driver-side, so the COMMON case (no cluster
     // over cap) keeps the plain 1-key join with no explode/replication

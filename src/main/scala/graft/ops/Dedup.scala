@@ -4,6 +4,7 @@ import graft.kernel.TextKernel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import Lineage.TruncateOps
 
 /** Document deduplication operators for training-data pipelines.
@@ -12,8 +13,9 @@ import Lineage.TruncateOps
   * hash-partitioned aggregation; MinHash/SimHash near-dup generate
   * candidates through BAND BUCKETS (shuffle on the band key, pairs only
   * within a bucket) and never compare all pairs. At 100 TB the bucket
-  * join is the only quadratic-risk step, and its blow-up is bounded by
-  * bucket size (salt-able if a degenerate bucket appears).
+  * verify is the only quadratic-risk step: from the MinHash size gate
+  * on, a bucket over the cap is triangle-split into sub-group tasks
+  * of ~cap² pairs each, every pair still verified exactly once.
   */
 object Dedup {
 
@@ -47,6 +49,16 @@ object Dedup {
       .groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("doc_id"), count(lit(1)).as("n_dups"))
 
+  /** Below this many (directed, deduplicated) edges the component
+    * computation runs as a driver-local union-find instead of the
+    * iterative join loop: a graph this size is ≤ ~64 MB of longs, and
+    * each distributed round costs several fixed-latency shuffle jobs
+    * that dwarf the actual work. Same adaptive philosophy as the
+    * broadcast-join size gate — at 100 TB the candidate-pair graph
+    * blows past the gate and the O(log d) distributed loop runs.
+    */
+  val LocalCcMaxEdges: Long = 4000000L
+
   /** Connected components over an undirected near-dup pair list —
     * the cluster-formation step between candidate pairs and canonical
     * document selection. Iterative distributed min-label propagation
@@ -67,16 +79,6 @@ object Dedup {
     * cluster mode) so the logical plan stays O(1) across iterations
     * instead of nesting one join tree per round.
     */
-  /** Below this many (directed, deduplicated) edges the component
-    * computation runs as a driver-local union-find instead of the
-    * iterative join loop: a graph this size is ≤ ~64 MB of longs, and
-    * each distributed round costs several fixed-latency shuffle jobs
-    * that dwarf the actual work. Same adaptive philosophy as the
-    * broadcast-join size gate — at 100 TB the candidate-pair graph
-    * blows past the gate and the O(log d) distributed loop runs.
-    */
-  val LocalCcMaxEdges: Long = 4000000L
-
   def connectedComponents(pairs: DataFrame, maxIters: Int = 25,
       localMaxEdges: Long = LocalCcMaxEdges): DataFrame = {
     // Pre-partition the static edge table on the per-round join key
@@ -258,25 +260,64 @@ object Dedup {
         col(payloadCol).as(s"${payloadCol}_b")), "id_b")
   }
 
-  /** One shingling pass per document: (minhash signature, sorted
-    * distinct 32-bit-compacted shingle hashes) — the signature feeds
-    * banding, the compact array feeds the merge-intersect Jaccard
-    * verify with half the shuffle bytes of the 64-bit form.
+  /** Input size (optimizer estimate) from which [[minhashPairs]] runs
+    * its two-pass bucket prune and both MinHash operators split
+    * degenerate buckets. Below it the extra pass costs more than it
+    * saves: on the 2,700-doc corpus_curation input (4 vCPUs, 3 runs)
+    * forcing the gate on took minhashPairs from 2.1–2.5 s to 4.1–4.5 s
+    * and minhashNewVsPrebuiltIndex (half the docs as index) from
+    * 2.4–2.8 s to 3.8–4.0 s, with identical output.
     */
-  private val sigAndSetUdf = udf((text: String, shingleN: Int, numHashes: Int) => {
-    val shs = TextKernel.sortedShingleHashes(text, shingleN)
-    (TextKernel.minhashSignature(shs, numHashes), TextKernel.compactHashes32(shs))
-  })
+  private val LshPruneMinBytes: Long = 256L << 20
+
+  /** Bucket size above which the MinHash verify splits a bucket into
+    * sub-group tasks (see [[bucketTasks]]); ~cap² pairs per task. */
+  private val LshBucketCap: Int = 2048
+
+  /** Spark's `hash(slice(sig, b * r + 1, r), b)` for every band b of a
+    * `bands`-way split of `sig` (r = sig.length / bands): Murmur3 with
+    * seed 42 folded over the band's signature slice, then over b. The
+    * keys are bit-identical to that Catalyst expression (LlmOpsSpec
+    * pins it), so an index persisted by either form stays valid.
+    */
+  private def bandKeys(sig: Array[Long], bands: Int): Array[Int] = {
+    val rows = sig.length / bands
+    val out = new Array[Int](bands)
+    var b = 0
+    while (b < bands) {
+      var h = 42
+      var k = b * rows
+      while (k < (b + 1) * rows) { h = Murmur3_x86_32.hashLong(sig(k), h); k += 1 }
+      out(b) = Murmur3_x86_32.hashInt(b, h)
+      b += 1
+    }
+    out
+  }
+
+  /** The MinHash LSH kernel, one call per document and one shingling
+    * pass: (band keys, sorted distinct 32-bit-compacted shingle
+    * hashes). The band keys feed the bucket shuffle, the compact array
+    * feeds the merge-intersect Jaccard verify with half the shuffle
+    * bytes of the 64-bit form. Named so plan tests can count it.
+    */
+  private val bandsAndSetUdf = udf(
+    (text: String, shingleN: Int, numHashes: Int, bands: Int) => {
+      val shs = TextKernel.sortedShingleHashes(text, shingleN)
+      (bandKeys(TextKernel.minhashSignature(shs, numHashes), bands),
+        TextKernel.compactHashes32(shs))
+    }).withName("minhash_bands")
 
   /** MinHash+LSH near-duplicate pairs.
     *
     * shingle → minhash signature (numHashes) → band buckets (bands ×
-    * rowsPerBand) → within-bucket exact Jaccard verify ≥ threshold.
-    * Output: (id_a, id_b, jaccard) with id_a < id_b, distinct. Docs
-    * shorter than shingleN are excluded (no shingles), which also
-    * prevents the degenerate all-empty-signature mega-bucket. Both
-    * passes band through [[minhashIndex]] + [[explodeBanded]], the
-    * same transform the persisted-index path runs.
+    * numHashes/bands rows) → within-bucket exact Jaccard verify ≥
+    * threshold. Output: (id_a, id_b, jaccard) with id_a < id_b,
+    * distinct. Docs shorter than shingleN are excluded (no shingles),
+    * which also prevents the degenerate all-empty-signature
+    * mega-bucket. Both passes band through [[minhashIndex]] +
+    * [[explodeBanded]], the same transform the persisted-index path
+    * runs, and verify through [[verifyBuckets]], the same loop
+    * [[minhashNewVsPrebuiltIndex]] runs (every row on side 0).
     *
     * Scale shape — BUCKET-LOCAL verification, no pair join: each
     * document's sorted shingle-hash array (32-bit compacted, ~4
@@ -292,13 +333,11 @@ object Dedup {
     * that join shuffled ~110 GB and filled the disk where this shape
     * moves ~19 GB (PairCountProbe). A pair colliding in k bands
     * is verified k times (measured 2.5% overhead) and deduped by the
-    * final max-aggregate. Skew note: a bucket of s members verifies
-    * s(s-1)/2 pairs in one task; the shingleN-length filter removes
-    * the only systematic source of mega-buckets.
+    * final max-aggregate.
     *
-    * Above `spark.graft.lsh.prune.minBytes` (default 256 MB of input)
-    * an id-only first pass prunes to ≥2-member buckets before any
-    * hash array moves — see the inline comment at the gate.
+    * From 256 MB of input an id-only first pass prunes to ≥2-member
+    * buckets before any hash array moves, and its bucket counts drive
+    * the degenerate-bucket split — see the inline comment at the gate.
     */
   def minhashPairs(
       docs: DataFrame,
@@ -307,9 +346,14 @@ object Dedup {
       shingleN: Int = 5,
       numHashes: Int = 64,
       bands: Int = 16,
-      threshold: Double = 0.7): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+      threshold: Double = 0.7): DataFrame =
+    minhashPairsGated(docs, idCol, textCol, shingleN, numHashes, bands,
+      threshold, LshPruneMinBytes, LshBucketCap)
+
+  /** [[minhashPairs]] with its prune gate and bucket cap as arguments. */
+  private[ops] def minhashPairsGated(docs: DataFrame, idCol: String,
+      textCol: String, shingleN: Int, numHashes: Int, bands: Int,
+      threshold: Double, pruneMinBytes: Long, bucketCap: Int): DataFrame = {
     val banded = explodeBanded(
       minhashIndex(docs, idCol, textCol, shingleN, numHashes, bands))
     // Two-pass bucket pruning for large corpora: only buckets with ≥2
@@ -325,31 +369,14 @@ object Dedup {
     // docs) the single-pass array shuffle is ~320 GB and disk-kills;
     // the id pass is ~1.3 GB. Below the size gate the extra stages
     // cost more than they save, so small inputs keep the one-shuffle
-    // shape (identical output either way).
-    val pruneMin = BigInt(spark.conf.getOption("spark.graft.lsh.prune.minBytes")
-      .map(_.toLong).getOrElse(256L << 20))
-    // Degenerate-bucket skew split (triangle-join parallelization,
-    // EXACT — every pair still verified exactly once): a bucket of m
-    // members costs O(m²) in ONE task; above `cap` members the bucket
-    // is split into g = ceil(m/cap) sub-groups by id hash and each
-    // row is replicated to the g task-pairs containing its sub-group
-    // — task (i, j) verifies within-group pairs when i == j and
-    // cross-group pairs when i < j, so per-task work is bounded by
-    // ~cap² and a 100k-member pathological bucket spreads over
-    // ~g²/2 tasks instead of stalling one. Normal buckets take g = 1
-    // (task (0, 0) — exactly the path they always had). The bucket
-    // COUNTS come from the same aggregate the two-pass pruning
-    // already pays (one exchange, two consumers), so below the prune
-    // gate — where that ids-only pass would be a fresh re-shingling
-    // cost — small inputs skip the split entirely (a small input
-    // cannot hold a cap-sized bucket worth splitting anyway).
-    val cap = spark.conf.getOption("spark.graft.lsh.bucket.cap")
-      .map(_.toInt).getOrElse(2048)
+    // shape (identical output either way). The same pass's bucket
+    // counts feed the degenerate-bucket split (one exchange, two
+    // consumers); below the gate that pass would be a fresh
+    // re-shingling cost, and a small input cannot hold a cap-sized
+    // bucket worth splitting anyway.
     val tasks =
-      if (docs.queryExecution.optimizedPlan.stats.sizeInBytes < pruneMin)
-        banded.select(col("band"), col("band_hash"),
-          lit(0).as("ti"), lit(0).as("tj"), col("id"), lit(0).as("sub"),
-          col("shs"))
+      if (docs.queryExecution.optimizedPlan.stats.sizeInBytes < pruneMinBytes)
+        bucketTasks(banded.withColumn("side", lit(0)), None, bucketCap)
       else {
         // Pass 1 moves (band, band_hash, id) ONLY — project the array
         // column away BEFORE any wide operator. The first cut of this
@@ -371,79 +398,19 @@ object Dedup {
           .agg(count(lit(1)).as("n"))
         val surviving = counts.filter(col("n") > 1)
           .select(col("band"), col("band_hash"))
-        val bigBuckets = counts.filter(col("n") > cap)
-          .select(col("band"), col("band_hash"),
-            ceil(col("n").cast("double") / cap).cast("int").as("g"))
         val survivorIds = idRows.join(surviving, Seq("band", "band_hash"))
           .select(col("id")).distinct()
         val survivorDocs = docs
           .select(col(idCol).as("id"), col(textCol).as("text"))
           .join(survivorIds, Seq("id"), "leftsemi")
-        explodeBanded(
-            minhashIndex(survivorDocs, "id", "text", shingleN, numHashes, bands))
-          .join(surviving, Seq("band", "band_hash"))
-          .join(broadcast(bigBuckets), Seq("band", "band_hash"), "left")
-          .withColumn("g", coalesce(col("g"), lit(1)))
-          .withColumn("sub", pmod(hash(col("id")), col("g")))
-          .select(col("band"), col("band_hash"), col("id"), col("shs"),
-            col("sub"), explode(sequence(lit(0), col("g") - 1)).as("t"))
-          .select(col("band"), col("band_hash"),
-            least(col("sub"), col("t")).as("ti"),
-            greatest(col("sub"), col("t")).as("tj"),
-            col("id"), col("sub"), col("shs"))
+        bucketTasks(
+          explodeBanded(
+              minhashIndex(survivorDocs, "id", "text", shingleN, numHashes, bands))
+            .join(surviving, Seq("band", "band_hash"))
+            .withColumn("side", lit(0)),
+          Some(counts), bucketCap)
       }
-    val thr = threshold
-    tasks.as[(Int, Int, Int, Int, Long, Int, Array[Int])]
-      .repartition(col("band"), col("band_hash"), col("ti"), col("tj"))
-      .sortWithinPartitions(col("band"), col("band_hash"), col("ti"), col("tj"))
-      .mapPartitions { iter =>
-        // stream sorted task groups; per task, verify its pair share
-        val members = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Array[Int])]
-        var curBand = Int.MinValue
-        var curHash = Int.MinValue
-        var curTi = Int.MinValue
-        var curTj = Int.MinValue
-        def flush(): Iterator[(Long, Long, Double)] = {
-          if (members.length < 2) { members.clear(); Iterator.empty }
-          else {
-            val cross = curTi != curTj // split task: cross-group pairs only
-            val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-            var i = 0
-            while (i < members.length) {
-              var j = i + 1
-              while (j < members.length) {
-                val (ia, subA, sa) = members(i)
-                val (ib, subB, sb) = members(j)
-                if (!cross || subA != subB) {
-                  val jac = TextKernel.jaccardSortedInt(sa, sb)
-                  if (jac >= thr)
-                    out += ((math.min(ia, ib), math.max(ia, ib), jac))
-                }
-                j += 1
-              }
-              i += 1
-            }
-            members.clear()
-            out.iterator
-          }
-        }
-        (iter.map(Some(_)) ++ Iterator(None)).flatMap {
-          case Some((band, bandHash, ti, tj, id, sub, shs)) =>
-            if (band != curBand || bandHash != curHash || ti != curTi || tj != curTj) {
-              val emitted = flush()
-              curBand = band; curHash = bandHash; curTi = ti; curTj = tj
-              members += ((id, sub, shs))
-              emitted
-            } else {
-              members += ((id, sub, shs))
-              Iterator.empty
-            }
-          case None => flush()
-        }
-      }
-      .toDF("id_a", "id_b", "jaccard")
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col("jaccard")).as("jaccard"))
+    verifyBuckets(tasks, threshold, crossSideOnly = false)
   }
 
   /** Canonical-document selection over near-dup clusters — the
@@ -531,29 +498,30 @@ object Dedup {
       bands: Int = 16,
       carryCols: Seq[String] = Nil): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rowsPerBand = numHashes / bands
-    // sig+set in one shingling pass, projected BELOW the band explode
-    // (expressions beside a generator are re-evaluated per generated
-    // row; ss is referenced twice so CollapseProject keeps the UDF in
-    // its own projection, evaluated once per document)
+    // One kernel call per document either way the optimizer goes: with
+    // both fields read, CollapseProject leaves the call in its own
+    // projection; a consumer that prunes one field collapses it into
+    // that field's single read.
     indexDocs
       .filter(length(col(textCol)) >= shingleN)
       .select((col(idCol).as("id") +:
-        sigAndSetUdf(col(textCol), lit(shingleN), lit(numHashes)).as("ss") +:
+        bandsAndSetUdf(col(textCol), lit(shingleN), lit(numHashes), lit(bands))
+          .as("k") +:
         carryCols.map(col)): _*)
-      .select((col("id") +: col("ss._2").as("shs") +:
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => hash(slice(col("ss._1"), b * rowsPerBand + 1, lit(rowsPerBand)), b))
-          .as("band_hashes") +:
-        carryCols.map(col)): _*)
+      .select((col("id") +: col("k._2").as("shs") +:
+        col("k._1").as("band_hashes") +: carryCols.map(col)): _*)
   }
 
   /** Compact index rows → the exploded (band, band_hash, id, shs,
-    * carried columns…) stream the bucket verify consumes.
+    * carried columns…) stream the bucket verify consumes. The outer
+    * explode emits the same rows (`band_hashes` is never empty) and,
+    * unlike the inner one, lets the optimizer infer no
+    * `size(band_hashes) > 0` filter — a filter that pushdown would
+    * rewrite into a second call of the kernel below the explode.
     */
   private[graft] def explodeBanded(compact: DataFrame): DataFrame = {
     val rest = compact.columns.filter(_ != "band_hashes").map(col)
-    compact.select(rest :+ posexplode(col("band_hashes")): _*)
+    compact.select(rest :+ posexplode_outer(col("band_hashes")): _*)
       .select((col("pos").as("band") +: col("col").as("band_hash") +: rest): _*)
   }
 
@@ -563,10 +531,11 @@ object Dedup {
     * `index` is [[minhashIndex]] output, computed once per corpus
     * generation and persisted (possibly read back from parquet); the
     * shard side runs through the same [[minhashIndex]], so both sides'
-    * kernel is identical. Both sides flow tagged through ONE
-    * (band, band_hash)-keyed shuffle and pairs are verified
-    * bucket-locally over the compact 32-bit shingle-hash arrays — the
-    * x03 lesson (a pair-join verify moved ~110 GB at sf10): shuffle is
+    * kernel is identical. Both sides flow tagged (index 0, shard 1)
+    * through the [[minhashPairs]] bucket pipeline — ONE
+    * (band, band_hash)-keyed shuffle, pairs verified bucket-locally
+    * over the compact 32-bit shingle-hash arrays — the x03 lesson (a
+    * pair-join verify moved ~110 GB at sf10): shuffle is
     * O((shard + index) × bands), and only CROSS-side pairs are
     * verified, so a shard arriving into a huge already-deduped index
     * never re-verifies index-internal pairs.
@@ -583,10 +552,15 @@ object Dedup {
       shingleN: Int = 5,
       numHashes: Int = 64,
       bands: Int = 16,
-      threshold: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val spark = newDocs.sparkSession
-    import spark.implicits._
+      threshold: Double = 0.7): DataFrame =
+    minhashNewVsIndexGated(newDocs, index, idCol, textCol, shingleN,
+      numHashes, bands, threshold, LshPruneMinBytes, LshBucketCap)
+
+  /** [[minhashNewVsPrebuiltIndex]] with its gate and cap as arguments. */
+  private[ops] def minhashNewVsIndexGated(newDocs: DataFrame,
+      index: DataFrame, idCol: String, textCol: String, shingleN: Int,
+      numHashes: Int, bands: Int, threshold: Double, pruneMinBytes: Long,
+      bucketCap: Int): DataFrame = {
     val newBanded = explodeBanded(
       minhashIndex(newDocs, idCol, textCol, shingleN, numHashes, bands))
     // only index buckets the SHARD touches can emit cross-side pairs,
@@ -597,126 +571,137 @@ object Dedup {
     // bucket. The key set is shard×bands rows — bigger than the 10 MB
     // auto-broadcast default at even modest shards, which silently
     // degraded the semi join to a full index SMJ shuffle (measured
-    // 46.8 → 68.4 s at 500k); under the same stats gate the fast LSH
-    // path uses, force the broadcast so the prune is map-side.
+    // 46.8 → 68.4 s at 500k); under the same size gate, force the
+    // broadcast so the prune is map-side.
     val touchedRaw = newBanded.select(col("band"), col("band_hash")).distinct()
     val touched =
-      if (newDocs.queryExecution.optimizedPlan.stats.sizeInBytes < (256L << 20))
+      if (newDocs.queryExecution.optimizedPlan.stats.sizeInBytes < LshPruneMinBytes)
         broadcast(touchedRaw)
       else touchedRaw
-    val banded = explodeBanded(index)
+    val indexBanded = explodeBanded(index)
       .join(touched, Seq("band", "band_hash"), "left_semi")
-      .select(col("band"), col("band_hash"), col("id"), lit(0).as("side"),
-        col("shs"))
-      .unionByName(newBanded.withColumn("side", lit(1)))
-      .select(col("band"), col("band_hash"), col("id"), col("side"), col("shs"))
-    // Degenerate-bucket split, cross-side form — same triangle-join
-    // parallelization as [[minhashPairs]]: a pathological bucket
-    // (X08Diag found a 3,622-member one in synthetic data) otherwise
-    // verifies all new×index pairs inside ONE task. Members split
-    // into g = ceil(m/cap) sub-groups by id hash, replicated to the
-    // g task-pairs containing their sub-group; task (i, j) takes
-    // within-group pairs when i == j and cross-group pairs when
-    // i < j, so every cross-SIDE pair is still verified exactly once
-    // and per-task work is bounded by ~cap². The bucket counts come
-    // from a keys-only pass (column pruning reads band_hashes alone
-    // from a parquet-backed index — no shingle arrays move); below
-    // the same size gate the batch path uses, small inputs skip the
-    // extra aggregate and keep today's single-task-per-bucket shape
-    // (identical output either way).
-    val pruneMin = BigInt(spark.conf.getOption("spark.graft.lsh.prune.minBytes")
-      .map(_.toLong).getOrElse(256L << 20))
-    val cap = spark.conf.getOption("spark.graft.lsh.bucket.cap")
-      .map(_.toInt).getOrElse(2048)
-    val tasks =
-      if (index.queryExecution.optimizedPlan.stats.sizeInBytes < pruneMin)
-        banded.select(col("band"), col("band_hash"),
-          lit(0).as("ti"), lit(0).as("tj"),
-          col("id"), col("side"), lit(0).as("sub"), col("shs"))
-      else {
-        val keyStream = explodeBanded(index)
-          .select(col("band"), col("band_hash"))
-          .join(touched, Seq("band", "band_hash"), "left_semi")
-          .unionByName(newBanded.select(col("band"), col("band_hash")))
-        val bigBuckets = keyStream.groupBy(col("band"), col("band_hash"))
-          .agg(count(lit(1)).as("n"))
-          .filter(col("n") > cap)
-          .select(col("band"), col("band_hash"),
-            ceil(col("n").cast("double") / cap).cast("int").as("g"))
-        banded.join(broadcast(bigBuckets), Seq("band", "band_hash"), "left")
-          .withColumn("g", coalesce(col("g"), lit(1)))
-          .withColumn("sub", pmod(hash(col("id"), col("side")), col("g")))
-          .select(col("band"), col("band_hash"), col("id"), col("side"),
-            col("shs"), col("sub"),
-            explode(sequence(lit(0), col("g") - 1)).as("t"))
-          .select(col("band"), col("band_hash"),
-            least(col("sub"), col("t")).as("ti"),
-            greatest(col("sub"), col("t")).as("tj"),
-            col("id"), col("side"), col("sub"), col("shs"))
-      }
-    val thr = threshold
-    val pairs = tasks.as[(Int, Int, Int, Int, Long, Int, Int, Array[Int])]
+    val rows = indexBanded
+      .select(col("band"), col("band_hash"), col("id"), lit(0).as("side"), col("shs"))
+      .unionByName(newBanded
+        .select(col("band"), col("band_hash"), col("id"), lit(1).as("side"), col("shs")))
+    // Bucket counts for the degenerate-bucket split (X08Diag found a
+    // 3,622-member bucket in synthetic data) come from a keys-only
+    // pass: column pruning reads band_hashes alone from a
+    // parquet-backed index, so no shingle arrays move. Below the gate
+    // small inputs skip that extra aggregate (identical output).
+    val counts =
+      if (index.queryExecution.optimizedPlan.stats.sizeInBytes < pruneMinBytes) None
+      else Some(indexBanded.select(col("band"), col("band_hash"))
+        .unionByName(newBanded.select(col("band"), col("band_hash")))
+        .groupBy(col("band"), col("band_hash"))
+        .agg(count(lit(1)).as("n")))
+    val pairs = verifyBuckets(bucketTasks(rows, counts, bucketCap), threshold,
+      crossSideOnly = true)
+    // single-aggregate argmax: (jaccard, -matched_id) struct ordering
+    // = max jaccard, ties to the smallest matched id
+    pairs.groupBy(col("id_a").as("new_id"))
+      .agg(count(lit(1)).as("n_matches"),
+        max(col("jaccard")).as("best_jaccard"),
+        max_by(col("id_b"), struct(col("jaccard"), (-col("id_b")).as("neg")))
+          .as("best_match_id"))
+  }
+
+  /** Verify tasks over banded rows (band, band_hash, id, side, shs):
+    * (band, band_hash, ti, tj, id, side, sub, shs), one task per
+    * (band, band_hash, ti, tj). Without `counts` every bucket is one
+    * task (ti = tj = sub = 0).
+    *
+    * With the per-bucket member counts (band, band_hash, n), buckets
+    * over `cap` members get the degenerate-bucket triangle split
+    * (EXACT — every pair still verified exactly once): a bucket of m
+    * members costs O(m²) in ONE task, so it splits into
+    * g = ceil(m/cap) sub-groups by (id, side) hash and each row is
+    * replicated to the g task-pairs containing its sub-group — task
+    * (i, j) verifies within-group pairs when i == j and cross-group
+    * pairs when i < j, so per-task work is bounded by ~cap² and a
+    * 100k-member pathological bucket spreads over ~g²/2 tasks instead
+    * of stalling one. Normal buckets take g = 1: task (0, 0).
+    */
+  private def bucketTasks(rows: DataFrame, counts: Option[DataFrame],
+      cap: Int): DataFrame = counts match {
+    case None =>
+      rows.select(col("band"), col("band_hash"), lit(0).as("ti"), lit(0).as("tj"),
+        col("id"), col("side"), lit(0).as("sub"), col("shs"))
+    case Some(n) =>
+      val bigBuckets = n.filter(col("n") > cap)
+        .select(col("band"), col("band_hash"),
+          ceil(col("n").cast("double") / cap).cast("int").as("g"))
+      rows.join(broadcast(bigBuckets), Seq("band", "band_hash"), "left")
+        .withColumn("g", coalesce(col("g"), lit(1)))
+        .withColumn("sub", pmod(hash(col("id"), col("side")), col("g")))
+        .select(col("band"), col("band_hash"), col("id"), col("side"),
+          col("shs"), col("sub"), explode(sequence(lit(0), col("g") - 1)).as("t"))
+        .select(col("band"), col("band_hash"),
+          least(col("sub"), col("t")).as("ti"),
+          greatest(col("sub"), col("t")).as("tj"),
+          col("id"), col("side"), col("sub"), col("shs"))
+  }
+
+  /** The one MinHash verify loop: shuffle [[bucketTasks]] rows by task,
+    * stream each sorted task group and merge-intersect its pairs —
+    * cross-group pairs only off the diagonal (ti != tj), cross-side
+    * pairs only when `crossSideOnly`. Output (id_a, id_b, jaccard),
+    * distinct, the max over the bands a pair collides in: id_a < id_b,
+    * or with `crossSideOnly` id_a the side-1 (new) id and id_b the
+    * side-0 (matched) one.
+    */
+  private def verifyBuckets(tasks: DataFrame, threshold: Double,
+      crossSideOnly: Boolean): DataFrame = {
+    val spark = tasks.sparkSession
+    import spark.implicits._
+    tasks.as[(Int, Int, Int, Int, Long, Int, Int, Array[Int])]
       .repartition(col("band"), col("band_hash"), col("ti"), col("tj"))
       .sortWithinPartitions(col("band"), col("band_hash"), col("ti"), col("tj"))
       .mapPartitions { iter =>
-        // stream sorted task groups; per task, verify its cross-side share
         val members = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int, Array[Int])]
         var curBand = Int.MinValue
         var curHash = Int.MinValue
         var curTi = Int.MinValue
         var curTj = Int.MinValue
         def flush(): Iterator[(Long, Long, Double)] = {
-          if (members.length < 2) { members.clear(); Iterator.empty }
-          else {
-            val cross = curTi != curTj // split task: cross-group pairs only
-            val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-            var i = 0
-            while (i < members.length) {
-              var j = i + 1
-              while (j < members.length) {
-                val (ia, sideA, subA, sa) = members(i)
-                val (ib, sideB, subB, sb) = members(j)
-                if (sideA != sideB && (!cross || subA != subB)) {
-                  val jac = TextKernel.jaccardSortedInt(sa, sb)
-                  if (jac >= thr) {
-                    // orient as (new_id, matched_id)
-                    if (sideA == 1) out += ((ia, ib, jac))
-                    else out += ((ib, ia, jac))
-                  }
-                }
-                j += 1
+          val diagonal = curTi == curTj
+          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+          var i = 0
+          while (i < members.length) {
+            val (ia, sideA, subA, sa) = members(i)
+            var j = i + 1
+            while (j < members.length) {
+              val (ib, sideB, subB, sb) = members(j)
+              if ((!crossSideOnly || sideA != sideB) && (diagonal || subA != subB)) {
+                val jac = TextKernel.jaccardSortedInt(sa, sb)
+                if (jac >= threshold) out +=
+                  (if (!crossSideOnly) (math.min(ia, ib), math.max(ia, ib), jac)
+                   else if (sideA == 1) (ia, ib, jac)
+                   else (ib, ia, jac))
               }
-              i += 1
+              j += 1
             }
-            members.clear()
-            out.iterator
+            i += 1
           }
+          members.clear()
+          out.iterator
         }
         (iter.map(Some(_)) ++ Iterator(None)).flatMap {
           case Some((band, bandHash, ti, tj, id, side, sub, shs)) =>
-            if (band != curBand || bandHash != curHash || ti != curTi || tj != curTj) {
-              val emitted = flush()
-              curBand = band; curHash = bandHash; curTi = ti; curTj = tj
-              members += ((id, side, sub, shs))
-              emitted
-            } else {
-              members += ((id, side, sub, shs))
-              Iterator.empty
-            }
+            val emitted =
+              if (band != curBand || bandHash != curHash || ti != curTi || tj != curTj) {
+                val done = flush()
+                curBand = band; curHash = bandHash; curTi = ti; curTj = tj
+                done
+              } else Iterator.empty
+            members += ((id, side, sub, shs))
+            emitted
           case None => flush()
         }
       }
-      .toDF("new_id", "matched_id", "jaccard")
-      .groupBy(col("new_id"), col("matched_id"))
+      .toDF("id_a", "id_b", "jaccard")
+      .groupBy(col("id_a"), col("id_b"))
       .agg(max(col("jaccard")).as("jaccard"))
-    // single-aggregate argmax: (jaccard, -matched_id) struct ordering
-    // = max jaccard, ties to the smallest matched id
-    pairs.groupBy(col("new_id"))
-      .agg(count(lit(1)).as("n_matches"),
-        max(col("jaccard")).as("best_jaccard"),
-        max_by(col("matched_id"),
-          struct(col("jaccard"), (-col("matched_id")).as("neg")))
-          .as("best_match_id"))
   }
 
   /** SimHash near-duplicate pairs on the md5 hash family: a 60-bit

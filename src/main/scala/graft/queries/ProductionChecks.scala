@@ -35,22 +35,24 @@ object ProductionChecks {
     LlmPipeline.queries.find(_.name == name).flatMap(_.oracle)
       .getOrElse(sys.error(s"ProductionChecks: no oracle registered for $name"))
 
-  /** Deterministic per-sfDir artifact dir with build-once reuse (r14
-    * review: a fresh
-    * createTempDirectory per invocation accumulated an index copy in
-    * tmpdir every Verify round). The parquet _SUCCESS marker gates
-    * reuse; contents are deterministic in (testdata, code).
+  private val builtDirs = scala.collection.mutable.Set.empty[String]
+
+  /** Deterministic per-sfDir artifact dir, built once per JVM and
+    * reused within it. The fixed path keeps tmpdir from accumulating
+    * an index copy per Verify round (a fresh createTempDirectory per
+    * invocation did); rebuilding on a JVM's first use keeps a dir left
+    * by an earlier build — possibly of older code — from being served
+    * as this code's artifact.
     */
-  private def cachedDir(d: String, name: String)(
+  private[queries] def cachedDir(d: String, name: String)(
       build: String => Unit): String = {
     val tag = new java.io.File(d).getAbsolutePath.replaceAll("[^A-Za-z0-9]", "_")
     val out = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_check_$name$tag.parquet")
+      sys.props("java.io.tmpdir"), s"graft_check_$name$tag.parquet").getAbsolutePath
     this.synchronized {
-      if (!new java.io.File(out, "_SUCCESS").exists())
-        build(out.getAbsolutePath)
+      if (!builtDirs(out)) { build(out); builtDirs += out }
     }
-    out.getAbsolutePath
+    out
   }
 
   val queries: Seq[QueryDef] = Seq(

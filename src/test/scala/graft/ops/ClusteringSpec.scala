@@ -173,14 +173,12 @@ class ClusteringSpec extends AnyFunSuite {
       i -> base
     }
     val emb = embDf(rows: _*)
-    def run(): Map[Long, Boolean] =
-      Clustering.semDedup(emb, "vec_id", "embedding",
-          k = 1, iters = 1, tau = 0.999)
+    def run(cap: Int): Map[Long, Boolean] =
+      Clustering.semDedupCapped(emb, "vec_id", "embedding",
+          k = 1, iters = 1, tau = 0.999, scale = 1000, cap = cap)
         .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-    val baseline = run() // cap default: single task for the cluster
-    spark.conf.set("spark.graft.semdedup.cluster.cap", "6")
-    try assert(run() == baseline)
-    finally spark.conf.unset("spark.graft.semdedup.cluster.cap")
+    val baseline = run(2048) // single task for the cluster
+    assert(run(6) == baseline)
   }
 
   test("semDedup: zero-norm and NaN embeddings are unscorable, never flagged or witnessing") {

@@ -37,15 +37,96 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("minhashPairs two-pass bucket pruning is output-identical") {
-    def run() = Dedup.minhashPairs(plantedDocs, "doc_id", "text",
-      shingleN = 5, numHashes = 64, bands = 16, threshold = 0.6)
+    def run(pruneMinBytes: Long) = Dedup.minhashPairsGated(plantedDocs,
+        "doc_id", "text", 5, 64, 16, 0.6, pruneMinBytes, bucketCap = 2048)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val single = run() // planted corpus is far below the 256 MB gate
-    spark.conf.set("spark.graft.lsh.prune.minBytes", "0")
-    try {
-      val pruned = run() // gate forced on: id pass + surviving-bucket join
-      assert(pruned == single)
-    } finally spark.conf.unset("spark.graft.lsh.prune.minBytes")
+    val single = run(256L << 20) // planted corpus is far below the gate
+    val pruned = run(0L) // gate forced on: id pass + surviving-bucket join
+    assert(pruned == single)
+  }
+
+  /** The MinHash plan invariant: no ScalaUDF in a Filter or Join
+    * condition or inside a lambda (where Catalyst would run it per
+    * element), and every banding chain — the subtree under one
+    * band-key posexplode, nested chains excluded — holds exactly one
+    * kernel call, with none outside a chain.
+    */
+  private def assertOneKernelCallPerChain(df: org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction, PosExplode, ScalaUDF}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join, LogicalPlan}
+    val plan = df.queryExecution.optimizedPlan
+    def udfs(e: Expression): Seq[ScalaUDF] = e.collect { case u: ScalaUDF => u }
+    plan.foreach {
+      case f: Filter => assert(udfs(f.condition).isEmpty, s"UDF in Filter: ${f.condition}")
+      case j: Join => assert(j.condition.forall(udfs(_).isEmpty), s"UDF in Join: ${j.condition}")
+      case _ =>
+    }
+    plan.foreach(_.expressions.foreach(_.foreach {
+      case l: LambdaFunction => assert(udfs(l).isEmpty, s"UDF in lambda: $l")
+      case _ =>
+    }))
+    def isChain(p: LogicalPlan) = p match {
+      case g: Generate => g.generator.isInstanceOf[PosExplode]
+      case _ => false
+    }
+    def kernelCalls(p: LogicalPlan): Int =
+      p.expressions.map(_.collect {
+        case u: ScalaUDF if u.udfName.contains("minhash_bands") => u
+      }.size).sum +
+        p.children.filterNot(isChain).map(kernelCalls).sum
+    val chains = plan.collect { case g if isChain(g) => g }
+    assert(chains.nonEmpty)
+    for (g <- chains) assert(kernelCalls(g) == 1, s"kernel calls in chain:\n$g")
+    assert(kernelCalls(plan) == (if (isChain(plan)) 1 else 0))
+  }
+
+  test("MinHash plans run the kernel once per document, never in a filter, join or lambda") {
+    // a parquet scan, like the l-rows' input: over a LocalRelation the
+    // optimizer folds the kernel away before any plan shape shows
+    val dir = java.nio.file.Files.createTempDirectory("graft_minhash_plan").resolve("docs")
+    plantedDocs.write.parquet(dir.toString)
+    val docs = spark.read.parquet(dir.toString)
+    val index = docs.filter(col("doc_id") < 100L)
+    val fresh = docs.filter(col("doc_id") >= 100L)
+    assertOneKernelCallPerChain(
+      Dedup.explodeBanded(Dedup.minhashIndex(docs, "doc_id", "text")))
+    for (pruneMinBytes <- Seq(256L << 20, 0L)) {
+      assertOneKernelCallPerChain(Dedup.minhashPairsGated(docs, "doc_id", "text",
+        5, 64, 16, 0.6, pruneMinBytes, bucketCap = 8))
+      assertOneKernelCallPerChain(Dedup.minhashNewVsIndexGated(fresh,
+        Dedup.minhashIndex(index, "doc_id", "text"), "doc_id", "text",
+        5, 64, 16, 0.6, pruneMinBytes, bucketCap = 8))
+    }
+  }
+
+  test("minhashIndex band_hashes are bit-identical to the Catalyst band expression") {
+    import spark.implicits._
+    // the expression form the kernel replaced, kept as its oracle:
+    // hash(slice(sig, b * r + 1, r), b) per band over the signature
+    val sigUdf = udf((t: String, n: Int, h: Int) =>
+      graft.kernel.TextKernel.minhashSignature(
+        graft.kernel.TextKernel.sortedShingleHashes(t, n), h))
+    val texts = Seq(
+      "plain ascii text about spark tables and joins",
+      "naïve café — 日本語のテキスト 🎉 with emoji 🎈 and accents àéîõü",
+      "abcde", // exactly shingleN code points: one shingle
+      "🎉🎈🎉🎈🎉", // exactly shingleN code points, all surrogate pairs
+      "abcd", // shorter than shingleN: excluded
+      "🎉🎈")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    for ((numHashes, bands) <- Seq((64, 16), (12, 4), (7, 1))) {
+      val r = numHashes / bands
+      val got = Dedup.minhashIndex(docs, "doc_id", "text", 5, numHashes, bands)
+        .collect().map(row => row.getLong(0) -> row.getSeq[Int](2)).toMap
+      val oracle = docs.filter(length(col("text")) >= 5)
+        .select(col("doc_id"),
+          transform(sequence(lit(0), lit(bands - 1)), b =>
+            hash(slice(sigUdf(col("text"), lit(5), lit(numHashes)),
+              b * r + 1, lit(r)), b)))
+        .collect().map(row => row.getLong(0) -> row.getSeq[Int](1)).toMap
+      assert(got.keySet == Set(0L, 1L, 2L, 3L))
+      assert(got == oracle, s"numHashes=$numHashes bands=$bands")
+    }
   }
 
   test("degenerate-bucket triangle split is output-identical and exact") {
@@ -56,21 +137,14 @@ class LlmOpsSpec extends AnyFunSuite {
     val dups = (0 until 40).map(i => (i.toLong, "identical duplicated content here"))
     val rest = (100 until 120).map(i => (i.toLong, s"unique text number $i nothing else"))
     val docs = (dups ++ rest).toDF("doc_id", "text")
-    def run() = Dedup.minhashPairs(docs, "doc_id", "text",
-      shingleN = 5, numHashes = 64, bands = 16, threshold = 0.9)
+    def run(pruneMinBytes: Long, bucketCap: Int) = Dedup.minhashPairsGated(
+        docs, "doc_id", "text", 5, 64, 16, 0.9, pruneMinBytes, bucketCap)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val baseline = run().toSet // below the prune gate: no split path
+    val baseline = run(256L << 20, 2048).toSet // below the gate: no split path
     assert(baseline.size == 40 * 39 / 2)
-    spark.conf.set("spark.graft.lsh.prune.minBytes", "0")
-    spark.conf.set("spark.graft.lsh.bucket.cap", "8")
-    try {
-      val split = run()
-      assert(split.length == split.toSet.size) // exactly once, never twice
-      assert(split.toSet == baseline)
-    } finally {
-      spark.conf.unset("spark.graft.lsh.prune.minBytes")
-      spark.conf.unset("spark.graft.lsh.bucket.cap")
-    }
+    val split = run(0L, 8)
+    assert(split.length == split.toSet.size) // exactly once, never twice
+    assert(split.toSet == baseline)
   }
 
   test("simhashPairs finds planted near-duplicates") {
@@ -408,7 +482,7 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(out.map(_._3).toSet == Set("train", "eval"))
   }
 
-  test("minhashNewVsPrebuiltIndex (fast kernel) agrees with the exact twin") {
+  test("minhashNewVsPrebuiltIndex finds planted near-duplicates by jaccard") {
     import spark.implicits._
     val all = plantedDocs.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val index = all.filter(_._1 < 100L).toDF("doc_id", "text")
@@ -436,21 +510,15 @@ class LlmOpsSpec extends AnyFunSuite {
     val content = "identical duplicated content shared across both sides here"
     val index = (0 until 30).map(i => (i.toLong, content)).toDF("doc_id", "text")
     val fresh = (1000 until 1010).map(i => (i.toLong, content)).toDF("doc_id", "text")
-    def run() = Dedup.minhashNewVsPrebuiltIndex(fresh,
-        Dedup.minhashIndex(index, "doc_id", "text"), "doc_id", "text", threshold = 0.9)
+    def run(pruneMinBytes: Long, bucketCap: Int) = Dedup.minhashNewVsIndexGated(
+        fresh, Dedup.minhashIndex(index, "doc_id", "text"), "doc_id", "text",
+        5, 64, 16, 0.9, pruneMinBytes, bucketCap)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getDouble(2), r.getLong(3))).toMap
-    val baseline = run() // below the gate: single task per bucket
+    val baseline = run(256L << 20, 2048) // below the gate: single task per bucket
     assert(baseline.size == 10 &&
       baseline.values.forall(_ == ((30L, 1.0, 0L))), s"baseline $baseline")
-    spark.conf.set("spark.graft.lsh.prune.minBytes", "0")
-    spark.conf.set("spark.graft.lsh.bucket.cap", "8")
-    try {
-      assert(run() == baseline)
-    } finally {
-      spark.conf.unset("spark.graft.lsh.prune.minBytes")
-      spark.conf.unset("spark.graft.lsh.bucket.cap")
-    }
+    assert(run(0L, 8) == baseline)
   }
 
   test("minhashNewVsPrebuiltIndex matches a new shard only against the index") {
