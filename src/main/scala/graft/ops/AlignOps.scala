@@ -232,15 +232,6 @@ object AlignOps {
     alignMinimap2(queries, subjects,
       Minimap2Params(k = k, w = w, maxSecondary = maxSecondary))
 
-  /** Paired-end entry point — same as alignMinimap2 (pairing is
-    * per-record on sequence2); kept for call-site clarity.
-    */
-  def alignMinimap2Paired(
-      queries: DataFrame,
-      subjects: DataFrame,
-      k: Int = 16, w: Int = 5): DataFrame =
-    alignMinimap2(queries, subjects, Minimap2Params(k = k, w = w))
-
   private val indexMetaFile = "graft_index_meta.json"
 
   /** save_minimap2_index(subjects, path, k, w, preset): persist the

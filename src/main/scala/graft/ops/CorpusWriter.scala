@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The materialization side of curation: write a document corpus as
@@ -23,7 +23,8 @@ object CorpusWriter {
 
   /** Write `docs` as `shards` parquet shards under `path` and return
     * the manifest DataFrame (shard, n_docs, n_tokens) that was also
-    * written to `path/_manifest`.
+    * written to `path/_manifest`. `spark.read.parquet(path)` reads
+    * the corpus back with `shard` restored from the directory layout.
     */
   def writeShards(docs: DataFrame, idCol: String, textCol: String,
       path: String, shards: Int): DataFrame = {
@@ -42,10 +43,4 @@ object CorpusWriter {
     manifest.coalesce(1).write.mode("overwrite").parquet(s"$path/_manifest")
     manifest
   }
-
-  /** Read back a sharded corpus (the shard column is restored from the
-    * directory layout).
-    */
-  def readShards(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 }

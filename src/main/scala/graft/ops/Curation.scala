@@ -24,9 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  private def toks(textCol: Column): Column =
-    filter(split(lower(textCol), TextKernel.WsPlus), t => t =!= "")
-
   /** The four gate signals in ONE compiled kernel pass per document:
     * (n_tokens, sum_chars, n_alpha, has_stop), NULL struct for NULL
     * text (matching the expression form's null flow field-for-field).
@@ -119,22 +116,6 @@ object Curation {
       .when(alphaFrac < minAlphaFrac, "alpha")
       .when(!hasStop, "stopwords")
       .when(!langCol.isin(allowedLangs.map(lit(_)): _*), "lang")
-  }
-
-  /** The pre-r14 expression form of [[gopherStats]]'s signals — kept
-    * ONLY for the equality spec that pins the kernel to it (and as the
-    * readable definition of the semantics). Not on any query path.
-    */
-  private[graft] def gopherStatsExprLegacy(textCol: Column,
-      stopwords: Seq[String]): Column = {
-    val t = toks(textCol)
-    val n = size(t).cast("long")
-    val sumChars = aggregate(transform(t, x => length(x).cast("long")),
-      lit(0L), (a, x) => a + x)
-    val nAlpha = size(filter(t, x => x.rlike("^[a-z]+$"))).cast("long")
-    val hasStop = arrays_overlap(t, array(stopwords.map(lit): _*))
-    when(textCol.isNotNull, struct(n.as("_1"), sumChars.as("_2"),
-      nAlpha.as("_3"), hasStop.as("_4")))
   }
 
   /** Per-document rule evaluation. Output: (doc_id, n_tokens,

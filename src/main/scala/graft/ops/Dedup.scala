@@ -484,10 +484,6 @@ object Dedup {
     * past 50 GB). The compact form is corpus-sized; the explode is
     * re-derived at read time, map-only, and only materializes in the
     * post-prune shuffle.
-    *
-    * `carryCols` ride along unchanged after `band_hashes`, for callers
-    * that cannot join a payload back by id (a streaming side would
-    * need a stream-stream join); batch callers leave it empty.
     */
   def minhashIndex(
       indexDocs: DataFrame,
@@ -495,8 +491,7 @@ object Dedup {
       textCol: String,
       shingleN: Int = 5,
       numHashes: Int = 64,
-      bands: Int = 16,
-      carryCols: Seq[String] = Nil): DataFrame = {
+      bands: Int = 16): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     // One kernel call per document either way the optimizer goes: with
     // both fields read, CollapseProject leaves the call in its own
@@ -504,22 +499,20 @@ object Dedup {
     // that field's single read.
     indexDocs
       .filter(length(col(textCol)) >= shingleN)
-      .select((col(idCol).as("id") +:
+      .select(col(idCol).as("id"),
         bandsAndSetUdf(col(textCol), lit(shingleN), lit(numHashes), lit(bands))
-          .as("k") +:
-        carryCols.map(col)): _*)
-      .select((col("id") +: col("k._2").as("shs") +:
-        col("k._1").as("band_hashes") +: carryCols.map(col)): _*)
+          .as("k"))
+      .select(col("id"), col("k._2").as("shs"), col("k._1").as("band_hashes"))
   }
 
-  /** Compact index rows → the exploded (band, band_hash, id, shs,
-    * carried columns…) stream the bucket verify consumes. The outer
+  /** Compact index rows → the exploded (band, band_hash, then every
+    * other column) stream the bucket verify consumes. The outer
     * explode emits the same rows (`band_hashes` is never empty) and,
     * unlike the inner one, lets the optimizer infer no
     * `size(band_hashes) > 0` filter — a filter that pushdown would
     * rewrite into a second call of the kernel below the explode.
     */
-  private[graft] def explodeBanded(compact: DataFrame): DataFrame = {
+  private[ops] def explodeBanded(compact: DataFrame): DataFrame = {
     val rest = compact.columns.filter(_ != "band_hashes").map(col)
     compact.select(rest :+ posexplode_outer(col("band_hashes")): _*)
       .select((col("pos").as("band") +: col("col").as("band_hash") +: rest): _*)

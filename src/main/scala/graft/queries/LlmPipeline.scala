@@ -847,21 +847,17 @@ object LlmPipeline {
              |  FROM toks GROUP BY word""".stripMargin)),
 
     // 2H: the streaming windowed aggregation run in BATCH mode over the
-    // events table — identical logical plan to EventStreams
-    // .windowedTypeCounts (incremental variant tested in
-    // EventStreamsSpec with MemoryStream + watermark).
+    // events table — the SAME EventStreams.windowedTypeCounts function
+    // EventStreamsSpec drives with a MemoryStream (withWatermark is a
+    // no-op on a static frame).
     QueryDef(
       "h01_event_windows",
       (s, d) =>
-        Tables.events(s, d)
-          .groupBy(window(col("ts"), "1 day"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            (sum(round(col("value") * 100, 0).cast("long")).cast("double") / 100.0)
-              .as("total_value"))
+        graft.streaming.EventStreams.windowedTypeCounts(Tables.events(s, d), "1 day")
           // window_start as text: parquet timestamp precision differs
           // between engines (ns vs us) — a strict byte compare would flag
           // equal instants as different; the formatted string is exact.
-          .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
+          .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
               .as("window_start"),
             col("event_type"), col("n"), col("total_value")),
       Some("""SELECT strftime(time_bucket(INTERVAL 1 DAY, CAST(ts AS TIMESTAMP)),
@@ -927,14 +923,14 @@ object LlmPipeline {
              |   AND epoch_us(e.ts) < epoch_us(c.ts) + 300000000
              | WHERE c.event_type = 'click' AND e.event_type = 'error'""".stripMargin)),
 
-    // 2H: streaming exact-ID dedup run in BATCH mode — the batch twin
-    // of EventStreams.dedupeWithinWatermark (the streaming variant,
-    // dropDuplicatesWithinWatermark + watermark-bounded state, is
-    // driven in EventStreamsSpec with a MemoryStream). A %7 slice of
+    // 2H: streaming exact-ID dedup run in BATCH mode — the SAME
+    // EventStreams.dedupeWithinWatermark function EventStreamsSpec
+    // drives with a MemoryStream (on a static frame it is
+    // dropDuplicates). A %7 slice of
     // the feed is replayed (identical rows — the close-in-time
     // duplicate arrivals the watermark horizon is sized for), then
     // per-day windows report total vs surviving-unique counts.
-    // dropDuplicates keeps an arbitrary row per key, but duplicates
+    // The dedup keeps an arbitrary row per key, but duplicates
     // are exact copies, so every surviving (event_id, ts) — and hence
     // the window assignment — is deterministic.
     QueryDef(
@@ -944,7 +940,8 @@ object LlmPipeline {
         val feed = ev.unionAll(ev.filter(pmod(col("event_id"), lit(7)) === 0))
         val totals = feed.groupBy(window(col("ts"), "1 day").as("w"))
           .agg(count(lit(1)).as("n_total"))
-        val uniq = feed.dropDuplicates("event_id")
+        val uniq = graft.streaming.EventStreams
+          .dedupeWithinWatermark(feed, Seq("event_id"))
           .groupBy(window(col("ts"), "1 day").as("w"))
           .agg(count(lit(1)).as("n_unique"))
         totals.join(uniq, "w")

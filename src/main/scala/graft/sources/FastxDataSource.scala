@@ -14,15 +14,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * .cpp:1-271): the shared 7-column sequence-read schema, per-file
   * 1-based sequence_index, paired-end via the `sequence2` option
   * (R1/R2 matched by position, id-checked), `qual_offset` Phred decode,
-  * `include_filepath` source column. One partition per file (pair);
-  * streaming ingests arriving single-end files.
+  * `include_filepath` source column. One partition per file (pair).
   */
 class FastxDataSource extends FileSource(FastxFormat)
 
 /** A record is (R1, R2), R2 null for single-end input. */
 object FastxFormat extends FileFormat[(FastxRecord, FastxRecord)] {
   override val name = "fastx"
-  override def streaming = true
   override def stdin = true
 
   /** The sequence-read schema shared by fastx, sam_sequences and sff. */
@@ -61,11 +59,7 @@ object FastxFormat extends FileFormat[(FastxRecord, FastxRecord)] {
   private def qualOffset(options: Map[String, String]): Int =
     options.getOrElse("qual_offset", "33").toInt
 
-  override def check(options: Map[String, String], forStream: Boolean): Unit = {
-    // R1/R2 arrival can't be atomically matched
-    if (forStream && options.contains("sequence2"))
-      throw new IllegalArgumentException(
-        "fastx streaming does not support paired-end (sequence2)")
+  override def check(options: Map[String, String]): Unit = {
     // reference: read_fastx rejects offsets other than Phred+33/+64
     val q = qualOffset(options)
     if (q != 33 && q != 64)

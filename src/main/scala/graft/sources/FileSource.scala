@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -44,8 +43,6 @@ abstract class FileFormat[R] extends Serializable {
     if (options.getBoolean("include_filepath", false))
       columns(options).add(StructField("filepath", StringType))
     else columns(options)
-  /** Declares MICRO_BATCH_READ: `readStream` ingests files as they arrive. */
-  def streaming: Boolean = false
   /** Accepts `-`/`/dev/stdin` as the path. */
   def stdin: Boolean = false
 
@@ -54,9 +51,8 @@ abstract class FileFormat[R] extends Serializable {
     FileSourceCommon.expandPaths(FileSourceCommon.pathSpec(options, name), stdin)
       .map(FilePartition(_))
 
-  /** Driver-side option checks, run before any task of a batch or
-    * (`forStream`) streaming scan starts. */
-  def check(options: Map[String, String], forStream: Boolean): Unit = ()
+  /** Driver-side option checks, run before any task of the scan starts. */
+  def check(options: Map[String, String]): Unit = ()
 
   /** Opens one partition's records (on the executor). */
   def open(part: FilePartition, options: Map[String, String], required: StructType): Records[R]
@@ -86,10 +82,10 @@ class FileTable[R](fmt: FileFormat[R], options: CaseInsensitiveStringMap)
     extends Table with SupportsRead {
   override def name(): String = s"${fmt.name}(${options.get("path")})"
   override def schema(): StructType = fmt.schema(options)
+  // batch only: `readStream` fails at analysis with Spark's own
+  // "does not support streamed reading" error
   override def capabilities(): java.util.Set[TableCapability] =
-    if (fmt.streaming)
-      java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-    else java.util.EnumSet.of(TableCapability.BATCH_READ)
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
     new FileScanBuilder(fmt, opts)
 }
@@ -123,64 +119,8 @@ class FileScan[R](
     fmt.plan(options).toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    fmt.check(options, forStream = false)
+    fmt.check(options)
     new FileReaderFactory(fmt, options, required, pushedFilters)
-  }
-
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new FileStream(fmt, options, this)
-}
-
-/** Streaming ingest of arriving files: each micro-batch picks up the
-  * files that appeared since the last one (a sequencer or crawler drops
-  * finished files into a directory). An offset is the SNAPSHOT of
-  * discovered files, so a committed (start, end] range always maps to
-  * end.files − start.files: replay after failure re-reads the identical
-  * file set even if new files appeared meanwhile (the MicroBatchStream
-  * immutability contract).
-  */
-class FileStream[R](fmt: FileFormat[R], options: Map[String, String], scan: FileScan[R])
-    extends MicroBatchStream {
-  fmt.check(options, forStream = true)
-
-  private def currentFiles: Seq[String] =
-    FileSourceCommon.expandPathsLenient(FileSourceCommon.pathSpec(options, fmt.name))
-
-  override def initialOffset(): Offset = FileSnapshotOffset(Seq.empty)
-  override def latestOffset(): Offset = FileSnapshotOffset(currentFiles.sorted)
-  override def deserializeOffset(json: String): Offset = FileSnapshotOffset.fromJson(json)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val seen = start.asInstanceOf[FileSnapshotOffset].files.toSet
-    end.asInstanceOf[FileSnapshotOffset].files
-      .filterNot(seen).sorted.map(FilePartition(_)).toArray[InputPartition]
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = scan.createReaderFactory()
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-/** Offset = the sorted set of files discovered so far. Serialized as a
-  * SINGLE-LINE JSON array: Spark's OffsetSeqLog stores one offset per
-  * line, so raw newlines in json() would corrupt the checkpoint.
-  */
-case class FileSnapshotOffset(files: Seq[String]) extends Offset {
-  override def json(): String = {
-    import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
-    JsonMethods.compact(JsonMethods.render(files))
-  }
-}
-
-object FileSnapshotOffset {
-  def fromJson(json: String): FileSnapshotOffset = {
-    import org.json4s.jackson.JsonMethods
-    import org.json4s.{DefaultFormats, JArray}
-    implicit val formats: DefaultFormats.type = DefaultFormats
-    if (json.isEmpty) FileSnapshotOffset(Seq.empty)
-    else FileSnapshotOffset(
-      JsonMethods.parse(json).asInstanceOf[JArray].extract[Seq[String]])
   }
 }
 

@@ -151,22 +151,6 @@ object FileSourceCommon {
         }
     }
 
-  /** Lenient variant for streaming discovery: an unmatched glob means
-    * "no files yet", not an error. stdin is a one-shot stream — it can
-    * never feed a file-arrival micro-batch source.
-    */
-  def expandPathsLenient(spec: String): Seq[String] = {
-    val conf = hadoopConf
-    spec.split(",").map(_.trim).filter(_.nonEmpty).flatMap { one =>
-      if (isStdinToken(one))
-        throw new IllegalArgumentException("stdin cannot be used with streaming")
-      val p = new Path(one)
-      val fs = p.getFileSystem(conf)
-      Option(fs.globStatus(p)).getOrElse(Array.empty)
-        .map(_.getPath.toString).sorted.toSeq
-    }.toSeq
-  }
-
   def openStream(path: String): InputStream = {
     val p = new Path(path)
     p.getFileSystem(hadoopConf).open(p)

@@ -16,8 +16,7 @@ import java.io.BufferedInputStream
   * fields (split position/stop_position) + 8 integer and 3 string
   * optional tags, optional `sequence`/`qual` (include_seq_qual) and
   * `filepath` columns. One partition per file (sorted glob), stdin
-  * accepted, [[SamFilters]] evaluated per record inside the reader,
-  * streaming ingests arriving files.
+  * accepted, [[SamFilters]] evaluated per record inside the reader.
   */
 class SamDataSource extends FileSource(SamFormat)
 
@@ -29,7 +28,6 @@ class SamAliasDataSource extends SamDataSource {
 
 object SamFormat extends FileFormat[SamRecord] {
   override val name = "alignments"
-  override def streaming = true
   override def stdin = true
 
   override def columns(options: CaseInsensitiveStringMap): StructType = {

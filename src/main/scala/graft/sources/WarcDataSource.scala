@@ -19,9 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale: one partition per file (a .warc.gz is per-record gzip
   * members — splitting within a file needs a member index; crawls ship
   * thousands of ~1 GB files, so file-level parallelism is the real
-  * unit). Streaming ingests shards as a crawler drops them (the
-  * continuous-corpus front door: html_to_text → quality → dedup). The
-  * HTTP split runs only when an http column or `payload` is read, and
+  * unit). The HTTP split runs only when an http column or `payload` is read, and
   * the header map only for `http_content_type`; the payload BYTES are
   * still consumed from the stream either way — Content-Length skipping
   * would save only the copy, since a gzip member must be decompressed
@@ -39,7 +37,6 @@ final class WarcRow(val rec: WarcCodec.WarcRecord, needHeaders: Boolean) {
 
 object WarcFormat extends FileFormat[WarcRow] {
   override val name = "warc"
-  override def streaming = true
   override def columns(options: CaseInsensitiveStringMap): StructType = StructType(Seq(
     StructField("record_index", LongType),
     StructField("warc_type", StringType),

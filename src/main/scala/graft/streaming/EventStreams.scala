@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming operators over the events-stream shape
   * (event_id, ts, user_id, event_type, value, props).
@@ -13,15 +12,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * incrementally with event-time watermarks. At scale the windowed
   * aggregate is a streaming shuffle keyed on (window, event_type) with
   * state bounded by the watermark horizon.
+  *
+  * Each operator also runs in batch over the static events table as a
+  * Verify row (h01, h03, h08); `withWatermark` is a no-op there.
   */
 object EventStreams {
 
-  final case class SessionSummary(
-      user_id: Long, n_events: Long, total_value: Double, n_types: Long)
-
   /** Tumbling-window per-type aggregate with a watermark: late events
     * beyond the delay are dropped, state is purged as the watermark
-    * advances (bounded memory forever).
+    * advances (bounded memory forever). `total_value` sums whole cents
+    * (each value rounded to 2 dp, summed as a long), so the total is
+    * exact whatever the summation order — the contract h01's DuckDB
+    * oracle compares against.
     */
   def windowedTypeCounts(
       events: DataFrame,
@@ -32,138 +34,10 @@ object EventStreams {
       .groupBy(window(col("ts"), windowLength), col("event_type"))
       .agg(
         count(lit(1)).as("n"),
-        sum(col("value")).as("total_value"))
+        (sum(round(col("value") * 100, 0).cast("long")).cast("double") / 100.0)
+          .as("total_value"))
       .select(col("window.start").as("window_start"),
         col("event_type"), col("n"), col("total_value"))
-
-  /** Arbitrary-state sessionization: per-user running summary via
-    * mapGroupsWithState (the KeyValueGroupedDataset custom-state
-    * surface). NoTimeout keeps the micro-batch loop data-driven; a
-    * production session-expiry variant would use EventTimeTimeout with
-    * a watermark.
-    */
-  def userSessions(
-      events: Dataset[(Long, Double, String)]): Dataset[SessionSummary] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[(Long, Double, String)],
-         state: GroupState[SessionSummary]) =>
-          val prev = state.getOption.getOrElse(SessionSummary(userId, 0L, 0.0, 0L))
-          val batch = rows.toSeq
-          val types = batch.map(_._3).toSet
-          val updated = SessionSummary(
-            userId,
-            prev.n_events + batch.size,
-            prev.total_value + batch.map(_._2).sum,
-            math.max(prev.n_types, types.size))
-          state.update(updated)
-          updated
-      }
-  }
-
-  final case class SessionRecord(
-      user_id: Long, session_start: java.sql.Timestamp,
-      session_end: java.sql.Timestamp, n_events: Long, session_value: Double)
-
-  /** Per-user state for sessionize (public: the state Encoder's
-    * generated code instantiates it reflectively).
-    */
-  final case class OpenSession(
-      userId: Long, start: Long, lastTs: Long, n: Long, value: Double)
-
-  /** Event-time sessionization with expiry: flatMapGroupsWithState +
-    * EventTimeTimeout. A session closes (and is emitted) when the
-    * WATERMARK passes its last event + gap — the streaming twin of the
-    * batch h02_session_window query. State per user is one open
-    * session (constant size); the watermark bounds total state forever.
-    * Input must carry a watermarked `ts` timestamp column.
-    */
-  def sessionize(
-      events: Dataset[(Long, java.sql.Timestamp, Double)],
-      gap: String = "30 minutes"): Dataset[SessionRecord] = {
-    import events.sparkSession.implicits._
-    val gapMs = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(gap))
-    // months have no fixed millisecond length — silently yielding 0
-    // would make every event its own session
-    require(gapMs.months == 0, s"sessionize gap must not use months: '$gap'")
-    val gapMillis =
-      gapMs.days * 86400000L + gapMs.microseconds / 1000L
-    require(gapMillis > 0, s"sessionize gap must be positive: '$gap'")
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[OpenSession, SessionRecord](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[(Long, java.sql.Timestamp, Double)],
-         state: GroupState[OpenSession]) =>
-          if (state.hasTimedOut) {
-            // watermark passed last event + gap: close and emit
-            val s = state.get
-            state.remove()
-            Iterator(SessionRecord(userId, new java.sql.Timestamp(s.start),
-              new java.sql.Timestamp(s.lastTs), s.n, s.value))
-          } else {
-            val sorted = rows.toSeq.sortBy(_._2.getTime)
-            var open = state.getOption
-            // consecutive watermark-late events BEFORE the open session
-            // chain into their own sessions (batch session_window rule)
-            // instead of each closing alone
-            var lateOpen: Option[OpenSession] = None
-            val closed = Seq.newBuilder[SessionRecord]
-            def close(s: OpenSession): Unit =
-              closed += SessionRecord(userId, new java.sql.Timestamp(s.start),
-                new java.sql.Timestamp(s.lastTs), s.n, s.value)
-            for ((_, ts, v) <- sorted) {
-              val t = ts.getTime
-              open match {
-                // late event entirely BEFORE the open session (no
-                // window overlap; its chain can never reach the open
-                // session, or it would have hit the merge case below)
-                case Some(s) if t + gapMillis <= s.start =>
-                  lateOpen match {
-                    case Some(l) if t < l.lastTs + gapMillis =>
-                      lateOpen = Some(l.copy(lastTs = math.max(l.lastTs, t),
-                        n = l.n + 1, value = l.value + v))
-                    case Some(l) =>
-                      close(l)
-                      lateOpen = Some(OpenSession(userId, t, t, 1L, v))
-                    case None =>
-                      lateOpen = Some(OpenSession(userId, t, t, 1L, v))
-                  }
-                // [t, t+gap) overlaps the open session's window: merge
-                // with the batch session_window rule; start AND end
-                // extend (a late event may predate the session start) —
-                // and the extension may now bridge to the late chain
-                case Some(s) if t < s.lastTs + gapMillis =>
-                  var merged = s.copy(start = math.min(s.start, t),
-                    lastTs = math.max(s.lastTs, t),
-                    n = s.n + 1, value = s.value + v)
-                  lateOpen match {
-                    case Some(l) if merged.start < l.lastTs + gapMillis =>
-                      merged = merged.copy(start = math.min(merged.start, l.start),
-                        n = merged.n + l.n, value = merged.value + l.value)
-                      lateOpen = None
-                    case _ =>
-                  }
-                  open = Some(merged)
-                case Some(s) =>
-                  close(s)
-                  open = Some(OpenSession(userId, t, t, 1L, v))
-                case None =>
-                  open = Some(OpenSession(userId, t, t, 1L, v))
-              }
-            }
-            lateOpen.foreach(close)
-            open.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.lastTs + gapMillis)
-            }
-            closed.result().iterator
-          }
-      }
-  }
 
   /** Stream-stream event-time interval join: for every click, the
     * errors by the same user inside [click_ts, click_ts + gapSeconds)
@@ -206,25 +80,18 @@ object EventStreams {
     * passes its event time + delay, so state is O(keys per watermark
     * horizon) — the streaming twin of the batch exact-dedup operator
     * (duplicates in a training-data feed usually arrive close together;
-    * the horizon is the dedup window).
+    * the horizon is the dedup window). Spark's analyzer rejects
+    * `dropDuplicatesWithinWatermark` on a static frame, where a
+    * watermark bounds nothing anyway, so a static frame gets
+    * `dropDuplicates(keyCols)`; h08 runs it that way.
     */
   def dedupeWithinWatermark(
       events: DataFrame,
       keyCols: Seq[String],
       watermarkDelay: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  /** End-to-end demo wiring for tests: memory sink, complete mode. */
-  def runWindowedDemo(
-      spark: SparkSession,
-      input: DataFrame,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    windowedTypeCounts(input, windowLength = "1 minute", watermarkDelay = "30 seconds")
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Complete())
-      .start()
+    if (events.isStreaming)
+      events
+        .withWatermark("ts", watermarkDelay)
+        .dropDuplicatesWithinWatermark(keyCols)
+    else events.dropDuplicates(keyCols)
 }

@@ -198,9 +198,9 @@ class AlignOpsSpec extends AnyFunSuite {
     val subjects = Seq(("ref", g)).toDF("read_id", "sequence1")
     val r1 = g.substring(100, 220)
     val r2 = graft.kernel.Rype.reverseComplementLenient(g.substring(300, 420))
-    val out = AlignOps.alignMinimap2Paired(
+    val out = AlignOps.alignMinimap2(
       Seq(("p1", r1, r2)).toDF("read_id", "sequence1", "sequence2"), subjects,
-      k = 16, w = 5).collect()
+      AlignOps.Minimap2Params(k = 16, w = 5)).collect()
       .filter(r => (r.getInt(1) & 0x100) == 0).sortBy(r => r.getInt(1) & 0x40)
     assert(out.length == 2)
     val first = out.find(r => (r.getInt(1) & 0x40) != 0).get

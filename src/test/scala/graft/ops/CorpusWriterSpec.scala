@@ -21,8 +21,9 @@ class CorpusWriterSpec extends AnyFunSuite {
         .filter(_.getName.endsWith(".parquet"))
       assert(files.length == 1, s"shard $k has ${files.length} files")
     }
-    // round-trip: all docs, shard column restored, assignment stable
-    val back = CorpusWriter.readShards(spark, dir)
+    // round-trip: all docs, shard column restored from the directory
+    // layout, assignment stable
+    val back = spark.read.parquet(dir)
     assert(back.count() == 200L)
     val reassigned = back.select("doc_id", "shard").collect()
       .map(r => r.getLong(0) -> r.getInt(1).toLong).toMap

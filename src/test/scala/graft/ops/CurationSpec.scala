@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.SparkFixture
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 class CurationSpec extends AnyFunSuite {
@@ -54,7 +56,7 @@ class CurationSpec extends AnyFunSuite {
       .map { case (t, i) => (i.toLong, t) }
     val df = rows.toDF("id", "text")
     val mismatches = df.select(col("id"),
-        Curation.gopherStatsExprLegacy(col("text"), stop).as("legacy"),
+        CurationLegacy.gopherStatsExprLegacy(col("text"), stop).as("legacy"),
         // private[ops] access: the kernel struct via gopherReason's
         // building block is not exported; compare through gopherRules'
         // public signals + reason instead for the kernel side
@@ -88,7 +90,7 @@ class CurationSpec extends AnyFunSuite {
       Curation.gopherReason(col("text"), col("lang")).as("r")).collect()
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     val legStats = df.select(col("id"),
-      Curation.gopherStatsExprLegacy(col("text"), stop).as("s")).collect()
+      CurationLegacy.gopherStatsExprLegacy(col("text"), stop).as("s")).collect()
       .map(r => r.getLong(0) -> Option(r.getStruct(1))).toMap
     rows.foreach { case (id, _) =>
       val exp = legStats(id) match {
@@ -170,5 +172,26 @@ class CurationSpec extends AnyFunSuite {
     assert(r(1L).getDouble(2) == 7.0 / 3)   // mean token len
     assert(r(1L).getDouble(3) == 2.0 / 3)   // alpha frac ("12" not alpha)
     assert(r(2L).isNullAt(2) && r(2L).isNullAt(3))
+  }
+
+  test("the rule gate composes with a document stream unchanged (map-only)") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, String, String)]
+    val query = graft.ops.Curation.gopherRules(
+        input.toDF().toDF("doc_id", "text", "lang"),
+        "doc_id", "text", "lang", minTokens = 3)
+      .writeStream.format("memory").queryName("graft_rules_stream")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      input.addData((1L, "the quick brown fox", "en"), (2L, "to in", "en"))
+      query.processAllAvailable()
+      val rows = spark.sql(
+          "SELECT doc_id, keep, drop_reason FROM graft_rules_stream")
+        .collect().map(r => r.getLong(0) ->
+          (r.getBoolean(1), Option(r.getString(2)))).toMap
+      assert(rows(1L) == ((true, None)))
+      assert(rows(2L) == ((false, Some("too_short"))))
+    } finally query.stop()
   }
 }

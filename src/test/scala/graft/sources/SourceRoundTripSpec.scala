@@ -173,9 +173,7 @@ class SourceRoundTripSpec extends AnyFunSuite {
       val props = Map("path" -> "unused").asJava
       val caps = p.getTable(p.inferSchema(new CaseInsensitiveStringMap(props)),
         Array.empty, props).capabilities().asScala
-      assert(caps.contains(TableCapability.BATCH_READ), name)
-      assert(caps.contains(TableCapability.MICRO_BATCH_READ) ==
-        Set("fastx", "alignments", "sam", "warc")(name), name)
+      assert(caps == Set(TableCapability.BATCH_READ), name)
     }
     assert(read("alignments", sam, "include_seq_qual" -> "true").columns.toSeq ==
       samCols ++ Seq("sequence", "qual"))

@@ -15,7 +15,9 @@ class EventStreamsSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, String, Double)]
     val df = input.toDF().toDF("ts", "event_type", "value")
-    val query = EventStreams.runWindowedDemo(spark, df, "graft_stream_test")
+    val query = EventStreams.windowedTypeCounts(df, "1 minute", "30 seconds")
+      .writeStream.format("memory").queryName("graft_stream_test")
+      .outputMode(OutputMode.Complete()).start()
     try {
       val t0 = Timestamp.valueOf("2026-01-01 10:00:10")
       val t1 = Timestamp.valueOf("2026-01-01 10:00:50")
@@ -34,33 +36,26 @@ class EventStreamsSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
-  test("stateful user sessions accumulate across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Double, String)]
-    val sessions = EventStreams.userSessions(input.toDS())
-    val query = sessions.writeStream
-      .format("memory").queryName("graft_sessions_test")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      input.addData((1L, 2.0, "click"), (1L, 3.0, "view"), (2L, 7.0, "click"))
-      query.processAllAvailable()
-      input.addData((1L, 5.0, "click"))
-      query.processAllAvailable()
-      val last = spark.sql(
-        "SELECT user_id, max(n_events) AS n, max(total_value) AS v FROM graft_sessions_test GROUP BY user_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
-      assert(last.toSeq == Seq((1L, 3L, 10.0), (2L, 1L, 7.0)))
-    } finally query.stop()
-  }
-
   test("batch events table runs through the same windowed aggregation") {
-    // same logical op applied to the static driver events table
-    val events = graft.Tables.events(spark, "/root/testdata/sf0.001")
-    val out = events
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    assert(out.count() > 0)
+    import spark.implicits._
+    // timestamps parse and format in the session time zone, so the
+    // 1-day windows line up with the literal dates in any JVM time zone
+    val events = Seq(
+      ("2026-01-01 10:00:00", "click", 0.1),
+      ("2026-01-01 23:59:59", "click", 0.2), // 0.1 + 0.2 as doubles is 0.30000000000000004
+      ("2026-01-02 00:00:00", "click", 1.25), // next day's window
+      ("2026-01-01 12:00:00", "view", 2.5))
+      .toDF("ts", "event_type", "value")
+      .withColumn("ts", to_timestamp(col("ts")))
+    val out = EventStreams.windowedTypeCounts(events, "1 day")
+      .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss"),
+        col("event_type"), col("n"), col("total_value"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+      .sortBy(x => (x._1, x._2)).toSeq
+    assert(out == Seq(
+      ("2026-01-01 00:00:00", "click", 2L, 0.3),
+      ("2026-01-01 00:00:00", "view", 1L, 2.5),
+      ("2026-01-02 00:00:00", "click", 1L, 1.25)))
   }
 
   test("streaming dedup within watermark drops duplicates across batches") {
@@ -85,88 +80,15 @@ class EventStreamsSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
-  test("sessionize merges a late overlapping event and extends session start") {
+  test("dedupeWithinWatermark on a static frame keeps one row per key") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp, Double)]
-    // generous watermark delay so the late event is NOT dropped
-    val withWm = input.toDS().withWatermark("_2", "2 hours")
-      .as[(Long, Timestamp, Double)]
-    val query = EventStreams.sessionize(withWm, gap = "10 minutes")
-      .writeStream.format("memory").queryName("graft_sessionize_late")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      def t(s: String) = Timestamp.valueOf(s)
-      input.addData((1L, t("2026-01-01 10:10:00"), 1.0))
-      query.processAllAvailable()
-      // late event 6 min BEFORE the open session start: windows overlap
-      // → merge, session_start extends back to 10:04
-      input.addData((1L, t("2026-01-01 10:04:00"), 2.0))
-      query.processAllAvailable()
-      // far-future event for another user pushes the watermark past
-      // 10:10+10min+2h so user 1's session times out and is emitted
-      input.addData((2L, t("2026-01-01 13:00:00"), 0.0))
-      query.processAllAvailable()
-      input.addData((2L, t("2026-01-01 13:01:00"), 0.0))
-      query.processAllAvailable()
-      val rows = spark.sql(
-        "SELECT * FROM graft_sessionize_late WHERE user_id = 1").collect()
-        .map(r => (r.getTimestamp(1).toString, r.getTimestamp(2).toString, r.getLong(3)))
-      assert(rows.toSeq == Seq(("2026-01-01 10:04:00.0", "2026-01-01 10:10:00.0", 2L)))
-    } finally query.stop()
-  }
-
-  test("sessionize rejects month-bearing gaps") {
-    import spark.implicits._
-    val e = intercept[IllegalArgumentException](
-      EventStreams.sessionize(
-        spark.emptyDataset[(Long, Timestamp, Double)], gap = "1 month"))
-    assert(e.getMessage.contains("months"))
-  }
-
-  test("event-time sessionization closes sessions as the watermark passes gap") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp, Double)]
-    val withWm = input.toDS().withWatermark("_2", "0 seconds")
-      .as[(Long, Timestamp, Double)]
-    val sessions = EventStreams.sessionize(withWm, gap = "10 minutes")
-    val query = sessions.writeStream
-      .format("memory").queryName("graft_sessionize_test")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      def t(s: String) = Timestamp.valueOf(s)
-      // user 1: two events inside one session
-      input.addData((1L, t("2026-01-01 10:00:00"), 1.0),
-        (1L, t("2026-01-01 10:05:00"), 2.0))
-      query.processAllAvailable() // watermark → 10:05
-      // user 2 far in the future advances the watermark past 10:15
-      input.addData((2L, t("2026-01-01 11:00:00"), 5.0))
-      query.processAllAvailable() // watermark → 11:00 (after batch)
-      // next batch fires user 1's EventTimeTimeout (10:15 < 11:00)
-      input.addData((3L, t("2026-01-01 11:01:00"), 1.0))
-      query.processAllAvailable()
-      val out = spark.sql("SELECT * FROM graft_sessionize_test").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).toString,
-          r.getTimestamp(2).toString, r.getLong(3), r.getDouble(4)))
-      assert(out.toSeq == Seq(
-        (1L, "2026-01-01 10:00:00.0", "2026-01-01 10:05:00.0", 2L, 3.0)))
-
-      // an in-batch gap closes the old session inline (no timeout needed)
-      input.addData((3L, t("2026-01-01 12:00:00"), 4.0))
-      query.processAllAvailable()
-      input.addData((9L, t("2026-01-01 13:00:00"), 0.0))
-      query.processAllAvailable()
-      input.addData((9L, t("2026-01-01 13:30:00"), 0.0))
-      query.processAllAvailable()
-      val out2 = spark.sql(
-        "SELECT * FROM graft_sessionize_test WHERE user_id = 3").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).toString, r.getLong(3)))
-        .sortBy(_._2)
-      // user 3's 11:01 session closed (via inline gap or timeout)
-      assert(out2.nonEmpty &&
-        out2.head == ((3L, "2026-01-01 11:01:00.0", 1L)))
-    } finally query.stop()
+    def t(s: String) = Timestamp.valueOf(s)
+    val events = Seq((1L, t("2026-01-01 10:00:00")), (1L, t("2026-01-01 10:00:00")),
+        (2L, t("2026-01-01 10:01:00")))
+      .toDF("event_id", "ts")
+    val ids = EventStreams.dedupeWithinWatermark(events, Seq("event_id"))
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids == Seq(1L, 2L))
   }
 
   test("interval join pairs clicks with in-window errors across micro-batches") {
