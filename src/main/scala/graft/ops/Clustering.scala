@@ -167,31 +167,6 @@ object Clustering {
     centroids
   }
 
-  /** Persist a trained centroid model as parquet (cid, c) — the
-    * artifact a standing deployment keeps between sessions, the same
-    * lesson as the persisted BM25 index stats: training once and
-    * serving forever beats re-deriving the model per batch. Written
-    * as one file (k·dim rows — model-sized, not data-sized).
-    */
-  def saveCentroids(
-      spark: org.apache.spark.sql.SparkSession,
-      centroids: Seq[(Long, Seq[Long])],
-      path: String): Unit = {
-    import spark.implicits._
-    centroids.toDF("cid", "c").repartition(1)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a [[saveCentroids]] model back into the driver-held,
-    * cid-ascending form every serving entry point takes. */
-  def loadCentroids(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[(Long, Seq[Long])] =
-    spark.read.parquet(path)
-      .select(col("cid").cast("long"), col("c").cast("array<bigint>"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1)).sortBy(_._1).toSeq
-
   /** struct(dist, cid) of the nearest centroid for a float embedding
     * column — the stateless serving expression (model rides the plan
     * as one reference object; streaming-safe: no join, no state).

@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   * bit-reproducible across engines and runs: no entropy/log
   * aggregates whose summation order could flip a threshold.
   *
-  * Everything is native column expressions over one `split` (no UDF,
-  * fully codegen'd, map-only): at 100 TB this runs at scan speed with
-  * column pruning — only (id, text, lang) are read — and composes
-  * with any downstream filter pushdown. Rules, in cascade order
+  * The four signals come from one kernel UDF per document
+  * ([[gopherStats]]) and the cascade is native column expressions over
+  * it (map-only): at 100 TB this runs at scan speed with column
+  * pruning — only (id, text, lang) are read. Rules, in cascade order
   * (first failure wins): too_short, too_long, token_len (mean token
   * length outside [minMeanLen, maxMeanLen]), alpha (alphabetic-token
   * fraction below minAlphaFrac), stopwords (no common function word —
@@ -96,9 +96,10 @@ object Curation {
       maxTokens, minMeanLen, maxMeanLen, minAlphaFrac, allowedLangs)
 
   /** The rule cascade over a [[gopherStats]] struct — shared by
-    * [[gopherReason]] and [[gopherRules]] so the kernel runs once per
-    * row (two independent udf() instances would defeat Catalyst's
-    * common-subexpression elimination).
+    * [[gopherReason]] and [[gopherRules]]. Every field reference in the
+    * cascade copies `gs`: [[gopherRules]] passes an attribute of a
+    * projected struct, so its kernel runs once per row; passed the UDF
+    * Column itself ([[gopherReason]]), each copy is a kernel call.
     */
   private def reasonFromStats(gs: Column, langCol: Column,
       minTokens: Int, maxTokens: Int, minMeanLen: Double,
@@ -134,15 +135,18 @@ object Curation {
       minAlphaFrac: Double = 0.8,
       stopwords: Seq[String] = Seq("the", "a", "and", "of", "to", "in"),
       allowedLangs: Seq[String] = Seq("en", "es", "de", "fr")): DataFrame = {
-    val gs = gopherStats(col(textCol), stopwords)
+    // Project the kernel's struct ONCE and derive every output from the
+    // projected column (see [[reasonFromStats]]): Catalyst does not
+    // collapse a projection that would duplicate a UDF.
+    val stats = docs.select(col(idCol).as("doc_id"),
+      gopherStats(col(textCol), stopwords).as("gs"), col(langCol).as("lang"))
+    val gs = col("gs")
     val n = gs.getField("_1")
-    val sumChars = gs.getField("_2")
-    val nAlpha = gs.getField("_3")
-    val meanLen = when(n > 0, sumChars.cast("double") / n)
-    val alphaFrac = when(n > 0, nAlpha.cast("double") / n)
-    val reason = reasonFromStats(gs, col(langCol), minTokens,
+    val meanLen = when(n > 0, gs.getField("_2").cast("double") / n)
+    val alphaFrac = when(n > 0, gs.getField("_3").cast("double") / n)
+    val reason = reasonFromStats(gs, col("lang"), minTokens,
       maxTokens, minMeanLen, maxMeanLen, minAlphaFrac, allowedLangs)
-    docs.select(col(idCol).as("doc_id"), n.as("n_tokens"),
+    stats.select(col("doc_id"), n.as("n_tokens"),
       meanLen.as("mean_token_len"), alphaFrac.as("alpha_frac"),
       reason.isNull.as("keep"), reason.as("drop_reason"))
   }

@@ -67,9 +67,33 @@ object GraphRank {
     * (their plans otherwise grow one join-tree per round).
     */
   private def shufflePartitions(df: DataFrame): Int =
-    try df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    catch { case _: Throwable =>
-      df.sparkSession.sparkContext.defaultParallelism }
+    df.sparkSession.sessionState.conf.numShufflePartitions
+
+  /** The de-duplicated `(src, dst)` edge list in ONE exchange (r14,
+    * guide §2.4): repartition by the join key FIRST — the dedup
+    * aggregate (and PageRank's degree aggregate and degree join) only
+    * require clustering by (a subset of) src, which hash(src, nParts)
+    * already satisfies, so Catalyst plans them exchange-free on top of
+    * the single repartition (the previous distinct → join →
+    * repartition sequence moved the edge list three times before the
+    * first iteration ran; QueryStatsProbe put the x11 build at
+    * ~143 MB of its 353 MB total shuffle).
+    */
+  private def dedupBySrc(edges: DataFrame, nParts: Int): DataFrame =
+    edges.select(col("src"), col("dst"))
+      .repartition(nParts, col("src"))
+      .dropDuplicates("src", "dst")
+
+  /** Every id appearing as src or dst. distinct FIRST (its map-side
+    * partial aggregate collapses the 2x-edge union to ~node count
+    * before the exchange — measured cheaper than one uncompressed
+    * union-sized repartition); callers then re-pin by id, which the
+    * per-iteration joins rely on (r14: the reorder was tried and cost
+    * +30 MB on the x11 graph).
+    */
+  private def nodeIds(e: DataFrame): DataFrame =
+    e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
+      .distinct()
 
   /** Fixed-iteration PageRank. `edges` must have `src` and `dst`
     * columns (any integral/string type; duplicate edges count once —
@@ -77,97 +101,90 @@ object GraphRank {
     * well-defined). The node set is every id appearing as src or dst.
     * Dangling nodes (no out-edges) redistribute their mass uniformly,
     * the standard correction. Returns (id, rank) with Σ rank = 1.
-    *
-    * `relTol` > 0 adds the production convergence stop: iteration
-    * ends early once the L1 delta Σ|r_t − r_{t−1}| falls below
-    * `relTol · delta₁` — RELATIVE to the first iteration's delta, the
-    * parameter is NAMED for its relative semantics (r10 advice: it
-    * began life as an absolute bar called `tol`; the rename makes the
-    * changed meaning a compile error for callers tuned to absolute
-    * values rather than a silent behavior shift; [[hitsWithStats]]'s
-    * `tol` remains absolute — its auth vector is normalized to Σ=1
-    * so an absolute L1 bar is scale-free there),
-    * standard iterative-solver residual criterion (`iters` then
-    * bounds the worst case). Relative, not absolute (r9 verdict #7):
-    * the contraction rate is the same `damping` for uniform and
-    * seeded teleport, but the seeded START is much farther from its
-    * stationary point, so an absolute L1 bar penalizes PPR — at
-    * 1e-6 absolute, ppr ran its 30-iteration cap while pr stopped at
-    * 23; measured on their own initial-delta scale both stop
-    * together. The delta is one extra 1-row aggregate per iteration
-    * over the two rank tables the iteration already holds; with the
-    * default `relTol = 0` the check is skipped entirely and exactly
-    * `iters` iterations run — bit-for-bit the historical
-    * fixed-iteration behavior the l65 oracle unrolls.
+    * `damping` must lie in [0, 1].
     */
   def pageRank(edges: DataFrame, iters: Int,
-      damping: Double = 0.85, relTol: Double = 0.0): DataFrame =
-    pageRankWithStats(edges, iters, damping, relTol)._1
+      damping: Double = 0.85): DataFrame =
+    powerIteration(edges, iters, damping, identity) { nodes =>
+      // n = 0 only for an empty graph, which has no row to evaluate
+      // these columns on
+      val n = nodes.count()
+      val base = (1.0 - damping) / n
+      (lit(1.0 / n), dm => lit(base) + lit(damping) * dm / n)
+    }
 
-  /** [[pageRank]] plus the number of iterations actually run (==
-    * `iters` unless `relTol` stopped it early) — probe/ops visibility.
+  /** Personalized PageRank: teleport mass concentrates on `seeds`
+    * (one `id` column) instead of the uniform prior — the standard
+    * graph-proximity signal for seed-based corpus selection ("rank
+    * documents by link proximity to a trusted seed set"). Same
+    * iteration loop and cost as [[pageRank]]; the teleport vector is
+    * 1/|S| on seeds and 0 elsewhere, the initial ranks equal it, and
+    * dangling mass redistributes over the seed distribution (the
+    * standard PPR correction). Seeds outside the graph's node set are
+    * ignored; an empty effective seed set is an error.
     */
-  def pageRankWithStats(edges: DataFrame, iters: Int,
-      damping: Double = 0.85, relTol: Double = 0.0): (DataFrame, Int) = {
+  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
+      iters: Int, damping: Double = 0.85): DataFrame = {
+    val seedSet = seeds.select(col("id")).distinct()
+      .withColumn("is_seed", lit(true))
+    val withSeeds = (ids: DataFrame) => ids
+      .join(seedSet, Seq("id"), "left")
+      .select(col("id"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
+    powerIteration(edges, iters, damping, withSeeds) { nodes =>
+      val nSeeds = nodes.filter(col("is_seed")).count()
+      require(nSeeds > 0, "no seed ids present in the graph")
+      val tele = when(col("is_seed"), lit(1.0 / nSeeds))
+        .otherwise(lit(0.0d))
+      (tele, dm => (lit(1.0 - damping) + lit(damping) * dm) * tele)
+    }
+  }
+
+  /** The one power-iteration loop behind [[pageRank]] and
+    * [[personalizedPageRank]]. `nodeFrame` turns the distinct node ids
+    * into the node relation (PPR adds `is_seed`); `teleport` reads the
+    * persisted node relation and returns the initial rank column and
+    * the teleport term as a function of the dangling mass `dm`. Each
+    * iteration sets rank = teleport(dm) + damping · inflow.
+    */
+  private def powerIteration(edges: DataFrame, iters: Int,
+      damping: Double, nodeFrame: DataFrame => DataFrame)(
+      teleport: DataFrame => (Column, Column => Column)): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
+    require(damping >= 0.0 && damping <= 1.0,
+      s"damping must be in [0, 1], got $damping")
     val nParts = shufflePartitions(edges)
-    // ONE edge exchange builds the whole iteration-invariant relation
-    // (r14, guide §2.4): repartition by the join key FIRST — the
-    // dedup aggregate, the degree aggregate and the degree join all
-    // require only clustering by (a subset of) src, which
-    // hash(src, nParts) already satisfies, so Catalyst plans them
-    // exchange-free on top of the single repartition (the previous
-    // distinct → join → repartition sequence moved the edge list
-    // three times before the first iteration ran; QueryStatsProbe
-    // put the x11 build at ~143 MB of its 353 MB total shuffle).
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(nParts, col("src"))
-      .dropDuplicates("src", "dst")
+    val e = dedupBySrc(edges, nParts)
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
     // Pre-join the degree once: every iteration reuses this relation.
     // Only edgesW is materialized — `e` exists solely to feed it (one
     // pass), and the node set derives from edgesW, so the edge list
     // hits executor storage exactly once. Both iteration-invariant
-    // relations are checkpointed PRE-PARTITIONED on their join keys
+    // relations are persisted PRE-PARTITIONED on their join keys
     // at the pinned count (see [[shufflePartitions]]): edgesW by src
     // and nodes by id co-partition the contributions join (ranks
     // inherits nodes' hash(id) through every update), so the only
     // per-iteration exchange left is the groupBy(dst) aggregate —
     // contribution-sized, the scaladoc's one-shuffle claim made true.
     val edgesW = e.join(outdeg, Seq("src")).persist()
-    val nodes = edgesW.select(col("src").as("id"))
-      .union(edgesW.select(col("dst").as("id")))
-      // distinct FIRST (its map-side partial aggregate collapses the
-      // 2x-edge union to ~node count before the exchange — measured
-      // cheaper than one uncompressed union-sized repartition), then
-      // the id-sized re-pin the per-iteration joins rely on (r14:
-      // the reorder was tried and cost +30 MB on the x11 graph)
-      .distinct().repartition(nParts, col("id")).persist()
-    val n = nodes.count()
-    if (n == 0) {
-      edgesW.unpersist()
-      return (nodes.withColumn("rank", lit(0.0d)), 0)
-    }
-    val base = (1.0 - damping) / n
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
+    val nodes = nodeFrame(nodeIds(edgesW))
+      .repartition(nParts, col("id")).persist()
+    val (prior, teleTerm) = teleport(nodes)
+    var ranks = nodes.select(col("id"), prior.as("rank"))
       .truncateLineage()
     // The dangling-node set never changes across iterations: derive it
     // once (one anti-join against the edge srcs) and checkpoint the
     // RESULT, so each iteration's mass aggregate is a semi-join of the
     // n-row rank table against this (usually tiny) relation instead of
     // an O(edges) probe.
-    val danglingIds = nodes
+    val danglingIds = nodes.select(col("id"))
       .join(edgesW.select(col("src").as("id")), Seq("id"), "left_anti")
       .truncateLineage()
     val hasDangling = !danglingIds.isEmpty
-    var itersRun = 0
-    var converged = false
-    var firstDelta = -1.0
-    while (itersRun < iters && !converged) {
-      // Mass parked on dangling nodes, redistributed uniformly — a
-      // 1-row frame crossJoin-broadcast onto the update (the repo-wide
-      // 1-row-stats-frame pattern), so the whole iteration is a single
-      // job; skipped entirely when the graph has none.
+    for (_ <- 0 until iters) {
+      // Mass parked on dangling nodes, redistributed by the teleport
+      // term — a 1-row frame crossJoin-broadcast onto the update (the
+      // repo-wide 1-row-stats-frame pattern), so the whole iteration is
+      // a single job; skipped entirely when the graph has none.
       val withDm: DataFrame => DataFrame =
         if (!hasDangling) _.withColumn("dm", lit(0.0d))
         else {
@@ -182,119 +199,16 @@ object GraphRank {
           (col("rank") / col("odeg")).as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("inflow"))
       val next = withDm(nodes.join(inflow, Seq("id"), "left"))
-        .select(col("id"),
-          (lit(base) + lit(damping) * col("dm") / n +
-            lit(damping) * coalesce(col("inflow"), lit(0.0d))).as("rank"))
+        .select(col("id"), (teleTerm(col("dm")) +
+          lit(damping) * coalesce(col("inflow"), lit(0.0d))).as("rank"))
         .truncateLineage()
-      itersRun += 1
-      if (relTol > 0.0 && itersRun < iters) {
-        val delta = next.as("n").join(ranks.as("p"), "id")
-          .agg(sum(abs(col("n.rank") - col("p.rank"))))
-          .head().getDouble(0)
-        // relative-residual stop: contraction measured against THIS
-        // run's first update, so seeded teleport (PPR: farther start,
-        // same rate) is held to the same bar as the uniform prior.
-        // <= so an already-stationary start (delta₁ = 0) stops too.
-        if (firstDelta < 0) firstDelta = delta
-        converged = delta <= relTol * firstDelta
-      }
       ranks.unpersist()
       ranks = next
     }
     danglingIds.unpersist()
     nodes.unpersist()
     edgesW.unpersist()
-    (ranks, itersRun)
-  }
-
-  /** Personalized PageRank: teleport mass concentrates on `seeds`
-    * (one `id` column) instead of the uniform prior — the standard
-    * graph-proximity signal for seed-based corpus selection ("rank
-    * documents by link proximity to a trusted seed set"). Same
-    * iteration shape and cost as [[pageRank]]; the teleport vector is
-    * 1/|S| on seeds and 0 elsewhere, the initial ranks equal it, and
-    * dangling mass redistributes over the seed distribution (the
-    * standard PPR correction). Seeds outside the graph's node set are
-    * ignored; an empty effective seed set is an error. `relTol` adds
-    * the same optional relative L1 convergence stop as [[pageRank]].
-    */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-      iters: Int, damping: Double = 0.85, relTol: Double = 0.0): DataFrame =
-    personalizedPageRankWithStats(edges, seeds, iters, damping, relTol)._1
-
-  /** [[personalizedPageRank]] plus the iteration count actually run. */
-  def personalizedPageRankWithStats(edges: DataFrame, seeds: DataFrame,
-      iters: Int, damping: Double = 0.85, relTol: Double = 0.0)
-      : (DataFrame, Int) = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    val nParts = shufflePartitions(edges)
-    // same single-exchange preamble + pinned pre-partitioning as
-    // [[pageRankWithStats]]: edgesW by src + nodes by id → the
-    // contributions join is exchange-free
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(nParts, col("src"))
-      .dropDuplicates("src", "dst")
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
-    val edgesW = e.join(outdeg, Seq("src")).persist()
-    val nodes0 = edgesW.select(col("src").as("id"))
-      .union(edgesW.select(col("dst").as("id")))
-      .distinct()
-    val seedSet = seeds.select(col("id")).distinct()
-    val nodes = nodes0
-      .join(seedSet.withColumn("is_seed", lit(true)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
-      .repartition(nParts, col("id")).persist()
-    val nSeeds = nodes.filter(col("is_seed")).count()
-    require(nSeeds > 0, "no seed ids present in the graph")
-    def tele: Column = when(col("is_seed"), lit(1.0 / nSeeds))
-      .otherwise(lit(0.0d))
-    var ranks = nodes.select(col("id"), col("is_seed"), tele.as("rank"))
-      .truncateLineage()
-    val danglingIds = nodes.select(col("id"))
-      .join(edgesW.select(col("src").as("id")), Seq("id"), "left_anti")
-      .truncateLineage()
-    val hasDangling = !danglingIds.isEmpty
-    var itersRun = 0
-    var converged = false
-    var firstDelta = -1.0
-    while (itersRun < iters && !converged) {
-      val withDm: DataFrame => DataFrame =
-        if (!hasDangling) _.withColumn("dm", lit(0.0d))
-        else {
-          val dmRow = ranks.select(col("id"), col("rank"))
-            .join(danglingIds, Seq("id"), "left_semi")
-            .agg(coalesce(sum(col("rank")), lit(0.0d)).as("dm"))
-          df => df.crossJoin(broadcast(dmRow))
-        }
-      val inflow = edgesW
-        .join(ranks.select(col("id"), col("rank")),
-          edgesW("src") === col("id"))
-        .select(col("dst").as("id"), (col("rank") / col("odeg")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("inflow"))
-      val next = withDm(nodes.join(inflow, Seq("id"), "left"))
-        .select(col("id"), col("is_seed"),
-          ((lit(1.0 - damping) + lit(damping) * col("dm")) * tele +
-            lit(damping) * coalesce(col("inflow"), lit(0.0d))).as("rank"))
-        .truncateLineage()
-      itersRun += 1
-      if (relTol > 0.0 && itersRun < iters) {
-        val delta = next.as("n").join(ranks.as("p"), "id")
-          .agg(sum(abs(col("n.rank") - col("p.rank"))))
-          .head().getDouble(0)
-        // relative-residual stop: contraction measured against THIS
-        // run's first update, so seeded teleport (PPR: farther start,
-        // same rate) is held to the same bar as the uniform prior.
-        // <= so an already-stationary start (delta₁ = 0) stops too.
-        if (firstDelta < 0) firstDelta = delta
-        converged = delta <= relTol * firstDelta
-      }
-      ranks.unpersist()
-      ranks = next
-    }
-    danglingIds.unpersist()
-    nodes.unpersist()
-    edgesW.unpersist()
-    (ranks.select(col("id"), col("rank")), itersRun)
+    ranks
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) — the link-analysis
@@ -314,44 +228,22 @@ object GraphRank {
     * lineage localCheckpoint-truncated per iteration, superseded
     * score tables unpersisted. Returns (id, hub, auth).
     */
-  def hits(edges: DataFrame, iters: Int): DataFrame =
-    hitsWithStats(edges, iters)._1
-
-  /** [[hits]] plus iterations actually run. `tol` > 0 adds the same
-    * production convergence stop as [[pageRank]]: stop once the L1
-    * delta of the AUTHORITY vector falls below tol (authorities are
-    * the ingest-side signal; hubs converge in lockstep since each is
-    * one half-sweep of the other). One extra 1-row aggregate per
-    * checked iteration; tol = 0 skips the check entirely — bit-for-bit
-    * the fixed-iteration behavior the l73 oracle unrolls.
-    */
-  def hitsWithStats(edges: DataFrame, iters: Int,
-      tol: Double = 0.0): (DataFrame, Int) = {
+  def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     val nParts = shufflePartitions(edges)
-    // single-exchange dedup+partition (the pageRank preamble shape):
-    // hash(src) already clusters equal (src, dst) rows, so the dedup
-    // aggregate runs exchange-free on top of the one repartition
-    val eBySrc = edges.select(col("src"), col("dst"))
-      .repartition(nParts, col("src"))
-      .dropDuplicates("src", "dst").persist()
-    val nodes = eBySrc.select(col("src").as("id"))
-      .union(eBySrc.select(col("dst").as("id")))
-      // distinct first: map-side combine beats saving the id-sized
-      // re-pin exchange (see pageRank's nodes note)
-      .distinct().repartition(nParts, col("id")).persist()
+    // the pageRank edge preamble without the degree join
+    val eBySrc = dedupBySrc(edges, nParts).persist()
+    val nodes = nodeIds(eBySrc).repartition(nParts, col("id")).persist()
     val n = nodes.count()
     if (n == 0) {
       eBySrc.unpersist()
-      return (nodes.select(col("id"), lit(0.0d).as("hub"),
-        lit(0.0d).as("auth")), 0)
+      return nodes.select(col("id"), lit(0.0d).as("hub"),
+        lit(0.0d).as("auth"))
     }
     var scores = nodes.select(col("id"),
         lit(1.0 / n).as("hub"), lit(1.0 / n).as("auth"))
       .truncateLineage()
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
+    for (_ <- 0 until iters) {
       // a_raw(v) = Σ_{u→v} hub(u) over the CURRENT hubs
       val aRaw = nodes.join(
           eBySrc.join(scores.select(col("id"), col("hub")),
@@ -372,18 +264,11 @@ object GraphRank {
       val hub = hRaw.crossJoin(broadcast(hTot))
         .select(col("id"), (col("rh") / col("th")).as("hub"))
       val next = hub.join(auth, "id").truncateLineage()
-      it += 1
-      if (tol > 0.0 && it < iters && !converged) {
-        val delta = next.as("n").join(scores.as("p"), "id")
-          .agg(sum(abs(col("n.auth") - col("p.auth"))))
-          .head().getDouble(0)
-        converged = delta < tol
-      }
       scores.unpersist()
       scores = next
     }
     nodes.unpersist()
     eBySrc.unpersist()
-    (scores.select(col("id"), col("hub"), col("auth")), it)
+    scores.select(col("id"), col("hub"), col("auth"))
   }
 }

@@ -109,7 +109,7 @@ object Similarity {
     * buckets are bit-identical to that expression form (LlmOpsSpec
     * keeps it as the oracle); null/short embeddings yield bucket 0.
     */
-  def lshBucketKernel(nBits: Int, dim: Int, seed: Long)
+  private[ops] def lshBucketKernel(nBits: Int, dim: Int, seed: Long)
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
     val planes = Array.tabulate(nBits, dim)((b, d) => lshPlaneComponent(b, d, seed))
     udf((emb: Seq[Double]) => {

@@ -78,24 +78,6 @@ class ClusteringSpec extends AnyFunSuite {
     assert(mismatch.head.isNullAt(0))
   }
 
-  test("centroid model round-trips through parquet and serves identically") {
-    val emb = embDf(
-      0L -> Seq(0.0f, 0.0f), 1L -> Seq(1.0f, 1.0f),
-      2L -> Seq(0.2f, 0.1f), 3L -> Seq(0.8f, 0.9f))
-    val model = Clustering.kmeansCentroids(emb, "vec_id", "embedding",
-      k = 2, iters = 2)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_cents").toString + "/model.parquet"
-    Clustering.saveCentroids(spark, model, path)
-    val loaded = Clustering.loadCentroids(spark, path)
-    assert(loaded == model)
-    val a = emb.select(Clustering.nearestCentroid(col("embedding"), model))
-      .collect().map(_.toString).toSeq
-    val b = emb.select(Clustering.nearestCentroid(col("embedding"), loaded))
-      .collect().map(_.toString).toSeq
-    assert(a == b)
-  }
-
   test("plan pins: projection and assignment are map-only (no Exchange, no Join)") {
     val emb = embDf(0L -> Seq(1.0f, 2.0f), 1L -> Seq(3.0f, 4.0f))
     // the serving projection: one ProjectExec over the scan

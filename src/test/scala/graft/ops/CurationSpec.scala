@@ -110,6 +110,23 @@ class CurationSpec extends AnyFunSuite {
     }
   }
 
+  test("gopherRules runs the kernel once per document: one ScalaUDF in its plan") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import spark.implicits._
+    // a parquet scan, like l41's input: over a LocalRelation the
+    // optimizer evaluates the projection before any plan shape shows
+    val dir = java.nio.file.Files.createTempDirectory("graft_gopher_plan")
+      .resolve("docs").toString
+    Seq((1L, "the quick brown fox", "en")).toDF("doc_id", "text", "lang")
+      .write.parquet(dir)
+    val plan = Curation.gopherRules(spark.read.parquet(dir),
+        "doc_id", "text", "lang")
+      .queryExecution.optimizedPlan
+    val calls = plan.flatMap(_.expressions.flatMap(_.collect {
+      case u: ScalaUDF => u }))
+    assert(calls.size == 1, s"kernel calls in plan:\n$plan")
+  }
+
   test("curate pipelines rules -> line dedup -> keep-one") {
     import spark.implicits._
     val body = "the quick brown fox jumps over the lazy dog" // 9 tokens, passes

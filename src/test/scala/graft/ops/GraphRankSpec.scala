@@ -132,45 +132,6 @@ class GraphRankSpec extends AnyFunSuite {
     assertClose(got, refPpr(edges, Set(1L), 4))
   }
 
-  test("tol=0 runs exactly iters; converged-early equals running to the bound") {
-    import spark.implicits._
-    // fast-mixing: complete-ish digraph on 6 nodes — L1 delta collapses
-    // in a handful of iterations, so tol stops well before the bound
-    val edges = (1L to 6L).flatMap(i => (1L to 6L).collect {
-      case j if j != i && (i + j) % 3 != 0 => i -> j
-    })
-    val df = edges.toDF("src", "dst")
-    val (fixed, nFixed) = GraphRank.pageRankWithStats(df, iters = 50)
-    assert(nFixed == 50)
-    // tol is RELATIVE to the first iteration's delta since r10 (the
-    // solver-standard residual criterion, so PPR's farther seeded
-    // start isn't penalized); 1e-9 relative on this graph stops well
-    // inside the bound while staying far above the double-precision
-    // delta plateau (1e-12 relative sat below it and never tripped)
-    val (conv, nConv) =
-      GraphRank.pageRankWithStats(df, iters = 50, relTol = 1e-9)
-    assert(nConv < 50, s"expected early stop, ran $nConv")
-    val f = fixed.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val c = conv.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(f.keySet == c.keySet)
-    // converged-early result is within tol-scale of the fixed run (the
-    // definition of the stop), far tighter than any consumer cares
-    for ((k, v) <- f) assert(math.abs(v - c(k)) < 1e-10,
-      s"node $k: fixed $v vs converged ${c(k)}")
-  }
-
-  test("PPR tol convergence stops early and matches the reference at its depth") {
-    import spark.implicits._
-    val edges = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 1L -> 3L, 2L -> 1L, 3L -> 2L)
-    val (conv, nConv) = GraphRank.personalizedPageRankWithStats(
-      edges.toDF("src", "dst"), Seq(1L).toDF("id"), iters = 60, relTol = 1e-13)
-    assert(nConv < 60, s"expected early stop, ran $nConv")
-    val got = conv.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    // value-equal to the driver reference unrolled the SAME number of
-    // iterations — the stop changes depth, never the recurrence
-    assertClose(got, refPpr(edges, Set(1L), nConv))
-  }
-
   test("dangling-heavy graph: fixed iters still match the reference") {
     // 1 hub feeding 30 dangling sinks plus a 3-cycle — most of the node
     // set is dangling, exercising the precomputed-dangling semi-join
@@ -255,19 +216,23 @@ class GraphRankSpec extends AnyFunSuite {
       2L -> ((1.0 / 3, 1.0 / 3)), 3L -> ((1.0 / 3, 1.0 / 3))))
   }
 
-  test("HITS: tol convergence stops early with output equal to its depth") {
+  test("damping outside [0, 1] is rejected on the driver before any job runs") {
+    import org.apache.spark.sql.functions.{lit, raise_error}
     import spark.implicits._
-    // a fast-mixing star converges in a couple of sweeps
-    val edges = Seq(1L -> 10L, 2L -> 10L, 3L -> 10L, 1L -> 11L)
-    val (conv, ran) = GraphRank.hitsWithStats(
-      edges.toDF("src", "dst"), iters = 30, tol = 1e-9)
-    assert(ran < 30, s"expected early stop, ran $ran")
-    val fixedAtDepth = GraphRank.hits(edges.toDF("src", "dst"), ran)
-      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2))))
-      .toMap
-    val got = conv.collect()
-      .map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
-    assert(got == fixedAtDepth)
+    // any job over these edges fails, so only a driver-side check can
+    // raise IllegalArgumentException
+    val edges = spark.range(2).select(
+      raise_error(lit("edges were read")).cast("long").as("src"),
+      $"id".as("dst"))
+    val seeds = Seq(1L).toDF("id")
+    for (d <- Seq(-0.1, 1.5, Double.NaN)) {
+      val pr = intercept[IllegalArgumentException](
+        GraphRank.pageRank(edges, iters = 3, damping = d))
+      assert(pr.getMessage.contains("damping"))
+      val ppr = intercept[IllegalArgumentException](
+        GraphRank.personalizedPageRank(edges, seeds, iters = 3, damping = d))
+      assert(ppr.getMessage.contains("damping"))
+    }
   }
 
   test("pageRank under reliable-checkpoint mode matches the local path bit-for-bit") {
