@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   * aggregates whose summation order could flip a threshold.
   *
   * The four signals come from one kernel UDF per document
-  * ([[gopherStats]]) and the cascade is native column expressions over
-  * it (map-only): at 100 TB this runs at scan speed with column
-  * pruning — only (id, text, lang) are read. Rules, in cascade order
+  * ([[gopherStats]], projected once per row through [[KernelOnce]])
+  * and the cascade is native column expressions over it (map-only):
+  * at 100 TB this runs at scan speed with column pruning — only (id,
+  * text, lang) are read. Rules, in cascade order
   * (first failure wins): too_short, too_long, token_len (mean token
   * length outside [minMeanLen, maxMeanLen]), alpha (alphabetic-token
   * fraction below minAlphaFrac), stopwords (no common function word —
@@ -80,44 +81,19 @@ object Curation {
     statsUdf(textCol)
   }
 
-  /** The drop-reason column alone (NULL = keep) — the gate verdict as
-    * a pure column expression, reusable where the per-doc signal
-    * columns aren't needed (e.g. the streaming pass-rate monitor,
-    * which must stay a stateless projection ahead of its windowed
-    * aggregate).
+  /** Appends `drop_reason` to `docs`: the first failing rule, or NULL
+    * to keep the document. Every input column passes through, so the
+    * verdict composes with a downstream filter, join or windowed
+    * aggregate, in batch and in streaming (the pass-rate monitor).
     */
-  def gopherReason(textCol: Column, langCol: Column,
+  def gopherReason(docs: DataFrame, textCol: String, langCol: String,
       minTokens: Int = 50, maxTokens: Int = 100000,
       minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
       minAlphaFrac: Double = 0.8,
       stopwords: Seq[String] = Seq("the", "a", "and", "of", "to", "in"),
-      allowedLangs: Seq[String] = Seq("en", "es", "de", "fr")): Column =
-    reasonFromStats(gopherStats(textCol, stopwords), langCol, minTokens,
-      maxTokens, minMeanLen, maxMeanLen, minAlphaFrac, allowedLangs)
-
-  /** The rule cascade over a [[gopherStats]] struct — shared by
-    * [[gopherReason]] and [[gopherRules]]. Every field reference in the
-    * cascade copies `gs`: [[gopherRules]] passes an attribute of a
-    * projected struct, so its kernel runs once per row; passed the UDF
-    * Column itself ([[gopherReason]]), each copy is a kernel call.
-    */
-  private def reasonFromStats(gs: Column, langCol: Column,
-      minTokens: Int, maxTokens: Int, minMeanLen: Double,
-      maxMeanLen: Double, minAlphaFrac: Double,
-      allowedLangs: Seq[String]): Column = {
-    val n = gs.getField("_1")
-    val sumChars = gs.getField("_2")
-    val nAlpha = gs.getField("_3")
-    val hasStop = gs.getField("_4")
-    val meanLen = when(n > 0, sumChars.cast("double") / n)
-    val alphaFrac = when(n > 0, nAlpha.cast("double") / n)
-    when(n < minTokens, "too_short")
-      .when(n > maxTokens, "too_long")
-      .when(meanLen < minMeanLen || meanLen > maxMeanLen, "token_len")
-      .when(alphaFrac < minAlphaFrac, "alpha")
-      .when(!hasStop, "stopwords")
-      .when(!langCol.isin(allowedLangs.map(lit(_)): _*), "lang")
-  }
+      allowedLangs: Seq[String] = Seq("en", "es", "de", "fr")): DataFrame =
+    gate(docs, textCol, langCol, minTokens, maxTokens, minMeanLen,
+      maxMeanLen, minAlphaFrac, stopwords, allowedLangs).drop(StatsCol)
 
   /** Per-document rule evaluation. Output: (doc_id, n_tokens,
     * mean_token_len, alpha_frac, keep, drop_reason) — ratio columns
@@ -135,20 +111,41 @@ object Curation {
       minAlphaFrac: Double = 0.8,
       stopwords: Seq[String] = Seq("the", "a", "and", "of", "to", "in"),
       allowedLangs: Seq[String] = Seq("en", "es", "de", "fr")): DataFrame = {
-    // Project the kernel's struct ONCE and derive every output from the
-    // projected column (see [[reasonFromStats]]): Catalyst does not
-    // collapse a projection that would duplicate a UDF.
-    val stats = docs.select(col(idCol).as("doc_id"),
-      gopherStats(col(textCol), stopwords).as("gs"), col(langCol).as("lang"))
-    val gs = col("gs")
+    val (n, meanLen, alphaFrac, _) = signals(col(StatsCol))
+    gate(docs, textCol, langCol, minTokens, maxTokens, minMeanLen,
+        maxMeanLen, minAlphaFrac, stopwords, allowedLangs)
+      .select(col(idCol).as("doc_id"), n.as("n_tokens"),
+        meanLen.as("mean_token_len"), alphaFrac.as("alpha_frac"),
+        col("drop_reason").isNull.as("keep"), col("drop_reason"))
+  }
+
+  private val StatsCol = "__gopher_stats"
+
+  /** `docs` plus the [[gopherStats]] struct, projected once per row
+    * ([[KernelOnce]]), and the rule cascade over it as `drop_reason`.
+    */
+  private def gate(docs: DataFrame, textCol: String, langCol: String,
+      minTokens: Int, maxTokens: Int, minMeanLen: Double,
+      maxMeanLen: Double, minAlphaFrac: Double, stopwords: Seq[String],
+      allowedLangs: Seq[String]): DataFrame = {
+    val (n, meanLen, alphaFrac, hasStop) = signals(col(StatsCol))
+    docs.select(col("*"),
+        KernelOnce(gopherStats(col(textCol), stopwords)).as(StatsCol))
+      .withColumn("drop_reason", when(n < minTokens, "too_short")
+        .when(n > maxTokens, "too_long")
+        .when(meanLen < minMeanLen || meanLen > maxMeanLen, "token_len")
+        .when(alphaFrac < minAlphaFrac, "alpha")
+        .when(!hasStop, "stopwords")
+        .when(!col(langCol).isin(allowedLangs.map(lit(_)): _*), "lang"))
+  }
+
+  /** (n_tokens, mean token length, alphabetic fraction, has_stop) from
+    * a [[gopherStats]] struct; the ratios are NULL without tokens.
+    */
+  private def signals(gs: Column): (Column, Column, Column, Column) = {
     val n = gs.getField("_1")
-    val meanLen = when(n > 0, gs.getField("_2").cast("double") / n)
-    val alphaFrac = when(n > 0, gs.getField("_3").cast("double") / n)
-    val reason = reasonFromStats(gs, col("lang"), minTokens,
-      maxTokens, minMeanLen, maxMeanLen, minAlphaFrac, allowedLangs)
-    stats.select(col("doc_id"), n.as("n_tokens"),
-      meanLen.as("mean_token_len"), alphaFrac.as("alpha_frac"),
-      reason.isNull.as("keep"), reason.as("drop_reason"))
+    (n, when(n > 0, gs.getField("_2").cast("double") / n),
+      when(n > 0, gs.getField("_3").cast("double") / n), gs.getField("_4"))
   }
 
   /** End-to-end curation pipeline — the composition a real corpus

@@ -135,10 +135,12 @@ object Decontaminate {
     * paid the explode+distinct twice, once for the gate and once
     * inside the join build), sorted, broadcast, and each document
     * windows/matches/island-merges/excises locally in
-    * [[TextKernel.exciseByFpSet]] — no posexplode, no membership
-    * join, no span aggregate, no text-side join, and `corpus` is
-    * consumed ONCE, so upstream materialization (the localCheckpoint
-    * the r14 x15 pipeline paid before this function) is unnecessary.
+    * [[TextKernel.exciseByFpSet]], one call per row ([[KernelOnce]]: a
+    * filter on `doc_id` or a carried column still reaches the scan) —
+    * no posexplode, no membership join, no span aggregate, no
+    * text-side join, and `corpus` is consumed ONCE, so upstream
+    * materialization (the localCheckpoint the r14 x15 pipeline paid
+    * before this function) is unnecessary.
     * Requires ids unique per row (every caller's contract; the join
     * form would union spans across duplicate ids, the fused form is
     * per-row). Above the gate the r14 shuffled-membership-join plan
@@ -174,14 +176,11 @@ object Decontaminate {
       fpRows.unpersist(false)
       java.util.Arrays.sort(fps)
       val bc = corpus.sparkSession.sparkContext.broadcast(fps)
-      // nondeterministic: the struct feeds three output columns, and a
-      // collapsed projection would otherwise inline (and re-run) the
-      // kernel once per extracted field (guide §4.4)
       val fusedUdf = udf((text: String) =>
         TextKernel.exciseByFpSet(text, n, bc.value))
-        .asNondeterministic()
       corpus
-        .select((col(idCol).as("doc_id") +: fusedUdf(col(textCol)).as("__x")
+        .select((col(idCol).as("doc_id")
+          +: KernelOnce(fusedUdf(col(textCol))).as("__x")
           +: carryCols.map(col)): _*)
         .select((Seq(col("doc_id"),
           col("__x._1").as("n_spans"),
@@ -251,6 +250,7 @@ object Decontaminate {
     val bloom = benchFps.stat.bloomFilter("fp", expected, fpp)
     val bloomBc = corpus.sparkSession.sparkContext.broadcast(bloom)
     val mightContain = udf((fp: Long) => bloomBc.value.mightContainLong(fp))
+      .withName("bloom_might_contain")
     fingerprints(corpus, idCol, textCol, n)
       .filter(mightContain(col("fp")))
       .join(benchFps, "fp")

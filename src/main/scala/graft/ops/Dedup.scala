@@ -493,24 +493,18 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 16): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    // One kernel call per document either way the optimizer goes: with
-    // both fields read, CollapseProject leaves the call in its own
-    // projection; a consumer that prunes one field collapses it into
-    // that field's single read.
     indexDocs
       .filter(length(col(textCol)) >= shingleN)
-      .select(col(idCol).as("id"),
-        bandsAndSetUdf(col(textCol), lit(shingleN), lit(numHashes), lit(bands))
-          .as("k"))
+      .select(col(idCol).as("id"), KernelOnce(bandsAndSetUdf(col(textCol),
+        lit(shingleN), lit(numHashes), lit(bands))).as("k"))
       .select(col("id"), col("k._2").as("shs"), col("k._1").as("band_hashes"))
   }
 
   /** Compact index rows → the exploded (band, band_hash, then every
     * other column) stream the bucket verify consumes. The outer
     * explode emits the same rows (`band_hashes` is never empty) and,
-    * unlike the inner one, lets the optimizer infer no
-    * `size(band_hashes) > 0` filter — a filter that pushdown would
-    * rewrite into a second call of the kernel below the explode.
+    * unlike the inner one, makes the optimizer infer no
+    * `size(band_hashes) > 0` filter, which no row needs.
     */
   private[ops] def explodeBanded(compact: DataFrame): DataFrame = {
     val rest = compact.columns.filter(_ != "band_hashes").map(col)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 import Lineage.TruncateOps
 
 /** Link-graph ranking for crawl curation — PageRank over an edge
@@ -168,7 +169,11 @@ object GraphRank {
     val edgesW = e.join(outdeg, Seq("src")).persist()
     val nodes = nodeFrame(nodeIds(edgesW))
       .repartition(nParts, col("id")).persist()
-    val (prior, teleTerm) = teleport(nodes)
+    val (prior, teleTerm) =
+      try teleport(nodes)
+      catch {
+        case NonFatal(e) => nodes.unpersist(); edgesW.unpersist(); throw e
+      }
     var ranks = nodes.select(col("id"), prior.as("rank"))
       .truncateLineage()
     // The dangling-node set never changes across iterations: derive it
@@ -236,6 +241,7 @@ object GraphRank {
     val nodes = nodeIds(eBySrc).repartition(nParts, col("id")).persist()
     val n = nodes.count()
     if (n == 0) {
+      nodes.unpersist()
       eBySrc.unpersist()
       return nodes.select(col("id"), lit(0.0d).as("hub"),
         lit(0.0d).as("auth"))

@@ -127,8 +127,10 @@ object LmScore {
   /** Broadcast-model kernel scoring — the shape production perplexity
     * filters actually run (CCNet ships its KenLM model file to every
     * worker): the count tables are collected into hash maps,
-    * broadcast, and each document is scored in ONE kernel pass —
-    * no transition explode, no joins, no final aggregate; wall-time
+    * broadcast, and each document is scored in ONE kernel pass
+    * (projected once per row through [[KernelOnce]], so a filter after
+    * it still reaches the scan) — no transition explode, no joins, no
+    * final aggregate; wall-time
     * is a single map stage over the corpus (probe at 500k docs:
     * 9.6 s join path → 3.4 s kernel). Only valid when the model fits
     * in executor memory — use [[scoreAuto]] for the size gate.
@@ -224,12 +226,7 @@ object LmScore {
         (t.length - 1L, sum / (t.length - 1))
       }
     })
-      // nondeterministic: the struct feeds a null filter plus two field
-      // extractions — the optimizer otherwise pushes the filter below
-      // the projection and re-evaluates the kernel per consumer
-      // (guide §4.4)
-      .asNondeterministic()
-    docs.select(col(idCol).as("doc_id"), score(col(textCol)).as("r"))
+    docs.select(col(idCol).as("doc_id"), KernelOnce(score(col(textCol))).as("r"))
       .filter(col("r").isNotNull)
       .select(col("doc_id"), col("r._1").as("n_trans"),
         col("r._2").as("avg_logprob"))

@@ -241,7 +241,7 @@ object Multimodal {
     */
   def imageDHash(media: DataFrame): DataFrame = {
     val dh = udf((p: Array[Byte]) => graft.kernel.ImageCodec.dHash56(p))
-    media.select(col("media_id"), dh(col("payload")).as("dhash"))
+    media.select(col("media_id"), KernelOnce(dh(col("payload"))).as("dhash"))
       .filter(col("dhash").isNotNull)
   }
 
@@ -264,7 +264,7 @@ object Multimodal {
     val sigUdf = udf((p: Array[Byte]) =>
       graft.kernel.AudioCodec.envelopeSig(p, buckets).orNull)
     val w = Window.partitionBy(col("sig"))
-    media.select(col("media_id"), sigUdf(col("payload")).as("sig"))
+    media.select(col("media_id"), KernelOnce(sigUdf(col("payload"))).as("sig"))
       .filter(col("sig").isNotNull)
       .withColumn("group_n", count(lit(1)).over(w))
       .withColumn("is_dup", col("media_id") =!= min(col("media_id")).over(w))

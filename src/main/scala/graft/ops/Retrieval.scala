@@ -269,9 +269,8 @@ object Retrieval {
     * bounded, like the Lloyd's centroids). Candidates are a
     * RETRIEVER'S top-m output (compose with bm25TopK / ivfTopK), so
     * the pool is small by construction — and ENFORCED: pools over
-    * `spark.graft.mmr.pool.max` (default 100,000) are rejected with
-    * an error naming the contract rather than silently running k
-    * corpus-wide jobs. MMR's sequential greed is inherent to the
+    * 100,000 rows are rejected with an error naming the contract
+    * rather than silently running k corpus-wide jobs. MMR's sequential greed is inherent to the
     * algorithm, and each pass is corpus-free. Zero-norm / NaN
     * candidates are unscorable and excluded up front (NaN sorts first
     * under desc — one degenerate vector would otherwise win every
@@ -316,16 +315,14 @@ object Retrieval {
     // a caller passing a corpus-sized frame would otherwise get k
     // corpus-wide jobs with a k-literal isin filter instead of an
     // error naming the misuse.
-    val maxPool = spark.conf.getOption("spark.graft.mmr.pool.max")
-      .map(_.toInt).getOrElse(100000)
+    val maxPool = 100000
     try {
       // inside the try so a rejected pool still unpersists `cand`
       val poolProbe = cand.limit(maxPool + 1).count()
       require(poolProbe <= maxPool,
         s"mmrDiversify: candidate pool exceeds $maxPool rows — MMR is a " +
           "re-ranker over a retriever's top-m output, not a corpus scan; " +
-          "pre-select candidates (bm25TopK / ivfTopK) or raise " +
-          "spark.graft.mmr.pool.max if the pool really is model-sized")
+          "pre-select candidates (bm25TopK / ivfTopK)")
       var selected = Vector.empty[(Long, Double, Seq[Float], Double)]
       var step = 1
       while (step <= k) {

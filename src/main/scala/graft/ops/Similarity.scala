@@ -278,9 +278,10 @@ object Similarity {
       // Generate and are re-evaluated once per GENERATED row — dim×
       // the assignment work (measured 12.2 s vs 0.8 s per iteration on
       // a 20k×64 corpus, X04Probe)
-      val assigned = corpus.select(
-        element_at(assign(col("embedding")), 1).as("list_id"),
-        col("embedding"))
+      val assigned = corpus
+        .select(KernelOnce(assign(col("embedding"))).as("lists"),
+          col("embedding"))
+        .select(element_at(col("lists"), 1).as("list_id"), col("embedding"))
       val mean = assigned
         .select(col("list_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
         .groupBy(col("list_id"), col("pos"))
@@ -341,9 +342,11 @@ object Similarity {
       corpus: DataFrame,
       bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]): DataFrame = {
     val assign = nearestListsUdf(bc, 1)
-    corpus.select(
-      col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"),
-      element_at(assign(col("embedding")), 1).as("list_id"))
+    corpus
+      .select(col("vec_id"), col("embedding"),
+        KernelOnce(assign(col("embedding"))).as("lists"))
+      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"),
+        element_at(col("lists"), 1).as("list_id"))
   }
 
   /** IVF serving from a LIST-PARTITIONED at-rest index directory —
@@ -360,8 +363,8 @@ object Similarity {
     * batches without a corpus-wide scan per batch.
     *
     * `queries` is collected to compute the probe union, so it must be
-    * batch-sized — enforced loudly (the mmr pool-guard pattern) via
-    * `spark.graft.ivf.batch.max` (default 10,000 queries).
+    * batch-sized — enforced loudly (the mmr pool-guard pattern): at
+    * most 10,000 queries.
     *
     * Output is row-identical to [[ivfTopK]] with the same model: the
     * per-query probe join below applies each query's OWN probe list;
@@ -374,16 +377,14 @@ object Similarity {
       queries: DataFrame,
       k: Int,
       nProbe: Int): DataFrame = {
-    val maxBatch = spark.conf.getOption("spark.graft.ivf.batch.max")
-      .map(_.toInt).getOrElse(10000)
+    val maxBatch = 10000
     val qProj = queries.select(col("vec_id"),
       col("embedding").cast("array<float>").as("embedding"))
     val qRows = qProj.limit(maxBatch + 1).collect()
     require(qRows.length <= maxBatch,
       s"ivfTopKFromPartitionedIndex: query batch exceeds $maxBatch rows — " +
         "partition-pruned serving resolves probes driver-side; for " +
-        "corpus-sized query sets use ivfTopK, or raise " +
-        "spark.graft.ivf.batch.max")
+        "corpus-sized query sets use ivfTopK")
     val probedLists = qRows.iterator
       .flatMap(r => Option(nearestLists(cents, r.getSeq[Float](1), nProbe))
         .fold(Iterator.empty: Iterator[Int])(_.iterator))

@@ -104,7 +104,7 @@ object TextStats {
   def repetitionReport(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(
       col(idCol).as("doc_id"),
-      repetitionUdf(col(textCol)).as("r"))
+      KernelOnce(repetitionUdf(col(textCol))).as("r"))
       .select(
         col("doc_id"),
         col("r._1").as("n_words"),

@@ -63,12 +63,13 @@ object UrlOps {
     // matching URL row through the left join (r12 advice). Crawlers do
     // re-fetch robots.txt; keeping an arbitrary one of the duplicates
     // matches the one-file-per-host semantics of RFC 9309.
-    df.join(broadcast(robots.select(col(hostCol).as("__r_host"),
+    df.select(col("*"), KernelOnce(urlHost(col(urlCol))).as("__u_host"))
+      .join(broadcast(robots.select(col(hostCol).as("__r_host"),
         col(txtCol).as("__r_txt")).dropDuplicates("__r_host")),
-        urlHost(col(urlCol)) === col("__r_host"), "left")
+        col("__u_host") === col("__r_host"), "left")
       .withColumn("robots_allowed",
         coalesce(decideUdf(col("__r_txt"), col(urlCol)), lit(true)))
-      .drop("__r_host", "__r_txt")
+      .drop("__u_host", "__r_host", "__r_txt")
   }
 
   /** Adds norm_url, host, domain columns derived from `urlCol`. */

@@ -2816,9 +2816,8 @@ object LlmPipeline {
         // materialization; the excision OUTPUT is still shared by
         // temperatureMix's two passes and the final span-count join —
         // one columnar persist (the x17 §5 rule for ≥3-read frames)
-        val kept = docs.filter(
-          Curation.gopherReason(col("text"), col("lang"),
-            minTokens = 40).isNull)
+        val kept = Curation.gopherReason(docs, "text", "lang", minTokens = 40)
+          .filter(col("drop_reason").isNull)
         val excised = Decontaminate.decontaminateExcise(kept,
           docs.filter(col("doc_id") % 23 === 0), "doc_id", "text", n = 8,
           carryCols = Seq("lang"))

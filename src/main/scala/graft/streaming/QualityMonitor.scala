@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   *
   * The SAME function runs in batch (the h04 oracle row value-compares
   * it against DuckDB) and in streaming (pass a readStream DataFrame
-  * and a watermark): the rules gate is a stateless projection
-  * ([[Curation.gopherReason]] is a pure column expression), so the
+  * and a watermark): the rules gate is stateless per-row work
+  * ([[Curation.gopherReason]] appends its verdict column), so the
   * only stateful operator is the windowed count — bounded state,
   * evicted as the watermark advances.
   *
@@ -32,9 +32,9 @@ object QualityMonitor {
       langCol: String, windowDur: String = "60 seconds",
       minTokens: Int = 40,
       watermark: Option[String] = None): DataFrame = {
-    val gated0 = docs.select(col(tsCol).as("ts"),
-      Curation.gopherReason(col(textCol), col(langCol),
-        minTokens = minTokens).isNull.as("keep"))
+    val gated0 = Curation.gopherReason(docs, textCol, langCol,
+        minTokens = minTokens)
+      .select(col(tsCol).as("ts"), col("drop_reason").isNull.as("keep"))
     val gated = watermark.fold(gated0)(w => gated0.withWatermark("ts", w))
     gated
       .groupBy(window(col("ts"), windowDur))

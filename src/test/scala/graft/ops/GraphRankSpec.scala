@@ -235,6 +235,20 @@ class GraphRankSpec extends AnyFunSuite {
     }
   }
 
+  test("a rejected seed set and an empty-graph HITS leave nothing cached") {
+    import spark.implicits._
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val e = intercept[IllegalArgumentException](
+      GraphRank.personalizedPageRank(edges, Seq(99L).toDF("id"), iters = 2))
+    assert(e.getMessage.contains("no seed ids"))
+    assert(cache.isEmpty, "PPR left its edge or node relation cached")
+    val empty = GraphRank.hits(Seq.empty[(Long, Long)].toDF("src", "dst"), iters = 2)
+    assert(empty.isEmpty)
+    assert(cache.isEmpty, "HITS left its edge or node relation cached")
+  }
+
   test("pageRank under reliable-checkpoint mode matches the local path bit-for-bit") {
     // Serialized with LlmOpsSpec's reliable test (shared-session DirKey
     // conf; suites run in parallel) — see the note there.

@@ -45,26 +45,18 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(pruned == single)
   }
 
-  /** The MinHash plan invariant: no ScalaUDF in a Filter or Join
-    * condition or inside a lambda (where Catalyst would run it per
-    * element), and every banding chain — the subtree under one
-    * band-key posexplode, nested chains excluded — holds exactly one
-    * kernel call, with none outside a chain.
+  /** The MinHash plan invariant: the plan passes [[graft.plans.PlanLint]]
+    * (no kernel copied into a filter, join or lambda, none twice), and
+    * every banding chain — the subtree under one band-key posexplode,
+    * nested chains excluded — holds exactly one kernel call, with none
+    * outside a chain.
     */
   private def assertOneKernelCallPerChain(df: org.apache.spark.sql.DataFrame): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction, PosExplode, ScalaUDF}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join, LogicalPlan}
+    import org.apache.spark.sql.catalyst.expressions.{PosExplode, ScalaUDF}
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+    val lint = graft.plans.PlanLint.violations(df)
+    assert(lint.isEmpty, lint.mkString("\n"))
     val plan = df.queryExecution.optimizedPlan
-    def udfs(e: Expression): Seq[ScalaUDF] = e.collect { case u: ScalaUDF => u }
-    plan.foreach {
-      case f: Filter => assert(udfs(f.condition).isEmpty, s"UDF in Filter: ${f.condition}")
-      case j: Join => assert(j.condition.forall(udfs(_).isEmpty), s"UDF in Join: ${j.condition}")
-      case _ =>
-    }
-    plan.foreach(_.expressions.foreach(_.foreach {
-      case l: LambdaFunction => assert(udfs(l).isEmpty, s"UDF in lambda: $l")
-      case _ =>
-    }))
     def isChain(p: LogicalPlan) = p match {
       case g: Generate => g.generator.isInstanceOf[PosExplode]
       case _ => false
@@ -369,16 +361,15 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("ivf partitioned-at-rest serving rejects a corpus-sized query batch loudly") {
-    val emb = plantedVectors
-    val (dir, cents) = partitionedIvfIndex(emb, nLists = 4, iters = 1)
-    spark.conf.set("spark.graft.ivf.batch.max", "3")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Similarity.ivfTopKFromPartitionedIndex(
-          spark, dir, cents, emb, k = 2, nProbe = 1)
-      }
-      assert(e.getMessage.contains("query batch exceeds"))
-    } finally spark.conf.unset("spark.graft.ivf.batch.max")
+    val (dir, cents) = partitionedIvfIndex(plantedVectors, nLists = 4, iters = 1)
+    // one query over the 10,000-query batch limit
+    val queries = spark.range(10001).select(col("id").as("vec_id"),
+      array(Seq.fill(16)(lit(0.5f)): _*).as("embedding"))
+    val e = intercept[IllegalArgumentException] {
+      Similarity.ivfTopKFromPartitionedIndex(
+        spark, dir, cents, queries, k = 2, nProbe = 1)
+    }
+    assert(e.getMessage.contains("query batch exceeds 10000 rows"))
   }
 
   test("ivfTopK partial probing: planted dup found at rank 1, recall@5 is high") {

@@ -230,17 +230,15 @@ class RetrievalSpec extends AnyFunSuite {
 
   test("mmrDiversify rejects a corpus-sized candidate pool loudly") {
     import org.apache.spark.sql.functions.{array, col, lit}
-    val pool = spark.range(0, 50).select(
+    // one candidate over the 100,000-row pool limit
+    val pool = spark.range(100001).select(
       col("id").as("vec_id"),
       array(lit(1.0f), lit(0.0f)).as("embedding"),
       lit(0.5).as("rel"))
-    spark.conf.set("spark.graft.mmr.pool.max", "10")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Retrieval.mmrDiversify(pool, "vec_id", "embedding", "rel",
-          k = 2, lambda = 0.5)
-      }
-      assert(e.getMessage.contains("candidate pool exceeds"))
-    } finally spark.conf.unset("spark.graft.mmr.pool.max")
+    val e = intercept[IllegalArgumentException] {
+      Retrieval.mmrDiversify(pool, "vec_id", "embedding", "rel",
+        k = 2, lambda = 0.5)
+    }
+    assert(e.getMessage.contains("candidate pool exceeds 100000 rows"))
   }
 }
