@@ -222,42 +222,37 @@ object BpeTrainer {
     merges.toSeq
   }
 
-  /** Size-gated training (the scoreAuto/local-CC precedent): the
-    * corpus-sized work — word counting, optionally pruned by
-    * `minFreq` — is always distributed; the merge loop then runs
-    * in-memory when the pruned vocabulary fits under `localVocabGate`
-    * rows (one merge ≈ microseconds instead of two Spark jobs — a
-    * realistic 32k-merge vocabulary is seconds instead of hours), and
-    * falls back to the fully distributed [[trainMerges]] loop above
-    * the gate. `minFreq` is the standard trainer knob that keeps a
-    * web-scale vocabulary (typos, URLs) bounded: hapax tokens can
+  /** Size-gated training: the corpus-sized work — word counting,
+    * optionally pruned by `minFreq` — is always distributed; the merge
+    * loop then runs in-memory over the vocabulary the gate collects
+    * when it holds at most [[LocalGate.MaxRows]] words (one merge ≈
+    * microseconds instead of two Spark jobs — a realistic 32k-merge
+    * vocabulary is seconds instead of hours), and falls back to the
+    * fully distributed [[trainMerges]] loop above the cap. Both return
+    * the same merges. `minFreq` is the standard trainer knob that keeps
+    * a web-scale vocabulary (typos, URLs) bounded: hapax tokens can
     * never win a merge against real text anyway.
     */
   def trainMergesAuto(docs: DataFrame, textCol: String, numMerges: Int,
-      minFreq: Long = 1L, localVocabGate: Long = 4000000L,
-      precomputedWordCounts: Option[DataFrame] = None)
-      : Seq[(String, String)] = {
-    // r14: a caller composing train + pack (x12's shape) tokenizes the
-    // corpus once and hands the same (word, freq) frame to both —
-    // identical output by construction, one corpus pass saved.
-    val pruned0 = precomputedWordCounts.getOrElse(wordCounts(docs, textCol))
-    val pruned = if (minFreq > 1L) pruned0.filter(col("freq") >= minFreq)
-      else pruned0
-    val vocab = pruned.truncateLineage()
-    val n = vocab.count()
-    val out =
-      if (n <= localVocabGate) {
-        val rows = vocab.collect().map(r =>
-          (symbols(r.getString(0)), r.getLong(1)))
-        trainMergesLocal(rows, numMerges)
-      } else {
+      minFreq: Long = 1L): Seq[(String, String)] =
+    trainMergesAutoGated(docs, textCol, numMerges, minFreq, LocalGate.MaxRows)
+
+  /** [[trainMergesAuto]] with its cap as an argument. */
+  private[ops] def trainMergesAutoGated(docs: DataFrame, textCol: String,
+      numMerges: Int, minFreq: Long, cap: Int): Seq[(String, String)] = {
+    val counts = wordCounts(docs, textCol)
+    val vocab = if (minFreq > 1L) counts.filter(col("freq") >= minFreq)
+      else counts
+    LocalGate.rows(vocab, cap) match {
+      case Some(rows) =>
+        trainMergesLocal(rows.map(r => (symbols(r.getString(0)), r.getLong(1))),
+          numMerges)
+      case None =>
         val symsUdf = udf((w: String) => symbols(w))
         trainMergesFromVocab(
           vocab.select(symsUdf(col("word")).as("syms"), col("freq")),
           numMerges)
-      }
-    vocab.unpersist()
-    out
+    }
   }
 
   /** Per-document BPE token counts via the vocabulary, not the corpus:

@@ -129,24 +129,23 @@ object Decontaminate {
     *
     * Output: (doc_id, n_spans, n_removed_tokens, cleaned_text).
     *
-    * Below the broadcast gate the ENTIRE chain fuses into one map
-    * pass (r15, guide §2.4/§8): the benchmark fingerprint set is
-    * collected once (the same job that used to only COUNT it — r14
-    * paid the explode+distinct twice, once for the gate and once
-    * inside the join build), sorted, broadcast, and each document
+    * When the benchmark's distinct fingerprint set is under
+    * [[LocalGate]]'s cap, the ENTIRE chain fuses into one map pass
+    * (r15, guide §2.4/§8): the gate's own collect delivers the set,
+    * which is sorted, broadcast, and each document
     * windows/matches/island-merges/excises locally in
     * [[TextKernel.exciseByFpSet]], one call per row ([[KernelOnce]]: a
     * filter on `doc_id` or a carried column still reaches the scan) —
     * no posexplode, no membership join, no span aggregate, no
     * text-side join, and `corpus` is consumed ONCE, so upstream
     * materialization (the localCheckpoint the r14 x15 pipeline paid
-    * before this function) is unnecessary.
-    * Requires ids unique per row (every caller's contract; the join
-    * form would union spans across duplicate ids, the fused form is
-    * per-row). Above the gate the r14 shuffled-membership-join plan
-    * stands — compose decontaminateBloom's prefilter in front for
-    * that regime; there `corpus` is consumed twice, so materialize
-    * upstream.
+    * before this function) is unnecessary. Above the cap the r14
+    * shuffled-membership-join plan stands — compose
+    * decontaminateBloom's prefilter in front for that regime; there
+    * `corpus` is consumed twice, so materialize upstream. It keys its
+    * spans per row, by (doc_id, [[Dedup.md5Hash60]] of the text), so
+    * rows that share an id are excised one by one as in the fused
+    * pass, and text still never rides an exchange.
     *
     * `carryCols`: corpus columns appended verbatim to the output
     * (after `cleaned_text`) — lets a composed pipeline keep, say, its
@@ -156,67 +155,65 @@ object Decontaminate {
     */
   def decontaminateExcise(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, n: Int,
-      maxBroadcastFps: Long = 8L << 20,
-      carryCols: Seq[String] = Nil): DataFrame = {
+      carryCols: Seq[String] = Nil): DataFrame =
+    decontaminateExciseGated(corpus, benchmark, idCol, textCol, n,
+      carryCols, LocalGate.MaxRows)
+
+  /** [[decontaminateExcise]] with its cap as an argument. */
+  private[ops] def decontaminateExciseGated(corpus: DataFrame,
+      benchmark: DataFrame, idCol: String, textCol: String, n: Int,
+      carryCols: Seq[String], cap: Int): DataFrame = {
     val winUdf = udf((t: String) =>
       TextKernel.slidingWindowHashes(t, n))
-    val benchFps0 = benchmark
+    val benchFps = benchmark
       .select(explode(winUdf(col(textCol))).as("fp")).distinct()
-    // One benchmark-side job decides the regime AND (below the gate)
-    // delivers the build side: persist the distinct set, count it
-    // (materializes the cache), and below the gate read the collect
-    // from cache — the r14 form ran the explode+distinct once for
-    // count() and AGAIN inside the join's broadcast build (ADVICE r14).
-    // 8M fps × 8 B ≈ 64 MB on the driver at the default gate — the
-    // LmScore.scoreAuto gated-broadcast precedent.
-    val fpRows = benchFps0.persist()
-    val nFps = fpRows.count()
-    if (nFps <= maxBroadcastFps) {
-      val fps = fpRows.collect().map(_.getLong(0))
-      fpRows.unpersist(false)
-      java.util.Arrays.sort(fps)
-      val bc = corpus.sparkSession.sparkContext.broadcast(fps)
-      val fusedUdf = udf((text: String) =>
-        TextKernel.exciseByFpSet(text, n, bc.value))
-      corpus
-        .select((col(idCol).as("doc_id")
-          +: KernelOnce(fusedUdf(col(textCol))).as("__x")
-          +: carryCols.map(col)): _*)
-        .select((Seq(col("doc_id"),
-          col("__x._1").as("n_spans"),
-          col("__x._2").as("n_removed_tokens"),
-          col("__x._3").as("cleaned_text")) ++ carryCols.map(col)): _*)
-    } else {
-      fpRows.unpersist(false)
-      // Above-gate regime (a benchmark union too big to broadcast):
-      // the r14 shuffled membership join stands; AQE broadcasts the
-      // fp set when its runtime size allows, the corpus windows
-      // otherwise ride one keys-only exchange.
-      val benchFps = benchFps0
-      val hits = corpus
-        .select(col(idCol).as("doc_id"), posexplode(winUdf(col(textCol))))
-        .select(col("doc_id"), (col("pos") + 1).cast("long").as("s"),
-          col("col").as("fp"))
-        .join(benchFps, "fp")
-        .select(col("doc_id"), col("s"), (col("s") + (n - 1)).as("e"))
-      val spansPerDoc = CorpusStats.mergeTokenSpans(hits)
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_spans"),
-          sum(col("se") - col("ss") + 1).as("n_removed_tokens"),
-          array_sort(collect_list(struct(col("ss"), col("se")))).as("sp"))
-      val exciseUdf = udf((text: String, sp: Seq[org.apache.spark.sql.Row]) =>
-        if (sp == null) text
-        else TextKernel.exciseTokenRanges(text,
-          sp.map(_.getLong(0).toInt).toArray,
-          sp.map(_.getLong(1).toInt).toArray))
-      corpus.select((col(idCol).as("doc_id") +: col(textCol).as("text")
-          +: carryCols.map(col)): _*)
-        .join(spansPerDoc, Seq("doc_id"), "left")
-        .select((Seq(col("doc_id"),
-          coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-          coalesce(col("n_removed_tokens"), lit(0L)).as("n_removed_tokens"),
-          exciseUdf(col("text"), col("sp")).as("cleaned_text"))
-          ++ carryCols.map(col)): _*)
+    LocalGate.rows(benchFps, cap) match {
+      case Some(rows) =>
+        val fps = rows.map(_.getLong(0))
+        java.util.Arrays.sort(fps)
+        val bc = corpus.sparkSession.sparkContext.broadcast(fps)
+        val fusedUdf = udf((text: String) =>
+          TextKernel.exciseByFpSet(text, n, bc.value))
+        corpus
+          .select((col(idCol).as("doc_id")
+            +: KernelOnce(fusedUdf(col(textCol))).as("__x")
+            +: carryCols.map(col)): _*)
+          .select((Seq(col("doc_id"),
+            col("__x._1").as("n_spans"),
+            col("__x._2").as("n_removed_tokens"),
+            col("__x._3").as("cleaned_text")) ++ carryCols.map(col)): _*)
+      case None =>
+        // Above-cap regime (a benchmark union too big to broadcast):
+        // the r14 shuffled membership join stands; AQE broadcasts the
+        // fp set when its runtime size allows, the corpus windows
+        // otherwise ride one keys-only exchange. The span key is the
+        // row's (id, text hash) struct under the name mergeTokenSpans
+        // partitions by.
+        val rowKey = struct(col(idCol), Dedup.md5Hash60(col(textCol)))
+        val hits = corpus
+          .select(rowKey.as("doc_id"), posexplode(winUdf(col(textCol))))
+          .select(col("doc_id"), (col("pos") + 1).cast("long").as("s"),
+            col("col").as("fp"))
+          .join(benchFps, "fp")
+          .select(col("doc_id"), col("s"), (col("s") + (n - 1)).as("e"))
+        val spansPerRow = CorpusStats.mergeTokenSpans(hits)
+          .groupBy(col("doc_id").as("__key"))
+          .agg(count(lit(1)).as("n_spans"),
+            sum(col("se") - col("ss") + 1).as("n_removed_tokens"),
+            array_sort(collect_list(struct(col("ss"), col("se")))).as("sp"))
+        val exciseUdf = udf((text: String, sp: Seq[org.apache.spark.sql.Row]) =>
+          if (sp == null) text
+          else TextKernel.exciseTokenRanges(text,
+            sp.map(_.getLong(0).toInt).toArray,
+            sp.map(_.getLong(1).toInt).toArray))
+        corpus.select((col(idCol).as("doc_id") +: rowKey.as("__row")
+            +: col(textCol).as("text") +: carryCols.map(col)): _*)
+          .join(spansPerRow, col("__row") <=> col("__key"), "left")
+          .select((Seq(col("doc_id"),
+            coalesce(col("n_spans"), lit(0L)).as("n_spans"),
+            coalesce(col("n_removed_tokens"), lit(0L)).as("n_removed_tokens"),
+            exciseUdf(col("text"), col("sp")).as("cleaned_text"))
+            ++ carryCols.map(col)): _*)
     }
   }
 
@@ -251,8 +248,13 @@ object Decontaminate {
     val bloomBc = corpus.sparkSession.sparkContext.broadcast(bloom)
     val mightContain = udf((fp: Long) => bloomBc.value.mightContainLong(fp))
       .withName("bloom_might_contain")
+    // the test is projected once per row: as a Filter on `fp`,
+    // constraint inference would copy it across the exact join onto
+    // the benchmark side, where it always passes
     fingerprints(corpus, idCol, textCol, n)
-      .filter(mightContain(col("fp")))
+      .select(col("doc_id"), col("fp"),
+        KernelOnce(mightContain(col("fp"))).as("__maybe"))
+      .filter(col("__maybe"))
       .join(benchFps, "fp")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_leaked_ngrams"))

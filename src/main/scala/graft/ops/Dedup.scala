@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.kernel.TextKernel
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
@@ -49,16 +49,6 @@ object Dedup {
       .groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("doc_id"), count(lit(1)).as("n_dups"))
 
-  /** Below this many (directed, deduplicated) edges the component
-    * computation runs as a driver-local union-find instead of the
-    * iterative join loop: a graph this size is ≤ ~64 MB of longs, and
-    * each distributed round costs several fixed-latency shuffle jobs
-    * that dwarf the actual work. Same adaptive philosophy as the
-    * broadcast-join size gate — at 100 TB the candidate-pair graph
-    * blows past the gate and the O(log d) distributed loop runs.
-    */
-  val LocalCcMaxEdges: Long = 4000000L
-
   /** Connected components over an undirected near-dup pair list —
     * the cluster-formation step between candidate pairs and canonical
     * document selection. Iterative distributed min-label propagation
@@ -68,9 +58,13 @@ object Dedup {
     * Each round is two joins + one aggregation, fully partitioned —
     * no driver-side graph; the driver only sees the changed-count.
     * Output: (id, component) with component = min id in the component.
-    * NOTE: the returned DataFrame is persisted (it is the last
-    * iteration's cache) — callers owning a long-lived session should
-    * unpersist() it when done. `edges` is persisted for the loop's
+    * A pair with a NULL end names no node and is dropped first, so
+    * neither side of the gate sees a NULL id. Up to
+    * [[LocalGate.MaxRows]] pairs, the gate's collect feeds a
+    * driver-local union-find ([[localComponents]]): each distributed
+    * round costs fixed-latency shuffle jobs that dwarf such a graph.
+    *
+    * In the distributed loop `edges` is persisted for the loop's
     * lifetime (every round references it; without the cache each round
     * would replay the entire upstream candidate-pair pipeline), and
     * each round's labels are truncated ([[Lineage.truncate]] — eager
@@ -79,8 +73,23 @@ object Dedup {
     * cluster mode) so the logical plan stays O(1) across iterations
     * instead of nesting one join tree per round.
     */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 25,
-      localMaxEdges: Long = LocalCcMaxEdges): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 25): DataFrame =
+    connectedComponentsGated(pairs, maxIters, LocalGate.MaxRows)
+
+  /** [[connectedComponents]] with its cap as an argument. */
+  private[ops] def connectedComponentsGated(pairs: DataFrame,
+      maxIters: Int, cap: Int): DataFrame = {
+    val ends = pairs
+      .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
+    LocalGate.rows(ends, cap) match {
+      case Some(rows) => localComponents(pairs.sparkSession, rows)
+      case None => distributedComponents(ends, maxIters)
+    }
+  }
+
+  /** The label-propagation loop over non-NULL (a, b) pairs. */
+  private def distributedComponents(ends: DataFrame, maxIters: Int): DataFrame = {
     // Pre-partition the static edge table on the per-round join key
     // (dst) at a pinned count before caching: the distinct()'s
     // hash(src,dst) at-rest partitioning does not satisfy the
@@ -91,22 +100,20 @@ object Dedup {
     // Unknown partitioning and the pin would be erased, and a cached
     // static frame keeps its lineage for executor-loss recompute).
     val nParts =
-      try pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      try ends.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
       catch { case _: Throwable =>
-        pairs.sparkSession.sparkContext.defaultParallelism }
+        ends.sparkSession.sparkContext.defaultParallelism }
     // repartition BEFORE the dedup (r14, the GraphRank one-exchange
     // preamble): hash(dst) clusters equal (src, dst) rows, so the
     // dedup aggregate runs exchange-free on top of the single pinned
     // exchange instead of paying distinct's hash(src,dst) exchange
     // first and the dst repartition second.
-    val edges = pairs.select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
-      .unionAll(pairs.select(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst")))
+    val edges = ends.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(ends.select(col("b").as("src"), col("a").as("dst")))
       .repartition(nParts, col("dst"))
       .dropDuplicates("src", "dst")
       .persist()
     try {
-      val edgeCount = edges.count() // materializes the persist either way
-      if (edgeCount <= localMaxEdges) return localComponents(edges)
       var labels = edges.select(col("src").as("id")).distinct()
         .withColumn("label", col("id"))
       var it = 0
@@ -160,13 +167,14 @@ object Dedup {
     } finally edges.unpersist(blocking = false)
   }
 
-  /** Driver-local union-find (path compression + union by rank) for
-    * graphs under [[LocalCcMaxEdges]]; component label = min node id,
-    * identical to the distributed loop's output.
+  /** Driver-local union-find (path compression + union by rank) over
+    * the collected (a, b) pairs, as given: union-find needs neither
+    * both directions of an edge nor deduplicated edges. Component
+    * label = min node id, identical to the distributed loop's output.
     */
-  private def localComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val pairs = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+  private def localComponents(spark: SparkSession,
+      collected: Array[Row]): DataFrame = {
+    val pairs = collected.map(r => (r.getLong(0), r.getLong(1)))
     val idx = new java.util.HashMap[Long, Int]()
     for ((a, b) <- pairs) {
       if (!idx.containsKey(a)) idx.put(a, idx.size)
@@ -199,7 +207,7 @@ object Dedup {
       if (!minOfRoot.containsKey(r) || ids(i) < minOfRoot.get(r)) minOfRoot.put(r, ids(i))
       i += 1
     }
-    val rows = (0 until n).map(i => org.apache.spark.sql.Row(ids(i), minOfRoot.get(find(i))))
+    val rows = (0 until n).map(i => Row(ids(i), minOfRoot.get(find(i))))
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, math.max(1, n / 100000)),
       org.apache.spark.sql.types.StructType(Seq(

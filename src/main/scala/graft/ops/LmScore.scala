@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.kernel.TextKernel
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** N-gram language-model quality scoring — the CCNet/Pile-style
@@ -39,8 +39,8 @@ import org.apache.spark.sql.functions._
   * token keys — still linear, still skew-handled by AQE. Without
   * caching, Catalyst re-derives the model subtree per join (measured
   * 4× re-tokenization of the reference at 500k docs — SCALE.md);
-  * the oracle-checked one-shot path accepts that, the throughput
-  * path (x07) caches.
+  * the oracle-checked one-shot path accepts that; [[scoreAuto]]'s
+  * kernel side reads each model table once, cached or not.
   */
 object LmScore {
 
@@ -62,21 +62,13 @@ object LmScore {
     */
   final case class BigramModel(uni: DataFrame, bigModel: DataFrame,
       stats: DataFrame) {
-    /** Table sizes recorded by [[cache]]'s materializing counts, so
-      * [[scoreAuto]]'s broadcast gate reuses them instead of running
-      * two more count jobs per serving call (r15 — each job is a
-      * driver round-trip on the serving wall).
-      */
-    @transient private[ops] var knownSizes: Option[(Long, Long)] = None
-
     /** Persist the model tables (they are model-sized, not
       * corpus-sized) and materialize them so every scoring join sees
       * accurate sizes — AQE then broadcasts what fits. Returns this.
       */
     def cache(): BigramModel = {
       uni.persist(); bigModel.persist(); stats.persist()
-      val u = uni.count(); val b = bigModel.count(); stats.count()
-      knownSizes = Some((u, b))
+      uni.count(); bigModel.count(); stats.count()
       this
     }
     def unpersist(): Unit = {
@@ -136,10 +128,17 @@ object LmScore {
     * in executor memory — use [[scoreAuto]] for the size gate.
     * Arithmetic is identical to [[scoreWithModel]] (same IEEE ops per
     * transition; summation order differs only at the 1e-15 level the
-    * 6dp compare ignores).
+    * 6dp compare ignores), and a NULL text is absent from both.
     */
   def scoreWithBroadcastModel(docs: DataFrame, model: BigramModel,
-      idCol: String, textCol: String, alpha: Double = 0.4): DataFrame = {
+      idCol: String, textCol: String, alpha: Double = 0.4): DataFrame =
+    scoreWithRows(docs, model.uni.collect(), model.bigModel.collect(),
+      model.stats, idCol, textCol, alpha)
+
+  /** The broadcast kernel over collected `uni` and `bigModel` rows. */
+  private def scoreWithRows(docs: DataFrame, uniRows: Array[Row],
+      bigRows: Array[Row], stats: DataFrame, idCol: String,
+      textCol: String, alpha: Double): DataFrame = {
     // r15 broadcast layout: the r14 form shipped a two-level
     // HashMap[String, HashMap[String, Array[Long]]] — Java-serializing
     // its ~800k boxed inner entries took 0.87 s per serving call at
@@ -153,14 +152,12 @@ object LmScore {
     // op-for-op (same per-transition log10 terms, same left-to-right
     // summation), so scores are bit-identical — LmScoreSpec pins the
     // kernel against the join path.
-    val uniRows = model.uni.collect()
     require(uniRows.length < Int.MaxValue / 2, "vocab exceeds id space")
     val uniMap = new java.util.HashMap[String, Array[Long]](uniRows.length * 2)
     var nextId = 0L
     uniRows.foreach { r =>
       uniMap.put(r.getString(0), Array(r.getLong(1), nextId)); nextId += 1L
     }
-    val bigRows = model.bigModel.collect()
     // (key, c2, c1_prev) sorted by key. Both tokens of every bigram
     // must be in the unigram table (always true of trainStupidBackoff
     // output): the id layout cannot represent a bigram that is not,
@@ -189,7 +186,7 @@ object LmScore {
       j += 1
     }
     val Array(nTokens, vocab) = {
-      val s = model.stats.collect()(0); Array(s.getLong(0), s.getLong(1))
+      val s = stats.collect()(0); Array(s.getLong(0), s.getLong(1))
     }
     val sess = docs.sparkSession
     val bcUni = sess.sparkContext.broadcast(uniMap)
@@ -199,7 +196,7 @@ object LmScore {
     val denom = (nTokens + vocab).toDouble
     val a = alpha
     val score = udf((text: String) => {
-      val t = TextKernel.tokens(text)
+      val t = if (text == null) Array.empty[String] else TextKernel.tokens(text)
       if (t.length < 2) null
       else {
         val uni = bcUni.value
@@ -232,20 +229,25 @@ object LmScore {
         col("r._2").as("avg_logprob"))
   }
 
-  /** Size-gated scoring (the rype-classify precedent): kernel path
-    * when the model is broadcast-safe, join path otherwise. The gate
-    * reuses [[BigramModel.cache]]'s recorded sizes when present
-    * (r15 — two fewer driver round-trips per serving call); uncached
-    * models pay two model-sized counts, negligible next to scoring.
+  /** Size-gated scoring: the broadcast kernel when the two model
+    * tables hold at most [[LocalGate.MaxRows]] rows together (collected
+    * by the gate itself, see [[LocalGate]]), the join path otherwise.
+    * Both return the same rows; ids are unique per row, as the join
+    * path averages per id.
     */
   def scoreAuto(docs: DataFrame, model: BigramModel, idCol: String,
-      textCol: String, alpha: Double = 0.4,
-      maxBroadcastEntries: Long = 4L << 20): DataFrame = {
-    val (u, b) = model.knownSizes
-      .getOrElse((model.uni.count(), model.bigModel.count()))
-    if (u + b <= maxBroadcastEntries)
-      scoreWithBroadcastModel(docs, model, idCol, textCol, alpha)
-    else scoreWithModel(docs, model, idCol, textCol, alpha)
+      textCol: String, alpha: Double = 0.4): DataFrame =
+    scoreAutoGated(docs, model, idCol, textCol, alpha, LocalGate.MaxRows)
+
+  /** [[scoreAuto]] with its cap as an argument. */
+  private[ops] def scoreAutoGated(docs: DataFrame, model: BigramModel,
+      idCol: String, textCol: String, alpha: Double, cap: Int): DataFrame = {
+    val local = for {
+      uniRows <- LocalGate.rows(model.uni, cap)
+      bigRows <- LocalGate.rows(model.bigModel, cap - uniRows.length)
+    } yield scoreWithRows(docs, uniRows, bigRows, model.stats, idCol,
+      textCol, alpha)
+    local.getOrElse(scoreWithModel(docs, model, idCol, textCol, alpha))
   }
 
   /** One-shot convenience: train on `refDocs`, score `docs`. */

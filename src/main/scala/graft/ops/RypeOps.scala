@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.kernel.Rype
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** RYpe extraction/classification operators (reference: src/
@@ -120,13 +120,14 @@ object RypeOps {
     *
     * Execution is size-gated, the same adaptive philosophy as
     * broadcast-join thresholds: the reference loads the whole .ryxdi
-    * index into RAM, so when the inverted relation fits under
-    * `maxLocalIndexEntries` it is collected once, broadcast, and
-    * classification is a MAP-ONLY kernel over the per-read minimizer
-    * sets — no explode, no join, no aggregation shuffle (measured
-    * 5.9 s → see SCALE.md on 500k reads; the explode+join path paid
-    * two shuffles of |reads|×|minimizers| rows). Indexes above the
-    * gate keep the distributed explode ⋈ index shape, which never
+    * index into RAM, so when the inverted relation and the negative
+    * index each hold at most [[LocalGate.MaxRows]] rows, the gate's
+    * own collects deliver them ([[LocalGate]]), they are broadcast,
+    * and classification is a MAP-ONLY kernel over the per-read
+    * minimizer sets — no explode, no join, no aggregation shuffle
+    * (measured 5.9 s → see SCALE.md on 500k reads; the explode+join
+    * path paid two shuffles of |reads|×|minimizers| rows). Larger
+    * indexes keep the distributed explode ⋈ index shape, which never
     * materializes per-executor index copies. Both paths compute
     * identical scores (hits over non-negative minimizers, denominator
     * = full per-strand set size, max over strands).
@@ -138,8 +139,15 @@ object RypeOps {
       salt: Long = Rype.DefaultSalt,
       idColumn: String = "read_id",
       threshold: Double = 0.1,
-      negativeIndex: Option[DataFrame] = None,
-      maxLocalIndexEntries: Int = 4000000): DataFrame = {
+      negativeIndex: Option[DataFrame] = None): DataFrame =
+    rypeClassifyGated(index, sequences, k, w, salt, idColumn, threshold,
+      negativeIndex, LocalGate.MaxRows)
+
+  /** [[rypeClassify]] with its cap as an argument. */
+  private[ops] def rypeClassifyGated(index: DataFrame,
+      sequences: DataFrame, k: Int, w: Int, salt: Long, idColumn: String,
+      threshold: Double, negativeIndex: Option[DataFrame],
+      cap: Int): DataFrame = {
     requireColumns(sequences, idColumn)
     val paired = sequences.schema.fieldNames.contains("sequence2")
     val sets =
@@ -157,7 +165,7 @@ object RypeOps {
             array_distinct(concat(col("m1._2"), coalesce(col("m2._1"), array())))
               .as("rc_set"))
       }
-    localizedIndex(index, negativeIndex, maxLocalIndexEntries) match {
+    localizedIndex(index, negativeIndex, cap) match {
       case Some((idx, neg)) => return classifyLocal(sets, idx, neg, threshold)
       case None => // index too big to broadcast — distributed join path
     }
@@ -197,25 +205,25 @@ object RypeOps {
       minimizers: Array[Long], offsets: Array[Int], bucketOrds: Array[Int],
       bucketIds: Array[Long], bucketNames: Array[String])
 
-  /** Collect (index, negative index) if both fit under the entry gate;
-    * None → caller takes the distributed join path. The limit(n+1)
-    * probe stops scanning a too-large index early instead of counting
-    * it.
+  /** The (index, negative index) image when each holds at most `cap`
+    * rows; None → caller takes the distributed join path.
     */
   private def localizedIndex(
       index: DataFrame, negativeIndex: Option[DataFrame],
-      maxEntries: Int): Option[(LocalIndex, Array[Long])] = {
-    if (maxEntries <= 0) return None // gate disabled (tests force the join path)
-    val rows = index.select(col("minimizer"), col("bucket_id"), col("bucket_name"))
-      .limit(maxEntries + 1).collect()
-    if (rows.length > maxEntries) return None
-    val neg: Array[Long] = negativeIndex match {
-      case Some(n) =>
-        val nr = n.select(col("minimizer")).distinct().limit(maxEntries + 1).collect()
-        if (nr.length > maxEntries) return None
-        val a = nr.map(_.getLong(0)); java.util.Arrays.sort(a); a
-      case None => Array.emptyLongArray
-    }
+      cap: Int): Option[(LocalIndex, Array[Long])] = for {
+    rows <- LocalGate.rows(index.select(col("minimizer"),
+      col("bucket_id"), col("bucket_name")), cap)
+    negRows <- negativeIndex.fold(Option(Array.empty[Row]))(n =>
+      LocalGate.rows(n.select(col("minimizer")).distinct(), cap))
+  } yield {
+    val neg = negRows.map(_.getLong(0)); java.util.Arrays.sort(neg)
+    (indexImage(rows), neg)
+  }
+
+  /** The [[LocalIndex]] of collected (minimizer, bucket_id, bucket_name)
+    * rows.
+    */
+  private def indexImage(rows: Array[Row]): LocalIndex = {
     // dense bucket ordinals in (bucket_id, bucket_name) order
     val buckets = rows.map(r => (r.getLong(1), r.getString(2))).distinct.sorted
     val ordOf = buckets.zipWithIndex.toMap
@@ -244,8 +252,8 @@ object RypeOps {
       i += 1
     }
     offsets(mins.length) = p
-    Some((LocalIndex(mins, offsets, java.util.Arrays.copyOf(bucketOrds, p),
-      buckets.map(_._1), buckets.map(_._2)), neg))
+    LocalIndex(mins, offsets, java.util.Arrays.copyOf(bucketOrds, p),
+      buckets.map(_._1), buckets.map(_._2))
   }
 
   /** Map-only classification against a broadcast [[LocalIndex]]:

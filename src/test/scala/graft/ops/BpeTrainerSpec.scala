@@ -60,11 +60,21 @@ class BpeTrainerSpec extends AnyFunSuite {
       Seq.fill(4)("wide") ++ Seq.fill(7)("the") ++ Seq.fill(7)("then") ++
       Seq.fill(2)("\uD83D\uDE00ab \uD83D\uDE00ac") ++ Seq.fill(3)("banana bandana"))
       .mkString(" ")
-    val docs = Seq((1L, text), (2L, text.toUpperCase),
-      (3L, "singleton words here once")).toDF("doc_id", "text")
-    val distributed = BpeTrainer.trainMerges(docs, "text", 25)
-    val auto = BpeTrainer.trainMergesAuto(docs, "text", 25)
-    assert(auto == distributed)
+    val fixed = Seq(Some(1L) -> text, Some(2L) -> text.toUpperCase,
+      Some(3L) -> "singleton words here once")
+    // generated cases: NULL and empty texts, a skewed word, repeated
+    // ids and one long document
+    val words = Vector("low", "lower", "newest", "widest", "the", "then",
+      "\uD83D\uDE00ab", "banana", "bandana")
+    val cases = Seq(fixed, Seq.empty) ++ GateCases.samples(GateCases.docs(words), 3)
+    for ((rows, i) <- cases.zipWithIndex) {
+      val docs = rows.toDF("doc_id", "text")
+      def run(cap: Int) = BpeTrainer.trainMergesAutoGated(docs, "text", 25, 1L, cap)
+      val local = run(LocalGate.MaxRows)
+      assert(local == run(0), s"case $i")
+      assert(rows.isEmpty || local.nonEmpty, s"case $i")
+      if (rows == fixed) assert(local == BpeTrainer.trainMerges(docs, "text", 25))
+    }
   }
 
   test("utf8 tie-break: supplementary char orders by code point, not UTF-16") {
@@ -92,8 +102,7 @@ class BpeTrainerSpec extends AnyFunSuite {
   test("trainMergesAuto above the gate falls back to the distributed loop") {
     import spark.implicits._
     val docs = Seq((1L, "low low lower newest")).toDF("doc_id", "text")
-    val viaDistributed = BpeTrainer.trainMergesAuto(docs, "text", 4,
-      localVocabGate = 0L)
+    val viaDistributed = BpeTrainer.trainMergesAutoGated(docs, "text", 4, 1L, 0)
     assert(viaDistributed == BpeTrainer.trainMerges(docs, "text", 4))
   }
 

@@ -117,36 +117,33 @@ class DecontaminateSpec extends AnyFunSuite {
 
   test("fused excise path is row-identical to the membership-join path") {
     import spark.implicits._
-    // randomized corpus over a small vocabulary so windows collide
-    // across docs: overlapping islands, adjacent islands (gap 0 and
-    // gap 1), full-doc excisions, short docs, null/empty text, both
-    // hash families, and a carried column
-    val rnd = new scala.util.Random(42)
-    val vocab = Vector("alpha", "beta", "gamma", "delta", "eps",
-      "zeta", "Eta", "THETA", "iota", "kappa")
-    def doc(len: Int) =
-      (0 until len).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
-    val rows = (0L until 300L).map { i =>
-      val t =
-        if (i % 37 == 0) null
-        else if (i % 23 == 0) ""
-        else if (i % 11 == 0) doc(2) // shorter than the window
-        else doc(4 + rnd.nextInt(40))
-      (i, t, s"lang${i % 3}")
-    }
-    val corpus = rows.toDF("doc_id", "text", "lang").repartition(7)
-    val benchmark = rows.filter(r => r._1 % 5 == 0 && r._2 != null)
-      .toDF("doc_id", "text", "lang")
+    // a small vocabulary, so windows collide across docs: overlapping
+    // and adjacent islands, full-doc excisions; the generated cases
+    // add repeated and NULL ids, NULL/empty/short texts, a skewed id
+    // and one long document, and every case carries a column
+    val words = Vector("alpha", "beta", "gamma", "delta", "eps", "Eta", "THETA")
+    // three rows under one id, two of them equal: the clean row keeps
+    // its tokens on both sides
+    val probe = Seq[(Option[Long], String)](Some(1L) -> "a b one two three four c",
+      Some(1L) -> "clean text only here", Some(1L) -> "a b one two three four c")
+    val cases = Seq(probe, Seq.empty) ++
+      GateCases.samples(GateCases.docs(words), 6)
     def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        Option(r.getString(3)), r.getString(4))).sortBy(_._1).toSeq
-    val fused = canon(Decontaminate.decontaminateExcise(
-      corpus, benchmark, "doc_id", "text", n = 3, carryCols = Seq("lang")))
-    // maxBroadcastFps = 0 forces the above-gate membership-join plan
-    val legacy = canon(Decontaminate.decontaminateExcise(
-      corpus, benchmark, "doc_id", "text", n = 3,
-      maxBroadcastFps = 0L, carryCols = Seq("lang")))
-    assert(fused.exists(_._2 > 0), "fixture must actually excise")
-    assert(fused == legacy)
+      df.collect().sortBy(_.toString).toSeq
+    var excised = 0
+    for ((rows, i) <- cases.zipWithIndex) {
+      val corpus = rows.zipWithIndex
+        .map { case ((id, t), j) => (id, t, s"lang${j % 3}") }
+        .toDF("doc_id", "text", "lang").repartition(3)
+      val benchmark = (("one two three four" +: "alpha beta gamma" +:
+          rows.zipWithIndex.collect { case ((_, t), j) if j % 4 == 0 => t })
+        .map(t => (0L, t))).toDF("doc_id", "text")
+      def run(cap: Int) = canon(Decontaminate.decontaminateExciseGated(
+        corpus, benchmark, "doc_id", "text", 3, Seq("lang"), cap))
+      val fused = run(LocalGate.MaxRows)
+      assert(fused == run(0), s"case $i")
+      excised += fused.count(_.getLong(1) > 0)
+    }
+    assert(excised > 0, "fixture must actually excise")
   }
 }

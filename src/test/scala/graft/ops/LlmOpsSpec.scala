@@ -240,15 +240,33 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("local union-find and distributed loop agree (same labels, random graph)") {
+    import org.scalacheck.Gen
     import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val pairs = (0 until 400).map(_ => (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
-      .filter { case (a, b) => a != b }.toDF("id_a", "id_b")
-    val local = Dedup.connectedComponents(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val dist = Dedup.connectedComponents(pairs, localMaxEdges = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(local == dist && local.nonEmpty)
+    // generated graphs: self-loops, repeated and reversed pairs, NULL
+    // ends (a pair with one names no node), a hub node 0 (skew) and,
+    // in some cases, one long chain
+    val node: Gen[Option[Long]] = Gen.frequency(
+      1 -> Gen.const(None),
+      3 -> Gen.const(Some(0L)),
+      20 -> Gen.choose(1L, 120L).map(Some(_)))
+    val graph = for {
+      n <- Gen.choose(0, 200)
+      pairs <- Gen.listOfN(n, Gen.zip(node, node))
+      chain <- Gen.oneOf(0, 60)
+    } yield pairs ++ (0 until chain).map(i => Some(200L + i) -> Some(201L + i))
+    val probe = Seq[(Option[Long], Option[Long])](
+      Some(1L) -> Some(2L), Some(2L) -> None, Some(3L) -> Some(3L))
+    val cases = Seq(probe, Seq.empty) ++ GateCases.samples(graph, 4)
+    for ((rows, i) <- cases.zipWithIndex) {
+      val pairs = rows.toDF("id_a", "id_b")
+      def run(cap: Int) = Dedup.connectedComponentsGated(pairs, 25, cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      val local = run(LocalGate.MaxRows)
+      assert(local == run(0), s"case $i")
+    }
+    assert(Dedup.connectedComponents(probe.toDF("id_a", "id_b"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set(1L -> 1L, 2L -> 1L, 3L -> 3L))
   }
 
   test("reliable-checkpoint mode (spark.graft.checkpoint.dir) matches the local path") {
@@ -265,12 +283,12 @@ class LlmOpsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(11)
     val pairs = (0 until 300).map(_ => (rnd.nextInt(100).toLong, rnd.nextInt(100).toLong))
       .filter { case (a, b) => a != b }.toDF("id_a", "id_b")
-    val base = Dedup.connectedComponents(pairs, localMaxEdges = 0)
+    val base = Dedup.connectedComponentsGated(pairs, 25, 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toFile
     spark.conf.set(graft.ops.Lineage.DirKey, dir.getAbsolutePath)
     try {
-      val rel = Dedup.connectedComponents(pairs, localMaxEdges = 0)
+      val rel = Dedup.connectedComponentsGated(pairs, 25, 0)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(rel == base && rel.nonEmpty)
       def rddDirs(f: java.io.File): Seq[java.io.File] =

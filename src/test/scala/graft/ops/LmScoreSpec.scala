@@ -58,10 +58,29 @@ class LmScoreSpec extends AnyFunSuite {
       assert(b(k)._1 == n)
       assert(math.abs(b(k)._2 - lp) < 1e-12, s"doc $k")
     }
-    // and the size gate picks the kernel path without changing results
-    val c = LmScore.scoreAuto(docs, model, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(c == a.view.mapValues(_._1).toMap)
+    // and scoreAuto returns the same rows on both sides of its gate, on
+    // generated cases: NULL, empty and one-token texts, a skewed token
+    // and one long document; ids are unique per row (the join side
+    // averages per id). The model trains on every other row.
+    val cases = Seq[Seq[(Option[Long], String)]](Seq.empty,
+        Seq(Some(1L) -> "a b c", Some(2L) -> null)) ++
+      GateCases.samples(GateCases.docs(words), 5)
+    for ((rows, i) <- cases.zipWithIndex) {
+      val docs = rows.zipWithIndex.map { case ((_, t), j) => (j.toLong, t) }
+        .toDF("doc_id", "text")
+      val model = LmScore.trainStupidBackoff(
+        docs.filter($"doc_id" % 2 === 0).union(ref), "text")
+      def run(cap: Int) = LmScore.scoreAutoGated(docs, model, "doc_id", "text",
+        0.4, cap).collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
+        .toMap
+      val kernel = run(LocalGate.MaxRows)
+      val joined = run(0)
+      assert(kernel.keySet == joined.keySet, s"case $i")
+      for ((k, (n, lp)) <- joined) {
+        assert(kernel(k)._1 == n, s"case $i doc $k")
+        assert(math.abs(kernel(k)._2 - lp) < 1e-12, s"case $i doc $k")
+      }
+    }
   }
 
   test("broadcast path rejects a model whose bigram tokens miss the unigram table") {

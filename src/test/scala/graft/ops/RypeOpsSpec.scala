@@ -71,25 +71,38 @@ class RypeOpsSpec extends AnyFunSuite {
   }
 
   test("classify: broadcast-kernel path agrees exactly with the join path") {
+    import org.scalacheck.Gen
     import spark.implicits._
-    val genomes = Map("gA" -> genome(11, 900), "gB" -> genome(12, 900), "gC" -> genome(13, 900))
-    val subjects = genomes.toSeq.toDF("bucket_name", "sequence1")
+    val genomes = Vector(genome(11, 900), genome(12, 900), genome(13, 900))
+    val subjects = Seq("gA", "gB", "gC").zip(genomes).toDF("bucket_name", "sequence1")
     val index = RypeOps.buildIndex(subjects, k = 16, w = 5)
     val negative = RypeOps.buildIndex(
       Seq(("neg", genome(14, 600))).toDF("bucket_name", "sequence1"), k = 16, w = 5)
-    val reads = (for {
-      (name, g) <- genomes.toSeq
-      i <- 0 until 6
-    } yield (s"${name}_r$i", g.substring(i * 120, i * 120 + 130))).toDF("read_id", "sequence1")
-    def run(gate: Int) = RypeOps.rypeClassify(index, reads, k = 16, w = 5,
-      threshold = 0.05, negativeIndex = Some(negative), maxLocalIndexEntries = gate)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._2))
-    val local = run(4000000)     // kernel path (index fits)
-    val joined = run(0)          // gate disabled -> distributed join path
-    assert(local.nonEmpty)
-    assert(local.toSeq == joined.toSeq)
+    // generated reads: NULL and shorter-than-k sequences, slices skewed
+    // toward gA, random (unmatched) reads, one NULL id and one long
+    // read. Read ids are unique otherwise: the join side groups by id.
+    def slice(g: String) = Gen.choose(0, 760).map(i => g.substring(i, i + 130))
+    val read: Gen[String] = Gen.frequency(
+      1 -> Gen.const(null: String),
+      1 -> Gen.const("ACGTACGT"),
+      4 -> slice(genomes(0)),
+      4 -> Gen.oneOf(genomes).flatMap(slice),
+      2 -> Gen.listOfN(130, Gen.oneOf('A', 'C', 'G', 'T')).map(_.mkString))
+    val readsGen = for {
+      n <- Gen.choose(0, 30)
+      seqs <- Gen.listOfN(n, read)
+    } yield seqs.zipWithIndex.map { case (s, i) => (s"r$i", s) } :+
+      ((null: String) -> genomes(1))
+    val cases = Seq.empty[(String, String)] +: GateCases.samples(readsGen, 5)
+    for ((rows, i) <- cases.zipWithIndex) {
+      val reads = rows.toDF("read_id", "sequence1")
+      def run(cap: Int) = RypeOps.rypeClassifyGated(index, reads, 16, 5,
+          graft.kernel.Rype.DefaultSalt, "read_id", 0.05, Some(negative), cap)
+        .collect().sortBy(_.toString).toSeq
+      val local = run(LocalGate.MaxRows)
+      assert(local == run(0), s"case $i")
+      assert(rows.isEmpty || local.nonEmpty, s"case $i")
+    }
   }
 
   test("index round-trips through parquet") {

@@ -20,25 +20,13 @@ import org.apache.spark.sql.execution.joins.BaseJoinExec
   *  - a `ScalaUDF` inside a `LambdaFunction` (run once per element);
   *  - the same canonicalized `ScalaUDF` twice.
   *
-  * The fix in `graft.ops` is `KernelOnce`; [[allowList]] names the
-  * calls that are meant to stay where the lint would flag them.
+  * The fix in `graft.ops` is `KernelOnce`; no kernel is exempt.
   */
 object PlanLint {
 
-  /** Calls of the kernel named `udfName` are exempt, for `reason`. */
-  final case class Allowed(udfName: String, reason: String)
-
-  val allowList: Seq[Allowed] = Seq(
-    Allowed("bloom_might_contain",
-      "Decontaminate.decontaminateBloom's Bloom test is the prefilter: " +
-        "it is meant to run in the Filter below the exact join"))
-
   /** One line per finding; empty when the plan is clean. */
-  def violations(df: DataFrame, allowed: Seq[Allowed] = allowList): Seq[String] = {
-    val exempt = allowed.map(_.udfName).toSet
-    def kernels(e: Expression): Seq[ScalaUDF] = e.collect {
-      case u: ScalaUDF if !u.udfName.exists(exempt) => u
-    }
+  def violations(df: DataFrame): Seq[String] = {
+    def kernels(e: Expression): Seq[ScalaUDF] = e.collect { case u: ScalaUDF => u }
     def show(u: ScalaUDF) = u.udfName.getOrElse(u.toString)
     val all = nodes(df.queryExecution.optimizedPlan)
     val inConditions = all.flatMap { n =>
