@@ -229,9 +229,11 @@ object BpeTrainer {
     * microseconds instead of two Spark jobs — a realistic 32k-merge
     * vocabulary is seconds instead of hours), and falls back to the
     * fully distributed [[trainMerges]] loop above the cap. Both return
-    * the same merges. `minFreq` is the standard trainer knob that keeps
-    * a web-scale vocabulary (typos, URLs) bounded: hapax tokens can
-    * never win a merge against real text anyway.
+    * the same merges, and the word counts stay persisted from the gate's
+    * probe to the end of either loop ([[LocalGate.cached]]), so the
+    * corpus is tokenized once. `minFreq` is the standard trainer knob
+    * that keeps a web-scale vocabulary (typos, URLs) bounded: hapax
+    * tokens can never win a merge against real text anyway.
     */
   def trainMergesAuto(docs: DataFrame, textCol: String, numMerges: Int,
       minFreq: Long = 1L): Seq[(String, String)] =
@@ -243,16 +245,12 @@ object BpeTrainer {
     val counts = wordCounts(docs, textCol)
     val vocab = if (minFreq > 1L) counts.filter(col("freq") >= minFreq)
       else counts
-    LocalGate.rows(vocab, cap) match {
-      case Some(rows) =>
-        trainMergesLocal(rows.map(r => (symbols(r.getString(0)), r.getLong(1))),
-          numMerges)
-      case None =>
-        val symsUdf = udf((w: String) => symbols(w))
-        trainMergesFromVocab(
-          vocab.select(symsUdf(col("word")).as("syms"), col("freq")),
-          numMerges)
-    }
+    val symsUdf = udf((w: String) => symbols(w))
+    LocalGate.cached(vocab, cap)(
+      rows => trainMergesLocal(
+        rows.map(r => (symbols(r.getString(0)), r.getLong(1))), numMerges),
+      kept => trainMergesFromVocab(
+        kept.select(symsUdf(col("word")).as("syms"), col("freq")), numMerges))
   }
 
   /** Per-document BPE token counts via the vocabulary, not the corpus:

@@ -63,10 +63,13 @@ object Dedup {
     * [[LocalGate.MaxRows]] pairs, the gate's collect feeds a
     * driver-local union-find ([[localComponents]]): each distributed
     * round costs fixed-latency shuffle jobs that dwarf such a graph.
+    * The pairs stay persisted from the gate's probe to the end of the
+    * loop ([[LocalGate.cached]]), so the upstream candidate-pair
+    * pipeline runs once on either side.
     *
     * In the distributed loop `edges` is persisted for the loop's
     * lifetime (every round references it; without the cache each round
-    * would replay the entire upstream candidate-pair pipeline), and
+    * would rebuild and re-exchange the symmetric edge list), and
     * each round's labels are truncated ([[Lineage.truncate]] — eager
     * localCheckpoint locally; reliable `checkpoint` when
     * `spark.graft.checkpoint.dir` is set, the executor-loss-safe
@@ -82,10 +85,8 @@ object Dedup {
     val ends = pairs
       .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull)
-    LocalGate.rows(ends, cap) match {
-      case Some(rows) => localComponents(pairs.sparkSession, rows)
-      case None => distributedComponents(ends, maxIters)
-    }
+    LocalGate.cached(ends, cap)(localComponents(pairs.sparkSession, _),
+      distributedComponents(_, maxIters))
   }
 
   /** The label-propagation loop over non-NULL (a, b) pairs. */

@@ -95,13 +95,21 @@ object LmScore {
   }
 
   /** Score every document against a trained model. Output:
-    * (doc_id, n_trans, avg_logprob).
+    * (doc_id, n_trans, avg_logprob), one row per input row: the
+    * transitions of a row are averaged under a key drawn for that row
+    * before the explode (`monotonically_increasing_id`), so rows that
+    * share an id are scored one by one, as in the kernel. The key is
+    * nondeterministic, so a filter on `doc_id` over the output stops
+    * above the scan.
     */
   def scoreWithModel(docs: DataFrame, model: BigramModel, idCol: String,
       textCol: String, alpha: Double = 0.4): DataFrame = {
     val trans = docs.select(col(idCol).as("doc_id"),
-        explode(transCol(col(textCol))).as("tr"))
-      .select(col("doc_id"), col("tr.prev").as("prev"), col("tr.w").as("w"))
+        monotonically_increasing_id().as("__row"), col(textCol).as("__text"))
+      .select(col("doc_id"), col("__row"),
+        explode(transCol(col("__text"))).as("tr"))
+      .select(col("doc_id"), col("__row"), col("tr.prev").as("prev"),
+        col("tr.w").as("w"))
     trans
       .join(model.bigModel, Seq("prev", "w"), "left")
       .join(model.uni.select(col("w"), col("c1").as("c1_w")), Seq("w"), "left")
@@ -112,8 +120,9 @@ object LmScore {
         .otherwise(log10(
           lit(alpha) * (coalesce(col("c1_w"), lit(0L)) + lit(1L)).cast("double")
             / (col("n_tokens") + col("vocab")))))
-      .groupBy(col("doc_id"))
+      .groupBy(col("__row"), col("doc_id"))
       .agg(count(lit(1)).as("n_trans"), avg(col("logp")).as("avg_logprob"))
+      .drop("__row")
   }
 
   /** Broadcast-model kernel scoring — the shape production perplexity
@@ -232,8 +241,8 @@ object LmScore {
   /** Size-gated scoring: the broadcast kernel when the two model
     * tables hold at most [[LocalGate.MaxRows]] rows together (collected
     * by the gate itself, see [[LocalGate]]), the join path otherwise.
-    * Both return the same rows; ids are unique per row, as the join
-    * path averages per id.
+    * Both return the same rows, one per input row with at least two
+    * tokens, whether or not ids repeat.
     */
   def scoreAuto(docs: DataFrame, model: BigramModel, idCol: String,
       textCol: String, alpha: Double = 0.4): DataFrame =

@@ -130,7 +130,8 @@ object RypeOps {
     * indexes keep the distributed explode ⋈ index shape, which never
     * materializes per-executor index copies. Both paths compute
     * identical scores (hits over non-negative minimizers, denominator
-    * = full per-strand set size, max over strands).
+    * = full per-strand set size, max over strands), per input row,
+    * whether or not read ids repeat.
     */
   def rypeClassify(
       index: DataFrame,
@@ -169,15 +170,20 @@ object RypeOps {
       case Some((idx, neg)) => return classifyLocal(sets, idx, neg, threshold)
       case None => // index too big to broadcast — distributed join path
     }
+    // each row is scored under a key drawn for it before the explode,
+    // so reads that share an id are classified one by one, as in the
+    // kernel, instead of pooling their minimizers
     val strands = sets
-      .select(col("read_id"), explode(array(
+      .withColumn("__row", monotonically_increasing_id())
+      .select(col("read_id"), col("__row"), explode(array(
         struct(lit("fwd").as("strand"), col("fwd_set").as("set")),
         struct(lit("rc").as("strand"), col("rc_set").as("set")))).as("s"))
-      .select(col("read_id"), col("s.strand").as("strand"), col("s.set").as("set"))
+      .select(col("read_id"), col("__row"), col("s.strand").as("strand"),
+        col("s.set").as("set"))
     val exploded0 = strands
       .withColumn("set_size", size(col("set")))
       .filter(col("set_size") > 0)
-      .select(col("read_id"), col("strand"), col("set_size"),
+      .select(col("read_id"), col("__row"), col("strand"), col("set_size"),
         explode(col("set")).as("minimizer"))
     // negative index: drop query minimizers that occur in it
     val exploded = negativeIndex match {
@@ -188,13 +194,14 @@ object RypeOps {
     }
     exploded
       .join(index, "minimizer")
-      .groupBy(col("read_id"), col("strand"), col("set_size"),
+      .groupBy(col("__row"), col("read_id"), col("strand"), col("set_size"),
         col("bucket_id"), col("bucket_name"))
       .agg(count(lit(1)).as("hits"))
       .withColumn("strand_score", col("hits").cast("double") / col("set_size"))
-      .groupBy(col("read_id"), col("bucket_id"), col("bucket_name"))
+      .groupBy(col("__row"), col("read_id"), col("bucket_id"), col("bucket_name"))
       .agg(max(col("strand_score")).as("score"))
       .filter(col("score") >= threshold)
+      .drop("__row")
   }
 
   /** Immutable broadcastable index image: minimizers sorted for

@@ -106,6 +106,23 @@ class BpeTrainerSpec extends AnyFunSuite {
     assert(viaDistributed == BpeTrainer.trainMerges(docs, "text", 4))
   }
 
+  test("trainMergesAuto tokenizes the corpus once on the distributed side") {
+    import org.apache.spark.sql.functions.{col, udf}
+    import spark.implicits._
+    // an accumulator inside a UDF over the text counts corpus reads:
+    // the gate's probe and the distributed loop share the persisted
+    // word counts, so each document is read once
+    val reads = spark.sparkContext.longAccumulator("corpus_reads")
+    val tick = udf { (t: String) => reads.add(1L); t }
+    val raw = Seq((1L, "low low lower newest"), (2L, "widest newest low"),
+      (3L, "lower lowest new"))
+    val docs = raw.toDF("doc_id", "t").select(col("doc_id"), tick(col("t")).as("text"))
+    val merges = BpeTrainer.trainMergesAutoGated(docs, "text", 4, 1L, 0)
+    assert(merges == BpeTrainer.trainMerges(raw.toDF("doc_id", "text"), "text", 4))
+    assert(reads.value <= raw.size.toLong,
+      s"corpus read ${reads.value} times for ${raw.size} documents")
+  }
+
   test("bpeTokenCounts equals the direct per-row encode, incl. empty docs") {
     import spark.implicits._
     val docs = Seq(

@@ -303,15 +303,16 @@ class LlmOpsSpec extends AnyFunSuite {
   test("connectedComponents executes the upstream pairs pipeline once (edges persisted)") {
     import spark.implicits._
     // count upstream executions with an accumulator inside a UDF over
-    // the pair source: with `edges` persisted, the source is scanned at
-    // most twice (once per unionAll branch during cache fill), however
-    // many label-propagation rounds the chain needs. Without the
-    // persist, every round would add two more scans.
+    // the pair source, on the distributed side (cap 0): with the gate's
+    // probe and `edges` reading the persisted pairs, the source is
+    // scanned at most twice however many label-propagation rounds the
+    // chain needs. A probe that recomputed the pairs, or a loop without
+    // the `edges` persist, adds scans.
     val scans = spark.sparkContext.longAccumulator("pair_scans")
     val tick = udf { (x: Long) => scans.add(1L); x }
     val raw = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L))
     val pairs = raw.toDF("a", "id_b").select(tick(col("a")).as("id_a"), col("id_b"))
-    val comp = Dedup.connectedComponents(pairs)
+    val comp = Dedup.connectedComponentsGated(pairs, 25, 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert((1L to 7L).forall(comp(_) == 1L)) // the chain needs >1 round
     assert(scans.value <= 2L * raw.size,

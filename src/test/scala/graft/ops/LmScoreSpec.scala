@@ -59,27 +59,32 @@ class LmScoreSpec extends AnyFunSuite {
       assert(math.abs(b(k)._2 - lp) < 1e-12, s"doc $k")
     }
     // and scoreAuto returns the same rows on both sides of its gate, on
-    // generated cases: NULL, empty and one-token texts, a skewed token
-    // and one long document; ids are unique per row (the join side
-    // averages per id). The model trains on every other row.
+    // generated cases: NULL, empty and one-token texts, repeated and
+    // NULL ids (rows under one id are scored one by one on both sides),
+    // a skewed token and one long document. The model trains on the
+    // rows with an even id.
+    val repeated = Seq[(Option[Long], String)](Some(1L) -> "a b a b c",
+      Some(1L) -> "c a zz", Some(1L) -> "c a zz", None -> "a b", None -> "b c")
     val cases = Seq[Seq[(Option[Long], String)]](Seq.empty,
-        Seq(Some(1L) -> "a b c", Some(2L) -> null)) ++
+        Seq(Some(1L) -> "a b c", Some(2L) -> null), repeated) ++
       GateCases.samples(GateCases.docs(words), 5)
     for ((rows, i) <- cases.zipWithIndex) {
-      val docs = rows.zipWithIndex.map { case ((_, t), j) => (j.toLong, t) }
-        .toDF("doc_id", "text")
+      val docs = rows.toDF("doc_id", "text")
       val model = LmScore.trainStupidBackoff(
         docs.filter($"doc_id" % 2 === 0).union(ref), "text")
       def run(cap: Int) = LmScore.scoreAutoGated(docs, model, "doc_id", "text",
-        0.4, cap).collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
-        .toMap
+          0.4, cap).collect()
+        .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1),
+          r.getDouble(2)))
+        .sortBy(r => (r._1, r._2, r._3)).toSeq
       val kernel = run(LocalGate.MaxRows)
       val joined = run(0)
-      assert(kernel.keySet == joined.keySet, s"case $i")
-      for ((k, (n, lp)) <- joined) {
-        assert(kernel(k)._1 == n, s"case $i doc $k")
-        assert(math.abs(kernel(k)._2 - lp) < 1e-12, s"case $i doc $k")
-      }
+      assert(kernel.map(r => (r._1, r._2)) == joined.map(r => (r._1, r._2)),
+        s"case $i")
+      for ((k, j) <- kernel.zip(joined))
+        assert(math.abs(k._3 - j._3) < 1e-12, s"case $i doc ${k._1}")
+      if (rows == repeated) assert(kernel.count(_._1 == Some(1L)) == 3 &&
+        kernel.count(_._1.isEmpty) == 2, "one row per input row")
     }
   }
 

@@ -79,8 +79,9 @@ class RypeOpsSpec extends AnyFunSuite {
     val negative = RypeOps.buildIndex(
       Seq(("neg", genome(14, 600))).toDF("bucket_name", "sequence1"), k = 16, w = 5)
     // generated reads: NULL and shorter-than-k sequences, slices skewed
-    // toward gA, random (unmatched) reads, one NULL id and one long
-    // read. Read ids are unique otherwise: the join side groups by id.
+    // toward gA, random (unmatched) reads, repeated and NULL ids and
+    // one long read; a read listed twice is classified twice on both
+    // sides.
     def slice(g: String) = Gen.choose(0, 760).map(i => g.substring(i, i + 130))
     val read: Gen[String] = Gen.frequency(
       1 -> Gen.const(null: String),
@@ -90,10 +91,14 @@ class RypeOpsSpec extends AnyFunSuite {
       2 -> Gen.listOfN(130, Gen.oneOf('A', 'C', 'G', 'T')).map(_.mkString))
     val readsGen = for {
       n <- Gen.choose(0, 30)
-      seqs <- Gen.listOfN(n, read)
-    } yield seqs.zipWithIndex.map { case (s, i) => (s"r$i", s) } :+
-      ((null: String) -> genomes(1))
-    val cases = Seq.empty[(String, String)] +: GateCases.samples(readsGen, 5)
+      reads <- Gen.listOfN(n, Gen.zip(GateCases.id.map(_.fold(null: String)(i => s"r$i")), read))
+      longId <- GateCases.id
+    } yield reads :+ (longId.fold(null: String)(i => s"r$i") -> genomes(1))
+    val twice = genomes(0).substring(40, 170)
+    val repeated = Seq("r1" -> twice, "r1" -> twice, "r1" -> genomes(2).substring(0, 130),
+      (null: String) -> twice, (null: String) -> twice)
+    val cases = Seq(Seq.empty[(String, String)], repeated) ++
+      GateCases.samples(readsGen, 5)
     for ((rows, i) <- cases.zipWithIndex) {
       val reads = rows.toDF("read_id", "sequence1")
       def run(cap: Int) = RypeOps.rypeClassifyGated(index, reads, 16, 5,
@@ -102,6 +107,8 @@ class RypeOpsSpec extends AnyFunSuite {
       val local = run(LocalGate.MaxRows)
       assert(local == run(0), s"case $i")
       assert(rows.isEmpty || local.nonEmpty, s"case $i")
+      if (rows == repeated) assert(local.count(r =>
+        r.getString(0) == "r1" && r.getString(2) == "gA" && r.getDouble(3) == 1.0) == 2)
     }
   }
 
