@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.kernel.SeedAligner
+import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -167,21 +169,20 @@ object AlignOps {
     }
   }
 
-  /** Every read against each of `indexes` in turn (one combined index,
-    * or one per subject), the indexes broadcast once.
+  /** Every read against each of the broadcast `indexes` in turn (one
+    * combined index, or one per subject).
     */
   private def runAlignment(
-      queries: DataFrame, indexes: Seq[SeedAligner.Index],
+      queries: DataFrame, indexes: Broadcast[Vector[SeedAligner.Index]],
       params: Minimap2Params): DataFrame = {
     val spark = queries.sparkSession
     val hasSeq2 = queries.columns.contains("sequence2")
     val cols = if (hasSeq2) Seq("read_id", "sequence1", "sequence2")
     else Seq("read_id", "sequence1")
-    val bcast = spark.sparkContext.broadcast(indexes.toVector)
     val maxSecondary = params.maxSecondary
     val eqx = params.eqx
     val rdd = queries.select(cols.head, cols.tail: _*).rdd.mapPartitions { rows =>
-      val idxs = bcast.value
+      val idxs = indexes.value
       rows.flatMap { r =>
         idxs.iterator.flatMap(idx =>
           alignOne(idx, r.getString(0), r.getString(1),
@@ -216,8 +217,8 @@ object AlignOps {
     // per subject: one single-subject index each, every query vs each —
     // inherently O(Q×S) like the reference's per-subject Execute loop
     val groups = if (perSubjectDatabase) subj.map(Seq(_)) else Seq(subj)
-    runAlignment(queries,
-      groups.map(SeedAligner.buildIndex(_, params.resolvedK, params.resolvedW)), params)
+    runAlignment(queries, queries.sparkSession.sparkContext.broadcast(groups.toVector
+      .map(SeedAligner.buildIndex(_, params.resolvedK, params.resolvedW))), params)
   }
 
   /** Positional-params overload kept for the k/w call sites. */
@@ -256,7 +257,7 @@ object AlignOps {
     // java.nio write would land on the driver's local disk when
     // outputPath is hdfs://… and the index would be unreadable
     // elsewhere
-    val metaPath = new org.apache.hadoop.fs.Path(outputPath, indexMetaFile)
+    val metaPath = new Path(outputPath, indexMetaFile)
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(metaPath, true)
     try out.write(meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -269,11 +270,22 @@ object AlignOps {
         StructField("num_subjects", LongType))))
   }
 
+  /** The broadcast index of the most recent saved index aligned
+    * against ([[LoadedIndex]]).
+    */
+  private val savedIndex = new LoadedIndex[Broadcast[Vector[SeedAligner.Index]]]
+
   /** align_minimap2(queries, index_path=...): align against a saved
     * index. k/w come from the index metadata — caller-specified k/w
     * are rejected to surface the mistake the reference only warns
     * about (they are baked into the index). per_subject_database is
     * incompatible with a pre-built index (reference BinderException).
+    * The index loads once: its subjects are collected, built and
+    * broadcast on the first call, and a later call on the same files
+    * (keyed by the listing of `subjects/` and the metadata file, see
+    * [[LoadedIndex]]) reuses the broadcast and runs no job before the
+    * caller's action. A directory without the metadata file or
+    * without subject files is rejected on the driver.
     */
   def alignMinimap2FromIndex(
       queries: DataFrame,
@@ -282,24 +294,34 @@ object AlignOps {
     require(params.k == 0 && params.w == 0,
       "k/w are baked into a pre-built index and cannot be overridden " +
         "(reference: align_minimap2 index_path mode)")
-    val spark = queries.sparkSession
-    val metaPath = new org.apache.hadoop.fs.Path(indexPath, indexMetaFile)
-    val metaFs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(metaFs.exists(metaPath),
+    val sc = queries.sparkSession.sparkContext
+    val metaPath = new Path(indexPath, indexMetaFile)
+    val subjectsPath = new Path(indexPath, "subjects")
+    val fs = metaPath.getFileSystem(sc.hadoopConfiguration)
+    require(fs.exists(metaPath),
       s"Not a valid saved aligner index (missing $indexMetaFile): $indexPath")
-    val meta = {
-      val in = metaFs.open(metaPath)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
+    val subjectFiles =
+      if (fs.exists(subjectsPath)) LoadedIndex.files(sc, Seq(subjectsPath)) else Nil
+    require(subjectFiles.exists { case (f, _, _) =>
+      val name = new Path(f).getName
+      !name.startsWith("_") && !name.startsWith(".")
+    }, s"Not a valid saved aligner index (missing subjects/): $indexPath")
+    val key = LoadedIndex.Key(sc, subjectFiles ++ LoadedIndex.files(sc, Seq(metaPath)))
+    val indexes = savedIndex(Some(key)) {
+      val meta = {
+        val in = fs.open(metaPath)
+        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+        finally in.close()
+      }
+      def intField(name: String): Int =
+        s""""$name":(\\d+)""".r.findFirstMatchIn(meta)
+          .map(_.group(1).toInt)
+          .getOrElse(throw new IllegalArgumentException(
+            s"Corrupt index metadata (no $name): $indexPath"))
+      val subj = collectSubjects(queries.sparkSession.read.parquet(subjectsPath.toString))
+      sc.broadcast(Vector(SeedAligner.buildIndex(subj, intField("k"), intField("w"))))
     }
-    def intField(name: String): Int =
-      s""""$name":(\\d+)""".r.findFirstMatchIn(meta)
-        .map(_.group(1).toInt)
-        .getOrElse(throw new IllegalArgumentException(
-          s"Corrupt index metadata (no $name): $indexPath"))
-    val subj = collectSubjects(spark.read.parquet(s"$indexPath/subjects"))
-    runAlignment(queries,
-      Seq(SeedAligner.buildIndex(subj, intField("k"), intField("w"))), params)
+    runAlignment(queries, indexes, params)
   }
 
   /** Sharded alignment: one sub-job per shard — the shard's queries

@@ -21,6 +21,11 @@ import org.apache.spark.sql.{DataFrame, Row}
   * (`trainMergesAuto`, `connectedComponents`) gate through [[cached]]
   * instead, so their corpus-sized upstream runs once on either side.
   *
+  * `rypeClassify` over a saved index holds its gate's answer (the
+  * broadcast image, or "above the cap") in a [[LoadedIndex]], so only
+  * its first call over unchanged files collects; every other gate
+  * collects on every call.
+  *
   * One cap, [[MaxRows]], serves every gate: 4M rows of a few longs or
   * short strings fit the driver, and that much data is seconds of local
   * work against several fixed-latency jobs per distributed round. Each

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.kernel.Rype
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -131,7 +132,13 @@ object RypeOps {
     * materializes per-executor index copies. Both paths compute
     * identical scores (hits over non-negative minimizers, denominator
     * = full per-strand set size, max over strands), per input row,
-    * whether or not read ids repeat.
+    * whether or not read ids repeat. Over a saved index
+    * (`loadIndex`, a negative index read from files too) the gate
+    * decides once: the first call collects and broadcasts the image,
+    * or learns that it is above the cap, and a later call over the
+    * same unchanged files reuses that answer with no job before the
+    * caller's action ([[LoadedIndex]]). An in-memory or sampled index
+    * frame is collected on every call.
     */
   def rypeClassify(
       index: DataFrame,
@@ -167,7 +174,7 @@ object RypeOps {
               .as("rc_set"))
       }
     localizedIndex(index, negativeIndex, cap) match {
-      case Some((idx, neg)) => return classifyLocal(sets, idx, neg, threshold)
+      case Some(image) => return classifyLocal(sets, image, threshold)
       case None => // index too big to broadcast — distributed join path
     }
     // each row is scored under a key drawn for it before the explode,
@@ -212,19 +219,33 @@ object RypeOps {
       minimizers: Array[Long], offsets: Array[Int], bucketOrds: Array[Int],
       bucketIds: Array[Long], bucketNames: Array[String])
 
-  /** The (index, negative index) image when each holds at most `cap`
-    * rows; None → caller takes the distributed join path.
+  /** The broadcast (index, negative index) image of the most recent
+    * index classified against, or None when it is above the cap
+    * ([[LoadedIndex]]).
+    */
+  private val loadedImage =
+    new LoadedIndex[Option[Broadcast[(LocalIndex, Array[Long])]]]
+
+  /** The broadcast (index, negative index) image when each holds at
+    * most `cap` rows; None → caller takes the distributed join path.
+    * Either answer is kept for the next call over the same saved files
+    * ([[LoadedIndex]]), so only the first call over an index runs the
+    * gate's collects.
     */
   private def localizedIndex(
       index: DataFrame, negativeIndex: Option[DataFrame],
-      cap: Int): Option[(LocalIndex, Array[Long])] = for {
-    rows <- LocalGate.rows(index.select(col("minimizer"),
-      col("bucket_id"), col("bucket_name")), cap)
-    negRows <- negativeIndex.fold(Option(Array.empty[Row]))(n =>
-      LocalGate.rows(n.select(col("minimizer")).distinct(), cap))
-  } yield {
-    val neg = negRows.map(_.getLong(0)); java.util.Arrays.sort(neg)
-    (indexImage(rows), neg)
+      cap: Int): Option[Broadcast[(LocalIndex, Array[Long])]] = {
+    val idx = index.select(col("minimizer"), col("bucket_id"), col("bucket_name"))
+    val negIdx = negativeIndex.map(_.select(col("minimizer")).distinct())
+    loadedImage(LoadedIndex.ofFrames(idx +: negIdx.toSeq, cap)) {
+      for {
+        rows <- LocalGate.rows(idx, cap)
+        negRows <- negIdx.fold(Option(Array.empty[Row]))(LocalGate.rows(_, cap))
+      } yield {
+        val neg = negRows.map(_.getLong(0)); java.util.Arrays.sort(neg)
+        index.sparkSession.sparkContext.broadcast((indexImage(rows), neg))
+      }
+    }
   }
 
   /** The [[LocalIndex]] of collected (minimizer, bucket_id, bucket_name)
@@ -263,7 +284,8 @@ object RypeOps {
       buckets.map(_._1), buckets.map(_._2))
   }
 
-  /** Map-only classification against a broadcast [[LocalIndex]]:
+  /** Map-only classification against the broadcast [[LocalIndex]] and
+    * sorted negative minimizers:
     * identical scoring to the join path — per strand,
     * hits(bucket) = |{m ∈ set : m ∉ neg ∧ m ∈ bucket}|, score =
     * hits / |set| (denominator includes neg-dropped minimizers, as the
@@ -271,11 +293,9 @@ object RypeOps {
     * score = max over strands with ≥1 hit, kept when ≥ threshold.
     */
   private def classifyLocal(
-      sets: DataFrame, idx: LocalIndex, neg: Array[Long],
+      sets: DataFrame, bc: Broadcast[(LocalIndex, Array[Long])],
       threshold: Double): DataFrame = {
     import org.apache.spark.sql.types._
-    val spark = sets.sparkSession
-    val bc = spark.sparkContext.broadcast((idx, neg))
     val outSchema = StructType(Seq(
       sets.schema("read_id"),
       StructField("bucket_id", LongType, nullable = false),

@@ -129,6 +129,64 @@ class AlignOpsSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("saved aligner index"))
   }
 
+  test("a saved index without subject files is rejected on the driver") {
+    import spark.implicits._
+    val queries = Seq(("q", genome(47, 150))).toDF("read_id", "sequence1")
+    val root = java.nio.file.Files.createTempDirectory("graft_aligner_nosubj")
+    def withMeta(name: String): java.nio.file.Path = {
+      val dir = java.nio.file.Files.createDirectories(root.resolve(name))
+      java.nio.file.Files.writeString(dir.resolve("graft_index_meta.json"),
+        """{"k":16,"w":5,"preset":"sr"}""")
+      dir
+    }
+    val noSubjects = withMeta("none")
+    val emptySubjects = withMeta("empty")
+    java.nio.file.Files.createDirectories(emptySubjects.resolve("subjects"))
+    for (dir <- Seq(noSubjects, emptySubjects)) {
+      val (jobs, e) = JobCount(spark)(intercept[IllegalArgumentException](
+        AlignOps.alignMinimap2FromIndex(queries, dir.toString)))
+      assert(e.getMessage.contains("Not a valid saved aligner index (missing subjects/)"),
+        e.getMessage)
+      assert(jobs == 0, dir)
+    }
+  }
+
+  test("a saved index loads once: a second align starts no job before its action") {
+    import spark.implicits._
+    val g = genome(48, 600)
+    val dir = java.nio.file.Files.createTempDirectory("graft_aligner_once").resolve("index").toString
+    AlignOps.saveAlignerIndex(Seq(("ref", g)).toDF("read_id", "sequence1"), dir,
+      AlignOps.Minimap2Params(k = 16, w = 5)).collect()
+    val queries = Seq(("q1", g.substring(100, 220)), ("q2", g.substring(300, 420)))
+      .toDF("read_id", "sequence1")
+    def align() = JobCount(spark)(AlignOps.alignMinimap2FromIndex(queries, dir))
+    val (firstJobs, first) = align()
+    val firstRows = first.collect().map(_.toString).sorted.toSeq
+    val (secondJobs, second) = align()
+    assert(firstJobs > 0)
+    assert(secondJobs == 0)
+    assert(second.collect().map(_.toString).sorted.toSeq == firstRows)
+    assert(firstRows.nonEmpty)
+  }
+
+  test("an index overwritten at the same path is loaded again") {
+    import spark.implicits._
+    val g1 = genome(49, 600)
+    val g2 = genome(50, 600)
+    val dir = java.nio.file.Files.createTempDirectory("graft_aligner_rewrite").resolve("index").toString
+    val params = AlignOps.Minimap2Params(k = 16, w = 5)
+    val q1 = Seq(("q1", g1.substring(100, 220))).toDF("read_id", "sequence1")
+    val q2 = Seq(("q2", g2.substring(200, 320))).toDF("read_id", "sequence1")
+    def refs(q: org.apache.spark.sql.DataFrame) = AlignOps.alignMinimap2FromIndex(q, dir)
+      .collect().map(r => (r.getString(2), r.getLong(3))).toSeq
+    AlignOps.saveAlignerIndex(Seq(("ref1", g1)).toDF("read_id", "sequence1"), dir, params).collect()
+    assert(refs(q1).contains(("ref1", 101L)))
+    assert(refs(q2).isEmpty)
+    AlignOps.saveAlignerIndex(Seq(("ref2", g2)).toDF("read_id", "sequence1"), dir, params).collect()
+    assert(refs(q2).contains(("ref2", 201L)))
+    assert(refs(q1).isEmpty)
+  }
+
   test("paired alignment with one unmapped mate: mapped rows only, 0x8 flag, YT=UP") {
     import spark.implicits._
     val g = genome(46, 800)

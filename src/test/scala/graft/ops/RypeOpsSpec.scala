@@ -122,6 +122,92 @@ class RypeOpsSpec extends AnyFunSuite {
     assert(loaded.schema.fieldNames.toSet == Set("bucket_id", "bucket_name", "minimizer"))
   }
 
+  private def savedIndex(name: String, buckets: (String, String)*): String = {
+    val path = java.nio.file.Files.createTempDirectory(name).resolve("index.ryxdi").toString
+    save(path, buckets: _*)
+    path
+  }
+
+  private def save(path: String, buckets: (String, String)*): Unit = {
+    import spark.implicits._
+    RypeOps.saveIndex(RypeOps.buildIndex(buckets.toDF("bucket_name", "sequence1"),
+      k = 16, w = 5), path)
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("classify over a saved index collects it once") {
+    import spark.implicits._
+    val gA = genome(15, 800)
+    val path = savedIndex("graft_rype_once", "gA" -> gA, "gB" -> genome(16, 800))
+    val reads = Seq(("r1", gA.substring(0, 120)), ("r2", gA.substring(300, 420)))
+      .toDF("read_id", "sequence1")
+    def classify() = {
+      val index = RypeOps.loadIndex(spark, path)
+      JobCount(spark)(RypeOps.rypeClassify(index, reads, k = 16, w = 5, threshold = 0.5))
+    }
+    val (firstJobs, first) = classify()
+    val firstRows = rows(first)
+    val (secondJobs, second) = classify()
+    assert(firstJobs > 0)
+    assert(secondJobs == 0)
+    assert(rows(second) == firstRows)
+    assert(firstRows.nonEmpty)
+  }
+
+  test("classify follows an index overwritten at the same path") {
+    import spark.implicits._
+    val gA = genome(17, 800)
+    val gB = genome(18, 800)
+    val path = savedIndex("graft_rype_rewrite", "gA" -> gA)
+    val reads = Seq(("a", gA.substring(100, 220)), ("b", gB.substring(100, 220)))
+      .toDF("read_id", "sequence1")
+    def buckets() = RypeOps.rypeClassify(RypeOps.loadIndex(spark, path), reads,
+      k = 16, w = 5, threshold = 0.5).collect().map(r => r.getString(0) -> r.getString(2)).toSet
+    assert(buckets() == Set("a" -> "gA"))
+    save(path, "gB" -> gB)
+    assert(buckets() == Set("b" -> "gB"))
+  }
+
+  test("an in-memory or sampled index frame is collected on every call") {
+    import spark.implicits._
+    val g = genome(19, 800)
+    val subjects = Seq(("g", g)).toDF("bucket_name", "sequence1")
+    val path = savedIndex("graft_rype_sample", "g" -> g)
+    val reads = Seq(("r", g.substring(0, 120))).toDF("read_id", "sequence1")
+    val inMemory = RypeOps.buildIndex(subjects, k = 16, w = 5)
+    val sampled = RypeOps.loadIndex(spark, path).sample(0.9, 7L)
+    for (index <- Seq(inMemory, sampled); call <- 1 to 2) {
+      val (jobs, _) = JobCount(spark)(
+        RypeOps.rypeClassify(index, reads, k = 16, w = 5, threshold = 0.5))
+      assert(jobs > 0, s"call $call")
+    }
+  }
+
+  test("both gate sides over a saved index return the same rows, each decided once") {
+    import spark.implicits._
+    val genomes = Seq("gA" -> genome(20, 800), "gB" -> genome(21, 800))
+    val path = savedIndex("graft_rype_sides", genomes: _*)
+    val negPath = savedIndex("graft_rype_sides_neg", "neg" -> genome(22, 600))
+    val reads = genomes.flatMap { case (n, g) =>
+      (0 until 3).map(i => (s"${n}_$i", g.substring(i * 200, i * 200 + 120)))
+    }.toDF("read_id", "sequence1")
+    def run(cap: Int) = {
+      val (index, negative) = (RypeOps.loadIndex(spark, path), RypeOps.loadIndex(spark, negPath))
+      JobCount(spark)(RypeOps.rypeClassifyGated(index, reads, 16, 5,
+        graft.kernel.Rype.DefaultSalt, "read_id", 0.3, Some(negative), cap))
+    }
+    val local = rows(run(LocalGate.MaxRows)._2)
+    val (localJobs, localAgain) = run(LocalGate.MaxRows)
+    val join = rows(run(0)._2)
+    val (joinJobs, joinAgain) = run(0)
+    assert(local.nonEmpty)
+    assert(join == local)
+    assert(localJobs == 0 && joinJobs == 0)
+    assert(rows(localAgain) == local && rows(joinAgain) == local)
+  }
+
   test("extract ops: schema + invariants on DataFrames") {
     import spark.implicits._
     val seqs = Seq(("s1", genome(5, 100)), ("s2", genome(6, 100)))
